@@ -2221,7 +2221,7 @@ def _q117_bm25(spark, sf_dir):
 
 
 def _q123_knn_chunked(spark, sf_dir):
-    """The chunked block-scorer KNN (operators/knn.py::_knn_chunked, r5) —
+    """The chunked block-scorer KNN (the operators/pairscan.py block grid, r5) —
     the too-big-to-broadcast regime where neither a driver collect
     (strategy='kernel') nor a broadcast join is allowed: test x train tiles
     into block cells via ONE hash-assign shuffle per side, each cell scored
@@ -3841,7 +3841,7 @@ def _q200_knn_dtw_ragged(spark, sf_dir):
 
 def _q201_knn_dtw_ragged_chunked(spark, sf_dir):
     """RAGGED exact-DTW KNN through the CHUNKED BLOCK GRID (r9;
-    operators/knn.py::_knn_chunked): the no-broadcast reroute the byte
+    the operators/pairscan.py block grid): the no-broadcast reroute the byte
     guard takes when the train side exceeds ``max_broadcast_bytes`` —
     both sides hash into (test-block x train-block) cells (one cell per
     task since r9), each cell regroups its ragged slice by length into

@@ -44,3 +44,16 @@ def har_dfs(spark):
         spark.createDataFrame(train_rows, schema=schema),
         spark.createDataFrame(test_rows, schema=schema),
     )
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    """200 random 16-dim embeddings with two zero vectors (the zero-norm
+    branch) for the ANN strategy-agreement tests."""
+    rng = np.random.default_rng(7)
+    rows = [
+        (int(i), [float(x) for x in rng.normal(0, 1, 16)]) for i in range(200)
+    ]
+    rows[13] = (13, [0.0] * 16)
+    rows[77] = (77, [0.0] * 16)
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")

@@ -49,3 +49,23 @@ def test_operator_caches_released_by_scope(spark):
         assert len(frame) >= 1  # the signature cache registered itself
         assert all(_is_cached(df) for df in frame)
     assert all(not _is_cached(df) for df in frame)
+
+
+def test_pair_scan_broadcasts_released_by_scope(spark, har_dfs):
+    """Every broadcast the pair-scan strategies create (the kernel's train
+    matrix, the reverse route's test rows) is destroyed when the innermost
+    cache_scope exits; results built inside the scope are consumed there."""
+    from pyspark import Broadcast
+
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+        knn_join,
+    )
+
+    train_df, test_df = har_dfs
+    with cache_scope() as frame:
+        for strategy in ("kernel", "reverse"):
+            assert knn_join(test_df, train_df, k=2, strategy=strategy).count() == 80
+        shared = [b for b in frame if isinstance(b, Broadcast)]
+        assert len(shared) == 2
+        assert all(b._jbroadcast.isValid() for b in shared)
+    assert not any(b._jbroadcast.isValid() for b in shared)

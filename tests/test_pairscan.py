@@ -1,0 +1,144 @@
+"""Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
+executions each KNN route fires while its plan is built, the cheap
+grid-agreement checks (block grid vs broadcast kernel, bit-for-bit), and
+the scoring core's empty-result dtype."""
+
+from __future__ import annotations
+
+import uuid
+
+import numpy as np
+import pytest
+
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+    knn_join,
+)
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.knn import (
+    _group_by_length,
+    _score_block_groups,
+)
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.similarity import (
+    ann_brute_topk,
+    ann_quantized_topk,
+)
+
+
+def _collect(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _eager_executions(spark, build) -> int:
+    """SQL executions fired while ``build()`` runs, counted from Spark's
+    SQL status store under a one-off job description."""
+    sc = spark.sparkContext
+    label = f"pairscan-eager:{uuid.uuid4().hex}"
+    sc.setJobDescription(label)
+    try:
+        build()
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return sum(execs.apply(i).description() == label for i in range(execs.size()))
+
+
+@pytest.mark.parametrize(
+    "strategy, budget, want",
+    [
+        ("kernel", 512 << 20, 2),  # train stats + train collect
+        ("kernel", 64, 3),  # over budget -> grid: train stats, gate and grid test stats
+        ("broadcast", 512 << 20, 0),  # declarative: nothing runs eagerly
+    ],
+)
+def test_knn_route_eager_executions(spark, har_dfs, strategy, budget, want):
+    train_df, test_df = har_dfs
+    got = _eager_executions(
+        spark,
+        lambda: knn_join(
+            test_df, train_df, metric="euclidean", k=3, strategy=strategy,
+            max_broadcast_bytes=budget,
+        ),
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("exclude_self", [True])
+def test_chunked_brute_matches_kernel(spark, emb, exclude_self):
+    """Multi-block chunked == kernel, bit-for-bit (distances included)."""
+    kernel = ann_brute_topk(
+        emb.limit(23), emb, k=5, strategy="kernel", exclude_self=exclude_self
+    )
+    # 200 rows x 16 dims x 8B = 25.6 KB; block_bytes=2048 forces ~13 corpus
+    # blocks and multi-query-blocks too
+    chunked = ann_brute_topk(
+        emb.limit(23), emb, k=5, strategy="chunked",
+        exclude_self=exclude_self, block_bytes=2048,
+    )
+    assert _collect(chunked) == _collect(kernel)
+
+
+@pytest.mark.parametrize("exclude_self", [True])
+def test_chunked_quantized_matches_kernel(spark, emb, exclude_self):
+    kernel = ann_quantized_topk(
+        emb.limit(19), emb, k=5, strategy="kernel", exclude_self=exclude_self
+    )
+    chunked = ann_quantized_topk(
+        emb.limit(19), emb, k=5, strategy="chunked",
+        exclude_self=exclude_self, block_bytes=2048,
+    )
+    assert _collect(chunked) == _collect(kernel)
+
+
+def test_knn_chunked_string_labels(spark):
+    """String labels ride the chunked tie order like the kernel's (pandas
+    delivers them object-dtype; the scorer must re-materialize a sortable
+    array for np.lexsort)."""
+    rng = np.random.default_rng(31)
+    rows = lambda n, s: [
+        (s + i, [float(x) for x in rng.normal(0, 1, 8)], ["walk", "run", "sit"][i % 3])
+        for i in range(n)
+    ]
+    schema = "series_id long, features array<double>, label string"
+    train = spark.createDataFrame(rows(30, 0), schema)
+    test = spark.createDataFrame(rows(8, 1000), schema)
+    kernel = knn_join(test, train, metric="euclidean", k=3, strategy="kernel")
+    chunked = knn_join(test, train, metric="euclidean", k=3, strategy="chunked")
+    assert sorted(map(tuple, chunked.collect())) == sorted(map(tuple, kernel.collect()))
+
+
+def test_knn_chunked_nan_features_rank_last_like_kernel(spark):
+    """A train series containing NaN produces a NaN distance: the kernel's
+    lexsort puts it last; the chunked global rerank must do the same
+    (Arrow NaN->null would otherwise rank FIRST under plain asc)."""
+    train = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0], 1.0), (2, [float("nan"), 2.0, 3.0], 2.0),
+         (3, [1.5, 2.5, 3.5], 1.0), (4, [9.0, 9.0, 9.0], 2.0)],
+        "series_id long, features array<double>, label double",
+    )
+    test = spark.createDataFrame(
+        [(10, [1.0, 2.0, 3.0], 0.0)], "series_id long, features array<double>, label double"
+    )
+    kernel = knn_join(test, train, metric="euclidean", k=4, strategy="kernel")
+    chunked = knn_join(test, train, metric="euclidean", k=4, strategy="chunked")
+    kr = {r.train_id: r.rank for r in kernel.collect()}
+    cr = {r.train_id: r.rank for r in chunked.collect()}
+    assert cr == kr
+    assert cr[2] == max(cr.values())  # the NaN series ranks last
+
+
+@pytest.mark.parametrize("with_rank", [True, False])
+def test_score_block_groups_empty_result_keeps_label_dtype(with_rank):
+    """Two length groups with string labels, every pair at distance 0 and
+    so removed by exclude_zero: the empty result keeps the string label
+    dtype (a float64 empty column would not convert to a string schema)."""
+    groups = _group_by_length(
+        [1, 2, 3], [[0.0, 0.0], [0.0, 0.0, 0.0], [0.0, 0.0]], ["walk", "run", "sit"]
+    )
+    assert len(groups) == 2
+    out = _score_block_groups(
+        np.array([10], dtype=np.int64), np.array([np.zeros(2)], dtype=object),
+        groups, kind="dtw", k=3, excl=True, band=None, radius=1,
+        with_rank=with_rank,
+    )
+    assert len(out["test_id"]) == 0
+    assert out["train_label"].dtype.kind == "U"

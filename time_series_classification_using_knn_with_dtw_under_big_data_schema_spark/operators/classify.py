@@ -595,114 +595,6 @@ def _conformal_score_rows(
     return out
 
 
-def _conformal_min_grid(proper: DataFrame, kind: str, proper_stats):
-    """Over-budget twin of ``_conformal_min_kernel`` (r10, VERDICT r9 #6):
-    when the proper split exceeds ``max_broadcast_bytes``, the min-per-
-    (row, label) pass rides the KNN core's chunked BLOCK GRID instead of
-    falling back to the interpreted crossJoin fold — min-per-label is a
-    per-cell aggregate exactly like top-k: each (side-block x
-    proper-block) cell emits its own per-(row, label) min through the
-    SHARED scoring core (_conformal_score_rows), and a global
-    groupBy(keys, label).MIN reduces the cells exactly (MIN is
-    associative; a cell whose surviving pairs are all NaN emits NaN ->
-    Arrow NULL, which the global MIN ignores unless every cell did — then
-    the coalesce restores NaN; a (row, label) with no surviving pair in
-    any cell emits no row). Traffic: each side crosses the wire
-    n_opposing_blocks times instead of once per pair."""
-    import numpy as np
-    import pandas as pd
-
-    n_rows, max_len = proper_stats
-    label_sql_type = proper.schema["_plab"].dataType.simpleString()
-    batch_fn, dist_block = _conformal_dist_fns(kind)
-    spark = proper.sparkSession
-    par = spark.sparkContext.defaultParallelism
-
-    def mins(side: DataFrame, fcol: str, keys: list) -> DataFrame:
-        from .similarity import _grid_split
-
-        key_types = dict(side.dtypes)
-        n_s, len_s = side.agg(
-            F.count(F.lit(1)), F.max(F.size(fcol))
-        ).first()
-        n_s, len_s = int(n_s or 0), int(len_s or 0)
-        L = max(max_len, 1)
-        per_pair = L * L if batch_fn is not None else L
-        bt, br = _grid_split(
-            n_s * len_s * 8,
-            n_rows * max_len * 8,
-            max(n_s, 1),
-            max(n_rows, 1),
-            n_s * n_rows * per_pair,
-            64 << 20,
-            par,
-        )
-        null_keys = [
-            F.lit(None).cast(key_types[k]).alias(k) for k in keys
-        ]
-        s_side = side.select(
-            F.pmod(F.hash(F.col(keys[0])), F.lit(bt)).alias("_tblk"),
-            F.explode(F.sequence(F.lit(0), F.lit(br - 1))).alias("_rblk"),
-            F.lit(True).alias("_ist"),
-            *[F.col(k) for k in keys],
-            F.col(fcol).alias("_gf"),
-            F.lit(None).cast(label_sql_type).alias("_glab"),
-        )
-        p_side = proper.select(
-            F.explode(F.sequence(F.lit(0), F.lit(bt - 1))).alias("_tblk"),
-            F.pmod(F.hash(F.col("_pid")), F.lit(br)).alias("_rblk"),
-            F.lit(False).alias("_ist"),
-            *null_keys,
-            F.col("_pf").alias("_gf"),
-            F.col("_plab").alias("_glab"),
-        )
-        out_schema = ", ".join(
-            [f"{k} {key_types[k]}" for k in keys]
-            + [f"_plab {label_sql_type}", "_dmin double"]
-        )
-
-        def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-            tm = pdf["_ist"].to_numpy()
-            sp, pp = pdf[tm], pdf[~tm]
-            cols = {k: [] for k in keys}
-            cols["_plab"] = []
-            cols["_dmin"] = []
-            if len(sp) and len(pp):
-                grps = _conformal_proper_groups(
-                    list(zip(pp["_gf"].tolist(), pp["_glab"].tolist()))
-                )
-                kvals = {k: sp[k].to_numpy() for k in keys}
-                cols = _conformal_score_rows(
-                    sp["_gf"].to_numpy(), kvals, keys, grps, batch_fn, dist_block
-                )
-            return pd.DataFrame({c: cols[c] for c in
-                                 list(keys) + ["_plab", "_dmin"]})
-
-        n_parts = min(bt * br, max(par, 1) * 32)
-        blocked = (
-            s_side.unionByName(p_side)
-            .repartition(n_parts, "_tblk", "_rblk")
-            .groupBy("_tblk", "_rblk")
-            .applyInPandas(lambda _, pdf: cell(pdf), schema=out_schema)
-        )
-        from ..caching import register_cache
-
-        reduced = (
-            blocked.groupBy(*keys, "_plab")
-            .agg(F.min("_dmin").alias("_dmin"))
-            .select(
-                *keys,
-                "_plab",
-                F.coalesce("_dmin", F.lit(float("nan"))).alias("_dmin"),
-            )
-        )
-        out = register_cache(reduced.cache())
-        out.count()
-        return out
-
-    return mins
-
-
 def _conformal_min_kernel(
     proper: DataFrame,
     kind: str,
@@ -711,19 +603,27 @@ def _conformal_min_kernel(
     cal_mod: int,
 ):
     """Kernel twin of conformal_knn's ``_mins`` (r9 optimization round):
-    min distance per (side row, proper label) computed by ONE mapInPandas
-    pass over the side against the broadcast proper split, instead of a
-    crossJoin whose per-pair distance is an interpreted higher-order-
-    function fold (Spark never codegens HOFs — measured 55.6 s for the
-    ~3e9-pair 10x conformal soak, the largest entry in the whole bench).
+    min distance per (side row, proper label) computed through the
+    pair-scan layer (operators/pairscan.py) — ONE mapInPandas pass over
+    the side against the broadcast proper split — instead of a crossJoin
+    whose per-pair distance is an interpreted higher-order-function fold
+    (Spark never codegens HOFs — measured 55.6 s for the ~3e9-pair 10x
+    conformal soak, the largest entry in the whole bench).
 
     Returns a ``mins(side, fcol, keys) -> DataFrame`` closure, or None when
     no kernel path applies (empty proper side, a ragged proper side under
     a point metric, or a calibration pair volume below
-    ``min_kernel_pairs``). An OVER-BUDGET proper side no longer falls back
-    to the interpreted fold: it returns the chunked block-grid closure
-    (r10, VERDICT r9 #6 — ``_conformal_min_grid``). The closure's output
-    is bit-identical to the declarative ``_mins`` by construction:
+    ``min_kernel_pairs``). An OVER-BUDGET proper side rides the block grid
+    instead (r10, VERDICT r9 #6): min-per-label is a per-cell aggregate
+    exactly like top-k, so each (side-block x proper-block) cell emits its
+    own per-(row, label) min and a global groupBy(keys, label).MIN reduces
+    the cells exactly (MIN is associative; a cell whose surviving pairs are
+    all NaN emits NaN -> Arrow NULL, which the global MIN ignores unless
+    every cell did — then the coalesce restores NaN; a (row, label) with no
+    surviving pair in any cell emits no row).
+
+    Both routes score through ``_conformal_score_rows``, so the output is
+    bit-identical to the declarative ``_mins`` by construction:
 
     - point folds accumulate dim-by-dim ascending (IEEE sequence of the
       left fold); elastic metrics ride the bitwise-pinned batch kernels;
@@ -743,24 +643,17 @@ def _conformal_min_kernel(
       defeats Exchange reuse (measured: 6 python nodes without the cache,
       0 behind InMemoryTableScan with it).
     """
-    import numpy as np
     import pandas as pd
 
-    stats = proper.agg(
-        F.count(F.lit(1)),
-        F.max(F.size("_pf")),
-        F.countDistinct(F.size("_pf")),
-    ).first()
-    n_rows, max_len, n_lens = int(stats[0] or 0), int(stats[1] or 0), int(stats[2] or 0)
+    from ..caching import register_cache
+    from .pairscan import broadcast_scan, choose_route, grid_scan, share, side_stats
+
+    n_rows, max_len, n_lens, _ = side_stats(proper, "_pf", distinct_lens=True)
     if not n_rows:
         return None
     if kind in _CONFORMAL_POINT_KINDS and n_lens != 1:
         return None
-    if n_rows * max_len * 8 > max_broadcast_bytes:
-        # over-budget proper split (r10, VERDICT r9 #6): ride the chunked
-        # block grid instead of the interpreted crossJoin fold — the one
-        # previously remaining interpreted-HOF-at-scale conformal path
-        return _conformal_min_grid(proper, kind, (n_rows, max_len))
+    route = choose_route(n_rows * max_len * 8, max_broadcast_bytes, None)
     # pair-volume gate (routing only — both branches are exact): the kernel
     # path pays a handful of fixed driver jobs (proper collect, two cache
     # populations), which at toy pair volumes costs more than the
@@ -768,17 +661,17 @@ def _conformal_min_kernel(
     # a ~2-4 s kernel floor -> breakeven ~2M calibration pairs). The
     # calibration count is ESTIMATED from the proper count and the split
     # ratio (n_cal ~ n_proper / (cal_mod - 1)) so routing adds no job.
-    if n_rows * n_rows // max(1, cal_mod - 1) < min_kernel_pairs:
+    if route == "kernel" and n_rows * n_rows // max(1, cal_mod - 1) < min_kernel_pairs:
         return None
-
-    rows = proper.select("_pf", "_plab").collect()
-    # per proper length: (matrix, [(label, col_idx array)]) — label->column
-    # indices precomputed once so each batch only slices
-    groups = _conformal_proper_groups(rows)
-    bvar = proper.sparkSession.sparkContext.broadcast(groups)
     label_sql_type = proper.schema["_plab"].dataType.simpleString()
-
-    batch_fn, _dist_block = _conformal_dist_fns(kind)
+    batch_fn, dist_block = _conformal_dist_fns(kind)
+    if route == "kernel":
+        # per proper length: (matrix, [(label, col_idx array)]) — label->
+        # column indices precomputed once so each batch only slices
+        shared = share(
+            proper.sparkSession,
+            _conformal_proper_groups(proper.select("_pf", "_plab").collect()),
+        )
 
     def mins(side: DataFrame, fcol: str, keys: list) -> DataFrame:
         key_types = dict(side.dtypes)
@@ -787,32 +680,46 @@ def _conformal_min_kernel(
             + [f"_plab {label_sql_type}", "_dmin double"]
         )
 
-        def op(batches):
-            grps = bvar.value
-            for pdf in batches:
-                feats = pdf[fcol].to_numpy()
-                kvals = {k: pdf[k].to_numpy() for k in keys}
-                out = _conformal_score_rows(
-                    feats, kvals, keys, grps, batch_fn, _dist_block
-                )
-                yield pd.DataFrame(out)
+        def score(grps, pdf):
+            return pd.DataFrame(_conformal_score_rows(
+                pdf[fcol].to_numpy(), {k: pdf[k].to_numpy() for k in keys},
+                keys, grps, batch_fn, dist_block,
+            ))
 
-        from ..caching import register_cache
-
-        projected = side.select(*keys, fcol)
+        if route == "kernel":
+            scored = broadcast_scan(side.select(*keys, fcol), shared, score, schema)
+        else:
+            n_s, len_s, _, _ = side_stats(side, fcol)
+            L = max(max_len, 1)
+            per_pair = L * L if batch_fn is not None else L
+            cells = grid_scan(
+                side,
+                proper,
+                q_key=keys[0],
+                c_key="_pid",
+                q_cols=[*keys, fcol],
+                c_cols=[F.col("_pf").alias(fcol), "_plab"],
+                q_rows=n_s,
+                c_rows=n_rows,
+                q_bytes=n_s * len_s * 8,
+                c_bytes=n_rows * max_len * 8,
+                pair_work=n_s * n_rows * per_pair,
+                cell=lambda sp, pp: score(_conformal_proper_groups(
+                    list(zip(pp[fcol].tolist(), pp["_plab"].tolist()))
+                ), sp),
+                schema=schema,
+            )
+            scored = cells.groupBy(*keys, "_plab").agg(F.min("_dmin").alias("_dmin"))
         # Arrow's from_pandas turns a float NaN into NULL; the kernel never
         # emits a legitimate NULL _dmin (pairless rows are skipped), so
         # coalesce restores the NaN the declarative MIN would have produced
         # (the motif.py profile_d sentinel pattern)
-        mapped = projected.mapInPandas(op, schema=schema).select(
-            *keys,
-            "_plab",
-            F.coalesce("_dmin", F.lit(float("nan"))).alias("_dmin"),
-        )
-        out = register_cache(mapped.cache())
+        out = register_cache(scored.select(
+            *keys, "_plab", F.coalesce("_dmin", F.lit(float("nan"))).alias("_dmin")
+        ).cache())
         # land the bounded (rows x labels) table before the main job: lazy
         # caches re-run the kernel per consuming branch (the knn_join_lb
-        # phase-table lesson, knn.py:1905)
+        # phase-table lesson)
         out.count()
         return out
 

@@ -65,6 +65,21 @@ def _resolve_metric(metric: MetricT, band: Optional[int], fastdtw_radius: int):
     raise ValueError(f"unknown metric {metric!r}; have {sorted(DISTANCES)} + 'fastdtw'")
 
 
+def _nested_pair(test: DataFrame, train: DataFrame, features_col: str) -> bool:
+    """True for multichannel (array<array<double>>) series; both sides
+    must agree."""
+    from pyspark.sql.types import ArrayType
+
+    nested = isinstance(train.schema[features_col].dataType.elementType, ArrayType)
+    if nested != isinstance(test.schema[features_col].dataType.elementType, ArrayType):
+        raise ValueError(
+            "test/train nestedness mismatch: one side is multichannel "
+            "(array<array>) and the other flat — flatten or channel-split "
+            "upstream"
+        )
+    return nested
+
+
 def _maybe_multichannel(fn, metric: MetricT, test: DataFrame, train: DataFrame, features_col: str):
     """Declarative-path multichannel dispatch (r7, VERDICT r6 #6): nested
     features (array<array<double>>) route the named edit metrics through
@@ -75,17 +90,7 @@ def _maybe_multichannel(fn, metric: MetricT, test: DataFrame, train: DataFrame, 
     kernel (per-channel-summed POINT cost, the q113/q156 family); the
     euclidean-family folds stay flat-only (they'd mis-type on nested
     arrays at analysis time, which is the right failure)."""
-    from pyspark.sql.types import ArrayType
-
-    nested_r = isinstance(train.schema[features_col].dataType.elementType, ArrayType)
-    nested_t = isinstance(test.schema[features_col].dataType.elementType, ArrayType)
-    if nested_r != nested_t:
-        raise ValueError(
-            "test/train nestedness mismatch: one side is multichannel "
-            "(array<array>) and the other flat — flatten or channel-split "
-            "upstream"
-        )
-    if nested_r and isinstance(metric, str) and metric in (
+    if _nested_pair(test, train, features_col) and isinstance(metric, str) and metric in (
         "lcss", "edr", "erp", "twed", "msm",
     ):
         from ..functions.edit_distance import multichannel
@@ -128,44 +133,16 @@ def knn_join(
     top-k); only ragged POINT-metric corpora (no cross-length semantics)
     keep the declarative shuffle plan.
     """
-    if strategy == "kernel":
+    if strategy in ("kernel", "chunked", "reverse"):
         if keep_features:
-            raise ValueError("keep_features is not supported with strategy='kernel'")
-        return _knn_kernel_broadcast(
+            raise ValueError(f"keep_features is not supported with strategy={strategy!r}")
+        kind, nested = _scan_kind(metric, band, strategy, test, train, features_col)
+        return _knn_scan(
             test,
             train,
-            metric=metric,
-            k=k,
-            id_col=id_col,
-            features_col=features_col,
-            label_col=label_col,
-            exclude_zero=exclude_zero,
-            band=band,
-            fastdtw_radius=fastdtw_radius,
-            max_broadcast_bytes=max_broadcast_bytes,
-        )
-    if strategy == "chunked":
-        if keep_features:
-            raise ValueError("keep_features is not supported with strategy='chunked'")
-        return _knn_chunked(
-            test,
-            train,
-            metric=metric,
-            k=k,
-            id_col=id_col,
-            features_col=features_col,
-            label_col=label_col,
-            exclude_zero=exclude_zero,
-            band=band,
-            fastdtw_radius=fastdtw_radius,
-        )
-    if strategy == "reverse":
-        if keep_features:
-            raise ValueError("keep_features is not supported with strategy='reverse'")
-        return _knn_reverse(
-            test,
-            train,
-            metric=metric,
+            strategy=strategy,
+            kind=kind,
+            nested=nested,
             k=k,
             id_col=id_col,
             features_col=features_col,
@@ -213,11 +190,44 @@ def knn_join(
     return topk.select(*out)
 
 
-def _knn_kernel_broadcast(
+# named metrics the scoring core implements (fastdtw maps to "fastdtw", or
+# to "dtw" when the caller pins a band)
+_SCAN_KINDS = frozenset({
+    "dtw", "euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd",
+    "lcss", "edr", "erp", "twed", "msm",
+})
+
+
+def _scan_kind(metric: MetricT, band: Optional[int], strategy: str, test, train, features_col):
+    """Validate a kernel/reverse/chunked call once, before dispatch.
+    Returns (kind, nested): the scoring-core kind of the named metric —
+    faithful FastDTW unless the caller pins an explicit band (then exact
+    banded DTW, the declarative override rule) — and whether the series
+    are multichannel."""
+    if callable(metric):
+        raise ValueError(f"strategy={strategy!r} supports named metrics only")
+    if metric == "fastdtw":
+        kind = "dtw" if band is not None else "fastdtw"
+    elif metric in _SCAN_KINDS:
+        kind = metric
+    else:
+        raise ValueError(f"strategy={strategy!r} does not support metric {metric!r}")
+    nested = _nested_pair(test, train, features_col)
+    if nested and kind not in _ELASTIC_KINDS:
+        raise ValueError(
+            "multichannel series support metric='dtw'/'fastdtw' and the "
+            f"edit-distance family only, got {metric!r}"
+        )
+    return kind, nested
+
+
+def _knn_scan(
     test: DataFrame,
     train: DataFrame,
     *,
-    metric: MetricT,
+    strategy: str,
+    kind: str,
+    nested: bool,
     k: int,
     id_col: str,
     features_col: str,
@@ -225,191 +235,179 @@ def _knn_kernel_broadcast(
     exclude_zero: bool,
     band: Optional[int],
     fastdtw_radius: int,
-    max_broadcast_bytes: int = 512 << 20,
+    max_broadcast_bytes: int,
 ) -> DataFrame:
-    """strategy='kernel': Model-2 broadcast semantics with pair-free Arrow
-    transfer.
+    """strategy='kernel' / 'reverse' / 'chunked' over the pair-scan layer
+    (operators/pairscan.py). Every route scores through the shared core
+    ``_score_block_groups`` (test rows are always the A operand), so
+    cross-strategy bit-identity holds by construction.
 
-    The declarative broadcast plan ships BOTH feature arrays through Arrow
-    for every (test, train) pair — O(N_test * N_train * length) bytes across
-    the JVM->Python boundary, which dominates DTW wall-clock. Here the train
-    matrix is a numpy broadcast variable (unpacked once per worker) and each
-    Arrow batch carries only test rows; one vectorized dtw_batch call scores
-    a test row against the whole train side, and only the top-k rows are
-    emitted (no window, no pair shuffle — transfer drops by ~N_train/k).
+    - 'kernel': Model-2 broadcast semantics with pair-free Arrow transfer.
+      The declarative broadcast plan ships BOTH feature arrays through
+      Arrow for every pair; here the train matrix is a broadcast variable
+      and each Arrow batch carries only test rows, emitting only its top-k
+      (no window, no pair shuffle — transfer drops by ~N_train/k). The
+      driver collect is GUARDED: one stats aggregate estimates the train
+      matrix, and anything over ``max_broadcast_bytes`` goes through the
+      pair-scan gate instead (the reference's unguarded Model-2 collect at
+      Team11-Project.py:528 is the anti-pattern this avoids) — to
+      'reverse' when the test side fits budget // 8, else to 'chunked', or
+      for ragged POINT-metric corpora to the declarative shuffle plan.
+    - 'reverse' (r9, the serve regime): the test rows broadcast and ONE
+      mapInPandas pass streams the train table in place — zero exchange of
+      either side's arrays, train rows Arrow-decoded exactly once. A
+      bounded query workload against an arbitrarily large corpus moves
+      zero corpus bytes and shuffles only n_batches * k survivors per test.
+    - 'chunked' (r5, both sides over budget): the block grid; each cell
+      runs the same kernels, per-series wire copies drop from N_other to
+      n_blocks_other. When even that traffic is too much the answer is
+      knn_join_pruned / knn_join_lb, not a bigger brute force.
 
-    Same constraint as any broadcast join: the train side must fit in
-    executor memory. The driver collect is GUARDED — a cheap count/size
-    aggregate estimates the matrix first, and anything over
-    ``max_broadcast_bytes`` routes to the declarative shuffle plan instead
-    (identical results; the reference's unguarded Model-2 collect at
-    Team11-Project.py:528 is the anti-pattern this avoids). Requires
-    fixed-length train series (the batched kernel stacks them rectangular);
-    tie order and the dist!=0 exclusion match the declarative path exactly.
+    Reverse and chunked emit a per-batch / per-cell top-k and re-rank it
+    globally. Tie order is (distance, label, id) ascending with NaN last,
+    and the dist != 0 exclusion matches the declarative path. Ragged train
+    rides every route for the ELASTIC metrics (per-length rectangular
+    kernel calls, exact merged top-k); point metrics need fixed length.
     """
     import numpy as np
     import pandas as pd
 
-    if callable(metric):
-        raise ValueError("strategy='kernel' supports named metrics only")
-    if metric == "fastdtw":
-        # faithful FastDTW unless the caller pins an explicit band (then it's
-        # exact banded DTW — same override rule as the declarative path)
-        kind = "dtw" if band is not None else "fastdtw"
-    elif metric == "dtw":
-        kind = "dtw"
-    elif metric in (
-        "euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd",
-        "lcss", "edr", "erp", "twed", "msm",
-    ):
-        kind = metric
-    else:
-        raise ValueError(f"strategy='kernel' does not support metric {metric!r}")
-
-    from pyspark.sql.types import ArrayType
-
-    nested = isinstance(train.schema[features_col].dataType.elementType, ArrayType)
-    if nested and kind not in (
-        "dtw", "fastdtw", "lcss", "edr", "erp", "twed", "msm",
-    ):
-        raise ValueError(
-            "multichannel series support metric='dtw'/'fastdtw' and the "
-            f"edit-distance family only, got {metric!r}"
-        )
-    # ONE stats pass over the (possibly huge) train side: size estimate,
-    # length spread, and channels together — the reroute below reuses them
-    # instead of re-aggregating (r5 review: three separate driver-blocking
-    # jobs over the biggest table before any scoring started)
-    stat_cols = [
-        F.count(F.lit(1)),
-        F.max(F.size(features_col)),
-        F.countDistinct(F.size(features_col)),
-        F.max(F.size(F.element_at(features_col, 1))) if nested else F.lit(1),
-    ]
-    n_rows, max_len, n_lens, max_ch = train.agg(*stat_cols).first()
-    if not n_rows:
-        raise ValueError("empty train side")
-    est_bytes = n_rows * int(max_len or 0) * int(max_ch or 1) * 8
-    if est_bytes > max_broadcast_bytes:
-        # too big to materialize on the driver (or to broadcast at all).
-        # SERVE regime first (r9): when the QUERY side fits comfortably
-        # (budget // 8 — comfortably broadcastable, and small enough that
-        # the per-batch python loop over test rows stays amortized by
-        # each batch's kernel work), the reverse-broadcast kernel streams
-        # the train table in place with ZERO array exchange — strictly
-        # less traffic than the grid's block replication.
-        _t_stat = test.agg(
-            F.count(F.lit(1)),
-            F.max(F.size(features_col)),
-            F.max(F.size(F.element_at(features_col, 1))) if nested else F.lit(1),
-        ).first()
-        est_t = (
-            int(_t_stat[0] or 0) * int(_t_stat[1] or 0) * int(_t_stat[2] or 1) * 8
-        )
-        if est_t <= max_broadcast_bytes // 8:
-            return _knn_reverse(
-                test,
-                train,
-                metric="dtw" if kind == "dtw" else metric,
-                k=k,
-                id_col=id_col,
-                features_col=features_col,
-                label_col=label_col,
-                exclude_zero=exclude_zero,
-                band=band,
-                fastdtw_radius=fastdtw_radius,
-                max_broadcast_bytes=max_broadcast_bytes,
-            )
-        # The chunked block scorer (r5): both sides shuffle ONCE into block
-        # cells scored by the same numpy/C kernels — series cross the wire
-        # n_blocks times, not n_pairs times (the r4-measured 1.9-7.3x
-        # shuffle-reroute penalty came from per-PAIR array movement).
-        # Ragged train rides the same path for the elastic metrics (r9,
-        # VERDICT r8 #4: the 4.6x-measured declarative shuffle plan was
-        # the one remaining scale-soft KNN route) — cells regroup by
-        # length into rectangular kernel calls; only ragged POINT-metric
-        # corpora (no cross-length semantics) keep the declarative plan.
-        if n_lens == 1 or kind in _ELASTIC_KINDS:
-            return _knn_chunked(
-                test,
-                train,
-                metric="dtw" if kind == "dtw" else metric,
-                k=k,
-                id_col=id_col,
-                features_col=features_col,
-                label_col=label_col,
-                exclude_zero=exclude_zero,
-                band=band,
-                fastdtw_radius=fastdtw_radius,
-                _train_stats=(int(n_rows), int(max_len), int(n_lens), int(max_ch or 1)),
-            )
-        return knn_join(
-            test,
-            train,
-            metric="dtw" if kind == "dtw" else metric,
-            k=k,
-            strategy="shuffle",
-            id_col=id_col,
-            features_col=features_col,
-            label_col=label_col,
-            exclude_zero=exclude_zero,
-            band=band,
-            fastdtw_radius=fastdtw_radius,
-        )
-
-    sel = [id_col, features_col] + ([label_col] if label_col else [])
-    rows = train.select(*sel).collect()
-    lengths = {len(r[1]) for r in rows}
-    if len(lengths) != 1 and kind not in _ELASTIC_KINDS:
-        raise ValueError(
-            f"strategy='kernel' needs fixed-length train series for "
-            f"metric {metric!r}, got lengths {sorted(lengths)[:5]}"
-        )
-    # ragged train (elastic metrics only): one rectangular matrix per
-    # distinct length — each Arrow batch scores against every group and
-    # the per-group top-ks merge exactly (r9, VERDICT r8 #4)
-    ids = [r[0] for r in rows]
-    fv = [r[1] for r in rows]
-    labels = [r[2] for r in rows] if label_col else None
-    bvar = test.sparkSession.sparkContext.broadcast(
-        _group_by_length(ids, fv, labels)
+    from .pairscan import (
+        broadcast_scan, check_fits, choose_route, grid_scan, rerank, share,
+        side_stats,
     )
 
-    label_type = dict(train.dtypes)[label_col] if label_col else None
-    schema = "test_id long, train_id long"
-    if label_col:
-        schema += f", train_label {label_type}"
-    schema += ", distance double, rank int"
-
-    kk = k
-    excl = exclude_zero
-    bnd = band
-    rad = fastdtw_radius
-
     has_label = label_col is not None
+    label_type = dict(train.dtypes)[label_col] if has_label else None
+    cols = ["test_id", "train_id"] + (["train_label"] if has_label else []) + ["distance"]
+    schema = "test_id long, train_id long"
+    if has_label:
+        schema += f", train_label {label_type}"
+    schema += ", distance double"
+    t_cols = [F.col(id_col).alias("_id"), F.col(features_col).alias("_f")]
+    r_cols = t_cols + ([F.col(label_col).alias("_lbl")] if has_label else [])
+    score = dict(kind=kind, k=k, excl=exclude_zero, band=band, radius=fastdtw_radius)
 
-    def op(batches):
-        groups = bvar.value
-        for pdf in batches:
-            out = _score_block_groups(
-                pdf["test_id"].to_numpy(),
-                pdf["_tf"].to_numpy(),
-                groups,
-                kind=kind,
-                k=kk,
-                excl=excl,
-                band=bnd,
-                radius=rad,
-                with_rank=True,
+    def test_stats():
+        n, length, _, ch = side_stats(test, features_col, nested=nested)
+        return n, length, ch, n * length * ch * 8
+
+    def local_topk(t_ids, t_feats, rp: pd.DataFrame) -> pd.DataFrame:
+        # test rows against one train piece (a streamed batch or a grid
+        # cell), no rank. np.asarray(list) not .to_numpy(): pandas hands
+        # string labels as object dtype, which np.lexsort rejects
+        groups = _group_by_length(
+            rp["_id"].to_numpy(dtype=np.int64),
+            rp["_f"].to_numpy(),
+            np.asarray(list(rp["_lbl"])) if has_label else None,
+        )
+        out = _score_block_groups(t_ids, t_feats, groups, with_rank=False, **score)
+        return pd.DataFrame({c: out[c] for c in cols})
+
+    route = strategy
+    if strategy != "reverse":
+        # ONE stats pass over the (possibly huge) train side: size
+        # estimate, length spread and channels together
+        n_r, len_r, n_lens, ch_r = side_stats(
+            train, features_col, nested=nested, distinct_lens=True
+        )
+        if not n_r:
+            raise ValueError("empty train side")
+        if strategy == "kernel":
+            route = choose_route(
+                n_r * len_r * ch_r * 8, max_broadcast_bytes, lambda: test_stats()[3]
             )
-            cols = ["test_id", "train_id"]
-            if has_label:
-                cols.append("train_label")
-            cols += ["distance", "rank"]
-            yield pd.DataFrame({c: out[c] for c in cols})
+        if route != "reverse" and n_lens != 1 and kind not in _ELASTIC_KINDS:
+            if strategy == "kernel" and route == "chunked":
+                # point metrics have no cross-length kernel: an over-budget
+                # ragged corpus keeps the declarative shuffle plan
+                return knn_join(
+                    test, train, metric=kind, k=k, strategy="shuffle",
+                    id_col=id_col, features_col=features_col,
+                    label_col=label_col, exclude_zero=exclude_zero,
+                    band=band, fastdtw_radius=fastdtw_radius,
+                )
+            raise ValueError(
+                f"strategy={strategy!r} needs fixed-length train series for "
+                f"metric {kind!r} (found {n_lens} distinct lengths)"
+            )
 
-    t = test.select(F.col(id_col).alias("test_id"), F.col(features_col).alias("_tf"))
-    return t.mapInPandas(op, schema=schema)
+    spark = test.sparkSession
+    if route == "kernel":
+        rows = train.select(*r_cols).collect()
+        groups = _group_by_length(
+            [r[0] for r in rows],
+            [r[1] for r in rows],
+            [r[2] for r in rows] if has_label else None,
+        )
+
+        def batch(groups, pdf):
+            out = _score_block_groups(
+                pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups,
+                with_rank=True, **score,
+            )
+            return pd.DataFrame({c: out[c] for c in cols + ["rank"]})
+
+        return broadcast_scan(
+            test.select(*t_cols), share(spark, groups), batch, schema + ", rank int"
+        )
+    if route == "reverse":
+        check_fits(test_stats()[3], max_broadcast_bytes, "test")
+        rows = test.select(*t_cols).collect()
+
+        def batch(t, pdf):
+            t_ids, t_feats = t
+            if not len(pdf) or not t_ids:
+                return None
+            out = local_topk(t_ids, t_feats, pdf)
+            return out if len(out) else None
+
+        scored = broadcast_scan(
+            train.select(*r_cols),
+            share(spark, ([r[0] for r in rows], [r[1] for r in rows])),
+            batch,
+            schema,
+        )
+    else:
+        n_t, len_t, ch_t, t_bytes = test_stats()
+        if nested and n_t and ch_t != ch_r:
+            raise ValueError(
+                f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
+            )
+        # per-pair cost model for the grid split: DTW sweeps len x
+        # band_width cells (x channels); faithful FastDTW ~(2*(2r+1)+2)
+        # cells per row across all levels, NOT the full L columns (review
+        # r6); the edit DPs every (i, j) cell per channel; point metrics
+        # touch each coordinate once — heavy DTW workloads keep every core
+        # even when their BYTES are small
+        L = max(len_r, 1)
+        if kind == "dtw":
+            per_pair = L * (min(2 * band + 1, L) if band is not None else L) * ch_r
+        elif kind == "fastdtw":
+            per_pair = L * min(4 * (fastdtw_radius + 1) + 2, L) * ch_r
+        elif kind in _ELASTIC_KINDS:
+            per_pair = L * L * ch_r
+        else:
+            per_pair = L * ch_r
+        scored = grid_scan(
+            test,
+            train,
+            q_key=id_col,
+            c_key=id_col,
+            q_cols=t_cols,
+            c_cols=r_cols,
+            q_rows=n_t,
+            c_rows=n_r,
+            q_bytes=t_bytes,
+            c_bytes=n_r * len_r * ch_r * 8,
+            pair_work=n_t * n_r * per_pair,
+            cell=lambda tp, rp: local_topk(
+                tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
+            ),
+            schema=schema,
+        )
+    ties = (["train_label"] if has_label else []) + ["train_id"]
+    return rerank(scored, "test_id", "distance", ties, k).select(*cols, "rank")
 
 
 def _score_block_rows(
@@ -617,7 +615,8 @@ def _score_block_groups(
         if with_rank:
             out["rank"] = np.empty(0, dtype=np.int64)
         if has_label:
-            out["train_label"] = np.empty(0)
+            # the groups' label dtype, as _score_block_rows' empty branch
+            out["train_label"] = np.concatenate([g[2][:0] for g in groups])
         return out
     i_arr = np.concatenate([np.asarray(p["train_id"], dtype=np.int64) for p in parts])
     d_arr = np.concatenate([np.asarray(p["distance"], dtype=np.float64) for p in parts])
@@ -672,386 +671,6 @@ def _group_by_length(ids, fvals, labels):
             np.asarray([labels[i] for i in idxs]) if labels is not None else None,
         ))
     return groups
-
-
-def _knn_chunked(
-    test: DataFrame,
-    train: DataFrame,
-    *,
-    metric: MetricT,
-    k: int,
-    id_col: str,
-    features_col: str,
-    label_col: Optional[str],
-    exclude_zero: bool,
-    band: Optional[int],
-    fastdtw_radius: int,
-    block_bytes: int = 64 << 20,
-    _train_stats: "Optional[tuple[int, int, int, int]]" = None,
-) -> DataFrame:
-    """strategy='chunked' (r5): block nested-loop KNN for the NO-BROADCAST
-    regime — train exceeds ``max_broadcast_bytes`` so neither the kernel's
-    driver collect nor a broadcast join is allowed, and the declarative
-    'shuffle' plan would move BOTH feature arrays once per PAIR (O(N_t *
-    N_r * length * 8) shuffle bytes — the dominant cost of the r4-measured
-    1.9-7.3x reroute penalty).
-
-    Here the cross product is tiled into (test-block x train-block) cells:
-    each side is hash-assigned to ceil(bytes / block_bytes) blocks (train
-    floored up to cluster parallelism) and replicated only across the
-    OTHER side's block count — shuffle traffic is
-    test_blocks * |train| + train_blocks * |test| ~ 2|test||train|/B,
-    the grid-replication optimum for exact all-pairs (per-series wire
-    copies drop from N_other to n_blocks_other; raise block_bytes with
-    executor memory to cut replication linearly, and when even that
-    traffic is too much the answer is knn_join_pruned/knn_join_lb, not a
-    bigger brute force). Each cell is scored by one applyInPandas
-    call running the EXACT numpy/C kernels of strategy='kernel' (same
-    metric expressions, same dist!=0 mask, same (distance, label, id)
-    lexsort), emitting top-k per (test, cell); a final WindowGroupLimit
-    window reranks the n_cells * k survivors per test. Results are
-    identical to kernel/shuffle (test-pinned).
-
-    Same constraints as strategy='kernel': named metrics, fixed-length
-    train series (validated with an aggregate, not a collect).
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType
-
-    from ..functions.distance import _stack_series
-
-    if callable(metric):
-        raise ValueError("strategy='chunked' supports named metrics only")
-    if metric == "fastdtw":
-        kind = "dtw" if band is not None else "fastdtw"
-    elif metric == "dtw":
-        kind = "dtw"
-    elif metric in (
-        "euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd",
-        "lcss", "edr", "erp", "twed", "msm",
-    ):
-        kind = metric
-    else:
-        raise ValueError(f"strategy='chunked' does not support metric {metric!r}")
-    nested = isinstance(train.schema[features_col].dataType.elementType, ArrayType)
-    nested_t = isinstance(test.schema[features_col].dataType.elementType, ArrayType)
-    if nested != nested_t:
-        raise ValueError(
-            "test/train nestedness mismatch: one side is multichannel "
-            "(array<array>) and the other flat — flatten or channel-split "
-            "upstream"
-        )
-    if nested and kind not in (
-        "dtw", "fastdtw", "lcss", "edr", "erp", "twed", "msm",
-    ):
-        raise ValueError(
-            "multichannel series support metric='dtw'/'fastdtw' and the "
-            f"edit-distance family only, got {metric!r}"
-        )
-    spark = test.sparkSession
-    ch_expr = (
-        F.max(F.size(F.element_at(features_col, 1))) if nested else F.lit(1)
-    )
-    if _train_stats is not None:
-        # the kernel-guard reroute already aggregated the train side once
-        # (n_rows, max_len, n_distinct_lens, channels) — don't re-scan
-        n_r, len_r, n_len_r, ch_r = _train_stats
-    else:
-        n_r, len_r, n_len_r, ch_r = train.agg(
-            F.count(F.lit(1)),
-            F.max(F.size(features_col)),
-            F.countDistinct(F.size(features_col)),
-            ch_expr,
-        ).first()
-    if not n_r:
-        raise ValueError("empty train side")
-    if n_len_r != 1 and kind not in _ELASTIC_KINDS:
-        raise ValueError(
-            f"strategy='chunked' needs fixed-length train series for "
-            f"metric {metric!r} (found {n_len_r} distinct lengths)"
-        )
-    n_t, len_t, ch_t = test.agg(
-        F.count(F.lit(1)), F.max(F.size(features_col)), ch_expr
-    ).first()
-    if nested and n_t and ch_t != ch_r:
-        raise ValueError(
-            f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
-        )
-    par = spark.sparkContext.defaultParallelism
-    # grid sizing (r6, VERDICT r5 #6): overhead-aware cell count +
-    # traffic-balanced split + memory floors — see similarity._grid_split.
-    # Per-pair cost model: DTW sweeps len x band_width cells (x channels),
-    # point metrics touch each coordinate once — heavy DTW workloads keep
-    # every core even when their BYTES are small.
-    from .similarity import _grid_split
-
-    L = int(len_r or 1)
-    if metric == "dtw" or (metric == "fastdtw" and band is not None):
-        width = min(2 * band + 1, L) if band is not None else L
-        per_pair = L * width * int(ch_r or 1)
-    elif metric == "fastdtw":
-        # faithful FastDTW sweeps ~(2*(2r+1)+2) cells per row across all
-        # levels, NOT the full L columns — modeling it as L*L overstated
-        # 561-pt work ~190x and kept toy jobs from collapsing cells
-        # (review r6)
-        per_pair = L * min(4 * (fastdtw_radius + 1) + 2, L) * int(ch_r or 1)
-    elif metric in ("lcss", "edr", "erp", "twed", "msm"):
-        # full-table edit-distance DPs sweep every (i, j) cell — once per
-        # channel under the independent-channel-sum lift (r7)
-        per_pair = L * L * int(ch_r or 1)
-    else:
-        per_pair = L * int(ch_r or 1)
-    bt, br = _grid_split(
-        int(n_t or 0) * int(len_t or 0) * int(ch_t or 1) * 8,
-        int(n_r) * int(len_r or 0) * int(ch_r or 1) * 8,
-        int(n_t or 1),
-        int(n_r),
-        int(n_t or 0) * int(n_r) * per_pair,
-        block_bytes,
-        par,
-    )
-    label_type = dict(train.dtypes)[label_col] if label_col else None
-    t_side = test.select(
-        F.pmod(F.hash(F.col(id_col)), F.lit(bt)).alias("_tblk"),
-        F.explode(F.sequence(F.lit(0), F.lit(br - 1))).alias("_rblk"),
-        F.lit(True).alias("_ist"),
-        F.col(id_col).alias("_id"),
-        F.col(features_col).alias("_f"),
-        *( [F.lit(None).cast(label_type).alias("_lbl")] if label_col else [] ),
-    )
-    r_side = train.select(
-        F.explode(F.sequence(F.lit(0), F.lit(bt - 1))).alias("_tblk"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(br)).alias("_rblk"),
-        F.lit(False).alias("_ist"),
-        F.col(id_col).alias("_id"),
-        F.col(features_col).alias("_f"),
-        *( [F.col(label_col).alias("_lbl")] if label_col else [] ),
-    )
-    kk, excl, bnd, rad = k, exclude_zero, band, fastdtw_radius
-    has_label = label_col is not None
-
-    def cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {"test_id": [], "train_id": [], "distance": []}
-        if has_label:
-            cols["train_label"] = []
-        tm = pdf["_ist"].to_numpy()
-        tp, rp = pdf[tm], pdf[~tm]
-        if not len(tp) or not len(rp):
-            out = pd.DataFrame(cols)
-            return out.astype({"test_id": "int64", "train_id": "int64",
-                               "distance": "float64"})
-        # np.asarray(list) not .to_numpy(): pandas hands string labels as
-        # object dtype, which np.lexsort rejects; the list round-trip gives
-        # the same '<U'/float dtype the kernel's collect-based array has.
-        # Ragged train cells (elastic metrics, r9 VERDICT r8 #4) group by
-        # length into rectangular kernel calls — fixed-length cells are
-        # ONE group and short-circuit to the shared scoring core verbatim.
-        groups = _group_by_length(
-            rp["_id"].to_numpy(dtype=np.int64),
-            rp["_f"].to_numpy(),
-            np.asarray(list(rp["_lbl"])) if has_label else None,
-        )
-        # the SAME scoring core as strategy='kernel' (bit-identity by
-        # construction); per-cell top-k only — the global rerank window
-        # below re-ranks across cells, so no rank is emitted here
-        cols = _score_block_groups(
-            tp["_id"].to_numpy(dtype=np.int64),
-            tp["_f"].to_numpy(),
-            groups,
-            kind=kind,
-            k=kk,
-            excl=excl,
-            band=bnd,
-            radius=rad,
-            with_rank=False,
-        )
-        order_cols = ["test_id", "train_id"]
-        if has_label:
-            order_cols.append("train_label")
-        order_cols.append("distance")
-        return pd.DataFrame({c: cols[c] for c in order_cols})
-
-    schema = "test_id long, train_id long"
-    if label_col:
-        schema += f", train_label {label_type}"
-    schema += ", distance double"
-    # EXPLICIT repartition on the cell key (r6, VERDICT r5 #6): the cell
-    # grid is compute-heavy but byte-light, and AQE's advisory-size
-    # coalescing saw a ~tens-of-MB shuffle and squeezed it onto 1-2 tasks —
-    # serializing every cell (the measured toy-regime gap: 3s of cell
-    # compute with 0.1s max per cell running at parallelism 1). A
-    # user-specified repartition is exempt from AQE coalescing and
-    # satisfies the groupBy's clustering requirement, so the exchange is
-    # not duplicated.
-    # one cell per task where affordable (r9): packing ~4 multi-second
-    # cells per partition quantized the stage into ragged waves (133 cells
-    # over 32 slots = 4.2 serial cells/task; a 1-cell tail wave idles 27
-    # cores). Individual cell tasks let the scheduler pack the tail; the
-    # cap keeps the task count bounded when the grid is huge (cells >>
-    # tasks means per-task cell counts are high and waves smooth out
-    # statistically anyway).
-    n_parts = min(bt * br, max(par, 1) * 32)
-    blocked = (
-        t_side.unionByName(r_side)
-        .repartition(n_parts, "_tblk", "_rblk")
-        .groupBy("_tblk", "_rblk")
-        .applyInPandas(lambda _, pdf: cell(pdf), schema=schema)
-    )
-    # nulls LAST: Arrow maps NaN distances (corrupt/NaN-element series) to
-    # SQL nulls; the kernel's in-Python lexsort puts NaN at the end, and a
-    # plain F.asc would rank nulls FIRST — same fix as the ANN chunked path
-    order = [F.asc_nulls_last("distance")]
-    if label_col is not None:
-        order.append(F.asc("train_label"))
-    order.append(F.asc("train_id"))
-    topk = topk_per_key(blocked, "test_id", order, k)
-    out = ["test_id", "train_id"]
-    if label_col:
-        out.append("train_label")
-    out += ["distance", "rank"]
-    return topk.select(*out)
-
-
-def _knn_reverse(
-    test: DataFrame,
-    train: DataFrame,
-    *,
-    metric: MetricT,
-    k: int,
-    id_col: str,
-    features_col: str,
-    label_col: Optional[str],
-    exclude_zero: bool,
-    band: Optional[int],
-    fastdtw_radius: int,
-    max_broadcast_bytes: int = 512 << 20,
-) -> DataFrame:
-    """strategy='reverse' (r9): broadcast-the-TEST kernel for the SERVE
-    regime — the train side exceeds ``max_broadcast_bytes`` (so the
-    broadcast kernel's driver collect is off the table) but the query
-    workload fits. The grouped test rows broadcast once and ONE
-    mapInPandas pass streams the train table IN PLACE: zero exchange of
-    either side's arrays (the chunked grid re-ships the test side per
-    train block and the train side per test block), train rows are
-    Arrow-decoded exactly once, each batch emits its per-test top-k
-    through the shared scoring core, and the chunked path's global
-    re-rank reduces batch winners to the exact global top-k.
-
-    Scale shape (100 TB): a bounded query workload against an
-    arbitrarily large corpus moves ZERO corpus bytes and shuffles only
-    n_batches * k survivor rows per query — the traffic floor for exact
-    brute force. Both-sides-huge stays on the chunked grid; the guard in
-    strategy='kernel' routes here only when the test estimate fits
-    comfortably (budget // 8), so the per-batch python loop over test
-    rows never runs against an unbounded query side.
-
-    Bit-identity: per-pair arithmetic is `_score_block_rows` verbatim
-    (test rows are always the A operand, as in every other strategy);
-    each batch's top-k is a superset of its contribution to the global
-    top-k, and the re-rank applies the same (distance ASC, label ASC,
-    id ASC) total order — equality with kernel/chunked/shuffle is
-    test-pinned."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType
-
-    if callable(metric):
-        raise ValueError("strategy='reverse' supports named metrics only")
-    if metric == "fastdtw":
-        kind = "dtw" if band is not None else "fastdtw"
-    elif metric == "dtw":
-        kind = "dtw"
-    elif metric in (
-        "euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd",
-        "lcss", "edr", "erp", "twed", "msm",
-    ):
-        kind = metric
-    else:
-        raise ValueError(f"strategy='reverse' does not support metric {metric!r}")
-    nested = isinstance(train.schema[features_col].dataType.elementType, ArrayType)
-    nested_t = isinstance(test.schema[features_col].dataType.elementType, ArrayType)
-    if nested != nested_t:
-        raise ValueError(
-            "test/train nestedness mismatch: one side is multichannel "
-            "(array<array>) and the other flat — flatten or channel-split "
-            "upstream"
-        )
-    if nested and kind not in (
-        "dtw", "fastdtw", "lcss", "edr", "erp", "twed", "msm",
-    ):
-        raise ValueError(
-            "multichannel series support metric='dtw'/'fastdtw' and the "
-            f"edit-distance family only, got {metric!r}"
-        )
-    spark = test.sparkSession
-    ch_expr = (
-        F.max(F.size(F.element_at(features_col, 1))) if nested else F.lit(1)
-    )
-    n_t, len_t, ch_t = test.agg(
-        F.count(F.lit(1)), F.max(F.size(features_col)), ch_expr
-    ).first()
-    est_t = int(n_t or 0) * int(len_t or 0) * int(ch_t or 1) * 8
-    if est_t > max_broadcast_bytes:
-        raise ValueError(
-            f"test side ~{est_t} bytes exceeds max_broadcast_bytes="
-            f"{max_broadcast_bytes}; use strategy='chunked' (both sides "
-            "oversized)"
-        )
-    t_rows = test.select(id_col, features_col).collect()
-    bvar = spark.sparkContext.broadcast(
-        ([r[0] for r in t_rows], [r[1] for r in t_rows])
-    )
-    has_label = label_col is not None
-    label_type = dict(train.dtypes)[label_col] if has_label else None
-    kk, excl, bnd, rad = k, exclude_zero, band, fastdtw_radius
-    sel = [F.col(id_col).alias("_id"), F.col(features_col).alias("_f")]
-    if has_label:
-        sel.append(F.col(label_col).alias("_lbl"))
-    src = train.select(*sel)
-
-    def op(batches):
-        t_ids, t_fs = bvar.value
-        order_cols = ["test_id", "train_id"]
-        if has_label:
-            order_cols.append("train_label")
-        order_cols.append("distance")
-        for pdf in batches:
-            if not len(pdf) or not t_ids:
-                continue
-            groups = _group_by_length(
-                pdf["_id"].to_numpy(dtype=np.int64),
-                pdf["_f"].to_numpy(),
-                np.asarray(list(pdf["_lbl"])) if has_label else None,
-            )
-            cols = _score_block_groups(
-                t_ids, t_fs, groups, kind=kind, k=kk, excl=excl,
-                band=bnd, radius=rad, with_rank=False,
-            )
-            if len(cols["test_id"]):
-                yield pd.DataFrame({c: cols[c] for c in order_cols})
-
-    schema = "test_id long, train_id long"
-    if has_label:
-        schema += f", train_label {label_type}"
-    schema += ", distance double"
-    blocked = src.mapInPandas(op, schema=schema)
-    # nulls LAST — the same Arrow NaN-to-null mapping and tie order as the
-    # chunked path's re-rank
-    order = [F.asc_nulls_last("distance")]
-    if has_label:
-        order.append(F.asc("train_label"))
-    order.append(F.asc("train_id"))
-    topk = topk_per_key(blocked, "test_id", order, k)
-    out = ["test_id", "train_id"]
-    if has_label:
-        out.append("train_label")
-    out += ["distance", "rank"]
-    return topk.select(*out)
 
 
 def _channel_series(col, c: int):
@@ -1188,17 +807,16 @@ def knn_join_pruned(
     t1 = t.select("test_id", "_tp")
     r1 = r.select("train_id", "_rp")
     if strategy == "chunked":
-        cands = _knn_chunked(
+        cands = knn_join(
             t1.select(F.col("test_id").alias("sid"), F.col("_tp").alias("feat")),
             r1.select(F.col("train_id").alias("sid"), F.col("_rp").alias("feat")),
             metric="sq_euclidean",
             k=C,
+            strategy="chunked",
             id_col="sid",
             features_col="feat",
             label_col=None,
             exclude_zero=False,
-            band=None,
-            fastdtw_radius=fastdtw_radius,
         ).select("test_id", "train_id")
     else:
         coarse = t1.crossJoin(F.broadcast(r1) if strategy == "broadcast" else r1)

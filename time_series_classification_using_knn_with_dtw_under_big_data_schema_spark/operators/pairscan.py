@@ -1,0 +1,238 @@
+"""Pair-scan physical layer — the one owner of how the brute-force pair
+families (KNN, ANN brute / quantized, conformal KNN) move their two sides
+past each other.
+
+The reference engine is one similarity join with two physical join
+strategies (a partitioned cross product and a broadcast nested loop), each
+feeding a per-key top-k. This module expresses that shape once, in three
+strategies, and the families supply only a batch or cell function around
+their scoring cores:
+
+- **broadcast scan** — broadcast one side as a numpy payload and run one
+  ``mapInPandas`` pass over the other. With the candidate side broadcast
+  this is strategy='kernel'; with the query side broadcast and the
+  candidate table streamed in place it is strategy='reverse' (the serve
+  regime: zero exchange of either side's arrays).
+- **block grid** — strategy='chunked', for when neither side fits: each
+  side is hash-assigned to blocks and replicated across the other side's
+  block count, and one ``applyInPandas`` call scores each (query-block x
+  candidate-block) cell. Traffic is ``~2|q||c|/block_bytes``, the
+  grid-replication optimum for exact all-pairs scoring.
+- **re-rank** — the reverse and grid strategies emit a per-batch or
+  per-cell top-k; ``rerank`` reduces the survivors to the exact global
+  top-k under the kernels' (distance, label, id) order with NaN last.
+
+``choose_route`` is the byte gate between them: the candidate side
+broadcasts while it fits ``max_broadcast_bytes``; otherwise the query side
+broadcasts while it fits ``budget // 8``; otherwise the grid runs.
+
+Every broadcast goes through ``share``, which registers it with the
+innermost ``caching.cache_scope`` so a long-lived session can release it.
+"""
+
+from __future__ import annotations
+
+import math
+from typing import Callable, Optional
+
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from ..caching import register_broadcast
+from .topk import topk_per_key
+
+# ~multiply-adds a block cell should own before another task is worth its
+# fixed cost (launch + Arrow decode + numpy stack) — calibrated on the r5
+# toy-regime fallback entries
+_CELL_WORK_TARGET = 16_000_000
+
+
+def _grid_split(
+    q_bytes: int,
+    c_bytes: int,
+    nq: int,
+    nc: int,
+    pair_work: int,
+    block_bytes: int,
+    par: int,
+) -> "tuple[int, int]":
+    """Block-grid sizing for the chunked pair scorers (r6, VERDICT r5 #6).
+
+    Three forces, applied in order:
+    - OVERHEAD: total cells = pair_work / _CELL_WORK_TARGET capped at the
+      cluster parallelism — a toy input collapses to one cell instead of
+      paying par tasks' fixed cost (the r5 toy-regime ratios), a big input
+      keeps every core (DTW workloads count their band sweep in pair_work,
+      so compute-heavy-but-byte-light inputs still go wide).
+    - TRAFFIC: each side is replicated across the OTHER side's block
+      count (traffic = q_bytes*bc + c_bytes*bq), so the grid splits the
+      cell budget proportional to sqrt(q_bytes/c_bytes) — the minimizer
+      under bq*bc = cells. A tiny query side gives bq = 1 and the corpus
+      still moves EXACTLY ONCE (the serve case).
+    - MEMORY: hard floors ceil(side_bytes / block_bytes) so no task's
+      working set exceeds ~2 blocks regardless of the above.
+    """
+    bq_mem = max(1, math.ceil(q_bytes / block_bytes))
+    bc_mem = max(1, math.ceil(c_bytes / block_bytes))
+    # cap at 2x parallelism (r9; was 4x): cells now map one-per-task
+    # (grid_scan n_parts), so the old hash-packing smoothing is obsolete
+    # and extra cells only buy replication — every unit of cells
+    # multiplies the smaller side's shuffle copies and the per-cell fixed
+    # cost (arrow conversion + per-row top-k overhead). 2x keeps two even
+    # waves of work-stealing granularity against box noise; the memory
+    # floors still push the count up when the sides are truly big.
+    cells = max(
+        bq_mem * bc_mem, min(2 * par, max(1, pair_work // _CELL_WORK_TARGET))
+    )
+    bq = round(math.sqrt(cells * q_bytes / max(c_bytes, 1)))
+    bq = min(max(bq, bq_mem, 1), max(nq, 1), cells)
+    bc = min(max(math.ceil(cells / bq), bc_mem), max(nc, 1))
+    return bq, bc
+
+
+def side_stats(
+    df: DataFrame, fcol: str, *, nested: bool = False, distinct_lens: bool = False
+) -> "tuple[int, int, Optional[int], int]":
+    """(rows, max length, distinct lengths, channels) of one side in ONE
+    aggregate job. ``distinct_lens`` is None unless requested (the
+    countDistinct costs an extra aggregation stage); channels is 1 for
+    flat series."""
+    cols = [F.count(F.lit(1)), F.max(F.size(fcol))]
+    if distinct_lens:
+        cols.append(F.countDistinct(F.size(fcol)))
+    cols.append(F.max(F.size(F.element_at(fcol, 1))) if nested else F.lit(1))
+    row = df.agg(*cols).first()
+    n_lens = int(row[2] or 0) if distinct_lens else None
+    return int(row[0] or 0), int(row[1] or 0), n_lens, int(row[-1] or 1)
+
+
+def choose_route(
+    c_bytes: int, budget: int, q_bytes: Optional[Callable[[], int]]
+) -> str:
+    """The byte gate: 'kernel' when the candidate side fits ``budget``;
+    else 'reverse' when the query side fits ``budget // 8`` (comfortably
+    broadcastable, and small enough that each batch's Python loop over
+    query rows stays amortized by its kernel work); else 'chunked'.
+    ``q_bytes`` is called only past the first check (it usually costs an
+    aggregate job); None means the family has no reverse route."""
+    if c_bytes <= budget:
+        return "kernel"
+    if q_bytes is not None and q_bytes() <= budget // 8:
+        return "reverse"
+    return "chunked"
+
+
+def check_fits(q_bytes: int, budget: int, side: str) -> None:
+    """strategy='reverse' guard: the broadcast query side must fit."""
+    if q_bytes > budget:
+        raise ValueError(
+            f"{side} side ~{q_bytes} bytes exceeds max_broadcast_bytes="
+            f"{budget}; use strategy='chunked' (both sides oversized)"
+        )
+
+
+def share(spark, payload):
+    """Broadcast ``payload`` once; released when the innermost
+    ``cache_scope`` exits (session-lifetime outside any scope)."""
+    return register_broadcast(spark.sparkContext.broadcast(payload))
+
+
+def broadcast_scan(
+    stream: DataFrame,
+    shared,
+    batch: Callable[[object, pd.DataFrame], Optional[pd.DataFrame]],
+    schema: str,
+) -> DataFrame:
+    """One mapInPandas pass over ``stream``: ``batch(value, pdf)`` scores
+    each Arrow batch against the broadcast value (``shared`` from
+    ``share``, unpacked once per worker) and returns a frame, or None to
+    emit nothing."""
+
+    def op(batches):
+        value = shared.value
+        for pdf in batches:
+            out = batch(value, pdf)
+            if out is not None:
+                yield out
+
+    return stream.mapInPandas(op, schema=schema)
+
+
+def grid_scan(
+    q: DataFrame,
+    c: DataFrame,
+    *,
+    q_key: str,
+    c_key: str,
+    q_cols: list,
+    c_cols: list,
+    q_rows: int,
+    c_rows: int,
+    q_bytes: int,
+    c_bytes: int,
+    pair_work: int,
+    cell: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
+    schema: str,
+    block_bytes: int = 64 << 20,
+) -> DataFrame:
+    """Block nested-loop scan for the NO-BROADCAST regime: tile the cross
+    product into (query-block x candidate-block) cells sized by
+    ``_grid_split`` and score each with one ``cell(q_rows, c_rows)`` call
+    inside applyInPandas. ``q_cols``/``c_cols`` are the payload columns
+    each side carries (hashed into blocks by ``q_key``/``c_key``); a
+    column one side lacks arrives as null. A cell missing either side
+    emits nothing."""
+    par = q.sparkSession.sparkContext.defaultParallelism
+    bq, bc = _grid_split(
+        q_bytes, c_bytes, q_rows, c_rows, pair_work, block_bytes, par
+    )
+    q_side = q.select(
+        F.pmod(F.hash(F.col(q_key)), F.lit(bq)).alias("_qblk"),
+        F.explode(F.sequence(F.lit(0), F.lit(bc - 1))).alias("_cblk"),
+        F.lit(True).alias("_isq"),
+        *q_cols,
+    )
+    c_side = c.select(
+        F.explode(F.sequence(F.lit(0), F.lit(bq - 1))).alias("_qblk"),
+        F.pmod(F.hash(F.col(c_key)), F.lit(bc)).alias("_cblk"),
+        F.lit(False).alias("_isq"),
+        *c_cols,
+    )
+    names = DataType.fromDDL(schema).names
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        qm = pdf["_isq"].to_numpy()
+        qp, cp = pdf[qm], pdf[~qm]
+        if not len(qp) or not len(cp):
+            return pd.DataFrame({n: [] for n in names})
+        return cell(qp, cp)
+
+    # EXPLICIT repartition on the cell key (r6, VERDICT r5 #6): the cell
+    # grid is compute-heavy but byte-light, and AQE's advisory-size
+    # coalescing saw a ~tens-of-MB shuffle and squeezed it onto 1-2 tasks —
+    # serializing every cell. A user-specified repartition is exempt from
+    # AQE coalescing and satisfies the groupBy's clustering requirement,
+    # so the exchange is not duplicated. One cell per task where
+    # affordable (r9): packing several cells per partition quantized the
+    # stage into ragged waves; the cap keeps the task count bounded when
+    # the grid is huge (per-task cell counts are then high and waves
+    # smooth out statistically anyway).
+    n_parts = min(bq * bc, max(par, 1) * 32)
+    return (
+        q_side.unionByName(c_side, allowMissingColumns=True)
+        .repartition(n_parts, "_qblk", "_cblk")
+        .groupBy("_qblk", "_cblk")
+        .applyInPandas(lambda _, pdf: run(pdf), schema=schema)
+    )
+
+
+def rerank(scored: DataFrame, key: str, dist: str, ties: list, k: int) -> DataFrame:
+    """Exact global top-k per ``key`` over per-batch / per-cell survivors
+    (each local top-k is a superset of its contribution), ordered
+    (``dist`` ASC NULLS LAST, *``ties`` ASC). Nulls LAST: Arrow maps the
+    kernels' NaN distances to SQL nulls, and the kernels' lexsort puts NaN
+    at the end — a plain asc would rank nulls FIRST."""
+    order = [F.asc_nulls_last(dist)] + [F.asc(c) for c in ties]
+    return topk_per_key(scored, key, order, k)

@@ -49,234 +49,125 @@ def _cos_fn(scoring: str):
     raise ValueError(f"unknown scoring {scoring!r}")
 
 
-# ~multiply-adds a block cell should own before another task is worth its
-# fixed cost (launch + Arrow decode + numpy stack) — calibrated on the r5
-# toy-regime fallback entries; shared by the ANN and KNN chunked scorers
-_CELL_WORK_TARGET = 16_000_000
-
-
-def _grid_split(
-    q_bytes: int,
-    c_bytes: int,
-    nq: int,
-    nc: int,
-    pair_work: int,
-    block_bytes: int,
-    par: int,
-) -> "tuple[int, int]":
-    """Block-grid sizing for the chunked pair scorers (r6, VERDICT r5 #6).
-
-    Three forces, applied in order:
-    - OVERHEAD: total cells = pair_work / _CELL_WORK_TARGET capped at the
-      cluster parallelism — a toy input collapses to one cell instead of
-      paying par tasks' fixed cost (the r5 toy-regime ratios), a big input
-      keeps every core (DTW workloads count their band sweep in pair_work,
-      so compute-heavy-but-byte-light inputs still go wide).
-    - TRAFFIC: each side is replicated across the OTHER side's block
-      count (traffic = q_bytes*bc + c_bytes*bq), so the grid splits the
-      cell budget proportional to sqrt(q_bytes/c_bytes) — the minimizer
-      under bq*bc = cells. A tiny query side gives bq = 1 and the corpus
-      still moves EXACTLY ONCE (the serve case).
-    - MEMORY: hard floors ceil(side_bytes / block_bytes) so no task's
-      working set exceeds ~2 blocks regardless of the above.
-    """
-    import math
-
-    bq_mem = max(1, math.ceil(q_bytes / block_bytes))
-    bc_mem = max(1, math.ceil(c_bytes / block_bytes))
-    # cap at 2x parallelism (r9; was 4x): cells now map one-per-task
-    # (knn/similarity n_parts), so the old hash-packing smoothing is
-    # obsolete and extra cells only buy replication — every unit of
-    # cells multiplies the smaller side's shuffle copies and the per-cell
-    # fixed cost (arrow conversion + per-row top-k overhead). 2x keeps
-    # two even waves of work-stealing granularity against box noise; the
-    # memory floors still push the count up when the sides are truly big.
-    cells = max(
-        bq_mem * bc_mem, min(2 * par, max(1, pair_work // _CELL_WORK_TARGET))
-    )
-    bq = round(math.sqrt(cells * q_bytes / max(c_bytes, 1)))
-    bq = min(max(bq, bq_mem, 1), max(nq, 1), cells)
-    bc = min(max(math.ceil(cells / bq), bc_mem), max(nc, 1))
-    return bq, bc
-
-
-def _chunked_pair_topk(
+def _ann_scan(
     q: DataFrame,
     c: DataFrame,
     *,
+    strategy: str,
+    scorer,
+    wire,
     k: int,
     exclude_self: bool,
-    scorer,
-    elem_bytes: int,
-    block_bytes: int,
-    corpus_stats: "tuple[int, int] | None" = None,
-) -> DataFrame:
-    """Block nested-loop pair scoring for the NO-BROADCAST regime (r5,
-    VERDICT r4 #2): when neither side fits in one executor's memory as a
-    broadcast variable, tile the cross product into (query-block x
-    corpus-block) cells, score each cell with one Arrow-batched numpy pass
-    inside applyInPandas, emit only top-k per (query, corpus-block), and
-    re-rank globally over the block_count * k survivors per query.
-
-    Inputs: q = (query_id, _qv), c = (neighbor_id, _cv) with array<double>
-    vectors; ``scorer(qids, Q, cids, C, k, exclude_self) -> pandas.DataFrame
-    (query_id, neighbor_id, _d)`` must use the SAME per-pair arithmetic as
-    the broadcast kernel so results stay bit-identical (per-pair ops are
-    independent of blocking; the global (_d asc, neighbor_id asc) window
-    reproduces the kernel's lexsort order exactly).
-
-    Scale shape (100 TB): shuffle traffic is the block-nested-loop
-    optimum for EXACT all-pairs scoring — each side is hash-assigned to
-    ceil(side_bytes / block_bytes) blocks (corpus floored up to cluster
-    parallelism) and replicated only across the OTHER side's block count:
-    traffic = q_blocks * |corpus| + c_blocks * |queries|
-            ~ 2 * |queries| * |corpus| / block_bytes,
-    the grid-replication lower bound for a brute-force cross product (vs
-    the pair-materializing declarative plan's |pairs| * row_bytes, which
-    is ~N_small * block_bytes / row_bytes times larger). When the query
-    workload fits one block (the common serve case) the corpus moves
-    EXACTLY ONCE. No executor holds more than one (query, corpus) cell;
-    raise block_bytes with executor memory to cut replication linearly.
-    If even this traffic is too much, the answer is an index (IVF/PQ/LSH
-    in this module), not a bigger brute force. The rerank input is
-    queries * corpus_blocks * k id+double rows — workload-sized.
-    """
-    import math
-
-    spark = q.sparkSession
-    nq, dq = q.agg(F.count(F.lit(1)), F.max(F.size("_qv"))).first()
-    if corpus_stats is not None:
-        # the kernel-guard reroute already aggregated the corpus once —
-        # don't pay a second stats job (the knn _train_stats pattern)
-        nc, dc = corpus_stats
-    else:
-        nc, dc = c.agg(F.count(F.lit(1)), F.max(F.size("_cv"))).first()
-    if not nc:
-        raise ValueError("empty corpus side")
-    par = spark.sparkContext.defaultParallelism
-    pair_work = int(nq or 0) * int(nc) * int(dc or 1)
-    bq, bc = _grid_split(
-        int(nq or 0) * int(dq or 0) * elem_bytes,
-        int(nc) * int(dc or 0) * elem_bytes,
-        int(nq or 1),
-        int(nc),
-        pair_work,
-        block_bytes,
-        par,
-    )
-    qt = q.select(
-        F.pmod(F.hash("query_id"), F.lit(bq)).alias("_qblk"),
-        F.explode(F.sequence(F.lit(0), F.lit(bc - 1))).alias("_cblk"),
-        F.lit(True).alias("_isq"),
-        F.col("query_id").alias("_id"),
-        F.col("_qv").alias("_v"),
-    )
-    ct = c.select(
-        F.explode(F.sequence(F.lit(0), F.lit(bq - 1))).alias("_qblk"),
-        F.pmod(F.hash("neighbor_id"), F.lit(bc)).alias("_cblk"),
-        F.lit(False).alias("_isq"),
-        F.col("neighbor_id").alias("_id"),
-        F.col("_cv").alias("_v"),
-    )
-    kk, excl, fn = k, exclude_self, scorer
-
-    def blk(pdf: pd.DataFrame) -> pd.DataFrame:
-        qm = pdf["_isq"].to_numpy()
-        qp, cp = pdf[qm], pdf[~qm]
-        if not len(qp) or not len(cp):
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "_d": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "_d": "float64"}
-            )
-        qids = qp["_id"].to_numpy(dtype=np.int64)
-        cids = cp["_id"].to_numpy(dtype=np.int64)
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in qp["_v"]])
-        C = np.stack([np.asarray(v, dtype=np.float64) for v in cp["_v"]])
-        return fn(qids, Q, cids, C, kk, excl)
-
-    # explicit repartition on the cell key (r6): exempt from AQE's
-    # advisory-size coalescing, which otherwise squeezes this byte-light
-    # but compute-heavy stage onto 1-2 tasks (see the knn.py twin).
-    # r9: one cell per task where affordable — packing several cells per
-    # partition quantized the stage into ragged waves (see knn.py n_parts)
-    n_parts = min(bq * bc, max(par, 1) * 32)
-    blocked = (
-        qt.unionByName(ct)
-        .repartition(n_parts, "_qblk", "_cblk")
-        .groupBy("_qblk", "_cblk")
-        .applyInPandas(
-            lambda _, pdf: blk(pdf),
-            schema="query_id long, neighbor_id long, _d double",
-        )
-    )
-    # nulls LAST: Arrow maps the scorer's NaN distances (zero-norm vectors)
-    # to SQL nulls, and the kernel's in-Python lexsort puts NaN at the end —
-    # a plain F.asc would instead rank nulls FIRST and break bit-identity
-    return topk_per_key(
-        blocked, "query_id", [F.asc_nulls_last("_d"), F.asc("neighbor_id")], k
-    )
-
-
-def _ann_reverse(
-    q: DataFrame,
-    c: DataFrame,
-    *,
-    k: int,
-    exclude_self: bool,
-    scorer,
     max_broadcast_bytes: int,
+    block_bytes: int,
 ) -> DataFrame:
-    """strategy='reverse' (r9): broadcast-the-QUERY kernel for the ANN
-    serve regime — the corpus exceeds ``max_broadcast_bytes`` (no driver
-    collect, no broadcast variable for it) but the query workload fits.
-    The query matrix broadcasts once and ONE mapInPandas pass streams
-    the corpus table IN PLACE: zero exchange of either side's vectors
-    (the chunked grid re-ships the query side per corpus block), each
-    batch emits its per-query top-k through the SAME scoring core as
-    kernel/chunked, and the chunked path's global re-rank reduces batch
-    winners exactly. The embedding serve case — a bounded query set
-    against a corpus of any size — moves ZERO corpus bytes; the knn.py
-    `_knn_reverse` twin documents the same traffic argument.
+    """strategy='kernel' / 'reverse' / 'chunked' over the pair-scan layer
+    (operators/pairscan.py). Inputs: q = (query_id, _qv), c = (neighbor_id,
+    _cv) vector columns; output (query_id, neighbor_id, rank, _d).
 
-    Bit-identity: the scorer is shared verbatim (queries are the A
-    operand everywhere); per-batch top-k is a superset of each batch's
-    contribution; the (distance ASC, neighbor_id ASC, nulls last)
-    re-rank equals the chunked path's. Guarded: the query estimate must
-    fit ``max_broadcast_bytes`` (routing uses budget // 8)."""
+    ``scorer(qids, Q, cids, C, k, exclude_self, with_rank=...) ->
+    pandas.DataFrame (query_id, neighbor_id[, rank], _d)`` is the family's
+    scoring core, shared verbatim by every route (queries are always the A
+    operand), so results are bit-identical across strategies by
+    construction. 'kernel' broadcasts the corpus matrix as ``wire``-dtype
+    numpy (its gate sizes it at that itemsize per element) and its collect
+    is guarded by ``max_broadcast_bytes``: an over-budget corpus never
+    touches the driver, routing to 'reverse' (broadcast the QUERY matrix,
+    stream the corpus in place — the embedding serve regime) when the
+    query side fits budget // 8, else to 'chunked' (the block grid: one
+    corpus shuffle, no broadcast variable). If even the grid's traffic is
+    too much, the answer is an index (IVF/PQ/LSH in this module), not a
+    bigger brute force.
+    """
+    from .pairscan import (
+        broadcast_scan, check_fits, choose_route, grid_scan, rerank, share,
+        side_stats,
+    )
+
     spark = q.sparkSession
-    nq, dq = q.agg(F.count(F.lit(1)), F.max(F.size("_qv"))).first()
-    est_q = int(nq or 0) * int(dq or 0) * 8
-    if est_q > max_broadcast_bytes:
-        raise ValueError(
-            f"query side ~{est_q} bytes exceeds max_broadcast_bytes="
-            f"{max_broadcast_bytes}; use strategy='chunked' (both sides "
-            "oversized)"
+    out_cols = ["query_id", "neighbor_id", "rank", "_d"]
+    if strategy != "reverse":
+        nc, dc, _, _ = side_stats(c, "_cv")
+        if not nc:
+            raise ValueError("empty corpus side")
+    if strategy == "kernel":
+        wire_bytes = np.dtype(wire).itemsize
+
+        def q_bytes():
+            nq, dq, _, _ = side_stats(q, "_qv")
+            return nq * dq * wire_bytes
+
+        strategy = choose_route(nc * dc * wire_bytes, max_broadcast_bytes, q_bytes)
+    if strategy == "kernel":
+        rows = c.collect()
+        ids = np.array([r[0] for r in rows], dtype=np.int64)
+        M = np.stack([np.asarray(r[1], dtype=wire) for r in rows])
+
+        def batch(corpus, pdf):
+            b_ids, B = corpus
+            return scorer(
+                pdf["query_id"].to_numpy(dtype=np.int64),
+                [np.asarray(f, dtype=np.float64) for f in pdf["_qv"]],
+                b_ids, B, k, exclude_self, with_rank=True,
+            )[out_cols]
+
+        return broadcast_scan(
+            q, share(spark, (ids, M)), batch,
+            "query_id long, neighbor_id long, rank int, _d double",
         )
-    rows = q.collect()
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = (
-        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-        if rows else np.empty((0, 0))
-    )
-    bvar = spark.sparkContext.broadcast((qids, Q))
-    kk, excl, fn = k, exclude_self, scorer
+    if np.dtype(wire) != np.float64:
+        # the reverse and grid routes ship double vectors
+        q = q.select("query_id", _as_double(F.col("_qv")).alias("_qv"))
+        c = c.select("neighbor_id", _as_double(F.col("_cv")).alias("_cv"))
 
-    def op(batches):
-        b_qids, b_Q = bvar.value
-        for pdf in batches:
+    def ids_matrix(pdf):
+        return (
+            pdf["_id"].to_numpy(dtype=np.int64),
+            np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]]),
+        )
+
+    schema = "query_id long, neighbor_id long, _d double"
+    if strategy == "reverse":
+        nq, dq, _, _ = side_stats(q, "_qv")
+        check_fits(nq * dq * 8, max_broadcast_bytes, "query")
+        rows = q.collect()
+        qids = np.array([r[0] for r in rows], dtype=np.int64)
+        Q = (
+            np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+            if rows else np.empty((0, 0))
+        )
+
+        def batch(queries, pdf):
+            b_qids, b_Q = queries
             if not len(pdf) or not len(b_qids):
-                continue
-            cids = pdf["_id"].to_numpy(dtype=np.int64)
-            C = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            yield fn(b_qids, b_Q, cids, C, kk, excl)
+                return None
+            return scorer(b_qids, b_Q, *ids_matrix(pdf), k, exclude_self)
 
-    blocked = c.select(
-        F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")
-    ).mapInPandas(op, schema="query_id long, neighbor_id long, _d double")
-    # nulls LAST — the same Arrow NaN-to-null mapping and tie order as the
-    # chunked path's re-rank
-    return topk_per_key(
-        blocked, "query_id", [F.asc_nulls_last("_d"), F.asc("neighbor_id")], k
-    )
+        scored = broadcast_scan(
+            c.select(F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")),
+            share(spark, (qids, Q)), batch, schema,
+        )
+    else:
+        nq, dq, _, _ = side_stats(q, "_qv")
+        # elem bytes 8: block sizing bounds the SCORER's working set, and
+        # quantized codes are widened to int64 inside the block
+        scored = grid_scan(
+            q,
+            c,
+            q_key="query_id",
+            c_key="neighbor_id",
+            q_cols=[F.col("query_id").alias("_id"), F.col("_qv").alias("_v")],
+            c_cols=[F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")],
+            q_rows=nq,
+            c_rows=nc,
+            q_bytes=nq * dq * 8,
+            c_bytes=nc * dc * 8,
+            pair_work=nq * nc * max(dc, 1),
+            cell=lambda qp, cp: scorer(*ids_matrix(qp), *ids_matrix(cp), k, exclude_self),
+            schema=schema,
+            block_bytes=block_bytes,
+        )
+    return rerank(scored, "query_id", "_d", ["neighbor_id"], k).select(*out_cols)
 
 
 def _brute_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=False):
@@ -378,78 +269,25 @@ def ann_brute_topk(
     matrix, stream the corpus in place with zero vector exchange — the
     embedding serve regime) when the query estimate fits comfortably
     (budget // 8), else to strategy='chunked' (r5): the block nested-loop
-    scorer (``_chunked_pair_topk``) tiles the cross product into
+    grid (``operators/pairscan.py``) tiles the cross product into
     ``block_bytes`` corpus blocks, scores each block with the kernel's exact
-    numpy arithmetic inside applyInPandas, and reranks the per-block top-k
+    numpy arithmetic in one grouped-map cell, and reranks the per-block top-k
     — one corpus shuffle, no pair materialization, no broadcast variable,
     bit-identical results. strategy='declarative' (crossJoin + fold +
     window) remains the oracle's literal mirror and an explicit option.
     """
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv"))
-    hint_broadcast = True
-    c_stats = None
-    if strategy == "kernel":
-        n_rows, dim0 = c.agg(F.count(F.lit(1)), F.max(F.size("_cv"))).first()
-        if not n_rows:
-            raise ValueError("empty corpus side")
-        if n_rows * int(dim0 or 0) * 8 > max_broadcast_bytes:
-            # serve regime first (r9): a query workload that fits
-            # comfortably (budget // 8) takes the reverse-broadcast
-            # kernel — zero corpus movement; both sides huge -> grid
-            nq0, dq0 = q.agg(F.count(F.lit(1)), F.max(F.size("_qv"))).first()
-            if int(nq0 or 0) * int(dq0 or 0) * 8 <= max_broadcast_bytes // 8:
-                strategy = "reverse"
-            else:
-                strategy = "chunked"
-                c_stats = (int(n_rows), int(dim0 or 0))
-    if strategy == "reverse":
-        top = _ann_reverse(
-            q, c, k=k, exclude_self=exclude_self,
-            scorer=_brute_cos_block_scorer,
-            max_broadcast_bytes=max_broadcast_bytes,
+    if strategy in ("kernel", "reverse", "chunked"):
+        top = _ann_scan(
+            q, c, strategy=strategy, scorer=_brute_cos_block_scorer,
+            wire=np.float64, k=k, exclude_self=exclude_self,
+            max_broadcast_bytes=max_broadcast_bytes, block_bytes=block_bytes,
         )
         return top.select(
             "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("cos_dist")
         )
-    if strategy == "chunked":
-        top = _chunked_pair_topk(
-            q, c, k=k, exclude_self=exclude_self,
-            scorer=_brute_cos_block_scorer, elem_bytes=8, block_bytes=block_bytes,
-            corpus_stats=c_stats,
-        )
-        return top.select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("cos_dist")
-        )
-    if strategy == "kernel":
-        rows = c.collect()
-        if not rows:
-            raise ValueError("empty corpus side")
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        M = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-        bvar = queries.sparkSession.sparkContext.broadcast((ids, M))
-        kk, excl = k, exclude_self
-
-        def op(batches):
-            b_ids, B = bvar.value
-            for pdf in batches:
-                # the SAME scoring core as strategy='chunked' — shared
-                # left-fold-exact arithmetic, bit-identity by construction
-                yield _brute_cos_block_scorer(
-                    pdf["query_id"].to_numpy(dtype=np.int64),
-                    [np.asarray(f, dtype=np.float64) for f in pdf["_qv"]],
-                    b_ids,
-                    B,
-                    kk,
-                    excl,
-                    with_rank=True,
-                )[["query_id", "neighbor_id", "rank", "_d"]]
-
-        top = q.mapInPandas(op, schema="query_id long, neighbor_id long, rank int, _d double")
-        return top.select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("cos_dist")
-        )
-    pairs = q.crossJoin(F.broadcast(c) if hint_broadcast else c)
+    pairs = q.crossJoin(F.broadcast(c))
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
     pairs = pairs.withColumn("_d", cosine_distance(F.col("_qv"), F.col("_cv")))
@@ -784,71 +622,15 @@ def ann_quantized_topk(
     qc = quantize_embeddings(corpus, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("_qb")
     )
-    hint_broadcast = True
-    c_stats = None
-    if strategy == "kernel":
-        n_rows, dim0 = qc.agg(F.count(F.lit(1)), F.max(F.size("_qb"))).first()
-        if not n_rows:
-            raise ValueError("empty corpus side")
-        # int16 on the wire: 2 bytes per component
-        if n_rows * int(dim0 or 0) * 2 > max_broadcast_bytes:
-            # serve regime first (r9) — same routing as ann_brute_topk
-            nq0, dq0 = qq.agg(F.count(F.lit(1)), F.max(F.size("_qa"))).first()
-            if int(nq0 or 0) * int(dq0 or 0) * 2 <= max_broadcast_bytes // 8:
-                strategy = "reverse"
-            else:
-                strategy = "chunked"
-                c_stats = (int(n_rows), int(dim0 or 0))
-    if strategy == "reverse":
-        top = _ann_reverse(
-            qq.select("query_id", _as_double(F.col("_qa")).alias("_qv")),
-            qc.select("neighbor_id", _as_double(F.col("_qb")).alias("_cv")),
-            k=k, exclude_self=exclude_self,
-            scorer=_quantized_cos_block_scorer,
-            max_broadcast_bytes=max_broadcast_bytes,
-        )
-        return top.select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("q_cos_dist")
-        )
-    if strategy == "chunked":
-        top = _chunked_pair_topk(
-            qq.select("query_id", _as_double(F.col("_qa")).alias("_qv")),
-            qc.select("neighbor_id", _as_double(F.col("_qb")).alias("_cv")),
-            k=k, exclude_self=exclude_self,
-            # elem_bytes=8: block sizing bounds the SCORER's working set,
-            # and the int8 codes are widened to int64 inside the block
-            scorer=_quantized_cos_block_scorer, elem_bytes=8,
-            block_bytes=block_bytes, corpus_stats=c_stats,
-        )
-        return top.select(
-            "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("q_cos_dist")
-        )
-    if strategy == "kernel":
-        rows = qc.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        M = np.stack([np.asarray(r[1], dtype=np.int16) for r in rows])
-        Ml = M.astype(np.int64)
-        bnorm = (Ml * Ml).sum(axis=1)  # exact int64
-        bvar = queries.sparkSession.sparkContext.broadcast((ids, Ml, bnorm))
-        kk, excl = k, exclude_self
-
-        def op(batches):
-            b_ids, B, _bn = bvar.value
-            for pdf in batches:
-                # the SAME integer scoring core as strategy='chunked' —
-                # exact int64 sums, bit-identity by construction
-                yield _quantized_cos_block_scorer(
-                    pdf["query_id"].to_numpy(dtype=np.int64),
-                    [np.asarray(f, dtype=np.float64) for f in pdf["_qa"]],
-                    b_ids,
-                    B,
-                    kk,
-                    excl,
-                    with_rank=True,
-                )[["query_id", "neighbor_id", "rank", "_d"]]
-
-        top = qq.mapInPandas(
-            op, schema="query_id long, neighbor_id long, rank int, _d double"
+    if strategy in ("kernel", "reverse", "chunked"):
+        # the kernel broadcasts the int8 codes as int16 (2 B per element,
+        # the size its gate estimates); the scorer widens to int64
+        top = _ann_scan(
+            qq.select("query_id", F.col("_qa").alias("_qv")),
+            qc.select("neighbor_id", F.col("_qb").alias("_cv")),
+            strategy=strategy, scorer=_quantized_cos_block_scorer,
+            wire=np.int16, k=k, exclude_self=exclude_self,
+            max_broadcast_bytes=max_broadcast_bytes, block_bytes=block_bytes,
         )
         return top.select(
             "query_id", "neighbor_id", "rank", F.round("_d", 6).alias("q_cos_dist")
@@ -861,7 +643,7 @@ def ann_quantized_topk(
             lambda acc, v: acc + v,
         )
 
-    cand = qq.crossJoin(F.broadcast(qc) if hint_broadcast else qc)
+    cand = qq.crossJoin(F.broadcast(qc))
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
     na = idot(F.col("_qa"), F.col("_qa"))

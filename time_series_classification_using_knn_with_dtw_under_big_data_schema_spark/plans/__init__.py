@@ -1,6 +1,5 @@
 from .audit import (  # noqa: F401
     assert_no_unbounded_collect,
-    codegen_stage_count,
     collect_audit,
     count_exchanges,
     executed_node_counts,

@@ -68,10 +68,6 @@ def python_eval_nodes(df: DataFrame) -> int:
     )
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))
-
-
 # ---------------------------------------------------------------------------
 # Executed-plan TREE walk (r6, VERDICT r5 #3). The string counters above are
 # fine for pinning plan SHAPES in tests, but they over-count cache-heavy

@@ -12,27 +12,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver parquet table (S1)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def save_table(df: DataFrame, path_or_name: str, *, mode: str = "overwrite") -> None:

@@ -5,8 +5,6 @@ sources with schema-explicit defaults — no schema inference in the hot path).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -30,34 +28,3 @@ def read_csv(
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     return spark.read.schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    partition_column: Optional[str] = None,
-    num_partitions: int = 8,
-    lower_bound: Optional[int] = None,
-    upper_bound: Optional[int] = None,
-    **options,
-) -> DataFrame:
-    """JDBC source with explicit parallel partitioning (a driver-only JDBC
-    read is the collect() of sources). No JDBC driver ships in this
-    environment — exercised only when a jar is on the classpath."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions)
-            .option("lowerBound", lower_bound)
-            .option("upperBound", upper_bound)
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
