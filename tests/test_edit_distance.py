@@ -602,7 +602,6 @@ def test_anchor_bound_admissible_fuzz():
             assert abs(ra - rb) <= d + 1e-9, (fn, n, m, ra, rb, d)
 
 
-@pytest.mark.slow
 def test_knn_lb_metric_all_zero_candidates_degrade_to_brute(spark):
     """ADVICE r8 (medium): with exclude_zero=True, a test whose top-C
     candidates ALL score exactly 0 (duplicate-heavy corpora: LB=0

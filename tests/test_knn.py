@@ -187,6 +187,28 @@ def test_knn_join_lb_k_exceeds_train(spark, har_dfs):
     )
 
 
+@pytest.mark.parametrize(
+    "entry, kw",
+    [
+        ("knn_join", dict(k=0)),
+        ("knn_join", dict(k=0, strategy="kernel")),
+        ("knn_join_pruned", dict(k=0, length=24)),
+        ("knn_join_pruned", dict(k=2, length=24, candidates_per_test=0)),
+        ("knn_join_lb", dict(k=0, length=24, metric="dtw")),
+        ("knn_join_lb_metric", dict(k=0)),
+    ],
+    ids=["join", "join-kernel", "pruned", "pruned-C0", "lb", "lb-metric"],
+)
+def test_knn_entry_points_reject_nonpositive_k(spark, har_dfs, entry, kw):
+    """k (and the pruned candidate budget) must be >= 1: a zero budget
+    used to return an empty result silently."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark import operators
+
+    train_df, test_df = har_dfs
+    with pytest.raises(ValueError, match=r"must be >= 1, got 0"):
+        getattr(operators, entry)(test_df, train_df, **kw)
+
+
 def test_knn_join_lb_rejects_unsupported_metric(spark, har_dfs):
     from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn_join_lb
 
@@ -444,7 +466,6 @@ def test_multichannel_pruned_runs_and_ranks(spark):
     assert small.count() == 30  # 15 tests x k=2
 
 
-@pytest.mark.slow
 def test_knn_join_lb_all_zero_candidates_degrade_to_brute(spark):
     """ADVICE r8 (medium, latent twin of the lb_metric bug): with
     exclude_zero=True and a candidate set filled entirely by exact

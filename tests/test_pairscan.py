@@ -1,7 +1,7 @@
 """Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
-executions each KNN route fires while its plan is built, the cheap
-grid-agreement checks (block grid vs broadcast kernel, bit-for-bit), and
-the scoring core's empty-result dtype."""
+executions each KNN route (and each pruned-family call) fires while its
+plan is built, the cheap grid-agreement checks (block grid vs broadcast
+kernel, bit-for-bit), and the scoring core's empty-result dtype."""
 
 from __future__ import annotations
 
@@ -12,7 +12,11 @@ import pytest
 
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
     knn_join,
+    knn_join_lb,
+    knn_join_lb_metric,
+    knn_join_pruned,
 )
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn as knn_mod
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.knn import (
     _group_by_length,
     _score_block_groups,
@@ -60,6 +64,44 @@ def test_knn_route_eager_executions(spark, har_dfs, strategy, budget, want):
         ),
     )
     assert got == want
+
+
+@pytest.fixture(scope="module")
+def walks(spark):
+    """20 train x 6 test random walks of length 12."""
+    rng = np.random.default_rng(5)
+    schema = "series_id long, features array<double>, label string"
+    walk = lambda: [float(x) for x in np.cumsum(rng.normal(0, 1, 12))]
+    train = spark.createDataFrame([(i, walk(), f"c{i % 2}") for i in range(20)], schema)
+    test = spark.createDataFrame([(100 + i, walk(), "t") for i in range(6)], schema)
+    return train, test
+
+
+@pytest.mark.parametrize(
+    "call, want, bypass",
+    [
+        (lambda te, tr: knn_join_pruned(te, tr, metric="dtw", k=3, length=12), 0, False),
+        # the phase-1/2 caches land in ONE eager count
+        (lambda te, tr: knn_join_lb(te, tr, metric="dtw", k=3, length=12), 1, False),
+        (lambda te, tr: knn_join_lb_metric(te, tr, metric="twed", k=3), 1, False),
+        # gated, bypassed: the probe collect + the kernel's train stats and collect
+        (lambda te, tr: knn_join_lb(te, tr, metric="dtw", k=3, length=12, min_prune_rate=0.95), 3, True),
+        (lambda te, tr: knn_join_lb_metric(te, tr, metric="twed", k=3, min_prune_rate=0.95), 3, True),
+        # gated, kept (the banded envelope is tight even on random walks):
+        # the probe collect + the cache landing
+        (lambda te, tr: knn_join_lb(te, tr, metric="dtw", band=2, k=3, length=12, min_prune_rate=0.05), 2, False),
+    ],
+    ids=["pruned", "lb", "lb-metric", "lb-gated-bypass", "lb-metric-gated-bypass", "lb-gated-keep"],
+)
+def test_pruned_family_eager_executions(spark, walks, monkeypatch, call, want, bypass):
+    train, test = walks
+    calls = []
+    orig = knn_mod._brute_fallback
+    monkeypatch.setattr(
+        knn_mod, "_brute_fallback", lambda *a, **kw: calls.append(1) or orig(*a, **kw)
+    )
+    assert _eager_executions(spark, lambda: call(test, train)) == want
+    assert bool(calls) == bypass
 
 
 @pytest.mark.parametrize("exclude_self", [True])

@@ -699,6 +699,28 @@ def test_boss_kernel_declarative_bit_parity(spark):
         assert a == b, trial
 
 
+def test_boss_kernel_declarative_parity_six_coeffs(spark):
+    """n_coeffs=6 (a 4^12-word key space): the kernel builds words only
+    for the codes it emits and still equals the declarative plan."""
+    import random
+
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import boss_classify
+
+    rng = random.Random(13)
+    train = spark.createDataFrame(
+        [(i, [rng.random() * 4 for _ in range(20)], ["a", "b"][i % 2]) for i in range(8)],
+        "series_id long, features array<double>, label string",
+    )
+    test = spark.createDataFrame(
+        [(100 + i, [rng.random() * 4 for _ in range(16)]) for i in range(3)],
+        "series_id long, features array<double>",
+    )
+    kw = dict(m=12, n_coeffs=6)
+    kernel = sorted(map(tuple, boss_classify(test, train, strategy="kernel", **kw).collect()))
+    decl = sorted(map(tuple, boss_classify(test, train, strategy="declarative", **kw).collect()))
+    assert kernel and kernel == decl
+
+
 def test_boss_hostile_input_routes_declarative(spark):
     """Null elements fold into NaN across Arrow (losing the declarative
     NULL-comparison semantics), and NaN / huge elements make the

@@ -383,10 +383,8 @@ def _boss_hists_kernel(
 
     n_dims = len(tabs)
     K = 4 ** n_dims
-    # word lookup: packed base-4 code -> digit string ('0'..'3' per dim)
-    lut = np.asarray(
-        [np.base_repr(c, base=4).zfill(n_dims) for c in range(K)], dtype=f"<U{n_dims}"
-    )
+    # bit shifts of the packed base-4 code's digits, most significant first
+    shifts = 2 * np.arange(n_dims - 1, -1, -1, dtype=np.int64)
     # per-dim (e1, e2, e3); a missing/None edge (no train windows) makes
     # every comparison false -> digit 3, exactly the declarative
     # null-comparison fallthrough
@@ -438,7 +436,11 @@ def _boss_hists_kernel(
                 part = {"_id": ids[gidx]}
                 if keep_label:
                     part["_lbl"] = labs[gidx]
-                part["word"] = lut[ucode]
+                # words for the emitted codes only (a dense 4^n_dims table
+                # is 16.7M strings at n_coeffs=6): digits '0'..'3' as UCS4
+                # code points, viewed as one n_dims-character string per code
+                digits = ((ucode[:, None] >> shifts) & 3) + ord("0")
+                part["word"] = digits.astype(np.uint32).view(f"<U{n_dims}").reshape(-1)
                 part["cnt"] = cnt.astype(np.int64)
                 out_parts.append(part)
             if out_parts:
