@@ -3812,14 +3812,14 @@ def _q199_knn_dtw_lb_gated(spark, sf_dir):
 
 def _q200_knn_dtw_ragged(spark, sf_dir):
     """RAGGED exact-DTW KNN through the grouped kernel strategy (r9,
-    VERDICT r8 #4; operators/knn.py::_score_block_groups): mixed-length
+    VERDICT r8 #4; operators/knn.py::_score_block_rows): mixed-length
     series (16/12/8 points by id) score through per-length rectangular
-    batch-kernel calls whose per-group top-ks merge to one exact global
-    top-k — the regime that previously required a fixed-length train side
+    batch-kernel calls and one top-k emit over every length group — the
+    regime that previously required a fixed-length train side
     (and rerouted oversized ragged corpora to the 4.6x-measured
     declarative shuffle plan). The oracle is q70's recursive-CTE DTW DP —
     its per-pair len(fa)/len(fb) recursion is already length-agnostic —
-    over the same ragged slices, so the grouped-merge path is hash-proven
+    over the same ragged slices, so the grouped path is hash-proven
     lossless, not just strategy-consistent."""
     train, test = _series(spark, sf_dir)
     rag_len = F.lit(SERIES_LEN) - (F.col("series_id") % 3).cast("int") * 4

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.caching import (
     cache_scope,
@@ -69,3 +72,60 @@ def test_pair_scan_broadcasts_released_by_scope(spark, har_dfs):
         assert len(shared) == 2
         assert all(b._jbroadcast.isValid() for b in shared)
     assert not any(b._jbroadcast.isValid() for b in shared)
+
+
+def _driver_storage_used(spark) -> int:
+    """Bytes of storage memory in use across the (local-mode) block
+    managers: max minus remaining, from the driver's memory status."""
+    status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus()
+    it = status.values().iterator()
+    used = 0
+    while it.hasNext():
+        pair = it.next()
+        used += pair._1() - pair._2()
+    return used
+
+
+@pytest.mark.slow
+def test_broadcast_soak_releases_every_share(spark, monkeypatch):
+    """50 mixed pair-scan calls in one session, each inside cache_scope
+    (KNN kernel and reverse, ANN kernel, conformal kernel): every
+    broadcast created through pairscan.share is destroyed when its scope
+    exits, and the driver's storage memory after call 50 stays within a
+    small bound of its value after call 5. Each cycle of four calls
+    broadcasts ~1.4 MB, and the spy below keeps every broadcast
+    reachable, so a leak would grow the storage by ~15 MB."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+        ann_brute_topk,
+        conformal_knn,
+        knn_join,
+        pairscan,
+    )
+
+    shared = []
+    orig = pairscan.share
+    monkeypatch.setattr(
+        pairscan, "share", lambda s, payload: shared.append(orig(s, payload)) or shared[-1]
+    )
+    rng = np.random.default_rng(11)
+    schema = "series_id long, features array<double>, label double"
+    series = lambda n, start: [
+        (start + i, [float(x) for x in rng.normal(0, 1, 64)], float(i % 3)) for i in range(n)
+    ]
+    train = spark.createDataFrame(series(1000, 0), schema)  # 512 KB matrix
+    test = spark.createDataFrame(series(8, 10_000), schema)
+    emb = train.select(F.col("series_id").alias("vec_id"), F.col("features").alias("embedding"))
+    calls = [
+        lambda: knn_join(test, train, k=2, strategy="kernel").count(),
+        lambda: knn_join(test, train, k=2, strategy="reverse").count(),
+        lambda: ann_brute_topk(emb.limit(6), emb, k=3, strategy="kernel").count(),
+        lambda: conformal_knn(test, train, min_kernel_pairs=0).count(),
+    ]
+    used = {}
+    for i in range(50):
+        with cache_scope():
+            assert calls[i % len(calls)]() > 0
+        used[i + 1] = _driver_storage_used(spark)
+    assert len(shared) == 50
+    assert not any(b._jbroadcast.isValid() for b in shared)
+    assert used[50] - used[5] < 4 << 20, used

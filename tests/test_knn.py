@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.distance import batch_kernel
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
     accuracy,
     knn_classify,
@@ -207,6 +208,87 @@ def test_knn_entry_points_reject_nonpositive_k(spark, har_dfs, entry, kw):
     train_df, test_df = har_dfs
     with pytest.raises(ValueError, match=r"must be >= 1, got 0"):
         getattr(operators, entry)(test_df, train_df, **kw)
+
+
+@pytest.mark.parametrize(
+    "entry, kw",
+    [
+        ("ann_brute_topk", {}),
+        ("ann_brute_topk", dict(strategy="kernel")),
+        ("ann_quantized_topk", {}),
+        ("ann_ivf_topk", {}),
+        ("ann_lsh_topk", dict(dim=16)),
+        ("ann_pq_topk", dict(dim=16)),
+        ("ann_ivfpq_topk", dict(dim=16)),
+    ],
+    ids=["brute", "brute-kernel", "quantized", "ivf", "lsh", "pq", "ivfpq"],
+)
+def test_ann_entry_points_reject_nonpositive_k(spark, emb, entry, kw):
+    """The ANN family shares the KNN k >= 1 guard: k=0 used to return 0
+    rows silently."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark import operators
+
+    with pytest.raises(ValueError, match=r"k must be >= 1, got 0"):
+        getattr(operators, entry)(emb, emb, k=0, **kw)
+
+
+def test_ivfpq_search_rejects_nonpositive_k(spark, emb):
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import ivfpq_search
+
+    with pytest.raises(ValueError, match=r"k must be >= 1, got 0"):
+        ivfpq_search(emb, {}, emb, k=0, dim=16)
+
+
+def _knn_call(metric, strategy, **kw):
+    def call(spark):
+        df = spark.createDataFrame(
+            [(i, [float(i), 1.0, 2.0, float(i % 3)], "a") for i in range(6)],
+            "series_id long, features array<double>, label string",
+        )
+        knn_join(df, df, metric=metric, k=2, strategy=strategy, **kw)
+
+    return call
+
+
+def _kernel_call(name, **kw):
+    def call(_spark):
+        from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions import dtw_kernel
+
+        A = np.random.default_rng(0).normal(size=(4, 16))
+        fn = getattr(dtw_kernel, name)
+        fn(*((A, A[::-1]) if name.endswith("batch") else (A[0], A[1])), **kw)
+
+    return call
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        _kernel_call("dtw_batch", band=-1),
+        _kernel_call("dtw_pair", band=-1),
+        _kernel_call("fastdtw_batch", radius=-1),
+        _kernel_call("fastdtw_pair", radius=-1),
+        lambda _spark: batch_kernel("dtw", band=-1),
+        lambda _spark: batch_kernel("fastdtw", radius=-1),
+        lambda _spark: batch_kernel("fastdtw", band=-2),
+        _knn_call("dtw", "kernel", band=-1),
+        _knn_call("dtw", "broadcast", band=-1),
+        _knn_call("fastdtw", "kernel", fastdtw_radius=-1),
+        _knn_call("fastdtw", "broadcast", fastdtw_radius=-1),
+    ],
+    ids=[
+        "dtw_batch", "dtw_pair", "fastdtw_batch", "fastdtw_pair",
+        "batch_kernel-dtw", "batch_kernel-fastdtw", "batch_kernel-fastdtw-band",
+        "knn-dtw-kernel", "knn-dtw-broadcast", "knn-fastdtw-kernel",
+        "knn-fastdtw-broadcast",
+    ],
+)
+def test_negative_band_and_radius_rejected(spark, call):
+    """A negative warp window is an error everywhere: the compiled dtw_batch
+    used to return unconstrained DTW, dtw_pair inf, and a negative FastDTW
+    radius never terminated (a Spark task hung)."""
+    with pytest.raises(ValueError, match=r"(band|radius) must be >= 0, got -"):
+        call(spark)
 
 
 def test_knn_join_lb_rejects_unsupported_metric(spark, har_dfs):

@@ -1,7 +1,8 @@
 """Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
 executions each KNN route (and each pruned-family call) fires while its
 plan is built, the cheap grid-agreement checks (block grid vs broadcast
-kernel, bit-for-bit), and the scoring core's empty-result dtype."""
+kernel, bit-for-bit), the scoring core's empty-result dtype, and ties
+across train length groups on every route."""
 
 from __future__ import annotations
 
@@ -17,9 +18,10 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     knn_join_pruned,
 )
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn as knn_mod
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.distance import batch_kernel
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.knn import (
     _group_by_length,
-    _score_block_groups,
+    _score_block_rows,
 )
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.similarity import (
     ann_brute_topk,
@@ -169,7 +171,7 @@ def test_knn_chunked_nan_features_rank_last_like_kernel(spark):
 
 
 @pytest.mark.parametrize("with_rank", [True, False])
-def test_score_block_groups_empty_result_keeps_label_dtype(with_rank):
+def test_score_block_rows_empty_ragged_result_keeps_label_dtype(with_rank):
     """Two length groups with string labels, every pair at distance 0 and
     so removed by exclude_zero: the empty result keeps the string label
     dtype (a float64 empty column would not convert to a string schema)."""
@@ -177,10 +179,35 @@ def test_score_block_groups_empty_result_keeps_label_dtype(with_rank):
         [1, 2, 3], [[0.0, 0.0], [0.0, 0.0, 0.0], [0.0, 0.0]], ["walk", "run", "sit"]
     )
     assert len(groups) == 2
-    out = _score_block_groups(
+    out = _score_block_rows(
         np.array([10], dtype=np.int64), np.array([np.zeros(2)], dtype=object),
-        groups, kind="dtw", k=3, excl=True, band=None, radius=1,
+        groups, kind="dtw", elastic=batch_kernel("dtw"), k=3, excl=True,
         with_rank=with_rank,
     )
     assert len(out["test_id"]) == 0
     assert out["train_label"].dtype.kind == "U"
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_ragged_ties_across_length_groups_match_declarative(spark, k):
+    """Train series from different length groups tie on DTW distance (3.0
+    for [0,0] and [0,0,0] against [1,1,1]); the one emit over all groups
+    must break the tie by label, then id, exactly like the declarative
+    window — on every pair-scan route."""
+    schema = "series_id long, features array<double>, label string"
+    train = spark.createDataFrame(
+        [
+            (7, [0.0, 0.0], "b"),
+            (3, [0.0, 0.0, 0.0], "a"),
+            (5, [0.0, 0.0, 0.0, 0.0], "a"),  # 4.0: ranks last
+            (9, [1.0, 1.0], "c"),  # 0.0: excluded
+        ],
+        schema,
+    )
+    test = spark.createDataFrame([(100, [1.0, 1.0, 1.0], "t")], schema)
+    want = _collect(knn_join(test, train, metric="dtw", k=k, strategy="broadcast"))
+    by_rank = sorted(want, key=lambda r: r[-1])
+    assert [(r[1], r[3]) for r in by_rank] == [(3, 3.0), (7, 3.0), (5, 4.0)][:k]
+    for strategy in ("kernel", "reverse", "chunked"):
+        got = knn_join(test, train, metric="dtw", k=k, strategy=strategy)
+        assert _collect(got) == want, strategy

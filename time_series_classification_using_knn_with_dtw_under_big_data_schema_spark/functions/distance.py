@@ -14,6 +14,7 @@ reproduces them bit-for-bit (same IEEE op order).
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Optional
 
 import numpy as np
@@ -22,7 +23,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dtw_kernel import dtw_batch, fastdtw_batch
+from .dtw_kernel import check_window, dtw_batch, fastdtw_batch
 
 __all__ = [
     "euclidean",
@@ -35,6 +36,7 @@ __all__ = [
     "sbd",
     "sbd_align",
     "sbd_batch",
+    "batch_kernel",
     "dtw_udf",
     "make_dtw_udf",
     "make_fastdtw_udf",
@@ -281,11 +283,48 @@ def _grouped_pairs_udf(batch_fn) -> Callable[[Column, Column], Column]:
     return dist.asNondeterministic()
 
 
+# the elastic kinds: defined for pairs of UNEQUAL length, each a batch DP
+# (bs, n) x (bs, m) -> (bs,) built by ``batch_kernel``
+ELASTIC_KINDS = frozenset({"dtw", "fastdtw", "lcss", "edr", "erp", "twed", "msm"})
+
+
+def batch_kernel(
+    kind: str, *, band: Optional[int] = None, radius: int = 1
+) -> Callable[[np.ndarray, np.ndarray], np.ndarray]:
+    """The batch DP ``fn(A, B) -> (bs,)`` of an elastic kind, with its
+    window bound in. Built on the driver, so a negative ``band`` or
+    ``radius`` fails before any job runs.
+
+    - 'dtw': exact DTW, Sakoe-Chiba half-width ``band`` (None =
+      unconstrained).
+    - 'fastdtw': faithful FastDTW at ``radius`` (Team11-Project.py:340
+      defaults) — unless a ``band`` is given, which means exact banded DTW
+      (the fixed-cost scale path; the divergence between the two is
+      quantified in tests/test_dtw_kernel.py::
+      test_banded_vs_faithful_divergence).
+    - 'lcss' / 'edr' / 'erp' / 'twed' / 'msm': the edit-distance DPs at
+      their module defaults.
+    """
+    check_window(band, radius)
+    if kind == "dtw" or (kind == "fastdtw" and band is not None):
+        return partial(dtw_batch, band=band)
+    if kind == "fastdtw":
+        return partial(fastdtw_batch, radius=radius)
+    # late import: edit_distance imports _grouped_pairs_udf from here
+    from . import edit_distance as ed
+
+    fns = {"lcss": ed.lcss_batch, "edr": ed.edr_batch, "erp": ed.erp_batch,
+           "twed": ed.twed_batch, "msm": ed.msm_batch}
+    if kind not in fns:
+        raise ValueError(f"unknown elastic kind {kind!r}; have {sorted(ELASTIC_KINDS)}")
+    return fns[kind]
+
+
 def make_dtw_udf(band: Optional[int] = None) -> Callable[[Column, Column], Column]:
     """Exact DTW pandas_udf with a fixed Sakoe-Chiba band half-width
     (band=None -> unconstrained exact DTW). The engine's recommended scale
     metric: one vectorized DP level, fixed O(n*band) work per pair."""
-    return _grouped_pairs_udf(lambda A, B: dtw_batch(A, B, band=band))
+    return _grouped_pairs_udf(batch_kernel("dtw", band=band))
 
 
 def make_fastdtw_udf(radius: int = 1) -> Callable[[Column, Column], Column]:
@@ -295,7 +334,7 @@ def make_fastdtw_udf(radius: int = 1) -> Callable[[Column, Column], Column]:
     (dtw_kernel.fastdtw_batch). Data-dependent warp windows mean
     data-dependent cost: near-diagonal warps run ~O(n*radius), adversarial
     warps degrade toward O(n*m) — exactly like the original algorithm."""
-    return _grouped_pairs_udf(lambda A, B: fastdtw_batch(A, B, radius=radius))
+    return _grouped_pairs_udf(batch_kernel("fastdtw", radius=radius))
 
 
 # default kernel: exact DTW (band=None); metric="fastdtw" in the KNN operators

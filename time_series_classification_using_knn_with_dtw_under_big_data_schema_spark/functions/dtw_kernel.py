@@ -47,6 +47,16 @@ __all__ = ["dtw_pair", "fastdtw_pair", "dtw_batch", "fastdtw_batch"]
 _INF = np.inf
 
 
+def check_window(band: int | None = None, radius: int = 1) -> None:
+    """Reject negative warp-window half-widths: a negative band used to
+    mean unconstrained DTW on the compiled path and inf on ``dtw_pair``,
+    and a negative radius never terminated FastDTW's coarsening."""
+    if band is not None and band < 0:
+        raise ValueError(f"band must be >= 0, got {band}")
+    if radius < 0:
+        raise ValueError(f"radius must be >= 0, got {radius}")
+
+
 def _point_cost(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     # fastdtw's default for 1-D points: absolute difference; multivariate
     # series ((length, channels) rows) use the per-channel SUMMED |a-b|
@@ -62,6 +72,7 @@ def dtw_pair(a, b, band: int | None = None) -> float:
 
     ``band``: Sakoe-Chiba band half-width (None = unconstrained).
     """
+    check_window(band=band)
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
     n, m = len(a), len(b)
@@ -164,6 +175,7 @@ def _fastdtw_rec(a, b, radius):
 
 def fastdtw_pair(a, b, radius: int = 1) -> float:
     """FastDTW approximation — reference parity (`fastdtw` package defaults)."""
+    check_window(radius=radius)
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
     dist, _ = _fastdtw_rec(a, b, radius)
@@ -203,6 +215,7 @@ def dtw_batch(A: np.ndarray, B: np.ndarray, band: int | None = None) -> np.ndarr
     Vectorized across the batch and along each DP row via the prefix-scan
     identity (module docstring).
     """
+    check_window(band=band)
     A = np.ascontiguousarray(A, dtype=np.float64)
     B = np.ascontiguousarray(B, dtype=np.float64)
     _validate_pair_batch(A, B)
@@ -492,6 +505,7 @@ def fastdtw_batch(A: np.ndarray, B: np.ndarray, radius: int = 1) -> np.ndarray:
     valid path (bounded in tests). Per-level width re-bucketing keeps a
     single wide-warp pair from inflating the vectorized cost of the rest.
     """
+    check_window(radius=radius)
     A = np.ascontiguousarray(A, dtype=np.float64)
     B = np.ascontiguousarray(B, dtype=np.float64)
     _validate_pair_batch(A, B)

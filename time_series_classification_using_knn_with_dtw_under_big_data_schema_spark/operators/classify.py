@@ -461,19 +461,9 @@ def _conformal_dist_fns(kind: str):
     the declarative folds."""
     import numpy as np
 
-    if kind in ("lcss", "edr", "erp", "twed", "msm"):
-        from ..functions.edit_distance import (
-            edr_batch, erp_batch, lcss_batch, msm_batch, twed_batch,
-        )
+    from ..functions.distance import batch_kernel
 
-        batch_fn = {"lcss": lcss_batch, "edr": edr_batch, "erp": erp_batch,
-                    "twed": twed_batch, "msm": msm_batch}[kind]
-    elif kind == "dtw":
-        from ..functions.dtw_kernel import dtw_batch
-
-        batch_fn = lambda A, B: dtw_batch(A, B, band=None)  # noqa: E731
-    else:
-        batch_fn = None
+    batch_fn = batch_kernel(kind) if kind in _CONFORMAL_ELASTIC_KINDS else None
 
     def _dist_block(Tc: "np.ndarray", G: "np.ndarray", Gt: "np.ndarray") -> "np.ndarray":
         """Point metrics accumulate with a j-loop (index order = the SQL

@@ -27,7 +27,8 @@ Scale notes (100 TB design):
 - Euclidean ranking avoids the sqrt until after top-k (monotone transform).
 - Pair-scan strategies ``kernel`` / ``reverse`` / ``chunked`` (broadcast
   scan, swapped broadcast scan, block grid) run in ``operators/pairscan.py``
-  around ONE scoring core, ``_score_block_groups``.
+  around ONE scoring core, ``_score_block_rows``, which scores every
+  train length group and emits through ``pairscan.first_k``.
 - The pruned family (``knn_join_pruned``, ``knn_join_lb``,
   ``knn_join_lb_metric``) shares one filter-and-verify core
   (``_filter_verify``); each function supplies only its sketch columns and
@@ -41,8 +42,10 @@ from typing import Callable, Optional, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.distance import DISTANCES, make_dtw_udf, make_fastdtw_udf, sq_euclidean
-from .topk import topk_per_key
+from ..functions.distance import (
+    DISTANCES, ELASTIC_KINDS, _grouped_pairs_udf, batch_kernel, sq_euclidean,
+)
+from .topk import check_k, topk_per_key
 from .vote import majority_vote
 
 MetricT = Union[str, Callable[[Column, Column], Column]]
@@ -54,19 +57,10 @@ def _resolve_metric(metric: MetricT, band: Optional[int], fastdtw_radius: int):
         return metric, False
     if metric == "euclidean":
         return None, True  # special-cased: rank on sq_euclidean, sqrt after
-    if metric == "dtw":
-        return make_dtw_udf(band), False
-    if metric == "fastdtw":
-        # Faithful reference parity: fastdtw(radius=1) defaults
-        # (Team11-Project.py:340) via the batched faithful kernel
-        # (functions/dtw_kernel.py::fastdtw_batch) — recursive coarsening +
-        # data-dependent refinement windows, NOT a fixed-band stand-in.
-        # A caller-supplied band overrides to exact banded DTW (the fixed-cost
-        # scale path; divergence between the two is quantified in
-        # tests/test_dtw_kernel.py::test_banded_vs_faithful_divergence).
-        if band is not None:
-            return make_dtw_udf(band), False
-        return make_fastdtw_udf(fastdtw_radius), False
+    if metric in ("dtw", "fastdtw"):
+        # fastdtw: faithful FastDTW, or exact banded DTW when a band is
+        # pinned (functions/distance.py::batch_kernel owns that rule)
+        return _grouped_pairs_udf(batch_kernel(metric, band=band, radius=fastdtw_radius)), False
     if metric in DISTANCES:
         return DISTANCES[metric], False
     raise ValueError(f"unknown metric {metric!r}; have {sorted(DISTANCES)} + 'fastdtw'")
@@ -140,11 +134,11 @@ def knn_join(
     top-k); only ragged POINT-metric corpora (no cross-length semantics)
     keep the declarative shuffle plan.
     """
-    _check_k(k)
+    check_k(k)
     if strategy in ("kernel", "chunked", "reverse"):
         if keep_features:
             raise ValueError(f"keep_features is not supported with strategy={strategy!r}")
-        kind, nested = _scan_kind(metric, band, strategy, test, train, features_col)
+        kind, nested = _scan_kind(metric, strategy, test, train, features_col)
         return _knn_scan(
             test,
             train,
@@ -169,11 +163,6 @@ def knn_join(
     )
     extra = [F.col("_tf").alias("test_features")] if keep_features else []
     return _rank_tail(pairs, k, label_col, squared=squared, extra=extra)
-
-
-def _check_k(k: int) -> None:
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
 
 
 def _sides(test, train, id_col, features_col, label_col, t_extra=(), r_extra=()):
@@ -233,35 +222,25 @@ def _rank_tail(pairs: DataFrame, k: int, label_col, *, squared=False, extra=()) 
     return topk_per_key(pairs, "test_id", order, k).select(*out)
 
 
-# named metrics the scoring core implements (fastdtw maps to "fastdtw", or
-# to "dtw" when the caller pins a band)
-_SCAN_KINDS = frozenset({
-    "dtw", "euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd",
-    "lcss", "edr", "erp", "twed", "msm",
-})
+# named metrics the scoring core implements
+_SCAN_KINDS = ELASTIC_KINDS | {"euclidean", "sq_euclidean", "manhattan", "chebyshev", "sbd"}
 
 
-def _scan_kind(metric: MetricT, band: Optional[int], strategy: str, test, train, features_col):
+def _scan_kind(metric: MetricT, strategy: str, test, train, features_col):
     """Validate a kernel/reverse/chunked call once, before dispatch.
-    Returns (kind, nested): the scoring-core kind of the named metric —
-    faithful FastDTW unless the caller pins an explicit band (then exact
-    banded DTW, the declarative override rule) — and whether the series
-    are multichannel."""
+    Returns (kind, nested): the scoring-core kind of the named metric and
+    whether the series are multichannel."""
     if callable(metric):
         raise ValueError(f"strategy={strategy!r} supports named metrics only")
-    if metric == "fastdtw":
-        kind = "dtw" if band is not None else "fastdtw"
-    elif metric in _SCAN_KINDS:
-        kind = metric
-    else:
+    if metric not in _SCAN_KINDS:
         raise ValueError(f"strategy={strategy!r} does not support metric {metric!r}")
     nested = _nested_pair(test, train, features_col)
-    if nested and kind not in _ELASTIC_KINDS:
+    if nested and metric not in ELASTIC_KINDS:
         raise ValueError(
             "multichannel series support metric='dtw'/'fastdtw' and the "
             f"edit-distance family only, got {metric!r}"
         )
-    return kind, nested
+    return metric, nested
 
 
 def _knn_scan(
@@ -282,8 +261,9 @@ def _knn_scan(
 ) -> DataFrame:
     """strategy='kernel' / 'reverse' / 'chunked' over the pair-scan layer
     (operators/pairscan.py). Every route scores through the shared core
-    ``_score_block_groups`` (test rows are always the A operand), so
-    cross-strategy bit-identity holds by construction.
+    ``_score_block_rows`` (test rows are always the A operand) with the
+    batch DP built here by ``batch_kernel``, so cross-strategy
+    bit-identity holds by construction.
 
     - 'kernel': Model-2 broadcast semantics with pair-free Arrow transfer.
       The declarative broadcast plan ships BOTH feature arrays through
@@ -310,7 +290,8 @@ def _knn_scan(
     globally. Tie order is (distance, label, id) ascending with NaN last,
     and the dist != 0 exclusion matches the declarative path. Ragged train
     rides every route for the ELASTIC metrics (per-length rectangular
-    kernel calls, exact merged top-k); point metrics need fixed length.
+    kernel calls, one emit over all groups); point metrics need fixed
+    length.
     """
     import numpy as np
     import pandas as pd
@@ -329,7 +310,11 @@ def _knn_scan(
     schema += ", distance double"
     t_cols = [F.col(id_col).alias("_id"), F.col(features_col).alias("_f")]
     r_cols = t_cols + ([F.col(label_col).alias("_lbl")] if has_label else [])
-    score = dict(kind=kind, k=k, excl=exclude_zero, band=band, radius=fastdtw_radius)
+    elastic = (
+        batch_kernel(kind, band=band, radius=fastdtw_radius)
+        if kind in ELASTIC_KINDS else None
+    )
+    score = dict(kind=kind, elastic=elastic, k=k, excl=exclude_zero)
 
     def test_stats():
         n, length, _, ch = side_stats(test, features_col, nested=nested)
@@ -344,7 +329,7 @@ def _knn_scan(
             rp["_f"].to_numpy(),
             np.asarray(list(rp["_lbl"])) if has_label else None,
         )
-        out = _score_block_groups(t_ids, t_feats, groups, with_rank=False, **score)
+        out = _score_block_rows(t_ids, t_feats, groups, with_rank=False, **score)
         return pd.DataFrame({c: out[c] for c in cols})
 
     route = strategy
@@ -360,7 +345,7 @@ def _knn_scan(
             route = choose_route(
                 n_r * len_r * ch_r * 8, max_broadcast_bytes, lambda: test_stats()[3]
             )
-        if route != "reverse" and n_lens != 1 and kind not in _ELASTIC_KINDS:
+        if route != "reverse" and n_lens != 1 and kind not in ELASTIC_KINDS:
             if strategy == "kernel" and route == "chunked":
                 # point metrics have no cross-length kernel: an over-budget
                 # ragged corpus keeps the declarative shuffle plan
@@ -385,7 +370,7 @@ def _knn_scan(
         )
 
         def batch(groups, pdf):
-            out = _score_block_groups(
+            out = _score_block_rows(
                 pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups,
                 with_rank=True, **score,
             )
@@ -417,18 +402,19 @@ def _knn_scan(
             raise ValueError(
                 f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
             )
-        # per-pair cost model for the grid split: DTW sweeps len x
-        # band_width cells (x channels); faithful FastDTW ~(2*(2r+1)+2)
-        # cells per row across all levels, NOT the full L columns (review
-        # r6); the edit DPs every (i, j) cell per channel; point metrics
-        # touch each coordinate once — heavy DTW workloads keep every core
-        # even when their BYTES are small
+        # per-pair cost model for the grid split: a pinned band bounds the
+        # DTW sweep to len x band_width cells (x channels); faithful
+        # FastDTW ~(2*(2r+1)+2) cells per row across all levels, NOT the
+        # full L columns (review r6); unbanded DTW and the edit DPs every
+        # (i, j) cell per channel; point metrics touch each coordinate
+        # once — heavy DTW workloads keep every core even when their
+        # BYTES are small
         L = max(len_r, 1)
-        if kind == "dtw":
-            per_pair = L * (min(2 * band + 1, L) if band is not None else L) * ch_r
+        if kind in ("dtw", "fastdtw") and band is not None:
+            per_pair = L * min(2 * band + 1, L) * ch_r
         elif kind == "fastdtw":
             per_pair = L * min(4 * (fastdtw_radius + 1) + 2, L) * ch_r
-        elif kind in _ELASTIC_KINDS:
+        elif kind in ELASTIC_KINDS:
             per_pair = L * L * ch_r
         else:
             per_pair = L * ch_r
@@ -453,246 +439,110 @@ def _knn_scan(
     return rerank(scored, "test_id", "distance", ties, k).select(*cols, "rank")
 
 
-def _score_block_rows(
-    tids, fvals, b_ids, b_feats, b_labels, *, kind, k, excl, band, radius,
-    with_rank,
-):
-    """THE kernel scoring core — one test block against one train matrix,
-    shared verbatim by strategy='kernel' (broadcast) and
-    strategy='chunked' (block cells), so their bit-identity contract is
-    enforced by construction instead of by two hand-synced copies.
+def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank):
+    """THE kernel scoring core — one block of test rows against the train
+    side's per-length ``groups`` of (ids, stacked matrix, labels), shared
+    verbatim by every pair-scan route, so their bit-identity contract is
+    enforced by construction instead of by hand-synced copies.
+    ``elastic`` is the kind's batch DP from ``batch_kernel`` (None for
+    the point metrics and sbd).
 
-    fastdtw: chunk several test rows into ONE kernel call. Pair target
-    ~1024 balances ufunc-dispatch amortization against cache footprint:
-    the kernel's (pairs, window) work arrays must share L2/L3 with 31
-    sibling workers, and measured aggregate throughput on 561-pt
+    Test rows are stacked per length and chunked so one kernel call covers
+    ~1024 pairs (sbd: ~65536, so ONE block FFT serves many test rows).
+    Pair target ~1024 balances ufunc-dispatch amortization against cache
+    footprint: the kernel's (pairs, window) work arrays must share L2/L3
+    with 31 sibling workers, and measured aggregate throughput on 561-pt
     wide-warp pairs peaks near 1k pairs/call (4k-pair calls were ~20%
-    slower under full contention). The cheap kernels (banded DTW /
-    euclidean family) score one test row against the train matrix with
-    ZERO-copy views (broadcast_to + b_feats directly) — for them the
-    chunked path's np.repeat/np.tile copies cost more than they save.
+    slower under full contention). In the broadcast-kernel regime (train
+    >= 1024 rows) a chunk is one test row scored with ZERO-copy views
+    (broadcast_to + the train matrix); in the chunked regime's narrow
+    corpus blocks it collapses rows x blocks tiny kernel calls into
+    ~1024-pair ones.
 
+    Each chunk scores every length group (a ragged train side is one
+    rectangular kernel call per distinct length) and emits ONCE over the
+    concatenated candidates through ``pairscan.first_k``: (distance,
+    label, id) ascending, NaN last, dist != 0 dropped under ``excl``.
     Returns dict of numpy arrays: test_id, train_id, distance[, rank]
-    [, train_label]. Tie order parity: (distance, label, id) ascending
-    via np.lexsort, NaN last — the contract every strategy shares.
-
-    r10 (VERDICT r9 #7): the top-k emit is batched across the chunk's
-    test rows — ONE masked flatten + ONE lexsort with the row index as
-    the primary key + a vectorized first-k-per-segment selection,
-    replacing the per-test-row mask/lexsort/list-extend loop that was the
-    measured fixed cost behind every chunked-grid envelope miss (the
-    ratio floor at byte-light cells). Bit-identity: lexsort is a stable
-    sequence of argsorts, so within each row segment the (distance,
-    label, id) comparisons are exactly the per-row sort's; NaN still
-    sorts last within its row segment.
-    """
+    [, train_label]."""
     import numpy as np
 
-    from ..functions.distance import _stack_series
-    from ..functions.dtw_kernel import dtw_batch, fastdtw_batch
+    from ..functions.distance import _stack_series, sbd_block
+    from .pairscan import first_k
 
-    parts_out: list = []
-    n_train = len(b_ids)
-    # fastdtw chunks for ufunc amortization; sbd chunks so ONE block FFT
-    # serves many test rows (memory-capped: nc * n_train * 2L doubles).
-    # r6: the cheap kernels (banded DTW / euclidean family) now chunk to
-    # the same ~1024-pair call target — a no-op in the broadcast-kernel
-    # regime (train matrix >= 1024 rows -> rows_per = 1, zero-copy views,
-    # where the r5 measurement showed repeat/tile copies losing), but in
-    # the chunked regime's NARROW corpus blocks it collapses
-    # rows x blocks tiny kernel calls into ~1024-pair ones (the toy-regime
-    # fb_knn_dtw561 gap was per-call overhead x 11 block replication)
-    if kind == "sbd":
-        rows_per = max(1, 65536 // max(1, n_train))
-    else:
-        rows_per = max(1, 1024 // max(1, n_train))
+    def cat(xs):
+        return xs[0] if len(xs) == 1 else np.concatenate(xs)
+
+    n_train = sum(len(g[0]) for g in groups)
+    rows_per = max(1, (65536 if kind == "sbd" else 1024) // max(1, n_train))
+    has_label = groups[0][2] is not None
+    parts = []
     # test rows may be ragged; each chunk stacks rectangular
     by_len: dict = {}
     for i, f in enumerate(fvals):
         by_len.setdefault(len(f), []).append(i)
-    for L, idxs in by_len.items():
+    for idxs in by_len.values():
         T = _stack_series([fvals[i] for i in idxs])
         for c0 in range(0, len(idxs), rows_per):
             chunk = idxs[c0 : c0 + rows_per]
             Tc = T[c0 : c0 + rows_per]
             nc = len(chunk)
-            if kind == "sbd":
-                from ..functions.distance import sbd_block
-
-                # block form: both sides FFT'd once per chunk, no pair
-                # materialization at all
-                D = sbd_block(Tc, b_feats).reshape(-1)
-                A = None
-            elif nc == 1:
-                A = np.broadcast_to(Tc[0], (n_train,) + Tc[0].shape)
-                B = b_feats
-            else:
-                A = np.repeat(Tc, n_train, axis=0)
-                B = np.tile(b_feats, (nc,) + (1,) * (b_feats.ndim - 1))
-            if kind == "sbd":
-                pass
-            elif kind == "dtw":
-                D = dtw_batch(A, B, band=band)
-            elif kind == "fastdtw":
-                D = fastdtw_batch(A, B, radius=radius)
-            elif kind == "euclidean":
-                D = np.sqrt(((A - B) ** 2).sum(axis=1))
-            elif kind == "sq_euclidean":
-                D = ((A - B) ** 2).sum(axis=1)
-            elif kind == "manhattan":
-                D = np.abs(A - B).sum(axis=1)
-            elif kind in ("lcss", "edr", "erp", "twed", "msm"):
-                # edit-distance family at module defaults (the named-metric
-                # contract; custom eps/g go through callable metrics on the
-                # declarative path) — anti-diagonal batched DPs, bit-equal
-                # to the Catalyst fold expressions
-                from ..functions.edit_distance import (
-                    edr_batch, erp_batch, lcss_batch, msm_batch, twed_batch,
-                )
-
-                fn = {"lcss": lcss_batch, "edr": edr_batch, "erp": erp_batch,
-                      "twed": twed_batch, "msm": msm_batch}[kind]
-                D = fn(A, B)
-            else:  # chebyshev
-                D = np.abs(A - B).max(axis=1)
-            Df = D.reshape(-1)
-            rowf = np.repeat(np.arange(nc), n_train)
-            iif = np.tile(b_ids, nc)
-            lif = np.tile(b_labels, nc) if b_labels is not None else None
-            if excl:
-                msk = Df != 0
-                Df, rowf, iif = Df[msk], rowf[msk], iif[msk]
-                if lif is not None:
-                    lif = lif[msk]
-            keys = (iif, lif, Df, rowf) if lif is not None else (iif, Df, rowf)
-            order = np.lexsort(keys)
-            rs = rowf[order]
-            nsel = rs.size
-            if not nsel:
-                continue
-            # first k per row segment: position within segment < k
-            change = np.empty(nsel, dtype=bool)
-            change[0] = True
-            np.not_equal(rs[1:], rs[:-1], out=change[1:])
-            seg_start = np.flatnonzero(change)
-            seg_id = np.cumsum(change) - 1
-            pos = np.arange(nsel) - seg_start[seg_id]
-            sel = pos < k
-            picked = order[sel]
-            tid_chunk = np.asarray([tids[i] for i in chunk], dtype=np.int64)
+            Ds, rows, ids, labels = [], [], [], []
+            for b_ids, b_feats, b_labels in groups:
+                n_g = len(b_ids)
+                if kind == "sbd":
+                    # block form: both sides FFT'd once per chunk, no pair
+                    # materialization at all
+                    D = sbd_block(Tc, b_feats)
+                else:
+                    if nc == 1:
+                        A = np.broadcast_to(Tc[0], (n_g,) + Tc[0].shape)
+                        B = b_feats
+                    else:
+                        A = np.repeat(Tc, n_g, axis=0)
+                        B = np.tile(b_feats, (nc,) + (1,) * (b_feats.ndim - 1))
+                    if elastic is not None:
+                        D = elastic(A, B)
+                    elif kind == "euclidean":
+                        D = np.sqrt(((A - B) ** 2).sum(axis=1))
+                    elif kind == "sq_euclidean":
+                        D = ((A - B) ** 2).sum(axis=1)
+                    elif kind == "manhattan":
+                        D = np.abs(A - B).sum(axis=1)
+                    else:  # chebyshev
+                        D = np.abs(A - B).max(axis=1)
+                Ds.append(D.reshape(-1))
+                rows.append(np.repeat(np.arange(nc), n_g))
+                ids.append(np.tile(b_ids, nc))
+                if has_label:
+                    labels.append(np.tile(b_labels, nc))
+            Df = cat(Ds)
+            r, i, d, lab, rank = first_k(
+                Df, cat(rows), cat(ids), cat(labels) if has_label else None, k,
+                Df != 0 if excl else None,
+            )
             part = {
-                "test_id": tid_chunk[rs[sel]],
-                "train_id": iif[picked],
-                "distance": Df[picked],
+                "test_id": np.asarray([tids[j] for j in chunk], dtype=np.int64)[r],
+                "train_id": i,
+                "distance": d,
             }
             if with_rank:
-                part["rank"] = pos[sel] + 1
-            if lif is not None:
-                part["train_label"] = lif[picked]
-            parts_out.append(part)
-    cols = ["test_id", "train_id", "distance"]
-    if with_rank:
-        cols.append("rank")
-    if b_labels is not None:
-        cols.append("train_label")
-    if not parts_out:
-        empty = {
+                part["rank"] = rank
+            if has_label:
+                part["train_label"] = lab
+            parts.append(part)
+    if not parts:  # no test rows
+        part = {
             "test_id": np.empty(0, dtype=np.int64),
             "train_id": np.empty(0, dtype=np.int64),
             "distance": np.empty(0, dtype=np.float64),
         }
         if with_rank:
-            empty["rank"] = np.empty(0, dtype=np.int64)
-        if b_labels is not None:
-            empty["train_label"] = np.empty(0, dtype=b_labels.dtype)
-        return empty
-    if len(parts_out) == 1:
-        return parts_out[0]
-    return {c: np.concatenate([p[c] for p in parts_out]) for c in cols}
-
-
-# metrics defined for pairs of UNEQUAL length — the kernels take
-# (bs, n) x (bs, m) with n != m, so a ragged train side just becomes one
-# rectangular kernel call per distinct length. The point metrics
-# (euclidean family) have no cross-length semantics and keep the
-# fixed-length requirement.
-_ELASTIC_KINDS = frozenset({"dtw", "fastdtw", "lcss", "edr", "erp", "twed", "msm"})
-
-
-def _score_block_groups(
-    tids, fvals, groups, *, kind, k, excl, band, radius, with_rank,
-):
-    """Ragged-train extension of ``_score_block_rows`` (r9, VERDICT r8 #4):
-    ``groups`` is a list of (b_ids, b_feats, b_labels) per-length train
-    groups; each scores through the same rectangular kernel calls, then the
-    per-group top-k survivors merge to ONE exact top-k per test (each
-    group's top-k is a superset of its contribution to the global top-k).
-    One group short-circuits to the shared scoring core verbatim, so the
-    fixed-length paths keep their bit-identity contract untouched."""
-    if len(groups) == 1:
-        b_ids, b_feats, b_labels = groups[0]
-        return _score_block_rows(
-            tids, fvals, b_ids, b_feats, b_labels,
-            kind=kind, k=k, excl=excl, band=band, radius=radius,
-            with_rank=with_rank,
-        )
-    import numpy as np
-
-    parts = [
-        _score_block_rows(
-            tids, fvals, b_ids, b_feats, b_labels,
-            kind=kind, k=k, excl=excl, band=band, radius=radius,
-            with_rank=False,
-        )
-        for (b_ids, b_feats, b_labels) in groups
-    ]
-    has_label = groups[0][2] is not None
-    t_arr = np.concatenate([np.asarray(p["test_id"], dtype=np.int64) for p in parts]) \
-        if parts else np.empty(0, dtype=np.int64)
-    if not len(t_arr):
-        out = {
-            "test_id": np.empty(0, dtype=np.int64),
-            "train_id": np.empty(0, dtype=np.int64),
-            "distance": np.empty(0, dtype=np.float64),
-        }
-        if with_rank:
-            out["rank"] = np.empty(0, dtype=np.int64)
+            part["rank"] = np.empty(0, dtype=np.int64)
         if has_label:
-            # the groups' label dtype, as _score_block_rows' empty branch
-            out["train_label"] = np.concatenate([g[2][:0] for g in groups])
-        return out
-    i_arr = np.concatenate([np.asarray(p["train_id"], dtype=np.int64) for p in parts])
-    d_arr = np.concatenate([np.asarray(p["distance"], dtype=np.float64) for p in parts])
-    l_arr = (
-        np.concatenate([np.asarray(list(p["train_label"])) for p in parts])
-        if has_label else None
-    )
-    # same (distance, label, id) lexsort contract as the scoring core,
-    # NaN last, test as the primary key; then first k per test — the
-    # vectorized first-k-per-segment selection (r10, VERDICT r9 #7; same
-    # trick as _score_block_rows' batched emit, replacing the per-element
-    # Python loop over the full sorted pair list)
-    keys = (i_arr, l_arr, d_arr, t_arr) if l_arr is not None else (i_arr, d_arr, t_arr)
-    order = np.lexsort(keys)
-    rs = t_arr[order]
-    change = np.empty(rs.size, dtype=bool)
-    change[0] = True
-    np.not_equal(rs[1:], rs[:-1], out=change[1:])
-    seg_start = np.flatnonzero(change)
-    seg_id = np.cumsum(change) - 1
-    pos = np.arange(rs.size) - seg_start[seg_id]
-    sel = pos < k
-    picked = order[sel]
-    out = {
-        "test_id": rs[sel],
-        "train_id": i_arr[picked],
-        "distance": d_arr[picked],
-    }
-    if with_rank:
-        out["rank"] = pos[sel] + 1
-    if has_label:
-        out["train_label"] = l_arr[picked]
-    return out
+            part["train_label"] = np.concatenate([g[2][:0] for g in groups])
+        return part
+    return {c: cat([p[c] for p in parts]) for c in parts[0]}
 
 
 def _group_by_length(ids, fvals, labels):
@@ -792,7 +642,7 @@ def knn_join_pruned(
     """
     from ..functions.arrays import paa
 
-    _check_k(k)
+    check_k(k)
     if candidates_per_test is not None and candidates_per_test < 1:
         raise ValueError(f"candidates_per_test must be >= 1, got {candidates_per_test}")
     # check BOTH sides: a multichannel train side paired with a flat test
@@ -1242,9 +1092,8 @@ def knn_join_lb(
     (q156's oracle is exactly q113's brute-force DP).
     """
     from ..functions.arrays import paa
-    from ..functions.dtw_kernel import dtw_batch, fastdtw_batch
 
-    _check_k(k)
+    check_k(k)
     if callable(metric) or metric not in ("dtw", "fastdtw"):
         raise ValueError("knn_join_lb requires metric='dtw' or 'fastdtw'")
     nested = _check_channel_parity(test, train, features_col, channels, "knn_join_lb")
@@ -1345,10 +1194,7 @@ def knn_join_lb(
 
     # on structureless series the envelope bound prunes ~nothing, and the
     # prefilter's sketch pass is a full extra scan for zero benefit
-    if band is not None or metric == "dtw":
-        pair_np = lambda A, B: dtw_batch(A, B, band=band)
-    else:
-        pair_np = lambda A, B: fastdtw_batch(A, B, radius=fastdtw_radius)
+    pair_np = batch_kernel(metric, band=band, radius=fastdtw_radius)
     if _probe_bypasses(
         test, train, min_prune_rate=min_prune_rate, prune_probe=prune_probe,
         pair_np=pair_np, lb_np=lb_np, id_col=id_col, features_col=features_col,
@@ -1418,18 +1264,15 @@ def knn_join_lb_metric(
     """
     from ..functions.edit_distance import (
         ERP_GAP,
-        erp_batch,
         make_erp_udf,
         make_msm_udf,
         make_twed_udf,
-        msm_batch,
         msm_dist,
         multichannel,
-        twed_batch,
         twed_dist,
     )
 
-    _check_k(k)
+    check_k(k)
     if metric not in ("erp", "twed", "msm"):
         raise ValueError(
             "knn_join_lb_metric requires a TRUE metric: 'erp', 'twed' or "
@@ -1480,7 +1323,7 @@ def knn_join_lb_metric(
             ref = lambda x: msm_dist(x, anchor)
 
     C = max(candidates_per_test if candidates_per_test is not None else 4 * k, k)
-    pair_np = {"erp": erp_batch, "twed": twed_batch, "msm": msm_batch}[metric]
+    pair_np = batch_kernel(metric)
 
     def refs_np(feats):
         # numpy twin of ``ref`` through the batch kernels: the anchor is

@@ -18,9 +18,11 @@ their scoring cores:
   block count, and one ``applyInPandas`` call scores each (query-block x
   candidate-block) cell. Traffic is ``~2|q||c|/block_bytes``, the
   grid-replication optimum for exact all-pairs scoring.
-- **re-rank** — the reverse and grid strategies emit a per-batch or
-  per-cell top-k; ``rerank`` reduces the survivors to the exact global
-  top-k under the kernels' (distance, label, id) order with NaN last.
+- **top-k** — one tie-order contract, (distance, label, id) ascending
+  with NaN last, in two halves: ``first_k`` is the numpy half every
+  scoring core runs per batch or per cell, and ``rerank`` the SQL half
+  that reduces the reverse and grid strategies' local survivors to the
+  exact global top-k.
 
 ``choose_route`` is the byte gate between them: the candidate side
 broadcasts while it fits ``max_broadcast_bytes``; otherwise the query side
@@ -35,6 +37,7 @@ from __future__ import annotations
 import math
 from typing import Callable, Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -228,11 +231,42 @@ def grid_scan(
     )
 
 
+def first_k(dist, rows, ids, labels, k: int, keep=None):
+    """The numpy half of the top-k contract: the first ``k`` candidates
+    of each row under (``dist``, ``labels``, ``ids``) ascending, NaN last.
+    Inputs are flat and aligned, one entry per (row, candidate) pair;
+    ``labels`` may be None, and ``keep`` (a bool mask, or None) drops
+    pairs first — KNN's d != 0 exclusion, ANN's self exclusion.
+
+    ONE lexsort with the row index as the primary key, then a vectorized
+    first-k-per-segment selection. lexsort is a stable sequence of
+    argsorts, so within a row segment the comparisons are exactly a
+    per-row sort's. Returns (rows, ids, dist, labels, rank) of the kept
+    pairs, rows ascending; rank is the 1-based position in the row."""
+    if keep is not None:
+        dist, rows, ids = dist[keep], rows[keep], ids[keep]
+        if labels is not None:
+            labels = labels[keep]
+    keys = (ids, dist, rows) if labels is None else (ids, labels, dist, rows)
+    order = np.lexsort(keys)
+    rs = rows[order]
+    change = np.empty(rs.size, dtype=bool)
+    change[:1] = True
+    np.not_equal(rs[1:], rs[:-1], out=change[1:])
+    pos = np.arange(rs.size) - np.flatnonzero(change)[np.cumsum(change) - 1]
+    sel = pos < k
+    picked = order[sel]
+    return (
+        rs[sel], ids[picked], dist[picked],
+        None if labels is None else labels[picked], pos[sel] + 1,
+    )
+
+
 def rerank(scored: DataFrame, key: str, dist: str, ties: list, k: int) -> DataFrame:
     """Exact global top-k per ``key`` over per-batch / per-cell survivors
     (each local top-k is a superset of its contribution), ordered
     (``dist`` ASC NULLS LAST, *``ties`` ASC). Nulls LAST: Arrow maps the
-    kernels' NaN distances to SQL nulls, and the kernels' lexsort puts NaN
-    at the end — a plain asc would rank nulls FIRST."""
+    kernels' NaN distances to SQL nulls, and ``first_k`` puts NaN at the
+    end — a plain asc would rank nulls FIRST."""
     order = [F.asc_nulls_last(dist)] + [F.asc(c) for c in ties]
     return topk_per_key(scored, key, order, k)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_distance, dot, sq_euclidean
 from ..functions.text import HASH_P
-from .topk import topk_per_key
+from .topk import check_k, topk_per_key
 
 
 def _as_double(col: Column) -> Column:
@@ -170,38 +170,61 @@ def _ann_scan(
     return rerank(scored, "query_id", "_d", ["neighbor_id"], k).select(*out_cols)
 
 
+def _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist):
+    """Shared tail of the ANN scoring cores: score query blocks of ~1,024
+    pairs (or one row) with ``block_dist(r0, r1) -> (r1 - r0, n_corpus)``
+    distances — so no (n_query x n_corpus) matrix is ever materialized —
+    and emit each block's top-k through ``pairscan.first_k`` ((distance,
+    id) ascending, NaN last; self pairs dropped under ``exclude_self``).
+    Returns the (query_id, neighbor_id[, rank], _d) frame."""
+    from .pairscan import first_k
+
+    qids = np.asarray(qids, dtype=np.int64)
+    n_c = len(cids)
+    step = max(1, 1024 // max(1, n_c))
+    parts = []
+    for r0 in range(0, len(qids), step):
+        D = block_dist(r0, r0 + step)
+        rows = np.repeat(np.arange(r0, r0 + len(D)), n_c)
+        ids = np.tile(cids, len(D))
+        r, i, d, _, rank = first_k(
+            D.reshape(-1), rows, ids, None, k, ids != qids[rows] if exclude_self else None,
+        )
+        parts.append((r, i, d, rank))
+    rows, ids, dist, rank = (
+        map(np.concatenate, zip(*parts)) if parts
+        else (np.empty(0, np.int64),) * 2 + (np.empty(0), np.empty(0, np.int64))
+    )
+    out = {"query_id": qids[rows], "neighbor_id": ids}
+    if with_rank:
+        out["rank"] = rank.astype(np.int32)
+    out["_d"] = dist
+    return pd.DataFrame(out)
+
+
 def _brute_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=False):
     """THE cosine scoring core — a query block against a corpus matrix,
     with the SQL left-fold's EXACT arithmetic (dim-ascending
-    accumulation), shared by strategy='kernel' (broadcast op) and
-    strategy='chunked' (block cells): bit-identity across strategies is
-    enforced by construction, not by two hand-synced loops."""
+    accumulation), shared by every pair-scan route (kernel, reverse and
+    chunked): bit-identity across strategies is enforced by construction,
+    not by hand-synced loops."""
+    Q = np.asarray(Q, dtype=np.float64)
     dim = C.shape[1]
     cn = np.zeros(len(cids))
     for d in range(dim):
         cn += C[:, d] * C[:, d]
     cn = np.sqrt(cn)
-    out = {"query_id": [], "neighbor_id": [], "rank": [], "_d": []}
-    for qid, a in zip(qids, Q):
-        dot = np.zeros(len(cids))
-        qn = 0.0
+
+    def block_dist(r0, r1):
+        Qb = Q[r0:r1]
+        dot = np.zeros((len(Qb), len(cids)))
+        qn = np.zeros(len(Qb))
         for d in range(dim):
-            dot += a[d] * C[:, d]
-            qn = qn + a[d] * a[d]
-        dist = 1.0 - dot / (np.sqrt(qn) * cn)
-        mask = cids != qid if exclude_self else np.ones(len(cids), dtype=bool)
-        di, ii = dist[mask], cids[mask]
-        order = np.lexsort((ii, di))[:k]
-        out["query_id"].extend([qid] * len(order))
-        out["neighbor_id"].extend(ii[order])
-        out["rank"].extend(range(1, len(order) + 1))
-        out["_d"].extend(di[order])
-    if not with_rank:
-        del out["rank"]
-    types = {"query_id": "int64", "neighbor_id": "int64", "_d": "float64"}
-    if with_rank:
-        types["rank"] = "int32"
-    return pd.DataFrame(out).astype(types)
+            dot += Qb[:, d : d + 1] * C[:, d]
+            qn += Qb[:, d] * Qb[:, d]
+        return 1.0 - dot / (np.sqrt(qn)[:, None] * cn)
+
+    return _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist)
 
 
 def _quantized_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=False):
@@ -209,33 +232,25 @@ def _quantized_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=
     exact int64 (the values arrive as integer-valued doubles <= 127 —
     exactly representable, so the int64 round-trip is lossless), final
     distance the same two correctly-rounded IEEE ops as every other
-    strategy. Shared by kernel and chunked."""
+    strategy; a zero vector on either side is at distance 1. Shared by
+    every pair-scan route (kernel, reverse and chunked)."""
+    Qi = np.asarray(Q).astype(np.int64)
     Ci = C.astype(np.int64)
     bn = (Ci * Ci).sum(axis=1)
     bsq = np.sqrt(bn.astype(np.float64))
-    out = {"query_id": [], "neighbor_id": [], "rank": [], "_d": []}
-    for qid, af in zip(qids, Q):
-        a = af.astype(np.int64)
-        qn = int(a @ a)
-        if qn == 0:
-            dist = np.ones(len(cids))
-        else:
-            dot = Ci @ a
-            dist = 1.0 - dot.astype(np.float64) / (np.sqrt(float(qn)) * bsq)
-            dist[bn == 0] = 1.0
-        mask = cids != qid if exclude_self else np.ones(len(cids), dtype=bool)
-        di, ii = dist[mask], cids[mask]
-        order = np.lexsort((ii, di))[:k]
-        out["query_id"].extend([qid] * len(order))
-        out["neighbor_id"].extend(ii[order])
-        out["rank"].extend(range(1, len(order) + 1))
-        out["_d"].extend(di[order])
-    if not with_rank:
-        del out["rank"]
-    types = {"query_id": "int64", "neighbor_id": "int64", "_d": "float64"}
-    if with_rank:
-        types["rank"] = "int32"
-    return pd.DataFrame(out).astype(types)
+
+    def block_dist(r0, r1):
+        Ab = Qi[r0:r1]
+        qn = (Ab * Ab).sum(axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            dist = 1.0 - (Ab @ Ci.T).astype(np.float64) / (
+                np.sqrt(qn.astype(np.float64))[:, None] * bsq
+            )
+        dist[:, bn == 0] = 1.0
+        dist[qn == 0] = 1.0
+        return dist
+
+    return _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist)
 
 
 def ann_brute_topk(
@@ -276,6 +291,7 @@ def ann_brute_topk(
     bit-identical results. strategy='declarative' (crossJoin + fold +
     window) remains the oracle's literal mirror and an explicit option.
     """
+    check_k(k)
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv"))
     if strategy in ("kernel", "reverse", "chunked"):
@@ -331,6 +347,7 @@ def ann_ivf_topk(
     ``centroids``: optional (list_id, vector) DataFrame to override the
     deterministic lowest-id seeds (e.g. a k-means fit).
     """
+    check_k(k)
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv"))
     if centroids is None:
@@ -519,6 +536,7 @@ def ann_lsh_topk(
     only the query-side explode fans out (1+probes)x, and the query side
     is the small side).
     """
+    check_k(k)
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv"))
     bucket_udf = make_lsh_buckets_udf(planes, tables, dim)
@@ -616,6 +634,7 @@ def ann_quantized_topk(
     Output: (query_id, neighbor_id, rank, q_cos_dist) — q_cos_dist is the
     cosine distance in the quantized space, rounded to 6dp.
     """
+    check_k(k)
     qq = quantize_embeddings(queries, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col("qvec").alias("_qa")
     )
@@ -858,6 +877,7 @@ def ann_pq_topk(
     adc_dist approximates SQUARED euclidean distance; ranking quality is
     bounded by quantization error (recall measured in tests vs brute).
     """
+    check_k(k)
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
     if not 1 <= n_codes <= 256:
@@ -970,6 +990,7 @@ def ann_ivfpq_topk(
 
     Output: (query_id, neighbor_id, rank, l2_dist rounded to 6dp).
     """
+    check_k(k)
     index = ivfpq_build(
         corpus,
         n_lists=n_lists,
@@ -1104,6 +1125,7 @@ def ivfpq_search(
     eagerly and for free (the table is one literal/tiny-parquet row);
     indexes without params are still guarded data-plane — the scoring
     expression raises on any codes row whose length != n_subspaces."""
+    check_k(k)
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
     if "params" in index:

@@ -23,6 +23,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def check_k(k: int) -> None:
+    """The one k >= 1 guard of every top-k entry point (a zero budget
+    used to return an empty result silently)."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
 def topk_per_key(
     df: DataFrame,
     keys: str | Sequence[str],

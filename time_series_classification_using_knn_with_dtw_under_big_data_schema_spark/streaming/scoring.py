@@ -22,19 +22,14 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.distance import DISTANCES, make_dtw_udf, make_fastdtw_udf, sq_euclidean
+from ..functions.distance import DISTANCES, _grouped_pairs_udf, batch_kernel, sq_euclidean
 
 
 def _metric_fn(metric: str, band: Optional[int], fastdtw_radius: int = 1):
     if metric == "euclidean":
         return None
-    if metric == "dtw":
-        return make_dtw_udf(band)
-    if metric == "fastdtw":
-        # same override rule as operators/knn.py: explicit band -> exact
-        # banded DTW, else the faithful recursive kernel
-        return (make_dtw_udf(band) if band is not None
-                else make_fastdtw_udf(fastdtw_radius))
+    if metric in ("dtw", "fastdtw"):
+        return _grouped_pairs_udf(batch_kernel(metric, band=band, radius=fastdtw_radius))
     return DISTANCES[metric]
 
 
