@@ -1,8 +1,9 @@
 """Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
 executions each KNN route (and each pruned-family call) fires while its
 plan is built, the cheap grid-agreement checks (block grid vs broadcast
-kernel, bit-for-bit), the scoring core's empty-result dtype, and ties
-across train length groups on every route."""
+kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
+train length groups on every route, the budget guard, and the Gram
+filter's bit-identity with the exhaustive euclidean fold."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import numpy as np
 import pytest
 
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+    conformal_knn,
+    conformal_set,
     knn_join,
     knn_join_lb,
     knn_join_lb_metric,
@@ -23,6 +26,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     _group_by_length,
     _score_block_rows,
 )
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import first_k
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.similarity import (
     ann_brute_topk,
     ann_quantized_topk,
@@ -210,4 +214,155 @@ def test_ragged_ties_across_length_groups_match_declarative(spark, k):
     assert [(r[1], r[3]) for r in by_rank] == [(3, 3.0), (7, 3.0), (5, 4.0)][:k]
     for strategy in ("kernel", "reverse", "chunked"):
         got = knn_join(test, train, metric="dtw", k=k, strategy=strategy)
+        assert _collect(got) == want, strategy
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda df, e: knn_join(df, df, k=2, strategy="kernel", max_broadcast_bytes=0),
+        lambda df, e: knn_join(df, df, k=2, strategy="reverse", max_broadcast_bytes=-1),
+        lambda df, e: knn_join(df, df, k=2, strategy="chunked", max_broadcast_bytes=0),
+        lambda df, e: ann_brute_topk(e, e, strategy="kernel", max_broadcast_bytes=0),
+        lambda df, e: ann_brute_topk(e, e, strategy="chunked", block_bytes=0),
+        lambda df, e: ann_quantized_topk(e, e, strategy="chunked", block_bytes=-8),
+        lambda df, e: conformal_knn(df, df, max_broadcast_bytes=0),
+        lambda df, e: conformal_set(df, df, max_broadcast_bytes=0),
+    ],
+    ids=["knn-kernel", "knn-reverse", "knn-chunked", "ann-brute", "ann-brute-block",
+         "ann-quantized-block", "conformal-knn", "conformal-set"],
+)
+def test_nonpositive_budgets_rejected_before_any_job(spark, har_dfs, emb, call):
+    """A zero or negative byte budget is a ValueError at the public API,
+    raised before any Spark job runs."""
+    train, _ = har_dfs
+
+    def build():
+        with pytest.raises(ValueError, match=r"(max_broadcast_bytes|block_bytes) must be > 0"):
+            call(train, emb)
+
+    assert _eager_executions(spark, build) == 0
+
+
+def _exhaustive(tids, T, ids, B, labels, kind, k, excl):
+    """All-pairs reference for the euclidean kinds: every pair through the
+    fold's arithmetic, one row at a time, then ``first_k``."""
+    with np.errstate(all="ignore"):
+        D = np.concatenate([((t - B) ** 2).sum(axis=1) for t in T])
+    if kind == "euclidean":
+        D = np.sqrt(D)
+    r, i, d, lab, rank = first_k(
+        D, np.repeat(np.arange(len(T)), len(B)), np.tile(ids, len(T)),
+        None if labels is None else np.tile(labels, len(T)), k,
+        D != 0 if excl else None,
+    )
+    out = {"test_id": tids[r], "train_id": i, "distance": d, "rank": rank}
+    if labels is not None:
+        out["train_label"] = lab
+    return out
+
+
+def _grid(rng, n, m, L, scale=1.0):
+    """Tie-heavy integer grid: train (n, L), test (m, L) with three test
+    rows exact copies of train rows."""
+    B = rng.integers(0, 3, size=(n, L)).astype(float) * scale
+    T = rng.integers(0, 3, size=(m, L)).astype(float) * scale
+    T[:3] = B[[5, 0, 5]]
+    return T, B
+
+
+def _normal(scale):
+    def make(rng, n, m, L):
+        B = rng.normal(size=(n, L)) * scale
+        T = rng.normal(size=(m, L)) * scale
+        T[0] = B[1]
+        return T, B
+
+    return make
+
+
+def _poisoned(value):
+    def make(rng, n, m, L):
+        T, B = _grid(rng, n, m, L)
+        B[4, 2] = value
+        T[7, 1] = value
+        return T, B
+
+    return make
+
+
+@pytest.mark.parametrize(
+    "make, n, m, k, filtered",
+    [
+        # 700 train rows: three ~64K-pair chunks of test rows
+        (_grid, 700, 200, 5, True),
+        (_grid, 40, 9, 1, True),
+        (_grid, 6, 5, 9, True),  # k >= n_train: every pair is a candidate
+        (lambda rng, n, m, L: _grid(rng, n, m, L, 1e-3), 60, 20, 4, True),
+        (_normal(1e6), 80, 30, 3, True),
+        (_normal(1e150), 50, 10, 3, True),
+        (_normal(1e-150), 50, 10, 3, True),
+        (_normal(1e-160), 50, 10, 3, True),  # subnormal squares
+        (_normal(3e-162), 50, 10, 3, True),  # distances a few subnormal ulps apart
+        (_normal(1e160), 50, 10, 3, False),  # squared norms overflow
+        (_poisoned(float("nan")), 50, 10, 3, False),
+        (_poisoned(float("inf")), 50, 10, 3, False),
+    ],
+    ids=["grid-chunks", "grid-k1", "k-over-n", "grid-1e-3", "normal-1e6", "1e150",
+         "1e-150", "1e-160", "3e-162", "1e160", "nan", "inf"],
+)
+@pytest.mark.parametrize("labels", [None, "float", "string"])
+@pytest.mark.parametrize("excl", [True, False])
+@pytest.mark.parametrize("kind", ["euclidean", "sq_euclidean"])
+def test_gram_filter_matches_exhaustive_fold(monkeypatch, make, n, m, k, filtered, labels, excl, kind):
+    """The Gram-filtered core returns exactly the all-pairs fold's rows,
+    ranks, distance bits and dtypes — ties at the k-th distance, exact
+    duplicates under d != 0 and scales down to subnormal included — and
+    leaves non-finite and overflowing inputs to the exhaustive fold."""
+    rng = np.random.default_rng(n * 31 + m)
+    T, B = make(rng, n, m, 8)
+    ids = rng.permutation(3 * n)[:n].astype(np.int64)
+    lab = {
+        None: None,
+        "float": rng.integers(0, 3, n).astype(float),
+        "string": np.asarray([["walk", "run", "sit"][j] for j in rng.integers(0, 3, n)]),
+    }[labels]
+    tids = np.arange(500, 500 + m, dtype=np.int64)
+    calls = []
+    orig = knn_mod._gram_candidates
+    monkeypatch.setattr(
+        knn_mod, "_gram_candidates", lambda *a: calls.append(1) or orig(*a)
+    )
+    fvals = np.empty(m, dtype=object)
+    fvals[:] = list(T)
+    with np.errstate(all="ignore"):
+        got = _score_block_rows(
+            tids, fvals, _group_by_length(ids, list(B), lab), kind=kind,
+            elastic=None, k=k, excl=excl, with_rank=True,
+        )
+    want = _exhaustive(tids, T, ids, B, lab, kind, k, excl)
+    assert bool(calls) == filtered
+    assert sorted(got) == sorted(want)
+    for c, w in want.items():
+        assert got[c].dtype == w.dtype, c
+        assert got[c].tobytes() == w.tobytes(), c
+
+
+def test_euclidean_routes_match_declarative_on_tie_grid(spark):
+    """Kernel, reverse and chunked euclidean (all Gram-filtered) equal the
+    declarative knn_join on an integer grid full of distance ties and exact
+    train/test duplicates (d != 0 drops those)."""
+    rng = np.random.default_rng(11)
+    T, B = _grid(rng, 60, 15, 6)
+    schema = "series_id long, features array<double>, label string"
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in b], "ab"[i % 2]) for i, b in enumerate(B)], schema
+    )
+    test = spark.createDataFrame(
+        [(100 + i, [float(x) for x in t], "t") for i, t in enumerate(T)], schema
+    )
+    want = _collect(knn_join(test, train, metric="euclidean", k=4, strategy="broadcast"))
+    assert len(want) == 15 * 4
+    for strategy in ("kernel", "reverse", "chunked"):
+        got = knn_join(test, train, metric="euclidean", k=4, strategy=strategy)
         assert _collect(got) == want, strategy

@@ -638,10 +638,10 @@ def _conformal_min_kernel(
     from ..caching import register_cache
     from .pairscan import broadcast_scan, choose_route, grid_scan, share, side_stats
 
-    n_rows, max_len, n_lens, _ = side_stats(proper, "_pf", distinct_lens=True)
+    n_rows, max_len, ragged, _ = side_stats(proper, "_pf")
     if not n_rows:
         return None
-    if kind in _CONFORMAL_POINT_KINDS and n_lens != 1:
+    if kind in _CONFORMAL_POINT_KINDS and ragged:
         return None
     route = choose_route(n_rows * max_len * 8, max_broadcast_bytes, None)
     # pair-volume gate (routing only — both branches are exact): the kernel
@@ -763,7 +763,9 @@ def conformal_knn(
     whose distance is engine-reproducible.
     """
     from ..functions.distance import DISTANCES
+    from .pairscan import check_budgets
 
+    check_budgets(max_broadcast_bytes=max_broadcast_bytes)
     dist_fn = DISTANCES[metric] if isinstance(metric, str) else metric
 
     pid = F.col(id_col)

@@ -136,6 +136,9 @@ def knn_join(
     """
     check_k(k)
     if strategy in ("kernel", "chunked", "reverse"):
+        from .pairscan import check_budgets
+
+        check_budgets(max_broadcast_bytes=max_broadcast_bytes)
         if keep_features:
             raise ValueError(f"keep_features is not supported with strategy={strategy!r}")
         kind, nested = _scan_kind(metric, strategy, test, train, features_col)
@@ -336,16 +339,14 @@ def _knn_scan(
     if strategy != "reverse":
         # ONE stats pass over the (possibly huge) train side: size
         # estimate, length spread and channels together
-        n_r, len_r, n_lens, ch_r = side_stats(
-            train, features_col, nested=nested, distinct_lens=True
-        )
+        n_r, len_r, ragged, ch_r = side_stats(train, features_col, nested=nested)
         if not n_r:
             raise ValueError("empty train side")
         if strategy == "kernel":
             route = choose_route(
                 n_r * len_r * ch_r * 8, max_broadcast_bytes, lambda: test_stats()[3]
             )
-        if route != "reverse" and n_lens != 1 and kind not in ELASTIC_KINDS:
+        if route != "reverse" and ragged and kind not in ELASTIC_KINDS:
             if strategy == "kernel" and route == "chunked":
                 # point metrics have no cross-length kernel: an over-budget
                 # ragged corpus keeps the declarative shuffle plan
@@ -357,7 +358,7 @@ def _knn_scan(
                 )
             raise ValueError(
                 f"strategy={strategy!r} needs fixed-length train series for "
-                f"metric {kind!r} (found {n_lens} distinct lengths)"
+                f"metric {kind!r}"
             )
 
     spark = test.sparkSession
@@ -439,6 +440,12 @@ def _knn_scan(
     return rerank(scored, "test_id", "distance", ties, k).select(*cols, "rank")
 
 
+# pairs per scoring chunk: ~1,024 for the batch DPs and the exhaustive
+# point folds, ~64K for sbd's block FFT and the Gram filter
+_DP_PAIRS = 1024
+_BLOCK_PAIRS = 65536
+
+
 def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank):
     """THE kernel scoring core — one block of test rows against the train
     side's per-length ``groups`` of (ids, stacked matrix, labels), shared
@@ -448,16 +455,26 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
     the point metrics and sbd).
 
     Test rows are stacked per length and chunked so one kernel call covers
-    ~1024 pairs (sbd: ~65536, so ONE block FFT serves many test rows).
-    Pair target ~1024 balances ufunc-dispatch amortization against cache
-    footprint: the kernel's (pairs, window) work arrays must share L2/L3
-    with 31 sibling workers, and measured aggregate throughput on 561-pt
-    wide-warp pairs peaks near 1k pairs/call (4k-pair calls were ~20%
-    slower under full contention). In the broadcast-kernel regime (train
-    >= 1024 rows) a chunk is one test row scored with ZERO-copy views
-    (broadcast_to + the train matrix); in the chunked regime's narrow
-    corpus blocks it collapses rows x blocks tiny kernel calls into
-    ~1024-pair ones.
+    ~1,024 pairs for the batch DPs and the exhaustive point folds, and
+    ~64K pairs for sbd (ONE block FFT serves many test rows) and for the
+    Gram filter below. The ~1,024 DP target balances ufunc-dispatch
+    amortization against cache footprint: the kernel's (pairs, window)
+    work arrays must share L2/L3 with 31 sibling workers, and measured
+    aggregate throughput on 561-pt wide-warp pairs peaks near 1k
+    pairs/call (4k-pair calls were ~20% slower under full contention). In
+    the broadcast-kernel regime (train >= 1024 rows) a DP chunk is one
+    test row scored with ZERO-copy views (broadcast_to + the train
+    matrix); in the chunked regime's narrow corpus blocks it collapses
+    rows x blocks tiny kernel calls into ~1024-pair ones.
+
+    euclidean / sq_euclidean against one flat float64 train matrix take
+    the Gram filter (``_gram_candidates``): one BLAS product per chunk
+    bounds every pair's squared distance, and only the pairs that can
+    reach their row's top-k are scored exactly — with the same
+    ``((t - b) ** 2).sum(axis=1)`` arithmetic as the exhaustive fold, so
+    rows, ranks and distance bits are the fold's. A chunk whose squared
+    norms could overflow (any |x| past ~1e153), or that holds a NaN or
+    inf element, takes the exhaustive fold instead.
 
     Each chunk scores every length group (a ragged train side is one
     rectangular kernel call per distinct length) and emits ONCE over the
@@ -474,8 +491,13 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
         return xs[0] if len(xs) == 1 else np.concatenate(xs)
 
     n_train = sum(len(g[0]) for g in groups)
-    rows_per = max(1, (65536 if kind == "sbd" else 1024) // max(1, n_train))
     has_label = groups[0][2] is not None
+    M = groups[0][1]
+    gram = (
+        kind in ("euclidean", "sq_euclidean") and len(groups) == 1
+        and M.dtype == np.float64 and M.ndim == 2
+    )
+    mn = (M * M).sum(axis=1) if gram else None
     parts = []
     # test rows may be ragged; each chunk stacks rectangular
     by_len: dict = {}
@@ -483,6 +505,15 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
         by_len.setdefault(len(f), []).append(i)
     for idxs in by_len.values():
         T = _stack_series([fvals[i] for i in idxs])
+        tn = None
+        if gram and T.dtype == np.float64 and T.shape[1:] == M.shape[1:]:
+            tn = (T * T).sum(axis=1)
+            # finite here keeps every pair's squared distance, exact and
+            # approximate, away from overflow (and rules out NaN / inf)
+            if not np.isfinite(4.0 * (tn.max() + mn.max())):
+                tn = None
+        target = _BLOCK_PAIRS if kind == "sbd" or tn is not None else _DP_PAIRS
+        rows_per = max(1, target // max(1, n_train))
         for c0 in range(0, len(idxs), rows_per):
             chunk = idxs[c0 : c0 + rows_per]
             Tc = T[c0 : c0 + rows_per]
@@ -490,7 +521,15 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
             Ds, rows, ids, labels = [], [], [], []
             for b_ids, b_feats, b_labels in groups:
                 n_g = len(b_ids)
-                if kind == "sbd":
+                if tn is not None:
+                    r, j = _gram_candidates(Tc, tn[c0 : c0 + rows_per], b_feats, mn, k, excl)
+                    D = np.concatenate([
+                        ((Tc[r[s : s + _DP_PAIRS]] - b_feats[j[s : s + _DP_PAIRS]]) ** 2).sum(axis=1)
+                        for s in range(0, len(r), _DP_PAIRS)
+                    ])
+                    if kind == "euclidean":
+                        D = np.sqrt(D)
+                elif kind == "sbd":
                     # block form: both sides FFT'd once per chunk, no pair
                     # materialization at all
                     D = sbd_block(Tc, b_feats)
@@ -511,11 +550,13 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
                         D = np.abs(A - B).sum(axis=1)
                     else:  # chebyshev
                         D = np.abs(A - B).max(axis=1)
+                if tn is None:  # every pair, row-major
+                    r, j = np.repeat(np.arange(nc), n_g), np.tile(np.arange(n_g), nc)
                 Ds.append(D.reshape(-1))
-                rows.append(np.repeat(np.arange(nc), n_g))
-                ids.append(np.tile(b_ids, nc))
+                rows.append(r)
+                ids.append(b_ids[j])
                 if has_label:
-                    labels.append(np.tile(b_labels, nc))
+                    labels.append(b_labels[j])
             Df = cat(Ds)
             r, i, d, lab, rank = first_k(
                 Df, cat(rows), cat(ids), cat(labels) if has_label else None, k,
@@ -543,6 +584,38 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
             part["train_label"] = np.concatenate([g[2][:0] for g in groups])
         return part
     return {c: cat([p[c] for p in parts]) for c in parts[0]}
+
+
+def _gram_candidates(Tc, tn, B, bn, k: int, excl: bool):
+    """(row, column) indices, row-major, of the (test chunk x train) pairs
+    that can reach their row's exact top-k under the exhaustive fold.
+
+    ``approx = |t|^2 + |b|^2 - 2 t.b`` comes from one BLAS product. Its
+    distance from the fold's computed ``sum((t - b) ** 2)`` is at most
+    ``delta = 4 (L + 4) (eps (|t|^2 + |b|^2) + 2^-1074)``: the relative
+    term is twice the first-order rounding bound of both computations in
+    any summation order (BLAS may reorder), the absolute term covers the
+    subnormal range, where rounding error is absolute. A pair with
+    ``approx - delta > 0`` certainly survives the d != 0 exclusion; the
+    k-th smallest ``approx + delta`` among those (among all pairs when
+    ``excl`` is off) is a threshold at or above the row's k-th exact
+    distance, so every pair with ``approx - delta`` at or below it —
+    ties at the k-th distance and zero-distance pairs included — is a
+    candidate. A row with fewer than k such pairs keeps every pair."""
+    import numpy as np
+
+    bound = tn[:, None] + bn[None, :]
+    approx = bound - 2.0 * (Tc @ B.T)
+    slack = 4.0 * (Tc.shape[1] + 4)
+    delta = slack * (np.finfo(np.float64).eps * bound + 2.0 ** -1074)
+    lo = approx - delta
+    kth = np.inf
+    if k <= B.shape[0]:
+        hi = approx + delta
+        if excl:
+            hi[lo <= 0] = np.inf
+        kth = np.partition(hi, k - 1, axis=1)[:, k - 1 : k]
+    return np.nonzero(lo <= kth)
 
 
 def _group_by_length(ids, fvals, labels):

@@ -96,19 +96,19 @@ def _grid_split(
 
 
 def side_stats(
-    df: DataFrame, fcol: str, *, nested: bool = False, distinct_lens: bool = False
-) -> "tuple[int, int, Optional[int], int]":
-    """(rows, max length, distinct lengths, channels) of one side in ONE
-    aggregate job. ``distinct_lens`` is None unless requested (the
-    countDistinct costs an extra aggregation stage); channels is 1 for
-    flat series."""
-    cols = [F.count(F.lit(1)), F.max(F.size(fcol))]
-    if distinct_lens:
-        cols.append(F.countDistinct(F.size(fcol)))
-    cols.append(F.max(F.size(F.element_at(fcol, 1))) if nested else F.lit(1))
-    row = df.agg(*cols).first()
-    n_lens = int(row[2] or 0) if distinct_lens else None
-    return int(row[0] or 0), int(row[1] or 0), n_lens, int(row[-1] or 1)
+    df: DataFrame, fcol: str, *, nested: bool = False
+) -> "tuple[int, int, bool, int]":
+    """(rows, max length, ragged, channels) of one side in ONE
+    single-stage aggregate job. ``ragged`` is True unless every series
+    has the same non-null length (min == max; an empty side is ragged);
+    channels is 1 for flat series."""
+    size = F.size(fcol)
+    row = df.agg(
+        F.count(F.lit(1)), F.max(size), F.min(size),
+        F.max(F.size(F.element_at(fcol, 1))) if nested else F.lit(1),
+    ).first()
+    ragged = row[2] is None or row[1] != row[2]
+    return int(row[0] or 0), int(row[1] or 0), ragged, int(row[3] or 1)
 
 
 def choose_route(
@@ -125,6 +125,14 @@ def choose_route(
     if q_bytes is not None and q_bytes() <= budget // 8:
         return "reverse"
     return "chunked"
+
+
+def check_budgets(**budgets: int) -> None:
+    """Public-API guard, run before any job: every byte budget
+    (``max_broadcast_bytes``, ``block_bytes``) must be positive."""
+    for name, value in budgets.items():
+        if value <= 0:
+            raise ValueError(f"{name} must be > 0, got {value}")
 
 
 def check_fits(q_bytes: int, budget: int, side: str) -> None:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_distance, dot, sq_euclidean
 from ..functions.text import HASH_P
+from .pairscan import check_budgets
 from .topk import check_k, topk_per_key
 
 
@@ -295,6 +296,7 @@ def ann_brute_topk(
     q = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_cv"))
     if strategy in ("kernel", "reverse", "chunked"):
+        check_budgets(max_broadcast_bytes=max_broadcast_bytes, block_bytes=block_bytes)
         top = _ann_scan(
             q, c, strategy=strategy, scorer=_brute_cos_block_scorer,
             wire=np.float64, k=k, exclude_self=exclude_self,
@@ -642,6 +644,7 @@ def ann_quantized_topk(
         F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("_qb")
     )
     if strategy in ("kernel", "reverse", "chunked"):
+        check_budgets(max_broadcast_bytes=max_broadcast_bytes, block_bytes=block_bytes)
         # the kernel broadcasts the int8 codes as int16 (2 B per element,
         # the size its gate estimates); the scorer widens to int64
         top = _ann_scan(

@@ -14,9 +14,12 @@ against an independent reference implementation:
   theta join, across bucket widths.
 - components: operators.dedup.dedup_components (driver union-find AND
   distributed Pregel paths) vs a Python union-find on random graphs.
+- point: the KNN scoring core (operators/knn.py::_score_block_rows,
+  Gram-filtered for the euclidean kinds) vs an all-pairs fold + first_k,
+  bit-for-bit, across random shapes, scales and tie regimes.
 
 Usage: python tools/fuzz_sweep.py [dtw|asof|interval|components|jpeg|bpe|
-       bm25|classify|sax|shape|edit|lof|conformal|all]
+       bm25|classify|sax|shape|edit|lof|conformal|point|all]
        [--trials N] [--seed S]
 
 Exit code 0 = no discrepancies. Slow by design (minutes at the default
@@ -1169,6 +1172,89 @@ def sweep_conformal(trials: int, seed: int) -> int:
     return fails
 
 
+def sweep_point(trials: int, seed: int) -> int:
+    """_score_block_rows for the point metrics vs an all-pairs reference
+    (every pair through the fold's arithmetic one test row at a time, then
+    pairscan.first_k): rows, ranks, distance bits and dtypes must match
+    exactly. Regimes: integer grids (heavy ties), Gaussian at scales
+    1e-162..1e160 (subnormal to overflowing squares), a large common
+    offset (the Gram bound swamps the spread), exact train/test
+    duplicates, and sprinkled NaN / inf elements; excl on and off, no /
+    float / string labels, k from 1 past n_train."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.knn import (
+        _group_by_length,
+        _score_block_rows,
+    )
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import first_k
+
+    folds = {
+        "euclidean": lambda t, B: np.sqrt(((t - B) ** 2).sum(axis=1)),
+        "sq_euclidean": lambda t, B: ((t - B) ** 2).sum(axis=1),
+        "manhattan": lambda t, B: np.abs(t - B).sum(axis=1),
+        "chebyshev": lambda t, B: np.abs(t - B).max(axis=1),
+    }
+    rng = np.random.default_rng(seed)
+    fails = 0
+    for trial in range(trials):
+        L = int(rng.choice([1, 2, 5, 8, 9, 33, 128]))
+        n = int(rng.integers(1, 900))
+        m = int(rng.integers(1, 120))
+        regime = trial % 4
+        if regime == 0:
+            B = rng.integers(0, 3, size=(n, L)).astype(float)
+            T = rng.integers(0, 3, size=(m, L)).astype(float)
+        elif regime == 1:
+            scale = 10.0 ** float(rng.choice([-162, -160, -150, -3, 0, 6, 150, 160]))
+            B, T = rng.normal(size=(n, L)) * scale, rng.normal(size=(m, L)) * scale
+        elif regime == 2:
+            B = 1e6 + rng.normal(size=(n, L)) * 1e-3
+            T = 1e6 + rng.normal(size=(m, L)) * 1e-3
+        else:
+            scale = 10.0 ** rng.uniform(-3, 6)
+            B, T = rng.normal(size=(n, L)) * scale, rng.normal(size=(m, L)) * scale
+        T[: min(m, 3)] = B[rng.integers(0, n, min(m, 3))]
+        if rng.random() < 0.15:
+            B[rng.integers(0, n), rng.integers(0, L)] = rng.choice([np.nan, np.inf, -np.inf])
+        if rng.random() < 0.1:
+            T[rng.integers(0, m), rng.integers(0, L)] = rng.choice([np.nan, np.inf])
+        labels = [
+            None,
+            rng.integers(0, 3, n).astype(float),
+            # built like the core's groups: as wide as the widest present label
+            np.asarray([["a", "bb", "c"][j] for j in rng.integers(0, 3, n)]),
+        ][trial % 3]
+        ids = rng.permutation(2 * n)[:n].astype(np.int64)
+        k = int(rng.choice([1, 3, 5, n, n + 2]))
+        excl = bool(trial % 2)
+        kind = list(folds)[int(rng.integers(0, 4))] if trial % 5 == 4 else ["euclidean", "sq_euclidean"][trial % 2]
+        tids = np.arange(10_000, 10_000 + m, dtype=np.int64)
+        fvals = np.empty(m, dtype=object)
+        fvals[:] = list(T)
+        with np.errstate(all="ignore"):
+            got = _score_block_rows(
+                tids, fvals, _group_by_length(ids, list(B), labels), kind=kind,
+                elastic=None, k=k, excl=excl, with_rank=True,
+            )
+            D = np.concatenate([folds[kind](t, B) for t in T])
+        r, i, d, lab, rank = first_k(
+            D, np.repeat(np.arange(m), n), np.tile(ids, m),
+            None if labels is None else np.tile(labels, m), k,
+            D != 0 if excl else None,
+        )
+        want = {"test_id": tids[r], "train_id": i, "distance": d, "rank": rank}
+        if labels is not None:
+            want["train_label"] = lab
+        ok = sorted(got) == sorted(want) and all(
+            got[c].dtype == w.dtype and got[c].tobytes() == w.tobytes()
+            for c, w in want.items()
+        )
+        if not ok:
+            fails += 1
+            print(f"POINT MISMATCH trial={trial} kind={kind} regime={regime} L={L} n={n} m={m} k={k} excl={excl}")
+    print(f"point sweep: {trials} trials, {fails} failures")
+    return fails
+
+
 SWEEPS = {
     "dtw": sweep_dtw,
     "asof": sweep_asof,
@@ -1183,8 +1269,9 @@ SWEEPS = {
     "edit": sweep_edit,
     "lof": sweep_lof,
     "conformal": sweep_conformal,
+    "point": sweep_point,
 }
-DEFAULT_TRIALS = {"dtw": 250, "asof": 40, "interval": 20, "components": 12, "jpeg": 30, "bpe": 12, "bm25": 25, "classify": 15, "sax": 12, "shape": 10, "edit": 200, "lof": 40, "conformal": 40}
+DEFAULT_TRIALS = {"dtw": 250, "asof": 40, "interval": 20, "components": 12, "jpeg": 30, "bpe": 12, "bm25": 25, "classify": 15, "sax": 12, "shape": 10, "edit": 200, "lof": 40, "conformal": 40, "point": 400}
 
 
 def main() -> None:
