@@ -239,6 +239,27 @@ def test_ivfpq_search_rejects_nonpositive_k(spark, emb):
         ivfpq_search(emb, {}, emb, k=0, dim=16)
 
 
+@pytest.mark.parametrize("entry", ["score_stream", "score_stream_stateless"])
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        # k = 0 used to yield a NULL prediction, k < 0 a run-time failure
+        ({"k": 0}, r"k must be >= 1, got 0"),
+        ({"k": -2}, r"k must be >= 1, got -2"),
+        # an unknown metric used to raise a bare KeyError
+        ({"metric": "nope"}, r"unknown metric 'nope'; have \[.*'euclidean'.*\]"),
+    ],
+)
+def test_stream_scoring_validates_up_front(spark, har_dfs, entry, kw, match):
+    """Both streaming scorers reject a bad k or metric with a ValueError
+    before any plan is built."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark import streaming
+
+    train_df, test_df = har_dfs
+    with pytest.raises(ValueError, match=match):
+        getattr(streaming, entry)(test_df, train_df, **kw)
+
+
 def _knn_call(metric, strategy, **kw):
     def call(spark):
         df = spark.createDataFrame(

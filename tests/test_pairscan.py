@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+    boss_classify,
     conformal_knn,
     conformal_set,
     knn_join,
@@ -108,6 +109,23 @@ def test_pruned_family_eager_executions(spark, walks, monkeypatch, call, want, b
     )
     assert _eager_executions(spark, lambda: call(test, train)) == want
     assert bool(calls) == bypass
+
+
+@pytest.mark.parametrize(
+    "strategy, want",
+    [
+        # one hostile-input gate over both sides, the edge collect, and the
+        # two histogram caches landed eagerly
+        ("kernel", 4),
+        ("declarative", 2),  # no gate, no edge collect: the two caches
+    ],
+)
+def test_boss_eager_executions(spark, walks, strategy, want):
+    train, test = walks
+    got = _eager_executions(
+        spark, lambda: boss_classify(test, train, m=8, n_coeffs=2, strategy=strategy)
+    )
+    assert got == want
 
 
 @pytest.mark.parametrize("exclude_self", [True])

@@ -5,11 +5,17 @@ scan, hinted joins go broadcast, top-k gets map-side partial pruning, the
 euclidean path never leaves the JVM, the DTW path crosses to Python exactly
 once."""
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
+    conformal_knn,
+    knn_cross_validate,
     knn_join,
+    knn_join_lb,
+    knn_join_pruned,
+    knn_predict_1nn,
 )
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans import (
     count_exchanges,
@@ -345,3 +351,99 @@ def test_scan_metadata_from_tree_walk(spark, sf_dir=None):
         assert nc2["inmem_scans"] == 1, nc2
     finally:
         cached.unpersist()
+
+
+def _score_stream_plan(spark, test_df, train_df, tmp_path):
+    """Executed plan of one score_stream micro-batch (file stream in,
+    memory sink out)."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.streaming import (
+        score_stream,
+    )
+
+    src = str(tmp_path / "stream_src")
+    test_df.limit(10).write.parquet(src)
+    stream = spark.readStream.schema(test_df.schema).parquet(src)
+    q = (
+        score_stream(stream, train_df, metric="euclidean", k=3)
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("single_eval_plan")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        return q._jsq.streamingQuery().lastExecution().executedPlan()
+    finally:
+        q.stop()
+
+
+# shuffle and cross-validation plan a CartesianProduct whose task count is
+# the product of the input partition counts; two partitions a side keep
+# them quick
+_PAIR_SITES = {
+    "broadcast": lambda te, tr: knn_join(te, tr, metric="euclidean", k=5, strategy="broadcast"),
+    "shuffle": lambda te, tr: knn_join(
+        te.coalesce(2), tr.coalesce(2), metric="euclidean", k=5, strategy="shuffle"
+    ),
+    "knn_predict_1nn": lambda te, tr: knn_predict_1nn(te, tr, metric="euclidean"),
+    "knn_join_pruned": lambda te, tr: knn_join_pruned(te, tr, metric="euclidean", k=5, length=24),
+    "knn_join_lb": lambda te, tr: knn_join_lb(te, tr, metric="dtw", k=5, length=24),
+    # small pair volume: the volume gate keeps conformal declarative
+    "conformal": lambda te, tr: conformal_knn(te, tr, metric="euclidean"),
+    "cross_validate": lambda te, tr: knn_cross_validate(tr.coalesce(2), folds=3, k=5),
+}
+
+
+@pytest.mark.parametrize("site", [*_PAIR_SITES, "score_stream"])
+def test_pair_distance_evaluated_once(spark, har_dfs, tmp_path, site):
+    """Every declarative pair-distance site evaluates its distance once per
+    pair: the fold sits at exactly one executed-plan node, the Generate
+    that produces _d (functions/distance.py::with_distance). The
+    withColumn + filter(_d != 0) shape fails this: pushdown copies the
+    fold into the join condition under the projection computing it."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans import (
+        executed_node_counts,
+        hof_nodes,
+        repeated_hofs,
+    )
+
+    train_df, test_df = har_dfs
+    if site == "score_stream":
+        df = _score_stream_plan(spark, test_df, train_df, tmp_path)
+    else:
+        df = _PAIR_SITES[site](test_df, train_df)
+    nodes = hof_nodes(df)
+    if site == "knn_join_lb":
+        # DTW is the pandas_udf: one Python node (the phase-3 scorer; the
+        # phase-2 scorer ran into a cache) and no HOF evaluated twice
+        assert executed_node_counts(df, materialize=False)["python_nodes"] == 1
+        assert repeated_hofs(df, materialize=False) == {}, nodes
+        return
+    if site == "conformal":
+        # one pair pipeline per (side, label split): each computes its fold
+        # once, in its own Generate
+        folds = {h: n for h, n in nodes.items() if "_pf, lambdafunction" in h}
+        assert len(folds) == 2, nodes
+        assert all(set(n) == {"GenerateExec"} for n in folds.values()), folds
+        return
+    folds = {h: n for h, n in nodes.items() if "zip_with(_tf, _rf" in h}
+    assert list(folds.values()) == [["GenerateExec"]], nodes
+
+
+def test_repeated_hofs_flags_pushed_down_fold(spark, har_dfs):
+    """The audit sees the double evaluation it exists for: a withColumn +
+    filter on a fold over a cross join puts the fold in the join
+    condition AND the projection above it."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.distance import (
+        sq_euclidean,
+    )
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans import (
+        repeated_hofs,
+    )
+
+    train_df, test_df = har_dfs
+    pairs = test_df.select(F.col("features").alias("a")).crossJoin(
+        F.broadcast(train_df.select(F.col("features").alias("b")))
+    )
+    df = pairs.withColumn("d", sq_euclidean(F.col("a"), F.col("b"))).filter(F.col("d") != 0)
+    assert list(repeated_hofs(df).values()) == [2]

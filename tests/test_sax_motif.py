@@ -753,3 +753,25 @@ def test_boss_hostile_input_routes_declarative(spark):
         assert sorted(map(tuple, auto.collect())) == sorted(
             map(tuple, decl.collect())
         )
+
+
+def test_boss_hostile_test_side_routes_declarative(spark):
+    """The hostile-input gate reads both sides in one aggregate: a null
+    element on the TEST side alone also keeps the call declarative."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import boss_classify
+
+    train = spark.createDataFrame(
+        [
+            (3, [1.0, 0.5, 2.0, 1.5, 1.0, 0.5, 2.0, 1.5, 3.0, 2.0], "a"),
+            (4, [0.5, 1.5, 0.25, 2.0, 1.0, 3.0, 0.75, 1.25, 2.5], "b"),
+        ],
+        "series_id long, features array<double>, label string",
+    )
+    test = spark.createDataFrame(
+        [(9, [1.0, 0.5, 2.0, None, 1.0, 0.5, 2.0, 1.5, 0.25])],
+        "series_id long, features array<double>",
+    )
+    auto = boss_classify(test, train, m=8, n_coeffs=2)
+    assert "MapInPandas" not in auto._jdf.queryExecution().executedPlan().toString()
+    decl = boss_classify(test, train, m=8, n_coeffs=2, strategy="declarative")
+    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, decl.collect()))

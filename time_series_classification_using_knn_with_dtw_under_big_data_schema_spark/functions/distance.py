@@ -2,8 +2,11 @@
 
 Reference semantics (SURVEY.md §2.7 F7, §2.10 U2):
 - Euclidean: ``np.linalg.norm(a - b)`` per pair (Team11-Project.py:173) —
-  here a pure Catalyst expression (zip_with + aggregate + sqrt), whole-stage
-  codegen'd, zero Python.
+  here a pure Catalyst expression (zip_with + aggregate + sqrt), zero
+  Python. Higher-order functions (zip_with, aggregate, transform) run
+  interpreted, per element and boxed: whole-stage codegen does not cover
+  them, so a pair plan must evaluate the fold once per pair
+  (``with_distance``).
 - DTW: ``fastdtw.fastdtw(a, b)`` per pair (Team11-Project.py:339-341) — here
   an Arrow-batched pandas_udf over the batched numpy kernel
   (functions/dtw_kernel.py). The ONE Python boundary in the engine.
@@ -19,7 +22,7 @@ from typing import Callable, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +45,27 @@ __all__ = [
     "make_fastdtw_udf",
     "DISTANCES",
 ]
+
+
+def with_distance(pairs: DataFrame, dist: Column, exclude_zero: bool) -> DataFrame:
+    """``pairs`` plus the pair distance ``dist`` as ``_d``; with
+    ``exclude_zero``, exact-zero pairs (self/duplicate series) are dropped —
+    the reference's P7 quirk (Team11-Project.py:176-177).
+
+    Single-evaluation rule: ``withColumn("_d", dist).filter(_d != 0)``
+    evaluates ``dist`` twice per pair. Predicate pushdown through a
+    projection (PushPredicateThroughNonJoin) inlines the alias into the
+    filter, and pushdown into the join (PushPredicateThroughJoin) then moves
+    the inlined fold into the join condition, under the projection that
+    still computes it. A predicate on a generator's output is never pushed
+    below its Generate node, so ``_d`` comes out of
+    ``explode(array(dist))``: the fold runs once, in Generate, and the
+    filter reads the column. Rows, NULLs and distance bits are those of the
+    plain form."""
+    if not exclude_zero:
+        return pairs.withColumn("_d", dist)
+    pairs = pairs.select("*", F.explode(F.array(dist)).alias("_d"))
+    return pairs.filter(F.col("_d") != 0)
 
 
 def _fold(arr: Column, init: float = 0.0) -> Column:

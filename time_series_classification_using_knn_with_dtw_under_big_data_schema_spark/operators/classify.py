@@ -762,7 +762,7 @@ def conformal_knn(
     MIN, one division); the alpha ratio itself is exact for ANY metric
     whose distance is engine-reproducible.
     """
-    from ..functions.distance import DISTANCES
+    from ..functions.distance import DISTANCES, with_distance
     from .pairscan import check_budgets
 
     check_budgets(max_broadcast_bytes=max_broadcast_bytes)
@@ -794,9 +794,8 @@ def conformal_knn(
     def _mins(side: DataFrame, fcol: str, keys: list[str]) -> DataFrame:
         if kernel_mins is not None:
             return kernel_mins(side, fcol, keys)
-        pairs = side.crossJoin(F.broadcast(proper)).withColumn(
-            "_d", dist_fn(F.col(fcol), F.col("_pf"))
-        ).filter(F.col("_d") != 0)
+        pairs = side.crossJoin(F.broadcast(proper))
+        pairs = with_distance(pairs, dist_fn(F.col(fcol), F.col("_pf")), exclude_zero=True)
         return pairs.groupBy(*keys, "_plab").agg(F.min("_d").alias("_dmin"))
 
     # calibration scores at the TRUE label

@@ -118,7 +118,7 @@ def knn_cross_validate(
     as q10/q12. ``exclude_zero`` carries the reference's dist != 0 quirk
     (Team11-Project.py:176-177) into every fold.
     """
-    from ..functions.distance import sq_euclidean
+    from ..functions.distance import sq_euclidean, with_distance
     from .topk import topk_per_key
     from .vote import majority_vote
 
@@ -136,11 +136,11 @@ def knn_cross_validate(
         F.col(features_col).alias("_rf"),
         F.col(label_col).alias("train_label"),
     )
-    pairs = a.join(b, F.col("_bfold") != F.col("fold")).withColumn(
-        "_d", sq_euclidean(F.col("_tf"), F.col("_rf"))
+    pairs = with_distance(
+        a.join(b, F.col("_bfold") != F.col("fold")),
+        sq_euclidean(F.col("_tf"), F.col("_rf")),
+        exclude_zero,
     )
-    if exclude_zero:
-        pairs = pairs.filter(F.col("_d") != 0)
     topk = topk_per_key(
         pairs,
         "test_id",

@@ -9,8 +9,9 @@ Reference semantics (Team11-Project.py):
 Spark-first re-expression — ONE declarative plan, no RDDs:
 
     test.crossJoin([broadcast] train)
-        -> distance expression (codegen'd SQL for euclidean family;
-           Arrow-batched pandas_udf for DTW)
+        -> distance, evaluated ONCE per pair (interpreted HOF fold for the
+           euclidean family; Arrow-batched pandas_udf for DTW) through
+           functions/distance.py::with_distance
         -> filter(distance != 0)          # reference self-match exclusion P7
         -> window row_number <= k          # K1; WindowGroupLimit = map-side
                                            # partial top-k (two-phase heap)
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.distance import (
     DISTANCES, ELASTIC_KINDS, _grouped_pairs_udf, batch_kernel, sq_euclidean,
+    with_distance,
 )
 from .topk import check_k, topk_per_key
 from .vote import majority_vote
@@ -187,18 +189,11 @@ def _pair_distance(metric: MetricT, band, fastdtw_radius, test, train, features_
     return (sq_euclidean if squared else fn)(F.col("_tf"), F.col("_rf")), squared
 
 
-def _with_distance(pairs: DataFrame, dist: Column, exclude_zero: bool) -> DataFrame:
-    pairs = pairs.withColumn("_d", dist)
-    # reference P7 quirk (Team11-Project.py:176-177): exact-zero distance
-    # pairs (self/duplicate series) never vote
-    return pairs.filter(F.col("_d") != 0) if exclude_zero else pairs
-
-
 def _score_pairs(ids: DataFrame, t: DataFrame, r: DataFrame, dist: Column, exclude_zero: bool):
     """Candidate scorer of the pruned family: join both feature sides back
     onto (test_id, train_id) pairs by id, compute _d, drop zeros."""
     pairs = ids.join(t, "test_id").join(r, "train_id")
-    return _with_distance(pairs, dist, exclude_zero).drop("_tf", "_rf")
+    return with_distance(pairs, dist, exclude_zero).drop("_tf", "_rf")
 
 
 def _cross_pairs(test, train, *, metric, strategy, id_col, features_col, label_col,
@@ -208,7 +203,7 @@ def _cross_pairs(test, train, *, metric, strategy, id_col, features_col, label_c
     t, r = _sides(test, train, id_col, features_col, label_col)
     pairs = t.crossJoin(F.broadcast(r) if strategy == "broadcast" else r)
     dist, squared = _pair_distance(metric, band, fastdtw_radius, test, train, features_col)
-    return _with_distance(pairs, dist, exclude_zero), squared
+    return with_distance(pairs, dist, exclude_zero), squared
 
 
 def _rank_tail(pairs: DataFrame, k: int, label_col, *, squared=False, extra=()) -> DataFrame:

@@ -331,8 +331,10 @@ def _boss_window_coefs(X, m: int, tabs):
     return out
 
 
-def _boss_hostile_input(df, features_col: str) -> bool:
-    """True when any row carries a null / NaN / large-magnitude element —
+def _boss_hostile_input(train, test, features_col: str) -> bool:
+    """True when any row of either side carries a null / NaN /
+    large-magnitude element (both sides in one aggregate, one SQL
+    execution) —
     inputs whose semantics the Arrow kernels cannot replicate: Arrow folds
     SQL NULL elements into NaN (the declarative folds propagate NULL,
     which the MCB binning sends to digit '3' via null comparisons), and
@@ -344,15 +346,15 @@ def _boss_hostile_input(df, features_col: str) -> bool:
     bound keeps every kernel-path micro coefficient orders of magnitude
     inside int64 for any plausible window length; larger-valued corpora
     only lose the kernel speedup, never correctness."""
-    flag = df.agg(
-        F.max(
+    def hostile(df):
+        return df.select(
             F.exists(
                 F.col(features_col),
                 lambda x: x.isNull() | F.isnan(x) | (F.abs(x) >= F.lit(1e9)),
-            )
+            ).alias("_h")
         )
-    ).first()[0]
-    return bool(flag)
+
+    return bool(hostile(train).unionByName(hostile(test)).agg(F.max("_h")).first()[0])
 
 
 def _boss_hists_kernel(
@@ -519,9 +521,8 @@ def boss_classify(
         tables.append((2 * i, cs))
         tables.append((2 * i + 1, sn))
 
-    use_kernel = strategy != "declarative" and not (
-        _boss_hostile_input(train, features_col)
-        or _boss_hostile_input(test, features_col)
+    use_kernel = strategy != "declarative" and not _boss_hostile_input(
+        train, test, features_col
     )
 
     def coef_micro(arr, s, table):

@@ -92,6 +92,26 @@ _PYTHON_EVAL_NODES = (
 )
 
 
+def _executed_nodes(plan):
+    """(simple class name, node) for every node of an executed plan tree,
+    under the walk rules above."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _executed_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _executed_nodes(plan.plan())
+        return
+    yield name, plan
+    # a cached subtree runs once at population, a reused exchange where it
+    # first runs — neither belongs to this query
+    if name in ("InMemoryTableScanExec", "ReusedExchangeExec"):
+        return
+    children = plan.children()
+    for i in range(children.length()):
+        yield from _executed_nodes(children.apply(i))
+
+
 def executed_node_counts(df: DataFrame, materialize: bool = True) -> dict:
     """True node counts from the executed physical-plan TREE.
 
@@ -122,15 +142,7 @@ def executed_node_counts(df: DataFrame, materialize: bool = True) -> dict:
     codegen_ids: set = set()
     pushed: list[str] = []
     scan_cols: list[str] = []
-
-    def visit(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            visit(node.executedPlan())
-            return
-        if name.endswith("QueryStageExec"):
-            visit(node.plan())
-            return
+    for name, node in _executed_nodes(df._jdf.queryExecution().executedPlan()):
         if name == "ShuffleExchangeExec":
             counts["exchanges"] += 1
         elif name == "BroadcastExchangeExec":
@@ -143,23 +155,79 @@ def executed_node_counts(df: DataFrame, materialize: bool = True) -> dict:
             counts["python_nodes"] += 1
         elif name == "InMemoryTableScanExec":
             counts["inmem_scans"] += 1
-            return  # cached subtree runs once at population — not this query
         elif name == "FileSourceScanExec":
             counts["file_scans"] += 1
             scan_cols.extend(str(c) for c in node.requiredSchema().fieldNames())
             pf = node.pushedDownFilters()
             pushed.extend(pf.apply(i).toString() for i in range(pf.length()))
-        if name == "ReusedExchangeExec":
-            return  # reuse of an exchange counted where it first runs
-        children = node.children()
-        for i in range(children.length()):
-            visit(children.apply(i))
-
-    visit(df._jdf.queryExecution().executedPlan())
     counts["codegen_stages"] = len(codegen_ids)
     counts["pushed_filters"] = pushed
     counts["scan_columns"] = scan_cols
     return counts
+
+
+# ---------------------------------------------------------------------------
+# Single-evaluation audit. Higher-order functions (zip_with, aggregate,
+# transform, ...) run interpreted, per element and boxed, so a plan that
+# evaluates one fold at two nodes pays for it twice per row — the shape
+# predicate pushdown produces from ``withColumn(c, fold).filter(c ...)``
+# (functions/distance.py::with_distance). Expression ids (``#12``) and the
+# numeric suffix of lambda variables (``x_3``) are normalized away, so one
+# fold prints the same at every node that evaluates it.
+# ---------------------------------------------------------------------------
+
+_HOF_CLASS = "org.apache.spark.sql.catalyst.expressions.HigherOrderFunction"
+_EXPR_ID = re.compile(r"#\d+L?")
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+\b")
+
+
+def hof_nodes(df, materialize: bool = True) -> dict:
+    """{normalized HOF expression: [simple class name of each executed-plan
+    node evaluating it]}. ``df`` is a DataFrame (collected first when
+    ``materialize``, as in ``executed_node_counts``) or an executed JVM
+    plan (e.g. a streaming query's ``lastExecution().executedPlan()``).
+    Only outermost HOFs count: a zip_with inside an aggregate is part of
+    that aggregate. The same fold over same-named columns of two different
+    inputs (a test and a train side both reading ``features``) also
+    normalizes to one entry, so a listed repeat is a lead to read in the
+    plan, not a proof of waste."""
+    from pyspark import SparkContext
+
+    if isinstance(df, DataFrame):
+        if materialize:
+            df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+    else:
+        plan = df
+    hof_cls = SparkContext._jvm.java.lang.Class.forName(_HOF_CLASS)
+    nodes: dict = {}
+
+    def hofs(expr, out: set) -> None:
+        text = expr.toString()
+        if "lambdafunction" not in text:
+            return
+        if hof_cls.isInstance(expr):
+            out.add(_LAMBDA_VAR.sub(r"\1", _EXPR_ID.sub("", text)))
+            return
+        children = expr.children()
+        for i in range(children.length()):
+            hofs(children.apply(i), out)
+
+    for name, node in _executed_nodes(plan):
+        found: set = set()
+        exprs = node.expressions()
+        for i in range(exprs.length()):
+            hofs(exprs.apply(i), found)
+        for h in found:
+            nodes.setdefault(h, []).append(name)
+    return nodes
+
+
+def repeated_hofs(df, materialize: bool = True) -> dict:
+    """{HOF expression: node count} for every HOF of ``hof_nodes`` that
+    more than one executed-plan node evaluates ({} when each is evaluated
+    at one node)."""
+    return {h: len(n) for h, n in hof_nodes(df, materialize).items() if len(n) > 1}
 
 
 # ---------------------------------------------------------------------------

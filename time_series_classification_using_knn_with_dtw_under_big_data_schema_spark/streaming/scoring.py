@@ -22,7 +22,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.distance import DISTANCES, _grouped_pairs_udf, batch_kernel, sq_euclidean
+from ..functions.distance import (
+    DISTANCES, _grouped_pairs_udf, batch_kernel, sq_euclidean, with_distance,
+)
+from ..operators.topk import check_k
 
 
 def _metric_fn(metric: str, band: Optional[int], fastdtw_radius: int = 1):
@@ -30,7 +33,9 @@ def _metric_fn(metric: str, band: Optional[int], fastdtw_radius: int = 1):
         return None
     if metric in ("dtw", "fastdtw"):
         return _grouped_pairs_udf(batch_kernel(metric, band=band, radius=fastdtw_radius))
-    return DISTANCES[metric]
+    if metric in DISTANCES:
+        return DISTANCES[metric]
+    raise ValueError(f"unknown metric {metric!r}; have {sorted(DISTANCES)} + 'fastdtw'")
 
 
 def score_stream(
@@ -51,6 +56,8 @@ def score_stream(
     ``writeStream`` in update/complete output mode (it contains a streaming
     aggregation keyed on the stream row id).
     """
+    check_k(k)
+    fn = _metric_fn(metric, band, fastdtw_radius)
     t = stream.select(F.col(id_col).alias("test_id"), F.col(features_col).alias("_tf"))
     r = train.select(
         F.col(id_col).alias("train_id"),
@@ -58,11 +65,10 @@ def score_stream(
         F.col(label_col).alias("train_label"),
     )
     pairs = t.join(F.broadcast(r))  # stream-static cross join
-    fn = _metric_fn(metric, band, fastdtw_radius)
     dist = sq_euclidean(F.col("_tf"), F.col("_rf")) if fn is None else fn(
         F.col("_tf"), F.col("_rf")
     )
-    pairs = pairs.withColumn("_d", dist).filter(F.col("_d") != 0)
+    pairs = with_distance(pairs, dist, exclude_zero=True)
 
     if k == 1:
         agg = pairs.groupBy("test_id").agg(
@@ -143,6 +149,7 @@ def score_stream_stateless(
     candidate (O(L^2) each) — right for alerting-volume streams, not
     for corpus-scale rescoring (that's batch knn_join strategy='kernel').
     """
+    check_k(k)
     if metric in ("dtw", "fastdtw"):
         raise ValueError(
             "score_stream_stateless supports expression metrics only "

@@ -4,7 +4,8 @@
 For each `__spark_entry__.queries()` entry (at sf0.001 so plan shapes are
 cheap to resolve), records the scale-relevant plan facts: pushed filters,
 scan schema width, exchange (shuffle) count, broadcast usage, whole-stage
-codegen spans, and Python (Arrow) boundaries. The point is reviewability:
+codegen spans, Python (Arrow) boundaries, and higher-order-function
+expressions evaluated at more than one plan node. The point is reviewability:
 a query whose audit row shows an unexpected exchange or a Python node in a
 supposedly pure-JVM path is a plan regression even while results stay
 correct.
@@ -23,6 +24,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.s
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans.audit import (
     executed_node_counts,
     explain_str,
+    repeated_hofs,
 )
 import __spark_entry__ as entry_mod
 
@@ -36,6 +38,7 @@ def main() -> None:
     spark = get_spark("explain-audit")
     rows = []
     full = {}
+    repeats = {}
     for name, fn in entry_mod.queries().items():
         df = fn(spark, SF_DIR)
         try:
@@ -44,6 +47,9 @@ def main() -> None:
             # plans a different query), and the tree walk needs the
             # materialized query stages
             nc = executed_node_counts(df)
+            reps = repeated_hofs(df, materialize=False)
+            if reps:
+                repeats[name] = reps
             rows.append(
                 {
                     "query": name,
@@ -54,6 +60,7 @@ def main() -> None:
                     "pushed_filters": len(nc["pushed_filters"]),
                     "scan_cols": len(nc["scan_columns"]),
                     "inmem": nc["inmem_scans"],
+                    "hof_repeats": len(reps),
                 }
             )
             if name in FULL_PLANS:
@@ -86,18 +93,33 @@ def main() -> None:
         "mis-parse. Cached tables report 0 pushed/scan-cols here (their file",
         "scan ran at cache population, not in this query).",
         "",
-        "| query | exchanges | broadcast | codegen | python | pushed | scan cols | inmem |",
-        "|---|---|---|---|---|---|---|---|",
+        "`hof rep` counts higher-order-function expressions (zip_with,",
+        "aggregate, transform, ...) that more than one executed-plan node",
+        "evaluates, after normalizing expression ids",
+        "(`plans.audit.repeated_hofs`). HOFs run interpreted, so a repeat is",
+        "paid per row at every node; the usual cause is a filter on a",
+        "projected fold that pushdown inlines into a join condition. The",
+        "same fold over same-named columns of two inputs (a test and a train",
+        "side both reading `features`) also counts, so each repeat listed",
+        "under the table is a lead to read in the plan.",
+        "",
+        "| query | exchanges | broadcast | codegen | python | pushed | scan cols | inmem | hof rep |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         if "error" in r:
-            out.append(f"| {r['query']} | ERROR: {r['error']} | | | | | | |")
+            out.append(f"| {r['query']} | ERROR: {r['error']} | | | | | | | |")
         else:
             out.append(
                 f"| {r['query']} | {r['exchanges']} | {'Y' if r['broadcast'] else '-'} |"
                 f" {r['codegen_stages']} | {r['python_nodes']} | {r['pushed_filters']} |"
-                f" {r['scan_cols']} | {r['inmem']} |"
+                f" {r['scan_cols']} | {r['inmem']} | {r['hof_repeats']} |"
             )
+    if repeats:
+        out += ["", "## Repeated higher-order functions", ""]
+        for name, reps in repeats.items():
+            for hof, n in reps.items():
+                out.append(f"- `{name}`: {n} nodes: `{hof[:110]}…`")
     for name, plan in full.items():
         out += ["", f"## {name}", "", "```", plan.strip(), "```"]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
