@@ -2,8 +2,10 @@
 executions each KNN route (and each pruned-family call) fires while its
 plan is built, the cheap grid-agreement checks (block grid vs broadcast
 kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
-train length groups on every route, the budget guard, and the Gram
-filter's bit-identity with the exhaustive euclidean fold."""
+train length groups on every route, the budget guard, the Gram
+filter's bit-identity with the exhaustive euclidean fold, and the block
+grid's CPU-based sizing (with a forced multi-cell grid checked against
+the kernel route, and the calibration tool run at tiny sizes)."""
 
 from __future__ import annotations
 
@@ -27,6 +29,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     _group_by_length,
     _score_block_rows,
 )
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import pairscan
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import first_k
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.similarity import (
     ann_brute_topk,
@@ -384,3 +387,148 @@ def test_euclidean_routes_match_declarative_on_tie_grid(spark):
     for strategy in ("kernel", "reverse", "chunked"):
         got = knn_join(test, train, metric="euclidean", k=4, strategy=strategy)
         assert _collect(got) == want, strategy
+
+
+# --- block-grid sizing: the CPU rule, the memory floors, the cap --------
+
+_GRID_EUCLID = dict(nq=1000, nc=3000, L=128)  # perfbench grid_euclid
+_DTW561_CHUNKED = dict(nq=375, nc=700, L=561)  # bench fb_knn_dtw561_banded_chunked at sf0.1
+
+
+def _split(nq, nc, L, cpu_s, par, block_bytes=64 << 20):
+    return pairscan._grid_split(nq * L * 8, nc * L * 8, nq, nc, cpu_s, block_bytes, par)
+
+
+@pytest.mark.parametrize("par", [2, 4])
+def test_grid_split_cheap_euclidean_plans_one_cell(par):
+    """grid_euclid's scoring costs a fraction of one Python task's fixed
+    CPU, so the grid plans one cell."""
+    g = _GRID_EUCLID
+    cpu_s = pairscan.scoring_cpu_s("euclidean", g["nq"] * g["nc"], g["L"])
+    assert cpu_s < pairscan._PY_TASK_CPU_S
+    assert _split(g["nq"], g["nc"], g["L"], cpu_s, par) == (1, 1)
+
+
+@pytest.mark.parametrize("par", [2, 4])
+def test_grid_split_heavy_banded_dtw_keeps_two_cells_per_core(par):
+    g = _DTW561_CHUNKED
+    cpu_s = pairscan.scoring_cpu_s("dtw", g["nq"] * g["nc"], g["L"], band=3)
+    bq, bc = _split(g["nq"], g["nc"], g["L"], cpu_s, par)
+    assert bq * bc == 2 * par
+
+
+def test_grid_split_memory_floors_override_cpu_rule():
+    """A small block_bytes forces ceil(side_bytes / block_bytes) blocks per
+    side even when the CPU rule asks for one cell, and past the 2 x par
+    cap."""
+    g = _GRID_EUCLID
+    block = 256 << 10
+    bq, bc = _split(g["nq"], g["nc"], g["L"], 0.01, 2, block_bytes=block)
+    assert bq >= -(-g["nq"] * g["L"] * 8 // block) == 4
+    assert bc >= -(-g["nc"] * g["L"] * 8 // block) == 12
+
+
+@pytest.mark.parametrize("par", [1, 3, 8])
+def test_grid_split_caps_cells_at_twice_parallelism(par):
+    bq, bc = _split(500, 500, 64, 1e6, par)
+    assert bq * bc == 2 * par
+
+
+def test_scoring_cpu_s_families():
+    """Units per pair: one per coordinate for the point kinds, the DP cells
+    for the elastic ones; banded fastdtw prices as banded dtw."""
+    per = pairscan._CPU_S_PER_UNIT
+    assert pairscan.scoring_cpu_s("euclidean", 10, 8) == 10 * 8 * per["gram"]
+    assert pairscan.scoring_cpu_s("euclidean", 10, 8, exhaustive=True) == 10 * 8 * per["point"]
+    assert pairscan.scoring_cpu_s("fastdtw", 1, 100, band=3) == 100 * 7 * per["dtw"]
+    assert pairscan.scoring_cpu_s("fastdtw", 1, 100) == 100 * 10 * per["fastdtw"]
+    assert pairscan.scoring_cpu_s("twed", 1, 20, channels=2) == 20 * 20 * 2 * per["edit"]
+    assert pairscan.scoring_cpu_s("ann_quantized", 3, 64) == 3 * 64 * per["ann_quantized"]
+    with pytest.raises(ValueError, match="no cost family"):
+        pairscan.scoring_cpu_s("cosine", 1, 1)
+
+
+@pytest.fixture(scope="module")
+def square(spark):
+    """24 train x 24 test random walks of length 10 (equal sides, so a
+    forced grid splits both) with one exact train/test duplicate."""
+    rng = np.random.default_rng(23)
+    schema = "series_id long, features array<double>, label string"
+    B = np.cumsum(rng.normal(0, 1, (24, 10)), axis=1)
+    T = np.cumsum(rng.normal(0, 1, (24, 10)), axis=1)
+    T[0] = B[5]
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in b], "abc"[i % 3]) for i, b in enumerate(B)], schema
+    )
+    test = spark.createDataFrame(
+        [(100 + i, [float(x) for x in t], "t") for i, t in enumerate(T)], schema
+    )
+    return train, test
+
+
+@pytest.fixture
+def many_cells(monkeypatch):
+    """Every grid scan plans 2 x par cells (a near-zero task cost) and
+    records its (bq, bc)."""
+    splits = []
+    orig = pairscan._grid_split
+    monkeypatch.setattr(pairscan, "_PY_TASK_CPU_S", 1e-12)
+    monkeypatch.setattr(
+        pairscan, "_grid_split", lambda *a: splits.append(orig(*a)) or splits[-1]
+    )
+    return splits
+
+
+@pytest.mark.parametrize(
+    "call, kernel",
+    [
+        (lambda te, tr, e: knn_join(te, tr, metric="euclidean", k=4, strategy="chunked"),
+         lambda te, tr, e: knn_join(te, tr, metric="euclidean", k=4, strategy="kernel")),
+        (lambda te, tr, e: knn_join(te, tr, metric="dtw", band=2, k=4, strategy="chunked"),
+         lambda te, tr, e: knn_join(te, tr, metric="dtw", band=2, k=4, strategy="kernel")),
+        (lambda te, tr, e: ann_brute_topk(e, e, k=5, strategy="chunked"),
+         lambda te, tr, e: ann_brute_topk(e, e, k=5, strategy="kernel")),
+        (lambda te, tr, e: conformal_knn(te, tr, cal_mod=2, max_broadcast_bytes=64),
+         lambda te, tr, e: conformal_knn(te, tr, cal_mod=2, min_kernel_pairs=0)),
+    ],
+    ids=["knn-euclidean", "knn-dtw", "ann-brute", "conformal"],
+)
+def test_multi_cell_grid_matches_kernel(spark, square, emb, many_cells, call, kernel):
+    """With the grid forced past 2 x 2 cells, the chunked route's rows equal
+    the broadcast kernel's bit for bit."""
+    train, test = square
+    got = _collect(call(test, train, emb))
+    assert many_cells and all(bq >= 2 and bc >= 2 for bq, bc in many_cells), many_cells
+    assert got == _collect(kernel(test, train, emb))
+
+
+def _tool(name):
+    """A script under tools/, imported as a module."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    return tool
+
+
+def test_calibrate_grid_tool_runs(spark):
+    """tools/calibrate_grid.py at tiny sizes on the shared session: a
+    task-cost slope and a positive coefficient for every family."""
+    import math
+
+    out = _tool("calibrate_grid").calibrate(spark, scale=0.02, reps=1)
+    assert math.isfinite(out["py_task_cpu_s"])
+    assert sorted(out["task_cpu_s"]) == [1, 2, 4]
+    assert all(v >= 0 for v in out["task_cpu_s"].values())
+    assert set(out["cpu_s_per_unit"]) == set(pairscan._CPU_S_PER_UNIT)
+    assert all(v > 0 for v in out["cpu_s_per_unit"].values()), out
+
+
+@pytest.mark.slow
+def test_fuzz_sweep_grid():
+    """tools/fuzz_sweep.py grid: every forced (bq, bc) in {1, 2, 3}^2 x
+    metric x exclude_zero equals the all-pairs numpy reference."""
+    assert _tool("fuzz_sweep").sweep_grid(72, 99) == 0

@@ -420,11 +420,13 @@ def test_pair_distance_evaluated_once(spark, har_dfs, tmp_path, site):
         assert repeated_hofs(df, materialize=False) == {}, nodes
         return
     if site == "conformal":
-        # one pair pipeline per (side, label split): each computes its fold
-        # once, in its own Generate
+        # one pair pipeline per side (calibration, test), neither split
+        # into label halves nor re-run by a second consumer: each fold in
+        # one Generate, and the calibration-score count too
         folds = {h: n for h, n in nodes.items() if "_pf, lambdafunction" in h}
         assert len(folds) == 2, nodes
-        assert all(set(n) == {"GenerateExec"} for n in folds.values()), folds
+        assert all(n == ["GenerateExec"] for n in folds.values()), folds
+        assert repeated_hofs(df, materialize=False) == {}, nodes
         return
     folds = {h: n for h, n in nodes.items() if "zip_with(_tf, _rf" in h}
     assert list(folds.values()) == [["GenerateExec"]], nodes

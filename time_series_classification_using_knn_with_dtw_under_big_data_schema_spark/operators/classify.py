@@ -41,7 +41,7 @@ epochs in single digits.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, tokens
@@ -626,17 +626,16 @@ def _conformal_min_kernel(
       (zip_with pads the short side with nulls, the fold goes null, and
       ``null != 0`` filters the pair);
     - the result is cached (register_cache + eager count, the
-      knn_join_lb phase-table pattern) so the kernel runs ONCE and every
-      downstream branch (csame/cdiff, the tmin self-join) scans the
-      bounded (rows x labels) table — a mapInPandas node is not
-      deduplicated across plan branches, and per-branch filter pushdown
-      defeats Exchange reuse (measured: 6 python nodes without the cache,
-      0 behind InMemoryTableScan with it).
+      knn_join_lb phase-table pattern) so the kernel runs ONCE, at
+      population, and the conformal pipeline scans the bounded
+      (rows x labels) table.
     """
     import pandas as pd
 
     from ..caching import register_cache
-    from .pairscan import broadcast_scan, choose_route, grid_scan, share, side_stats
+    from .pairscan import (
+        broadcast_scan, choose_route, grid_scan, scoring_cpu_s, share, side_stats,
+    )
 
     n_rows, max_len, ragged, _ = side_stats(proper, "_pf")
     if not n_rows:
@@ -680,8 +679,6 @@ def _conformal_min_kernel(
             scored = broadcast_scan(side.select(*keys, fcol), shared, score, schema)
         else:
             n_s, len_s, _, _ = side_stats(side, fcol)
-            L = max(max_len, 1)
-            per_pair = L * L if batch_fn is not None else L
             cells = grid_scan(
                 side,
                 proper,
@@ -693,7 +690,7 @@ def _conformal_min_kernel(
                 c_rows=n_rows,
                 q_bytes=n_s * len_s * 8,
                 c_bytes=n_rows * max_len * 8,
-                pair_work=n_s * n_rows * per_pair,
+                cpu_s=scoring_cpu_s(kind, n_s * n_rows, max_len, exhaustive=True),
                 cell=lambda sp, pp: score(_conformal_proper_groups(
                     list(zip(pp[fcol].tolist(), pp["_plab"].tolist()))
                 ), sp),
@@ -751,9 +748,9 @@ def conformal_knn(
     by max p; the runner-up p is the classic confidence complement.
 
     Scale: two cross joins against the BROADCAST proper split (the KNN
-    pair volume, pre-aggregated by MIN before anything wide), one
-    broadcast of the bounded calibration-score table. Nothing corpus x
-    corpus beyond the KNN itself.
+    pair volume, pre-aggregated by MIN before anything wide), each
+    evaluated once, and one broadcast row holding the calibration scores
+    and their count. Nothing corpus x corpus beyond the KNN itself.
 
     ``metric`` (r7): any named DISTANCES entry or a Column callable —
     euclidean (default, q169) or an elastic metric ('twed' etc., q192:
@@ -798,47 +795,59 @@ def conformal_knn(
         pairs = with_distance(pairs, dist_fn(F.col(fcol), F.col("_pf")), exclude_zero=True)
         return pairs.groupBy(*keys, "_plab").agg(F.min("_d").alias("_dmin"))
 
-    # calibration scores at the TRUE label
+    # Each _mins table feeds ONE pipeline, so every pair is scored once:
+    # a filter on a _mins table would be pushed into its join (the label
+    # halves of one fold), and a second consumer would re-run it.
+    # calibration scores at the TRUE label: the different-label minimum is
+    # a window over the calibration row
     cmin = _mins(cal, "_cf", ["_cid", "_clab"])
-    csame = cmin.filter(F.col("_plab") == F.col("_clab")).select(
-        "_cid", F.col("_dmin").alias("_ds")
+    diff = F.when(F.col("_plab") != F.col("_clab"), F.col("_dmin"))
+    alphas = (
+        cmin.select(
+            "_plab", "_clab", "_dmin",
+            F.min(diff).over(Window.partitionBy("_cid")).alias("_dd"),
+        )
+        .filter((F.col("_plab") == F.col("_clab")) & F.col("_dd").isNotNull())
+        .select((F.col("_dmin") / F.col("_dd")).alias("_ai"))
     )
-    cdiff = cmin.filter(F.col("_plab") != F.col("_clab")).groupBy("_cid").agg(
-        F.min("_dmin").alias("_dd")
+    # every calibration score and their count in one row (an aggregate
+    # over an empty table still yields it: p = 1/(0+1) = 1, not zero rows)
+    cal_row = alphas.agg(
+        F.collect_list("_ai").alias("_ais"), F.count(F.lit(1)).alias("_ncal")
     )
-    alphas = csame.join(cdiff, "_cid").select(
-        (F.col("_ds") / F.col("_dd")).alias("_ai")
-    )
-    n_cal = alphas.agg(F.count(F.lit(1)).alias("_ncal"))
 
-    # test scores per candidate label
+    # test scores per candidate label: the other labels' minimum is the
+    # least of the windows before and after the row's label
     tmin = _mins(
         test.select(F.col(id_col).alias("test_id"), F.col(features_col).alias("_tf")),
         "_tf",
         ["test_id"],
     )
-    tdiff = (
-        tmin.alias("a")
-        .join(tmin.alias("b"), "test_id")
-        .filter(F.col("a._plab") != F.col("b._plab"))
-        .groupBy(F.col("test_id"), F.col("a._plab").alias("label"))
-        .agg(F.min(F.col("b._dmin")).alias("_dd"))
+    by_label = Window.partitionBy("test_id").orderBy("_plab")
+    others = F.least(
+        F.min("_dmin").over(by_label.rowsBetween(Window.unboundedPreceding, -1)),
+        F.min("_dmin").over(by_label.rowsBetween(1, Window.unboundedFollowing)),
     )
     axy = (
-        tmin.select("test_id", F.col("_plab").alias("label"), F.col("_dmin").alias("_ds"))
-        .join(tdiff, ["test_id", "label"])
-        .select("test_id", "label", (F.col("_ds") / F.col("_dd")).alias("alpha"))
+        tmin.filter(F.col("_plab").isNotNull())
+        .select("test_id", "_plab", "_dmin", others.alias("_dd"))
+        .filter(F.col("_dd").isNotNull())
+        .select(
+            "test_id", F.col("_plab").alias("label"),
+            (F.col("_dmin") / F.col("_dd")).alias("alpha"),
+        )
     )
-    # LEFT join on the rank condition (not a cross join + conditional sum):
-    # an EMPTY calibration table then still preserves every test row with
-    # _ge = 0, giving the correct degenerate p = 1/(n_cal+1) = 1 instead of
-    # silently returning zero rows (r6 review fix)
-    counted = (
-        axy.join(F.broadcast(alphas), F.col("_ai") >= F.col("alpha"), "left")
-        .groupBy("test_id", "label", "alpha")
-        .agg(F.count(F.col("_ai")).cast("long").alias("_ge"))
+    ge = F.aggregate(
+        "_ais", F.lit(0).cast("long"),
+        lambda n, a: n + F.when(a >= F.col("alpha"), 1).otherwise(0),
     )
-    return counted.crossJoin(F.broadcast(n_cal)).select(
+    # _ge comes out of a generator so a filter on p_value (conformal_set)
+    # is not pushed into the join with the count inlined — the
+    # single-evaluation rule of functions/distance.py::with_distance
+    counted = axy.crossJoin(F.broadcast(cal_row)).select(
+        "test_id", "label", "alpha", "_ncal", F.explode(F.array(ge)).alias("_ge")
+    )
+    return counted.select(
         "test_id",
         "label",
         "alpha",

@@ -295,8 +295,8 @@ def _knn_scan(
     import pandas as pd
 
     from .pairscan import (
-        broadcast_scan, check_fits, choose_route, grid_scan, rerank, share,
-        side_stats,
+        broadcast_scan, check_fits, choose_route, grid_scan, rerank,
+        scoring_cpu_s, share, side_stats,
     )
 
     has_label = label_col is not None
@@ -398,22 +398,6 @@ def _knn_scan(
             raise ValueError(
                 f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
             )
-        # per-pair cost model for the grid split: a pinned band bounds the
-        # DTW sweep to len x band_width cells (x channels); faithful
-        # FastDTW ~(2*(2r+1)+2) cells per row across all levels, NOT the
-        # full L columns (review r6); unbanded DTW and the edit DPs every
-        # (i, j) cell per channel; point metrics touch each coordinate
-        # once — heavy DTW workloads keep every core even when their
-        # BYTES are small
-        L = max(len_r, 1)
-        if kind in ("dtw", "fastdtw") and band is not None:
-            per_pair = L * min(2 * band + 1, L) * ch_r
-        elif kind == "fastdtw":
-            per_pair = L * min(4 * (fastdtw_radius + 1) + 2, L) * ch_r
-        elif kind in ELASTIC_KINDS:
-            per_pair = L * L * ch_r
-        else:
-            per_pair = L * ch_r
         scored = grid_scan(
             test,
             train,
@@ -425,7 +409,10 @@ def _knn_scan(
             c_rows=n_r,
             q_bytes=t_bytes,
             c_bytes=n_r * len_r * ch_r * 8,
-            pair_work=n_t * n_r * per_pair,
+            cpu_s=scoring_cpu_s(
+                kind, n_t * n_r, len_r, channels=ch_r, band=band,
+                radius=fastdtw_radius,
+            ),
             cell=lambda tp, rp: local_topk(
                 tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
             ),

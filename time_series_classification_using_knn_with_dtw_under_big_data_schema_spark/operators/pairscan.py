@@ -17,7 +17,10 @@ their scoring cores:
   side is hash-assigned to blocks and replicated across the other side's
   block count, and one ``applyInPandas`` call scores each (query-block x
   candidate-block) cell. Traffic is ``~2|q||c|/block_bytes``, the
-  grid-replication optimum for exact all-pairs scoring.
+  grid-replication optimum for exact all-pairs scoring. The cell count
+  comes from estimated CPU: ``scoring_cpu_s`` prices the scoring, and a
+  cell gets its own Python task only when its scoring outweighs the
+  ~0.27 CPU-s every Python task costs whatever its work.
 - **top-k** — one tie-order contract, (distance, label, id) ascending
   with NaN last, in two halves: ``first_k`` is the numpy half every
   scoring core runs per batch or per cell, and ``rerank`` the SQL half
@@ -44,12 +47,99 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 from ..caching import register_broadcast
+from ..functions.distance import ELASTIC_KINDS
 from .topk import topk_per_key
 
-# ~multiply-adds a block cell should own before another task is worth its
-# fixed cost (launch + Arrow decode + numpy stack) — calibrated on the r5
-# toy-regime fallback entries
-_CELL_WORK_TARGET = 16_000_000
+# Fixed CPU of one Python task, whatever its work. Each task's
+# setup_spark_files calls importlib.invalidate_caches()
+# (pyspark/worker_util.py), which re-reads the zip directory behind every
+# zipimporter on the worker path (pyspark.zip, the py4j zip and the
+# spark-core jar: 16 importers, 179-245 ms), and the daemon runs
+# gc.collect() after the task (43-47 ms). The value is the slope of
+# Python-worker CPU over 1, 2 and 4 trivial applyInPandas tasks, measured
+# by tools/calibrate_grid.py on a 4-core x86 VM (local[2], Spark 4.1,
+# Python 3.11): 0.274 and 0.282 CPU-s per task in two runs.
+_PY_TASK_CPU_S = 0.27
+
+# CPU seconds per work unit (``_work_units``) of each scoring family,
+# measured in-process by tools/calibrate_grid.py on the same VM: one
+# thread (OMP_NUM_THREADS=1, as in a Python worker), seeded random walks,
+# k = 5, the KNN core ``_score_block_rows`` for the time-series families
+# and the ANN scorers for the embedding ones; the mean of two runs. Sizes
+# (query x candidate x length): gram (euclidean) 1,000 x 3,000 x 128;
+# point (manhattan) and sbd 200 x 1,000 x 128; dtw (band 3) 64 x 64 x
+# 561; fastdtw (radius 1) 32 x 32 x 561; edit (twed) 64 x 64 x 64; ANN
+# 1,000 x 2,000 x 64. The per-unit cost moves with length and kind (the
+# edit DPs span 2.1e-9 for lcss to 6.2e-9 for msm; chebyshev costs ~2x
+# manhattan), which the cell count tolerates: it only has to tell a
+# fraction of a task's fixed cost from many of them.
+_CPU_S_PER_UNIT = {
+    "gram": 5.0e-10,
+    "point": 5.3e-9,
+    "sbd": 6.0e-8,
+    "dtw": 5.0e-9,
+    "fastdtw": 3.5e-8,
+    "edit": 4.4e-9,
+    "ann_brute": 8.8e-9,
+    "ann_quantized": 4.3e-9,
+}
+
+
+def _family(kind: str, band: Optional[int], exhaustive: bool) -> str:
+    """The cost family of a scoring kind: euclidean / sq_euclidean take
+    the Gram filter unless the caller folds every pair (``exhaustive``);
+    fastdtw with a pinned band is exact banded DTW."""
+    if kind in ("euclidean", "sq_euclidean"):
+        return "point" if exhaustive else "gram"
+    if kind in ("manhattan", "chebyshev"):
+        return "point"
+    if kind == "dtw" or (kind == "fastdtw" and band is not None):
+        return "dtw"
+    if kind in ELASTIC_KINDS - {"fastdtw"}:
+        return "edit"
+    if kind not in _CPU_S_PER_UNIT:
+        raise ValueError(f"no cost family for scoring kind {kind!r}")
+    return kind
+
+
+def _work_units(
+    family: str, length: int, channels: int = 1, band: Optional[int] = None,
+    radius: int = 1,
+) -> int:
+    """Work units of one pair: the DP cells the elastic kinds sweep (a
+    pinned band bounds DTW to length x band width; faithful FastDTW
+    ~(2*(2r+1)+2) cells per row across all levels; unbanded DTW and the
+    edit DPs every (i, j) cell), one per coordinate for the rest — times
+    the channels."""
+    L = max(length, 1)
+    if family == "dtw":
+        width = L if band is None else min(2 * band + 1, L)
+    elif family == "fastdtw":
+        width = min(4 * (radius + 1) + 2, L)
+    elif family == "edit":
+        width = L
+    else:
+        width = 1
+    return L * width * max(channels, 1)
+
+
+def scoring_cpu_s(
+    kind: str,
+    pairs: int,
+    length: int,
+    *,
+    channels: int = 1,
+    band: Optional[int] = None,
+    radius: int = 1,
+    exhaustive: bool = False,
+) -> float:
+    """Estimated CPU seconds to score ``pairs`` pairs of series of
+    ``length`` points (x ``channels``) with scoring kind ``kind``: a KNN
+    core kind, or 'ann_brute' / 'ann_quantized'. ``band`` / ``radius`` are
+    the DTW window; ``exhaustive`` marks a euclidean fold over every pair
+    (conformal's core) rather than the Gram filter."""
+    family = _family(kind, band, exhaustive)
+    return pairs * _work_units(family, length, channels, band, radius) * _CPU_S_PER_UNIT[family]
 
 
 def _grid_split(
@@ -57,18 +147,22 @@ def _grid_split(
     c_bytes: int,
     nq: int,
     nc: int,
-    pair_work: int,
+    cpu_s: float,
     block_bytes: int,
     par: int,
 ) -> "tuple[int, int]":
-    """Block-grid sizing for the chunked pair scorers (r6, VERDICT r5 #6).
+    """Block-grid sizing for the chunked pair scorers.
 
     Three forces, applied in order:
-    - OVERHEAD: total cells = pair_work / _CELL_WORK_TARGET capped at the
-      cluster parallelism — a toy input collapses to one cell instead of
-      paying par tasks' fixed cost (the r5 toy-regime ratios), a big input
-      keeps every core (DTW workloads count their band sweep in pair_work,
-      so compute-heavy-but-byte-light inputs still go wide).
+    - OVERHEAD: total cells = floor(cpu_s / _PY_TASK_CPU_S), clamped to
+      [1, 2 x par]. ``cpu_s`` is the scoring's estimated CPU
+      (``scoring_cpu_s``) and each cell is one Python task, which costs
+      ~_PY_TASK_CPU_S whatever its work; a cell is split off only when
+      its scoring pays for that task. A byte-light cheap metric collapses
+      to one cell, heavy DTW keeps every core. The 2 x par cap: cells map
+      one per task, so extra cells only buy replication (every cell
+      multiplies the smaller side's shuffle copies); two even waves keep
+      work-stealing granularity against box noise.
     - TRAFFIC: each side is replicated across the OTHER side's block
       count (traffic = q_bytes*bc + c_bytes*bq), so the grid splits the
       cell budget proportional to sqrt(q_bytes/c_bytes) — the minimizer
@@ -79,15 +173,8 @@ def _grid_split(
     """
     bq_mem = max(1, math.ceil(q_bytes / block_bytes))
     bc_mem = max(1, math.ceil(c_bytes / block_bytes))
-    # cap at 2x parallelism (r9; was 4x): cells now map one-per-task
-    # (grid_scan n_parts), so the old hash-packing smoothing is obsolete
-    # and extra cells only buy replication — every unit of cells
-    # multiplies the smaller side's shuffle copies and the per-cell fixed
-    # cost (arrow conversion + per-row top-k overhead). 2x keeps two even
-    # waves of work-stealing granularity against box noise; the memory
-    # floors still push the count up when the sides are truly big.
     cells = max(
-        bq_mem * bc_mem, min(2 * par, max(1, pair_work // _CELL_WORK_TARGET))
+        bq_mem * bc_mem, min(2 * par, max(1, math.floor(cpu_s / _PY_TASK_CPU_S)))
     )
     bq = round(math.sqrt(cells * q_bytes / max(c_bytes, 1)))
     bq = min(max(bq, bq_mem, 1), max(nq, 1), cells)
@@ -183,21 +270,22 @@ def grid_scan(
     c_rows: int,
     q_bytes: int,
     c_bytes: int,
-    pair_work: int,
+    cpu_s: float,
     cell: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
     schema: str,
     block_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Block nested-loop scan for the NO-BROADCAST regime: tile the cross
     product into (query-block x candidate-block) cells sized by
-    ``_grid_split`` and score each with one ``cell(q_rows, c_rows)`` call
-    inside applyInPandas. ``q_cols``/``c_cols`` are the payload columns
+    ``_grid_split`` from the scoring's estimated ``cpu_s``
+    (``scoring_cpu_s``) and score each with one ``cell(q_rows, c_rows)``
+    call inside applyInPandas. ``q_cols``/``c_cols`` are the payload columns
     each side carries (hashed into blocks by ``q_key``/``c_key``); a
     column one side lacks arrives as null. A cell missing either side
     emits nothing."""
     par = q.sparkSession.sparkContext.defaultParallelism
     bq, bc = _grid_split(
-        q_bytes, c_bytes, q_rows, c_rows, pair_work, block_bytes, par
+        q_bytes, c_bytes, q_rows, c_rows, cpu_s, block_bytes, par
     )
     q_side = q.select(
         F.pmod(F.hash(F.col(q_key)), F.lit(bq)).alias("_qblk"),

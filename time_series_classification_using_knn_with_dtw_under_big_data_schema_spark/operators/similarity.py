@@ -81,8 +81,8 @@ def _ann_scan(
     bigger brute force.
     """
     from .pairscan import (
-        broadcast_scan, check_fits, choose_route, grid_scan, rerank, share,
-        side_stats,
+        broadcast_scan, check_fits, choose_route, grid_scan, rerank,
+        scoring_cpu_s, share, side_stats,
     )
 
     spark = q.sparkSession
@@ -163,7 +163,11 @@ def _ann_scan(
             c_rows=nc,
             q_bytes=nq * dq * 8,
             c_bytes=nc * dc * 8,
-            pair_work=nq * nc * max(dc, 1),
+            cpu_s=scoring_cpu_s(
+                "ann_quantized" if scorer is _quantized_cos_block_scorer
+                else "ann_brute",
+                nq * nc, dc,
+            ),
             cell=lambda qp, cp: scorer(*ids_matrix(qp), *ids_matrix(cp), k, exclude_self),
             schema=schema,
             block_bytes=block_bytes,

@@ -17,9 +17,12 @@ against an independent reference implementation:
 - point: the KNN scoring core (operators/knn.py::_score_block_rows,
   Gram-filtered for the euclidean kinds) vs an all-pairs fold + first_k,
   bit-for-bit, across random shapes, scales and tie regimes.
+- grid: knn_join(strategy='chunked') with the block grid forced to every
+  (bq, bc) in {1, 2, 3}^2, for euclidean, manhattan, banded dtw and lcss,
+  exclude_zero on and off, vs an all-pairs numpy reference, bit-for-bit.
 
 Usage: python tools/fuzz_sweep.py [dtw|asof|interval|components|jpeg|bpe|
-       bm25|classify|sax|shape|edit|lof|conformal|point|all]
+       bm25|classify|sax|shape|edit|lof|conformal|point|grid|all]
        [--trials N] [--seed S]
 
 Exit code 0 = no discrepancies. Slow by design (minutes at the default
@@ -1255,6 +1258,77 @@ def sweep_point(trials: int, seed: int) -> int:
     return fails
 
 
+def sweep_grid(trials: int, seed: int) -> int:
+    """The block grid end to end: knn_join(strategy='chunked') with
+    ``pairscan._grid_split`` forced to each (bq, bc) in {1, 2, 3}^2 in
+    turn, for euclidean, manhattan, dtw (band 2) and lcss, exclude_zero on
+    and off (trial t takes combination t mod 72), against an all-pairs
+    numpy reference: every pair through the metric's fold or batch DP,
+    then pairscan.first_k. Rows, ranks and distance bits must match.
+    Inputs are small integer grids (heavy ties) with exact train/test
+    duplicates, string labels and k from 1 past n_train."""
+    import itertools
+
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.distance import batch_kernel
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn_join, pairscan
+
+    folds = {
+        "euclidean": lambda A, B: np.sqrt(((A - B) ** 2).sum(axis=1)),
+        "manhattan": lambda A, B: np.abs(A - B).sum(axis=1),
+        "dtw": batch_kernel("dtw", band=2),
+        "lcss": batch_kernel("lcss"),
+    }
+    combos = list(itertools.product(folds, (1, 2, 3), (1, 2, 3), (True, False)))
+    schema = "series_id long, features array<double>, label string"
+    spark = _spark()
+    rng = np.random.default_rng(seed)
+    split = pairscan._grid_split
+    fails = 0
+    try:
+        for trial in range(trials):
+            kind, bq, bc, excl = combos[trial % len(combos)]
+            n, m, L = int(rng.integers(4, 40)), int(rng.integers(1, 16)), int(rng.integers(3, 12))
+            B = rng.integers(0, 3, size=(n, L)).astype(float)
+            T = rng.integers(0, 3, size=(m, L)).astype(float)
+            T[: min(m, 2)] = B[rng.integers(0, n, min(m, 2))]
+            ids = rng.permutation(4 * n)[:n].astype(np.int64)
+            labels = np.asarray([["a", "bb", "c"][j] for j in rng.integers(0, 3, n)])
+            k = int(rng.choice([1, 3, n, n + 2]))
+            tids = np.arange(10_000, 10_000 + m, dtype=np.int64)
+            train = spark.createDataFrame(
+                [(int(i), [float(x) for x in f], str(c)) for i, f, c in zip(ids, B, labels)], schema
+            )
+            test = spark.createDataFrame(
+                [(int(i), [float(x) for x in f], "t") for i, f in zip(tids, T)], schema
+            )
+            pairscan._grid_split = lambda *a, **kw: (bq, bc)
+            got = knn_join(
+                test, train, metric=kind, band=2 if kind == "dtw" else None, k=k,
+                strategy="chunked", exclude_zero=excl,
+            ).collect()
+            D = folds[kind](np.repeat(T, n, axis=0), np.tile(B, (m, 1)))
+            r, i, d, lab, rank = pairscan.first_k(
+                D, np.repeat(np.arange(m), n), np.tile(ids, m), np.tile(labels, m), k,
+                D != 0 if excl else None,
+            )
+            want = sorted(zip(tids[r].tolist(), i.tolist(), lab.tolist(), d.tolist(), rank.tolist()))
+            have = sorted(
+                (row.test_id, row.train_id, row.train_label, row.distance, row.rank) for row in got
+            )
+            same = len(have) == len(want) and all(
+                h[:3] == w[:3] and h[4] == w[4]
+                and np.float64(h[3]).tobytes() == np.float64(w[3]).tobytes()
+                for h, w in zip(have, want)
+            )
+            if not same:
+                fails += 1
+                print(f"GRID MISMATCH trial={trial} kind={kind} bq={bq} bc={bc} excl={excl} n={n} m={m} L={L} k={k}")
+    finally:
+        pairscan._grid_split = split
+    print(f"grid sweep: {trials} trials, {fails} failures")
+    return fails
+
+
 SWEEPS = {
     "dtw": sweep_dtw,
     "asof": sweep_asof,
@@ -1270,8 +1344,9 @@ SWEEPS = {
     "lof": sweep_lof,
     "conformal": sweep_conformal,
     "point": sweep_point,
+    "grid": sweep_grid,
 }
-DEFAULT_TRIALS = {"dtw": 250, "asof": 40, "interval": 20, "components": 12, "jpeg": 30, "bpe": 12, "bm25": 25, "classify": 15, "sax": 12, "shape": 10, "edit": 200, "lof": 40, "conformal": 40, "point": 400}
+DEFAULT_TRIALS = {"dtw": 250, "asof": 40, "interval": 20, "components": 12, "jpeg": 30, "bpe": 12, "bm25": 25, "classify": 15, "sax": 12, "shape": 10, "edit": 200, "lof": 40, "conformal": 40, "point": 400, "grid": 72}
 
 
 def main() -> None:
