@@ -71,6 +71,40 @@ def _sbd_np(a, b):
     return 1.0 - best / nrm
 
 
+def test_sq_euclidean_bits_match_squared_difference_form(spark):
+    """sq_euclidean squares each difference inside the fold; its bits equal
+    the ``(x - y) * (x - y)`` form's on random floats spanning many
+    magnitudes, with NaN, -0.0 and null elements, null arrays and ragged
+    rows (zip_with pads the shorter side with nulls)."""
+    import struct
+
+    rng = np.random.default_rng(17)
+
+    def arr(n):
+        vals = list(rng.normal(0, 1, n) * 10.0 ** rng.integers(-160, 160, n))
+        for j in range(n):
+            vals[j] = [float(vals[j]), float("nan"), -0.0, None][min(3, rng.integers(0, 12))]
+        return vals
+
+    rows = []
+    for i in range(300):
+        n = int(rng.integers(0, 9))
+        m = n if i % 3 else int(rng.integers(0, 9))
+        rows.append((i, None if i % 50 == 7 else arr(n), arr(m)))
+    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    square_form = F.aggregate(
+        F.zip_with("a", "b", lambda x, y: (x - y) * (x - y)), F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    got = df.select(
+        sq_euclidean(F.col("a"), F.col("b")).alias("new"), square_form.alias("old")
+    ).collect()
+    bits = lambda v: None if v is None else struct.pack("<d", v)
+    assert [bits(r.new) for r in got] == [bits(r.old) for r in got]
+    assert {type(r.new) for r in got} == {float, type(None)}
+    assert any(r.new is not None and r.new != r.new for r in got)  # NaN rows
+
+
 def test_sbd_matches_numpy(pairs_df):
     df, rows = pairs_df
     got = {

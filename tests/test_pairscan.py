@@ -3,9 +3,12 @@ executions each KNN route (and each pruned-family call) fires while its
 plan is built, the cheap grid-agreement checks (block grid vs broadcast
 kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
 train length groups on every route, the budget guard, the Gram
-filter's bit-identity with the exhaustive euclidean fold, and the block
-grid's CPU-based sizing (with a forced multi-cell grid checked against
-the kernel route, and the calibration tool run at tiny sizes)."""
+filter's bit-identity with the exhaustive euclidean fold, null labels
+ranked first on every KNN route, knn_join_lb's bound evaluated once per
+pair, the block grid's CPU-based sizing (with a forced multi-cell grid
+checked against the kernel route, and the calibration tool run at tiny
+sizes), and the phases the grid skips: no exchange for one cell, no
+cross-cell reduction when the candidate side is not split."""
 
 from __future__ import annotations
 
@@ -114,6 +117,23 @@ def test_pruned_family_eager_executions(spark, walks, monkeypatch, call, want, b
     assert bool(calls) == bypass
 
 
+def test_lb_bound_evaluated_once_per_pair(spark, walks):
+    """knn_join_lb's pair-level lower bound comes out of a Generate: the
+    phase-3 filter on it infers no isnotnull(<bound>) into the cross
+    join's condition, so the bound is not evaluated twice per pair."""
+    train, test = walks
+    df = knn_join_lb(test, train, metric="dtw", k=3, length=12)
+    nodes = _plan_nodes(df)
+    joins = [node for n, node in nodes if n == "BroadcastNestedLoopJoinExec"]
+    assert joins
+    for join in joins:
+        cond = join.condition()
+        assert cond.isEmpty() or "greatest" not in cond.get().toString(), cond.get().toString()
+    assert any(
+        n == "GenerateExec" and "greatest" in node.generator().toString() for n, node in nodes
+    )
+
+
 @pytest.mark.parametrize(
     "strategy, want",
     [
@@ -195,8 +215,7 @@ def test_knn_chunked_nan_features_rank_last_like_kernel(spark):
     assert cr[2] == max(cr.values())  # the NaN series ranks last
 
 
-@pytest.mark.parametrize("with_rank", [True, False])
-def test_score_block_rows_empty_ragged_result_keeps_label_dtype(with_rank):
+def test_score_block_rows_empty_ragged_result_keeps_label_dtype():
     """Two length groups with string labels, every pair at distance 0 and
     so removed by exclude_zero: the empty result keeps the string label
     dtype (a float64 empty column would not convert to a string schema)."""
@@ -207,7 +226,6 @@ def test_score_block_rows_empty_ragged_result_keeps_label_dtype(with_rank):
     out = _score_block_rows(
         np.array([10], dtype=np.int64), np.array([np.zeros(2)], dtype=object),
         groups, kind="dtw", elastic=batch_kernel("dtw"), k=3, excl=True,
-        with_rank=with_rank,
     )
     assert len(out["test_id"]) == 0
     assert out["train_label"].dtype.kind == "U"
@@ -236,6 +254,32 @@ def test_ragged_ties_across_length_groups_match_declarative(spark, k):
     for strategy in ("kernel", "reverse", "chunked"):
         got = knn_join(test, train, metric="dtw", k=k, strategy=strategy)
         assert _collect(got) == want, strategy
+
+
+@pytest.mark.parametrize("label_type, labels", [
+    ("double", [1.0, None, 2.0, None, 1.0]),
+    ("string", ["a", None, "b", None, "a"]),
+])
+def test_null_labels_rank_first_on_every_route(spark, label_type, labels):
+    """At equal distance a null label ranks before any label, as SQL's
+    ascending order puts it, on every pair-scan route: the kernel and
+    grid cores' first_k agree with the declarative window, membership at
+    the k-th distance included."""
+    schema = f"series_id long, features array<double>, label {label_type}"
+    # (1, 2) tie at distance 1, (3, 4) at distance 2; 2 and 4 carry nulls
+    train = spark.createDataFrame(
+        [(i + 1, f, lab) for i, (f, lab) in enumerate(zip(
+            [[1.0, 0.0], [0.0, 1.0], [2.0, 0.0], [0.0, 2.0], [3.0, 3.0]], labels
+        ))],
+        schema,
+    )
+    test = spark.createDataFrame([(10, [0.0, 0.0], labels[0])], schema)
+    for k in (1, 3):
+        want = _collect(knn_join(test, train, metric="euclidean", k=k, strategy="broadcast"))
+        assert [r[1] for r in sorted(want, key=lambda r: r[-1])] == [2, 1, 4][:k]
+        for strategy in ("kernel", "reverse", "chunked"):
+            got = knn_join(test, train, metric="euclidean", k=k, strategy=strategy)
+            assert _collect(got) == want, (strategy, k)
 
 
 @pytest.mark.parametrize(
@@ -359,7 +403,7 @@ def test_gram_filter_matches_exhaustive_fold(monkeypatch, make, n, m, k, filtere
     with np.errstate(all="ignore"):
         got = _score_block_rows(
             tids, fvals, _group_by_length(ids, list(B), lab), kind=kind,
-            elastic=None, k=k, excl=excl, with_rank=True,
+            elastic=None, k=k, excl=excl,
         )
     want = _exhaustive(tids, T, ids, B, lab, kind, k, excl)
     assert bool(calls) == filtered
@@ -500,6 +544,152 @@ def test_multi_cell_grid_matches_kernel(spark, square, emb, many_cells, call, ke
     got = _collect(call(test, train, emb))
     assert many_cells and all(bq >= 2 and bc >= 2 for bq, bc in many_cells), many_cells
     assert got == _collect(kernel(test, train, emb))
+
+
+def _plan_nodes(df):
+    """(simple class name, node) of every node of ``df``'s executed plan,
+    collected first so AQE's final plan is the one walked."""
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans.audit import _executed_nodes
+
+    df.collect()
+    return list(_executed_nodes(df._jdf.queryExecution().executedPlan()))
+
+
+@pytest.mark.parametrize("forced", [False, True], ids=["one-cell", "multi-cell"])
+def test_grid_plan_skips_exchange_and_rerank_only_when_one_cell(
+    spark, square, monkeypatch, forced
+):
+    """The grid_euclid shape (a cheap euclidean grid) plans one cell: its
+    executed plan has no Exchange below FlatMapGroupsInPandas and no
+    Window above it. A grid split both ways keeps the cell exchange and
+    the rerank window."""
+    train, test = square
+    splits = []
+    orig = pairscan._grid_split
+    if forced:
+        monkeypatch.setattr(pairscan, "_PY_TASK_CPU_S", 1e-12)
+    monkeypatch.setattr(
+        pairscan, "_grid_split", lambda *a: splits.append(orig(*a)) or splits[-1]
+    )
+    df = knn_join(test, train, metric="euclidean", k=5, strategy="kernel", max_broadcast_bytes=64)
+    nodes = _plan_nodes(df)
+    assert len(splits) == 1 and (splits[0] == (1, 1)) != forced, splits
+    names = [n for n, _ in nodes]
+    fmg = [node for n, node in nodes if n == "FlatMapGroupsInPandasExec"]
+    assert len(fmg) == 1, names
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans.audit import _executed_nodes
+
+    below = [n for n, _ in _executed_nodes(fmg[0])]
+    assert any("Exchange" in n for n in below) == forced, below
+    assert any("Window" in n for n in names) == forced, names
+
+
+@pytest.fixture
+def tall_cells(monkeypatch):
+    """Every grid scan plans 2 query blocks x 1 candidate block when the
+    query side is the larger one: a near-zero task cost and parallelism
+    pinned to 1 (so 2 cells, whatever the session's core count), which
+    the traffic split gives to the query side. Records each (bq, bc) and
+    each call of a caller's cross-cell reduction."""
+    splits, reduced = [], []
+    split, scan = pairscan._grid_split, pairscan.grid_scan
+    monkeypatch.setattr(pairscan, "_PY_TASK_CPU_S", 1e-12)
+    monkeypatch.setattr(
+        pairscan, "_grid_split",
+        lambda *a: splits.append(split(*a[:-1], 1)) or splits[-1],
+    )
+    monkeypatch.setattr(
+        pairscan, "grid_scan",
+        lambda *a, reduce, **kw: scan(
+            *a, reduce=lambda df: reduced.append(1) or reduce(df), **kw
+        ),
+    )
+    return splits, reduced
+
+
+@pytest.fixture(scope="module")
+def tall(spark):
+    """Train 12 x test 36 tie-heavy integer series of length 6, for grids
+    split on the query side only: NaN distances (a train series holding a
+    NaN), double labels with a null, exact train/test duplicates.
+    Conformal's proper split (cal_mod=2) is the 4 even train ids, labels
+    0 and 1, so its calibration side (the 8 odd ids) and test side both
+    outweigh it.
+    Vectors: 36 queries x 12 corpus of dimension 8, a zero vector on each
+    side (NaN cosine distances)."""
+    rng = np.random.default_rng(41)
+    B = rng.integers(0, 3, size=(12, 6)).astype(float)
+    T = rng.integers(0, 3, size=(36, 6)).astype(float)
+    T[:3] = B[[5, 0, 5]]
+    ids = [0, 1, 3, 2, 5, 7, 4, 9, 11, 6, 13, 15]
+    B[6, 2] = float("nan")  # id 4: a proper row
+    schema = "series_id long, features array<double>, label double"
+    train = spark.createDataFrame(
+        [(ids[i], [float(x) for x in b], None if i == 2 else float(ids[i] % 4 // 2))
+         for i, b in enumerate(B)],
+        schema,
+    )
+    test = spark.createDataFrame(
+        [(100 + i, [float(x) for x in t], 0.0) for i, t in enumerate(T)], schema
+    )
+    vecs = lambda n, s: [
+        (s + i, [float(x) for x in rng.integers(-2, 3, 8)]) for i in range(n)
+    ]
+    corpus_rows, query_rows = vecs(12, 0), vecs(36, 100)
+    corpus_rows[4] = (4, [0.0] * 8)
+    query_rows[9] = (109, [0.0] * 8)
+    vschema = "vec_id long, embedding array<double>"
+    return (
+        train, test,
+        spark.createDataFrame(corpus_rows, vschema), spark.createDataFrame(query_rows, vschema),
+    )
+
+
+def _null_dist_and_label(rows):
+    return any(r.distance is None for r in rows) and any(r.train_label is None for r in rows)
+
+
+@pytest.mark.parametrize(
+    "call, kernel, covered",
+    [
+        (lambda te, tr, q, c: knn_join(te, tr, metric="euclidean", k=11, strategy="chunked"),
+         lambda te, tr, q, c: knn_join(te, tr, metric="euclidean", k=11, strategy="kernel"),
+         _null_dist_and_label),
+        (lambda te, tr, q, c: knn_join(te, tr, metric="dtw", band=2, k=11, strategy="chunked"),
+         lambda te, tr, q, c: knn_join(te, tr, metric="dtw", band=2, k=11, strategy="kernel"),
+         lambda rows: any(r.train_label is None for r in rows)),
+        (lambda te, tr, q, c: ann_brute_topk(q, c, k=5, strategy="chunked", exclude_self=False),
+         lambda te, tr, q, c: ann_brute_topk(q, c, k=5, strategy="kernel", exclude_self=False),
+         lambda rows: any(r.cos_dist is None for r in rows)),
+        (lambda te, tr, q, c: conformal_knn(te, tr, cal_mod=2, max_broadcast_bytes=64),
+         lambda te, tr, q, c: conformal_knn(te, tr, cal_mod=2, min_kernel_pairs=0),
+         lambda rows: {r.label for r in rows} == {0.0, 1.0}),
+    ],
+    ids=["knn-euclidean", "knn-dtw", "ann-brute", "conformal"],
+)
+def test_query_split_grid_matches_kernel_without_reduction(
+    spark, tall, tall_cells, call, kernel, covered
+):
+    """With the candidate side unsplit (bq = 2, bc = 1) each cell's result
+    is final and no cross-cell reduction (rerank, MIN) runs; rows, ranks,
+    NaN distances (null on output), null labels and distance bits equal
+    the broadcast kernel's."""
+    import struct
+
+    train, test, corpus, queries = tall
+    splits, reduced = tall_cells
+    got = call(test, train, queries, corpus).collect()
+    assert splits and all(s == (2, 1) for s in splits), splits
+    assert not reduced
+
+    def bits(rows):
+        return sorted(
+            (tuple(struct.pack("<d", v) if isinstance(v, float) else v for v in r) for r in rows),
+            key=repr,
+        )
+
+    assert covered(got)
+    assert bits(got) == bits(kernel(test, train, queries, corpus).collect())
 
 
 def _tool(name):

@@ -74,8 +74,13 @@ def _fold(arr: Column, init: float = 0.0) -> Column:
 
 def sq_euclidean(a: Column, b: Column) -> Column:
     """Sum of squared differences (the pre-sqrt form — monotone in euclidean,
-    so top-k ranking can skip the sqrt when distances aren't output)."""
-    return _fold(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+    so top-k ranking can skip the sqrt when distances aren't output). The
+    difference is taken once per element and squared in the fold: the same
+    IEEE operations as ``(x - y) * (x - y)``, so the same bits, nulls
+    included, at one interpreted subtraction less."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x - y), F.lit(0.0), lambda acc, v: acc + v * v
+    )
 
 
 def euclidean(a: Column, b: Column) -> Column:

@@ -606,11 +606,12 @@ def _conformal_min_kernel(
     ``min_kernel_pairs``). An OVER-BUDGET proper side rides the block grid
     instead (r10, VERDICT r9 #6): min-per-label is a per-cell aggregate
     exactly like top-k, so each (side-block x proper-block) cell emits its
-    own per-(row, label) min and a global groupBy(keys, label).MIN reduces
-    the cells exactly (MIN is associative; a cell whose surviving pairs are
-    all NaN emits NaN -> Arrow NULL, which the global MIN ignores unless
-    every cell did — then the coalesce restores NaN; a (row, label) with no
-    surviving pair in any cell emits no row).
+    own per-(row, label) min. When the grid splits the proper side, a
+    global groupBy(keys, label).MIN reduces the cells exactly (MIN is
+    associative; a cell whose surviving pairs are all NaN emits NaN ->
+    Arrow NULL, which the global MIN ignores unless every cell did — then
+    the coalesce restores NaN; a (row, label) with no surviving pair in
+    any cell emits no row); unsplit, each cell's min is final.
 
     Both routes score through ``_conformal_score_rows``, so the output is
     bit-identical to the declarative ``_mins`` by construction:
@@ -679,7 +680,7 @@ def _conformal_min_kernel(
             scored = broadcast_scan(side.select(*keys, fcol), shared, score, schema)
         else:
             n_s, len_s, _, _ = side_stats(side, fcol)
-            cells = grid_scan(
+            scored = grid_scan(
                 side,
                 proper,
                 q_key=keys[0],
@@ -694,9 +695,11 @@ def _conformal_min_kernel(
                 cell=lambda sp, pp: score(_conformal_proper_groups(
                     list(zip(pp[fcol].tolist(), pp["_plab"].tolist()))
                 ), sp),
+                reduce=lambda cells: cells.groupBy(*keys, "_plab").agg(
+                    F.min("_dmin").alias("_dmin")
+                ),
                 schema=schema,
             )
-            scored = cells.groupBy(*keys, "_plab").agg(F.min("_dmin").alias("_dmin"))
         # Arrow's from_pandas turns a float NaN into NULL; the kernel never
         # emits a legitimate NULL _dmin (pairless rows are skipped), so
         # coalesce restores the NaN the declarative MIN would have produced

@@ -284,9 +284,11 @@ def _knn_scan(
       n_blocks_other. When even that traffic is too much the answer is
       knn_join_pruned / knn_join_lb, not a bigger brute force.
 
-    Reverse and chunked emit a per-batch / per-cell top-k and re-rank it
-    globally. Tie order is (distance, label, id) ascending with NaN last,
-    and the dist != 0 exclusion matches the declarative path. Ragged train
+    Reverse emits a per-batch top-k and re-ranks it globally; chunked
+    re-ranks its per-cell top-k only when the grid splits the train side
+    (``pairscan.grid_scan``). Tie order is (distance, label, id) ascending
+    with NaN distances last and null labels first, and the dist != 0
+    exclusion matches the declarative path. Ragged train
     rides every route for the ELASTIC metrics (per-length rectangular
     kernel calls, one emit over all groups); point metrics need fixed
     length.
@@ -301,11 +303,11 @@ def _knn_scan(
 
     has_label = label_col is not None
     label_type = dict(train.dtypes)[label_col] if has_label else None
-    cols = ["test_id", "train_id"] + (["train_label"] if has_label else []) + ["distance"]
+    cols = ["test_id", "train_id"] + (["train_label"] if has_label else []) + ["distance", "rank"]
     schema = "test_id long, train_id long"
     if has_label:
         schema += f", train_label {label_type}"
-    schema += ", distance double"
+    schema += ", distance double, rank int"
     t_cols = [F.col(id_col).alias("_id"), F.col(features_col).alias("_f")]
     r_cols = t_cols + ([F.col(label_col).alias("_lbl")] if has_label else [])
     elastic = (
@@ -318,17 +320,23 @@ def _knn_scan(
         n, length, _, ch = side_stats(test, features_col, nested=nested)
         return n, length, ch, n * length * ch * 8
 
+    def topk(t_ids, t_feats, groups) -> pd.DataFrame:
+        out = _score_block_rows(t_ids, t_feats, groups, **score)
+        return pd.DataFrame({c: out[c] for c in cols})
+
     def local_topk(t_ids, t_feats, rp: pd.DataFrame) -> pd.DataFrame:
         # test rows against one train piece (a streamed batch or a grid
-        # cell), no rank. np.asarray(list) not .to_numpy(): pandas hands
-        # string labels as object dtype, which np.lexsort rejects
-        groups = _group_by_length(
+        # cell). np.asarray(list) not .to_numpy(): pandas hands string
+        # labels as object dtype, which np.lexsort rejects
+        return topk(t_ids, t_feats, _group_by_length(
             rp["_id"].to_numpy(dtype=np.int64),
             rp["_f"].to_numpy(),
             np.asarray(list(rp["_lbl"])) if has_label else None,
-        )
-        out = _score_block_rows(t_ids, t_feats, groups, with_rank=False, **score)
-        return pd.DataFrame({c: out[c] for c in cols})
+        ))
+
+    def global_topk(scored: DataFrame) -> DataFrame:
+        ties = (["train_label"] if has_label else []) + ["train_id"]
+        return rerank(scored, "test_id", "distance", ties, k)
 
     route = strategy
     if strategy != "reverse":
@@ -366,15 +374,9 @@ def _knn_scan(
         )
 
         def batch(groups, pdf):
-            out = _score_block_rows(
-                pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups,
-                with_rank=True, **score,
-            )
-            return pd.DataFrame({c: out[c] for c in cols + ["rank"]})
+            return topk(pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups)
 
-        return broadcast_scan(
-            test.select(*t_cols), share(spark, groups), batch, schema + ", rank int"
-        )
+        return broadcast_scan(test.select(*t_cols), share(spark, groups), batch, schema)
     if route == "reverse":
         check_fits(test_stats()[3], max_broadcast_bytes, "test")
         rows = test.select(*t_cols).collect()
@@ -386,40 +388,38 @@ def _knn_scan(
             out = local_topk(t_ids, t_feats, pdf)
             return out if len(out) else None
 
-        scored = broadcast_scan(
+        return global_topk(broadcast_scan(
             train.select(*r_cols),
             share(spark, ([r[0] for r in rows], [r[1] for r in rows])),
             batch,
             schema,
+        ))
+    n_t, len_t, ch_t, t_bytes = test_stats()
+    if nested and n_t and ch_t != ch_r:
+        raise ValueError(
+            f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
         )
-    else:
-        n_t, len_t, ch_t, t_bytes = test_stats()
-        if nested and n_t and ch_t != ch_r:
-            raise ValueError(
-                f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
-            )
-        scored = grid_scan(
-            test,
-            train,
-            q_key=id_col,
-            c_key=id_col,
-            q_cols=t_cols,
-            c_cols=r_cols,
-            q_rows=n_t,
-            c_rows=n_r,
-            q_bytes=t_bytes,
-            c_bytes=n_r * len_r * ch_r * 8,
-            cpu_s=scoring_cpu_s(
-                kind, n_t * n_r, len_r, channels=ch_r, band=band,
-                radius=fastdtw_radius,
-            ),
-            cell=lambda tp, rp: local_topk(
-                tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
-            ),
-            schema=schema,
-        )
-    ties = (["train_label"] if has_label else []) + ["train_id"]
-    return rerank(scored, "test_id", "distance", ties, k).select(*cols, "rank")
+    return grid_scan(
+        test,
+        train,
+        q_key=id_col,
+        c_key=id_col,
+        q_cols=t_cols,
+        c_cols=r_cols,
+        q_rows=n_t,
+        c_rows=n_r,
+        q_bytes=t_bytes,
+        c_bytes=n_r * len_r * ch_r * 8,
+        cpu_s=scoring_cpu_s(
+            kind, n_t * n_r, len_r, channels=ch_r, band=band,
+            radius=fastdtw_radius,
+        ),
+        cell=lambda tp, rp: local_topk(
+            tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
+        ),
+        reduce=global_topk,
+        schema=schema,
+    )
 
 
 # pairs per scoring chunk: ~1,024 for the batch DPs and the exhaustive
@@ -428,7 +428,7 @@ _DP_PAIRS = 1024
 _BLOCK_PAIRS = 65536
 
 
-def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank):
+def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl):
     """THE kernel scoring core — one block of test rows against the train
     side's per-length ``groups`` of (ids, stacked matrix, labels), shared
     verbatim by every pair-scan route, so their bit-identity contract is
@@ -462,7 +462,7 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
     rectangular kernel call per distinct length) and emits ONCE over the
     concatenated candidates through ``pairscan.first_k``: (distance,
     label, id) ascending, NaN last, dist != 0 dropped under ``excl``.
-    Returns dict of numpy arrays: test_id, train_id, distance[, rank]
+    Returns dict of numpy arrays: test_id, train_id, distance, rank
     [, train_label]."""
     import numpy as np
 
@@ -548,9 +548,8 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
                 "test_id": np.asarray([tids[j] for j in chunk], dtype=np.int64)[r],
                 "train_id": i,
                 "distance": d,
+                "rank": rank,
             }
-            if with_rank:
-                part["rank"] = rank
             if has_label:
                 part["train_label"] = lab
             parts.append(part)
@@ -559,9 +558,8 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, with_rank)
             "test_id": np.empty(0, dtype=np.int64),
             "train_id": np.empty(0, dtype=np.int64),
             "distance": np.empty(0, dtype=np.float64),
+            "rank": np.empty(0, dtype=np.int64),
         }
-        if with_rank:
-            part["rank"] = np.empty(0, dtype=np.int64)
         if has_label:
             part["train_label"] = np.concatenate([g[2][:0] for g in groups])
         return part
@@ -1002,11 +1000,12 @@ def _filter_verify(
     rather than cached."""
     from ..caching import register_cache
 
-    lbp = (
-        t_sk.crossJoin(F.broadcast(r_sk) if strategy == "broadcast" else r_sk)
-        .withColumn("_lb", lb)
-        .select("test_id", "train_id", "_lb")
-    )
+    # _lb comes out of a generator: phase 3's filter on it would otherwise
+    # infer isnotnull(<lb>) into the cross join's condition and evaluate
+    # the bound twice per pair (functions/distance.py::with_distance)
+    lbp = t_sk.crossJoin(
+        F.broadcast(r_sk) if strategy == "broadcast" else r_sk
+    ).select("test_id", "train_id", F.explode(F.array(lb)).alias("_lb"))
     t, r = _sides(test, train, id_col, features_col, label_col)
 
     def score(ids: DataFrame) -> DataFrame:

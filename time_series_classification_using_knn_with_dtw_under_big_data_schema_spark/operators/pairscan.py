@@ -20,12 +20,17 @@ their scoring cores:
   grid-replication optimum for exact all-pairs scoring. The cell count
   comes from estimated CPU: ``scoring_cpu_s`` prices the scoring, and a
   cell gets its own Python task only when its scoring outweighs the
-  ~0.27 CPU-s every Python task costs whatever its work.
+  ~0.27 CPU-s every Python task costs whatever its work. Two layouts
+  already give the exact answer, and the grid then skips a phase: a
+  one-cell grid meets in one task with no exchange, and when the
+  candidate side is not split each cell's local result is final, so the
+  caller's cross-cell reduction (a top-k rerank, a MIN) does not run.
 - **top-k** — one tie-order contract, (distance, label, id) ascending
-  with NaN last, in two halves: ``first_k`` is the numpy half every
-  scoring core runs per batch or per cell, and ``rerank`` the SQL half
-  that reduces the reverse and grid strategies' local survivors to the
-  exact global top-k.
+  with NaN distances last and null labels first, in two halves:
+  ``first_k`` is the numpy half every scoring core runs per batch or per
+  cell, and ``rerank`` the SQL half that reduces the reverse route's
+  per-batch and a split grid's per-cell survivors to the exact global
+  top-k.
 
 ``choose_route`` is the byte gate between them: the candidate side
 broadcasts while it fits ``max_broadcast_bytes``; otherwise the query side
@@ -272,6 +277,7 @@ def grid_scan(
     c_bytes: int,
     cpu_s: float,
     cell: Callable[[pd.DataFrame, pd.DataFrame], pd.DataFrame],
+    reduce: Callable[[DataFrame], DataFrame],
     schema: str,
     block_bytes: int = 64 << 20,
 ) -> DataFrame:
@@ -282,7 +288,25 @@ def grid_scan(
     call inside applyInPandas. ``q_cols``/``c_cols`` are the payload columns
     each side carries (hashed into blocks by ``q_key``/``c_key``); a
     column one side lacks arrives as null. A cell missing either side
-    emits nothing."""
+    emits nothing.
+
+    A cell's result is final for its query rows when it saw every
+    candidate, and ``reduce`` (the caller's cross-cell reduction over
+    the cells' output: the top-k ``rerank``, conformal's MIN) merges the
+    cells otherwise. Two rules skip what cannot change the answer:
+
+    - ONE CELL, NO EXCHANGE: a 1 x 1 grid combines the two sides with
+      ``coalesce(1)``, whose single partition already satisfies the
+      grouping, so no shuffle runs. ``_grid_split`` plans one cell when
+      both sides fit ``block_bytes`` and the scoring is under two Python
+      tasks' fixed cost, so the task reads at most about two blocks, as
+      the reduce task of a shuffle would. Trade-off: an uncached side's upstream plan
+      now runs in that one task too, without the map-side parallelism
+      an exchange would give it.
+    - UNSPLIT CANDIDATES, NO REDUCTION: with one candidate block each
+      query row meets every candidate in one cell, so ``reduce`` runs
+      only when the candidate side is split (bc > 1). Cells therefore
+      emit the final columns, ``rank`` included."""
     par = q.sparkSession.sparkContext.defaultParallelism
     bq, bc = _grid_split(
         q_bytes, c_bytes, q_rows, c_rows, cpu_s, block_bytes, par
@@ -308,31 +332,36 @@ def grid_scan(
             return pd.DataFrame({n: [] for n in names})
         return cell(qp, cp)
 
-    # EXPLICIT repartition on the cell key (r6, VERDICT r5 #6): the cell
-    # grid is compute-heavy but byte-light, and AQE's advisory-size
-    # coalescing saw a ~tens-of-MB shuffle and squeezed it onto 1-2 tasks —
-    # serializing every cell. A user-specified repartition is exempt from
-    # AQE coalescing and satisfies the groupBy's clustering requirement,
-    # so the exchange is not duplicated. One cell per task where
-    # affordable (r9): packing several cells per partition quantized the
-    # stage into ragged waves; the cap keeps the task count bounded when
-    # the grid is huge (per-task cell counts are then high and waves
-    # smooth out statistically anyway).
-    n_parts = min(bq * bc, max(par, 1) * 32)
-    return (
-        q_side.unionByName(c_side, allowMissingColumns=True)
-        .repartition(n_parts, "_qblk", "_cblk")
-        .groupBy("_qblk", "_cblk")
-        .applyInPandas(lambda _, pdf: run(pdf), schema=schema)
+    both = q_side.unionByName(c_side, allowMissingColumns=True)
+    if bq * bc == 1:
+        both = both.coalesce(1)
+    else:
+        # EXPLICIT repartition on the cell key (r6, VERDICT r5 #6): the
+        # cell grid is compute-heavy but byte-light, and AQE's
+        # advisory-size coalescing saw a ~tens-of-MB shuffle and squeezed
+        # it onto 1-2 tasks — serializing every cell. A user-specified
+        # repartition is exempt from AQE coalescing and satisfies the
+        # groupBy's clustering requirement, so the exchange is not
+        # duplicated. One cell per task where affordable (r9): packing
+        # several cells per partition quantized the stage into ragged
+        # waves; the cap keeps the task count bounded when the grid is
+        # huge (per-task cell counts are then high and waves smooth out
+        # statistically anyway).
+        both = both.repartition(min(bq * bc, max(par, 1) * 32), "_qblk", "_cblk")
+    scored = both.groupBy("_qblk", "_cblk").applyInPandas(
+        lambda _, pdf: run(pdf), schema=schema
     )
+    return reduce(scored) if bc > 1 else scored
 
 
 def first_k(dist, rows, ids, labels, k: int, keep=None):
     """The numpy half of the top-k contract: the first ``k`` candidates
-    of each row under (``dist``, ``labels``, ``ids``) ascending, NaN last.
-    Inputs are flat and aligned, one entry per (row, candidate) pair;
-    ``labels`` may be None, and ``keep`` (a bool mask, or None) drops
-    pairs first — KNN's d != 0 exclusion, ANN's self exclusion.
+    of each row under (``dist``, ``labels``, ``ids``) ascending, NaN
+    distances last and null (None or NaN) labels first, as SQL's
+    ascending order puts them. Inputs are flat and aligned, one entry
+    per (row, candidate) pair; ``labels`` may be None, and ``keep`` (a
+    bool mask, or None) drops pairs first — KNN's d != 0 exclusion, ANN's
+    self exclusion.
 
     ONE lexsort with the row index as the primary key, then a vectorized
     first-k-per-segment selection. lexsort is a stable sequence of
@@ -343,7 +372,18 @@ def first_k(dist, rows, ids, labels, k: int, keep=None):
         dist, rows, ids = dist[keep], rows[keep], ids[keep]
         if labels is not None:
             labels = labels[keep]
-    keys = (ids, dist, rows) if labels is None else (ids, labels, dist, rows)
+    if labels is None:
+        keys = (ids, dist, rows)
+    else:
+        null = pd.isna(labels) if labels.dtype.kind in "fO" else None
+        if null is None or not null.any():
+            keys = (ids, labels, dist, rows)
+        else:
+            # a null is not comparable to a label: sort it by the null key
+            # and give it any label value
+            fill = labels[~null][:1]
+            lkey = np.where(null, fill[0] if fill.size else 0, labels)
+            keys = (ids, lkey, ~null, dist, rows)
     order = np.lexsort(keys)
     rs = rows[order]
     change = np.empty(rs.size, dtype=bool)
@@ -363,6 +403,7 @@ def rerank(scored: DataFrame, key: str, dist: str, ties: list, k: int) -> DataFr
     (each local top-k is a superset of its contribution), ordered
     (``dist`` ASC NULLS LAST, *``ties`` ASC). Nulls LAST: Arrow maps the
     kernels' NaN distances to SQL nulls, and ``first_k`` puts NaN at the
-    end — a plain asc would rank nulls FIRST."""
+    end — a plain asc would rank nulls FIRST. Returns ``scored``'s
+    columns with ``rank`` replaced (or appended) in place."""
     order = [F.asc_nulls_last(dist)] + [F.asc(c) for c in ties]
     return topk_per_key(scored, key, order, k)

@@ -66,8 +66,8 @@ def _ann_scan(
     (operators/pairscan.py). Inputs: q = (query_id, _qv), c = (neighbor_id,
     _cv) vector columns; output (query_id, neighbor_id, rank, _d).
 
-    ``scorer(qids, Q, cids, C, k, exclude_self, with_rank=...) ->
-    pandas.DataFrame (query_id, neighbor_id[, rank], _d)`` is the family's
+    ``scorer(qids, Q, cids, C, k, exclude_self) -> pandas.DataFrame
+    (query_id, neighbor_id, rank, _d)`` is the family's
     scoring core, shared verbatim by every route (queries are always the A
     operand), so results are bit-identical across strategies by
     construction. 'kernel' broadcasts the corpus matrix as ``wire``-dtype
@@ -86,7 +86,7 @@ def _ann_scan(
     )
 
     spark = q.sparkSession
-    out_cols = ["query_id", "neighbor_id", "rank", "_d"]
+    schema = "query_id long, neighbor_id long, rank int, _d double"
     if strategy != "reverse":
         nc, dc, _, _ = side_stats(c, "_cv")
         if not nc:
@@ -109,13 +109,10 @@ def _ann_scan(
             return scorer(
                 pdf["query_id"].to_numpy(dtype=np.int64),
                 [np.asarray(f, dtype=np.float64) for f in pdf["_qv"]],
-                b_ids, B, k, exclude_self, with_rank=True,
-            )[out_cols]
+                b_ids, B, k, exclude_self,
+            )
 
-        return broadcast_scan(
-            q, share(spark, (ids, M)), batch,
-            "query_id long, neighbor_id long, rank int, _d double",
-        )
+        return broadcast_scan(q, share(spark, (ids, M)), batch, schema)
     if np.dtype(wire) != np.float64:
         # the reverse and grid routes ship double vectors
         q = q.select("query_id", _as_double(F.col("_qv")).alias("_qv"))
@@ -127,7 +124,9 @@ def _ann_scan(
             np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]]),
         )
 
-    schema = "query_id long, neighbor_id long, _d double"
+    def global_topk(scored: DataFrame) -> DataFrame:
+        return rerank(scored, "query_id", "_d", ["neighbor_id"], k)
+
     if strategy == "reverse":
         nq, dq, _, _ = side_stats(q, "_qv")
         check_fits(nq * dq * 8, max_broadcast_bytes, "query")
@@ -144,44 +143,43 @@ def _ann_scan(
                 return None
             return scorer(b_qids, b_Q, *ids_matrix(pdf), k, exclude_self)
 
-        scored = broadcast_scan(
+        return global_topk(broadcast_scan(
             c.select(F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")),
             share(spark, (qids, Q)), batch, schema,
-        )
-    else:
-        nq, dq, _, _ = side_stats(q, "_qv")
-        # elem bytes 8: block sizing bounds the SCORER's working set, and
-        # quantized codes are widened to int64 inside the block
-        scored = grid_scan(
-            q,
-            c,
-            q_key="query_id",
-            c_key="neighbor_id",
-            q_cols=[F.col("query_id").alias("_id"), F.col("_qv").alias("_v")],
-            c_cols=[F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")],
-            q_rows=nq,
-            c_rows=nc,
-            q_bytes=nq * dq * 8,
-            c_bytes=nc * dc * 8,
-            cpu_s=scoring_cpu_s(
-                "ann_quantized" if scorer is _quantized_cos_block_scorer
-                else "ann_brute",
-                nq * nc, dc,
-            ),
-            cell=lambda qp, cp: scorer(*ids_matrix(qp), *ids_matrix(cp), k, exclude_self),
-            schema=schema,
-            block_bytes=block_bytes,
-        )
-    return rerank(scored, "query_id", "_d", ["neighbor_id"], k).select(*out_cols)
+        ))
+    nq, dq, _, _ = side_stats(q, "_qv")
+    # elem bytes 8: block sizing bounds the SCORER's working set, and
+    # quantized codes are widened to int64 inside the block
+    return grid_scan(
+        q,
+        c,
+        q_key="query_id",
+        c_key="neighbor_id",
+        q_cols=[F.col("query_id").alias("_id"), F.col("_qv").alias("_v")],
+        c_cols=[F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")],
+        q_rows=nq,
+        c_rows=nc,
+        q_bytes=nq * dq * 8,
+        c_bytes=nc * dc * 8,
+        cpu_s=scoring_cpu_s(
+            "ann_quantized" if scorer is _quantized_cos_block_scorer
+            else "ann_brute",
+            nq * nc, dc,
+        ),
+        cell=lambda qp, cp: scorer(*ids_matrix(qp), *ids_matrix(cp), k, exclude_self),
+        reduce=global_topk,
+        schema=schema,
+        block_bytes=block_bytes,
+    )
 
 
-def _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist):
+def _ann_emit(qids, cids, k, exclude_self, block_dist):
     """Shared tail of the ANN scoring cores: score query blocks of ~1,024
     pairs (or one row) with ``block_dist(r0, r1) -> (r1 - r0, n_corpus)``
     distances — so no (n_query x n_corpus) matrix is ever materialized —
     and emit each block's top-k through ``pairscan.first_k`` ((distance,
     id) ascending, NaN last; self pairs dropped under ``exclude_self``).
-    Returns the (query_id, neighbor_id[, rank], _d) frame."""
+    Returns the (query_id, neighbor_id, rank, _d) frame."""
     from .pairscan import first_k
 
     qids = np.asarray(qids, dtype=np.int64)
@@ -200,14 +198,12 @@ def _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist):
         map(np.concatenate, zip(*parts)) if parts
         else (np.empty(0, np.int64),) * 2 + (np.empty(0), np.empty(0, np.int64))
     )
-    out = {"query_id": qids[rows], "neighbor_id": ids}
-    if with_rank:
-        out["rank"] = rank.astype(np.int32)
-    out["_d"] = dist
-    return pd.DataFrame(out)
+    return pd.DataFrame({
+        "query_id": qids[rows], "neighbor_id": ids, "rank": rank.astype(np.int32), "_d": dist,
+    })
 
 
-def _brute_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=False):
+def _brute_cos_block_scorer(qids, Q, cids, C, k, exclude_self):
     """THE cosine scoring core — a query block against a corpus matrix,
     with the SQL left-fold's EXACT arithmetic (dim-ascending
     accumulation), shared by every pair-scan route (kernel, reverse and
@@ -229,10 +225,10 @@ def _brute_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=Fals
             qn += Qb[:, d] * Qb[:, d]
         return 1.0 - dot / (np.sqrt(qn)[:, None] * cn)
 
-    return _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist)
+    return _ann_emit(qids, cids, k, exclude_self, block_dist)
 
 
-def _quantized_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=False):
+def _quantized_cos_block_scorer(qids, Q, cids, C, k, exclude_self):
     """Int8-quantized twin of _brute_cos_block_scorer: all accumulations
     exact int64 (the values arrive as integer-valued doubles <= 127 —
     exactly representable, so the int64 round-trip is lossless), final
@@ -255,7 +251,7 @@ def _quantized_cos_block_scorer(qids, Q, cids, C, k, exclude_self, *, with_rank=
         dist[qn == 0] = 1.0
         return dist
 
-    return _ann_emit(qids, cids, k, exclude_self, with_rank, block_dist)
+    return _ann_emit(qids, cids, k, exclude_self, block_dist)
 
 
 def ann_brute_topk(
@@ -292,8 +288,9 @@ def ann_brute_topk(
     grid (``operators/pairscan.py``) tiles the cross product into
     ``block_bytes`` corpus blocks, scores each block with the kernel's exact
     numpy arithmetic in one grouped-map cell, and reranks the per-block top-k
-    — one corpus shuffle, no pair materialization, no broadcast variable,
-    bit-identical results. strategy='declarative' (crossJoin + fold +
+    when the corpus is split into several blocks — at most one corpus
+    shuffle (none for a one-cell grid), no pair materialization, no
+    broadcast variable, bit-identical results. strategy='declarative' (crossJoin + fold +
     window) remains the oracle's literal mirror and an explicit option.
     """
     check_k(k)

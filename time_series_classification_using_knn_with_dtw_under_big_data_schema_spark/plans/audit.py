@@ -183,7 +183,8 @@ _LAMBDA_VAR = re.compile(r"(lambda \w+?)_\d+\b")
 
 def hof_nodes(df, materialize: bool = True) -> dict:
     """{normalized HOF expression: [simple class name of each executed-plan
-    node evaluating it]}. ``df`` is a DataFrame (collected first when
+    node evaluating it]}, expressions in sorted order (so a regenerated
+    EXPLAIN.md lists them stably). ``df`` is a DataFrame (collected first when
     ``materialize``, as in ``executed_node_counts``) or an executed JVM
     plan (e.g. a streaming query's ``lastExecution().executedPlan()``).
     Only outermost HOFs count: a zip_with inside an aggregate is part of
@@ -220,7 +221,7 @@ def hof_nodes(df, materialize: bool = True) -> dict:
             hofs(exprs.apply(i), found)
         for h in found:
             nodes.setdefault(h, []).append(name)
-    return nodes
+    return {h: nodes[h] for h in sorted(nodes)}
 
 
 def repeated_hofs(df, materialize: bool = True) -> dict:

@@ -152,7 +152,6 @@ def _scorer(family: str, kind: str, nq: int, nc: int, length: int, opts: dict):
     )
     return lambda: _score_block_rows(
         qids, fvals, groups, kind=kind, elastic=elastic, k=5, excl=True,
-        with_rank=False,
     )
 
 

@@ -1236,7 +1236,7 @@ def sweep_point(trials: int, seed: int) -> int:
         with np.errstate(all="ignore"):
             got = _score_block_rows(
                 tids, fvals, _group_by_length(ids, list(B), labels), kind=kind,
-                elastic=None, k=k, excl=excl, with_rank=True,
+                elastic=None, k=k, excl=excl,
             )
             D = np.concatenate([folds[kind](t, B) for t in T])
         r, i, d, lab, rank = first_k(
