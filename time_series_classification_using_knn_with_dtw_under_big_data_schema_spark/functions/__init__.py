@@ -20,9 +20,7 @@ from .edit_distance import (  # noqa: F401
     erp_dist,
     lcss_batch,
     lcss_dist,
-    make_edr_udf,
     make_erp_udf,
-    make_lcss_udf,
     make_msm_udf,
     make_twed_udf,
     msm_batch,

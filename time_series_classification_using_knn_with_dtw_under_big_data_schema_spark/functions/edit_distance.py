@@ -74,8 +74,6 @@ __all__ = [
     "edr_batch",
     "erp_batch",
     "twed_batch",
-    "make_lcss_udf",
-    "make_edr_udf",
     "make_erp_udf",
     "make_twed_udf",
     "MSM_C",
@@ -531,20 +529,6 @@ def twed_batch(
 # ---------------------------------------------------------------------------
 # Arrow-batched pandas_udf wrappers (pair-scorer form for the UDF path)
 # ---------------------------------------------------------------------------
-
-
-def make_lcss_udf(
-    eps: float = LCSS_EPS, delta: Optional[int] = None
-) -> Callable[[Column, Column], Column]:
-    from .distance import _grouped_pairs_udf
-
-    return _grouped_pairs_udf(lambda A, B: lcss_batch(A, B, eps=eps, delta=delta))
-
-
-def make_edr_udf(eps: float = EDR_EPS) -> Callable[[Column, Column], Column]:
-    from .distance import _grouped_pairs_udf
-
-    return _grouped_pairs_udf(lambda A, B: edr_batch(A, B, eps=eps))
 
 
 def make_erp_udf(g: float = ERP_GAP) -> Callable[[Column, Column], Column]:

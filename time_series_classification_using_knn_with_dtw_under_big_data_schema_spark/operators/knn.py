@@ -135,6 +135,13 @@ def knn_join(
     ELASTIC metrics (r9: per-length rectangular kernel calls, exact merged
     top-k); only ragged POINT-metric corpora (no cross-length semantics)
     keep the declarative shuffle plan.
+
+    Test ids must be unique; nothing checks this (it would take a job),
+    and the routes treat rows that share an id differently. 'broadcast',
+    'shuffle' and 'reverse' rank per id: the rows sharing it get k
+    neighbours between them. 'kernel', and a 'chunked' grid whose train
+    side is not split, rank per row: k neighbours each. A grid with a
+    split train side merges per id, as 'reverse' does.
     """
     check_k(k)
     if strategy in ("kernel", "chunked", "reverse"):

@@ -20,7 +20,8 @@ their scoring cores:
   grid-replication optimum for exact all-pairs scoring. The cell count
   comes from estimated CPU: ``scoring_cpu_s`` prices the scoring, and a
   cell gets its own Python task only when its scoring outweighs the
-  ~0.27 CPU-s every Python task costs whatever its work. Two layouts
+  ~0.33 CPU-s one more cell costs whatever its work (at the first
+  split: an exchange, a rerank, a stage and a Python task). Two layouts
   already give the exact answer, and the grid then skips a phase: a
   one-cell grid meets in one task with no exchange, and when the
   candidate side is not split each cell's local result is final, so the
@@ -55,16 +56,19 @@ from ..caching import register_broadcast
 from ..functions.distance import ELASTIC_KINDS
 from .topk import topk_per_key
 
-# Fixed CPU of one Python task, whatever its work. Each task's
-# setup_spark_files calls importlib.invalidate_caches()
-# (pyspark/worker_util.py), which re-reads the zip directory behind every
-# zipimporter on the worker path (pyspark.zip, the py4j zip and the
-# spark-core jar: 16 importers, 179-245 ms), and the daemon runs
-# gc.collect() after the task (43-47 ms). The value is the slope of
-# Python-worker CPU over 1, 2 and 4 trivial applyInPandas tasks, measured
-# by tools/calibrate_grid.py on a 4-core x86 VM (local[2], Spark 4.1,
-# Python 3.11): 0.274 and 0.282 CPU-s per task in two runs.
-_PY_TASK_CPU_S = 0.27
+# CPU one more grid cell costs: the step from a one-cell grid to a
+# two-cell one, which adds an exchange, the rerank, another stage and a
+# second Python task. Measured by tools/calibrate_grid.py as process-tree
+# CPU per call of a chunked euclidean KNN at trivial scoring with the
+# grid forced to 1 x 1, 1 x 2 and 1 x 4 cells, on a 4-core x86 VM
+# (local[2], Spark 4.1, Python 3.11, the package's worker daemon): steps
+# of 0.29-0.48 CPU-s in seven sessions, median 0.33. Past the first split
+# each further cell costs less (2 -> 4 cells added 0.0-0.27, ~0.05 per
+# cell), so the one-line rule prices every cell at the first split's
+# cost and splits a mid-size grid less finely than its wall time would
+# like. The Python task itself is nearly free with the package's worker
+# daemon (~0.003 CPU-s; ~0.23-0.28 under pyspark.daemon, see daemon.py).
+_PY_TASK_CPU_S = 0.33
 
 # CPU seconds per work unit (``_work_units``) of each scoring family,
 # measured in-process by tools/calibrate_grid.py on the same VM: one
@@ -77,7 +81,7 @@ _PY_TASK_CPU_S = 0.27
 # 1,000 x 2,000 x 64. The per-unit cost moves with length and kind (the
 # edit DPs span 2.1e-9 for lcss to 6.2e-9 for msm; chebyshev costs ~2x
 # manhattan), which the cell count tolerates: it only has to tell a
-# fraction of a task's fixed cost from many of them.
+# fraction of one more cell's cost from many of them.
 _CPU_S_PER_UNIT = {
     "gram": 5.0e-10,
     "point": 5.3e-9,
@@ -161,13 +165,15 @@ def _grid_split(
     Three forces, applied in order:
     - OVERHEAD: total cells = floor(cpu_s / _PY_TASK_CPU_S), clamped to
       [1, 2 x par]. ``cpu_s`` is the scoring's estimated CPU
-      (``scoring_cpu_s``) and each cell is one Python task, which costs
-      ~_PY_TASK_CPU_S whatever its work; a cell is split off only when
-      its scoring pays for that task. A byte-light cheap metric collapses
-      to one cell, heavy DTW keeps every core. The 2 x par cap: cells map
-      one per task, so extra cells only buy replication (every cell
-      multiplies the smaller side's shuffle copies); two even waves keep
-      work-stealing granularity against box noise.
+      (``scoring_cpu_s``) and one more cell costs ~_PY_TASK_CPU_S
+      whatever its work (measured at the first split, where the grid
+      gains an exchange, a rerank and a second Python task); a cell is
+      split off only when its scoring pays for that. A byte-light cheap
+      metric collapses to one cell, heavy DTW keeps every core. The
+      2 x par cap: cells map one per task, so extra cells only buy
+      replication (every cell multiplies the smaller side's shuffle
+      copies); two even waves keep work-stealing granularity against
+      box noise.
     - TRAFFIC: each side is replicated across the OTHER side's block
       count (traffic = q_bytes*bc + c_bytes*bq), so the grid splits the
       cell budget proportional to sqrt(q_bytes/c_bytes) — the minimizer
@@ -298,9 +304,9 @@ def grid_scan(
     - ONE CELL, NO EXCHANGE: a 1 x 1 grid combines the two sides with
       ``coalesce(1)``, whose single partition already satisfies the
       grouping, so no shuffle runs. ``_grid_split`` plans one cell when
-      both sides fit ``block_bytes`` and the scoring is under two Python
-      tasks' fixed cost, so the task reads at most about two blocks, as
-      the reduce task of a shuffle would. Trade-off: an uncached side's upstream plan
+      both sides fit ``block_bytes`` and the scoring costs less than two
+      more cells would (``_PY_TASK_CPU_S``), so the task reads at most
+      about two blocks, as the reduce task of a shuffle would. Trade-off: an uncached side's upstream plan
       now runs in that one task too, without the map-side parallelism
       an exchange would give it.
     - UNSPLIT CANDIDATES, NO REDUCTION: with one candidate block each

@@ -1,11 +1,20 @@
 #!/usr/bin/env python3
 """Measure the block grid's cost model (operators/pairscan.py).
 
-- ``_PY_TASK_CPU_S``: the fixed CPU of one Python task, taken as the
-  least-squares slope of Python-worker CPU seconds over 1, 2 and 4 trivial
-  ``applyInPandas`` tasks (each task one group that returns its input).
-  Worker CPU is read from /proc for the PySpark daemon's process tree, so
-  it counts only the Python workers, not the JVM or this driver.
+- ``_PY_TASK_CPU_S``: the CPU one more grid cell costs, measured on a
+  chunked KNN call at trivial scoring (euclidean, 200 x 600 x 16, cached
+  sides) with the grid forced to 1 x 1, 1 x 2 and 1 x 4 cells, the
+  cell counts taken in turn so the session's JIT warm-up spreads over
+  all three. CPU is the process tree's (this driver, the JVM, the Python
+  workers) per call, median over the repetitions; the constant is the
+  step from one cell to two, where the grid first pays for an exchange,
+  a rerank, another stage and a second Python task.
+- The fixed CPU of one Python task, for reference: the least-squares
+  slope of Python-worker CPU seconds over 1, 2 and 4 trivial
+  ``applyInPandas`` tasks (each task one group that returns its input),
+  read from /proc for the live processes below the JVM (the worker
+  daemon and the workers it forked), so it counts neither the JVM nor
+  this driver.
 - ``_CPU_S_PER_UNIT``: each scoring family's CPU seconds per work unit
   (``pairscan._work_units``), timed in-process with ``time.process_time``
   on seeded random walks: the KNN scoring core ``_score_block_rows`` for
@@ -13,11 +22,14 @@
 
 Usage: python3 tools/calibrate_grid.py [--scale S] [--reps N]
 
-Prints one JSON object: ``py_task_cpu_s`` (the slope), ``task_cpu_s``
-(the median worker CPU per call at each task count), ``cpu_s_per_unit``
+Prints one JSON object: ``py_task_cpu_s`` (the one-cell-to-two step),
+``task_cpu_s`` (median CPU per call at 1, 2 and 4 cells),
+``worker_task_cpu_s`` (the trivial tasks' slope) with ``worker_cpu_s``
+(median worker CPU per call at each task count), ``cpu_s_per_unit``
 (the measured coefficients) and ``current`` (the constants in
-pairscan.py, for comparison). ``--scale`` shrinks the pair counts (a
-small value gives a quick smoke run; its coefficients are noisier).
+pairscan.py, for comparison). ``--scale`` shrinks the scoring pair
+counts (a small value gives a quick smoke run; its coefficients are
+noisier).
 """
 
 from __future__ import annotations
@@ -52,25 +64,24 @@ FAMILIES = [
 ]
 
 
-def _daemon_cpu_s() -> float:
-    """CPU seconds of every PySpark daemon tree below this process (the
-    daemon plus the workers it forked, reaped ones included)."""
-    from tracing import descendants, tree_cpu_s
+def _worker_cpu_s() -> float:
+    """User + system CPU seconds used so far by the live processes below
+    the JVM this driver launched: the Python worker daemon and the
+    workers it forked. A worker that exits takes its CPU with it (the
+    daemon ignores SIGCHLD, so no parent counts it); read this around
+    work on reused workers."""
+    from tracing import descendants
 
-    total = 0.0
+    ticks = 0
     for pid in descendants(os.getpid()):
         try:
-            with open(f"/proc/{pid}/cmdline", "rb") as f:
-                cmd = f.read()
             with open(f"/proc/{pid}/stat") as f:
-                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-            with open(f"/proc/{ppid}/cmdline", "rb") as f:
-                parent = f.read()
+                fields = f.read().rsplit(")", 1)[1].split()
         except OSError:
             continue
-        if b"pyspark.daemon" in cmd and b"pyspark.daemon" not in parent:
-            total += tree_cpu_s(pid)
-    return total
+        if int(fields[1]) != os.getpid():  # not the JVM itself
+            ticks += int(fields[11]) + int(fields[12])
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def _one_key_per_partition(spark, n: int) -> list:
@@ -86,7 +97,7 @@ def _one_key_per_partition(spark, n: int) -> list:
     return [picked[p] for p in range(n)]
 
 
-def py_task_cpu_s(spark, reps: int) -> "tuple[float, dict]":
+def worker_task_cpu_s(spark, reps: int) -> "tuple[float, dict]":
     """(slope, {tasks: median worker CPU per call}) over 1, 2 and 4
     trivial applyInPandas tasks."""
     per_n: dict = {}
@@ -102,9 +113,9 @@ def py_task_cpu_s(spark, reps: int) -> "tuple[float, dict]":
         df.collect()  # warm the daemon and the plan
         samples = []
         for _ in range(reps):
-            c0 = _daemon_cpu_s()
+            c0 = _worker_cpu_s()
             df.collect()
-            samples.append(_daemon_cpu_s() - c0)
+            samples.append(_worker_cpu_s() - c0)
         per_n[n] = round(statistics.median(samples), 4)
         xs += [n] * reps
         ys += samples
@@ -114,6 +125,43 @@ def py_task_cpu_s(spark, reps: int) -> "tuple[float, dict]":
 
 def _walks(rng, n: int, length: int) -> np.ndarray:
     return np.cumsum(rng.normal(0, 1, (n, length)), axis=1)
+
+
+def grid_cell_cpu_s(spark, reps: int) -> "tuple[float, dict]":
+    """(one-cell-to-two step, {cells: median process-tree CPU per call})
+    of a chunked euclidean KNN call (200 x 600 x 16, cached sides, k = 5)
+    whose grid is forced to 1 x 1, 1 x 2 and 1 x 4 cells. The cell counts
+    run in turn, one call each per round, after one warm-up round."""
+    from tracing import tree_cpu_s
+
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import pairscan
+    from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.knn import knn_join
+
+    rng = np.random.default_rng(5)
+    schema = "series_id long, features array<double>, label string"
+
+    def side(n, start):
+        walks = _walks(rng, n, 16)
+        rows = [(start + i, [float(x) for x in w], "ab"[i % 2]) for i, w in enumerate(walks)]
+        return spark.createDataFrame(rows, schema).cache()
+
+    test, train = side(200, 0), side(600, 1000)
+    test.count(), train.count()
+    samples: dict = {1: [], 2: [], 4: []}
+    split = pairscan._grid_split
+    try:
+        for rnd in range(reps + 1):
+            for n in samples:
+                pairscan._grid_split = lambda *a, n=n: (1, n)
+                c0 = tree_cpu_s(os.getpid())
+                knn_join(test, train, metric="euclidean", k=5, strategy="chunked").collect()
+                if rnd:
+                    samples[n].append(tree_cpu_s(os.getpid()) - c0)
+    finally:
+        pairscan._grid_split = split
+        test.unpersist(), train.unpersist()
+    per_n = {n: round(statistics.median(v), 4) for n, v in samples.items()}
+    return per_n[2] - per_n[1], per_n
 
 
 def _scorer(family: str, kind: str, nq: int, nc: int, length: int, opts: dict):
@@ -182,10 +230,13 @@ def cpu_s_per_unit(scale: float, reps: int) -> dict:
 def calibrate(spark, scale: float = 1.0, reps: int = 5) -> dict:
     from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import pairscan
 
-    slope, per_n = py_task_cpu_s(spark, reps)
+    step, per_cells = grid_cell_cpu_s(spark, reps)
+    slope, per_task = worker_task_cpu_s(spark, reps)
     return {
-        "py_task_cpu_s": round(slope, 4),
-        "task_cpu_s": per_n,
+        "py_task_cpu_s": round(step, 4),
+        "task_cpu_s": per_cells,
+        "worker_task_cpu_s": round(slope, 4),
+        "worker_cpu_s": per_task,
         "cpu_s_per_unit": {f: float(f"{v:.3g}") for f, v in cpu_s_per_unit(scale, reps).items()},
         "current": {
             "py_task_cpu_s": pairscan._PY_TASK_CPU_S,
