@@ -3,7 +3,9 @@ executions each KNN route (and each pruned-family call) fires while its
 plan is built, the cheap grid-agreement checks (block grid vs broadcast
 kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
 train length groups on every route, the budget guard, the Gram
-filter's bit-identity with the exhaustive euclidean fold, null labels
+filter's bit-identity with the exhaustive euclidean fold, the point
+metrics' distance bits on random floats and their handling of test rows
+of another length on every KNN route, null labels
 ranked first on every KNN route, knn_join_lb's bound evaluated once per
 pair, the block grid's CPU-based sizing (with a forced multi-cell grid
 checked against the kernel route, and the calibration tool run at tiny
@@ -311,9 +313,10 @@ def test_nonpositive_budgets_rejected_before_any_job(spark, har_dfs, emb, call):
 
 def _exhaustive(tids, T, ids, B, labels, kind, k, excl):
     """All-pairs reference for the euclidean kinds: every pair through the
-    fold's arithmetic, one row at a time, then ``first_k``."""
+    SQL fold's arithmetic (a left fold: ``np.cumsum`` accumulates in index
+    order), one row at a time, then ``first_k``."""
     with np.errstate(all="ignore"):
-        D = np.concatenate([((t - B) ** 2).sum(axis=1) for t in T])
+        D = np.concatenate([np.cumsum((t - B) ** 2, axis=1)[:, -1] for t in T])
     if kind == "euclidean":
         D = np.sqrt(D)
     r, i, d, lab, rank = first_k(
@@ -431,6 +434,73 @@ def test_euclidean_routes_match_declarative_on_tie_grid(spark):
     for strategy in ("kernel", "reverse", "chunked"):
         got = knn_join(test, train, metric="euclidean", k=4, strategy=strategy)
         assert _collect(got) == want, strategy
+
+
+def _bits(df):
+    """Sorted rows with every float as its IEEE bit pattern, so NaN
+    equals NaN and a last-ulp difference is a mismatch."""
+    return sorted(
+        tuple(np.float64(v).tobytes().hex() if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("with_nan", [False, True], ids=["walks", "nan-row"])
+@pytest.mark.parametrize("kind", ["euclidean", "sq_euclidean", "manhattan"])
+def test_point_routes_match_declarative_bits_on_random_walks(spark, kind, with_nan):
+    """On random floats every pair-scan route returns the declarative
+    plan's distance bits: the core folds left in index order, like the
+    SQL fold (a pairwise sum differs in the last bits on most rows). A
+    test series holding a NaN gets NaN distances on every route, not
+    NULL. Without it the euclidean kinds take the Gram filter."""
+    rng = np.random.default_rng(23)
+    B = np.cumsum(rng.normal(size=(40, 48)), axis=1)
+    T = np.cumsum(rng.normal(size=(24, 48)), axis=1)
+    if with_nan:
+        T[5, 17] = np.nan
+    schema = "series_id long, features array<double>, label string"
+    train = spark.createDataFrame(
+        [(i, [float(x) for x in b], "abc"[i % 3]) for i, b in enumerate(B)], schema
+    )
+    test = spark.createDataFrame(
+        [(100 + i, [float(x) for x in t], "t") for i, t in enumerate(T)], schema
+    )
+    want = _bits(knn_join(test, train, metric=kind, k=5, strategy="broadcast"))
+    nan = np.float64(np.nan).tobytes().hex()
+    assert len(want) == 24 * 5 and (sum(r[3] == nan for r in want) == 5) == with_nan
+    for strategy in ("kernel", "reverse", "chunked"):
+        got = knn_join(test, train, metric=kind, k=5, strategy=strategy)
+        assert _bits(got) == want, strategy
+
+
+@pytest.mark.parametrize("kind", ["euclidean", "sq_euclidean", "manhattan", "chebyshev"])
+def test_point_metric_test_rows_of_another_length(spark, kind):
+    """Test series of length 1 and 2 against length-3 train. The SQL folds
+    go NULL for such pairs (chebyshev's array_max takes the overlap):
+    under exclude_zero every route drops them like the declarative plan;
+    without it the declarative plan would rank the NULLs first, and the
+    pair-scan routes fail naming both lengths instead."""
+    schema = "series_id long, features array<double>, label string"
+    train = spark.createDataFrame(
+        [(i, [float(i), 1.0, float(i % 3)], "ab"[i % 2]) for i in range(6)], schema
+    )
+    test = spark.createDataFrame(
+        [(100, [0.5, 1.0, 2.0], "t"), (101, [2.0], "t"), (102, [1.0, 0.0], "t")], schema
+    )
+    want = _bits(knn_join(test, train, metric=kind, k=3, strategy="broadcast"))
+    assert {r[0] for r in want} == ({100, 101, 102} if kind == "chebyshev" else {100})
+    for strategy in ("kernel", "reverse", "chunked"):
+        got = knn_join(test, train, metric=kind, k=3, strategy=strategy)
+        assert _bits(got) == want, strategy
+        loose = knn_join(test, train, metric=kind, k=3, strategy=strategy, exclude_zero=False)
+        if kind == "chebyshev":
+            want_loose = knn_join(
+                test, train, metric=kind, k=3, strategy="broadcast", exclude_zero=False
+            )
+            assert _bits(loose) == _bits(want_loose), strategy
+        else:
+            with pytest.raises(Exception, match="length [12] against train series of length 3"):
+                loose.collect()
 
 
 # --- block-grid sizing: the CPU rule, the memory floors, the cap --------
@@ -645,8 +715,8 @@ def tall(spark):
     )
 
 
-def _null_dist_and_label(rows):
-    return any(r.distance is None for r in rows) and any(r.train_label is None for r in rows)
+def _nan_dist_and_null_label(rows):
+    return any(r.distance != r.distance for r in rows) and any(r.train_label is None for r in rows)
 
 
 @pytest.mark.parametrize(
@@ -654,7 +724,7 @@ def _null_dist_and_label(rows):
     [
         (lambda te, tr, q, c: knn_join(te, tr, metric="euclidean", k=11, strategy="chunked"),
          lambda te, tr, q, c: knn_join(te, tr, metric="euclidean", k=11, strategy="kernel"),
-         _null_dist_and_label),
+         _nan_dist_and_null_label),
         (lambda te, tr, q, c: knn_join(te, tr, metric="dtw", band=2, k=11, strategy="chunked"),
          lambda te, tr, q, c: knn_join(te, tr, metric="dtw", band=2, k=11, strategy="kernel"),
          lambda rows: any(r.train_label is None for r in rows)),
@@ -672,8 +742,8 @@ def test_query_split_grid_matches_kernel_without_reduction(
 ):
     """With the candidate side unsplit (bq = 2, bc = 1) each cell's result
     is final and no cross-cell reduction (rerank, MIN) runs; rows, ranks,
-    NaN distances (null on output), null labels and distance bits equal
-    the broadcast kernel's."""
+    NaN distances (NaN on KNN output, null on ANN's), null labels and
+    distance bits equal the broadcast kernel's."""
     import struct
 
     train, test, corpus, queries = tall

@@ -12,7 +12,11 @@ Reference semantics (SURVEY.md §2.7 F7, §2.10 U2):
   (functions/dtw_kernel.py). The ONE Python boundary in the engine.
 
 All SQL distances are left-fold aggregates so a DuckDB ``list_reduce`` oracle
-reproduces them bit-for-bit (same IEEE op order).
+reproduces them bit-for-bit (same IEEE op order). The package's numpy
+pair-scoring core (operators/knn.py::_score_block_rows, behind every KNN
+pair-scan route and conformal KNN's kernel and grid) folds the point
+metrics in the same index order, so those routes return the same distance
+bits as these expressions; numpy's pairwise ``.sum`` would not.
 """
 
 from __future__ import annotations

@@ -441,148 +441,16 @@ def score_with_weights(
 
 
 # metrics the conformal kernel path can score with PROVEN bit-identity to
-# the declarative plan: the point folds re-accumulate in index order (the
-# exact IEEE op sequence of the SQL left fold — numpy's pairwise .sum()
-# would NOT be bit-equal), dtw shares the declarative path's own batch
-# kernel, and the edit family's batch DPs are pinned bitwise against the
-# Catalyst fold expressions (test_expressions_match_kernels_bitwise).
-# chebyshev/cosine/sbd and callable metrics stay declarative (chebyshev's
-# array_max null-skipping gives ragged pairs different semantics than the
-# null-propagating folds; sbd_batch is an FFT — not bit-equal to the HOF
-# definition).
+# the declarative plan: the shared core's point folds accumulate in index
+# order (the exact IEEE op sequence of the SQL left fold), dtw shares the
+# declarative path's own batch kernel, and the edit family's batch DPs
+# are pinned bitwise against the Catalyst fold expressions
+# (test_expressions_match_kernels_bitwise). chebyshev/cosine/sbd and
+# callable metrics stay declarative (chebyshev's array_max null-skipping
+# gives ragged pairs different semantics than the null-propagating folds;
+# sbd_batch is an FFT — not bit-equal to the HOF definition).
 _CONFORMAL_POINT_KINDS = frozenset({"euclidean", "sq_euclidean", "manhattan"})
 _CONFORMAL_ELASTIC_KINDS = frozenset({"dtw", "lcss", "edr", "erp", "twed", "msm"})
-
-
-def _conformal_dist_fns(kind: str):
-    """(batch_fn, dist_block) for a conformal-kernel metric. batch_fn is
-    the elastic batch DP (None for the point metrics); dist_block maps
-    (nc, Lr) x (ng, Lg) -> (nc, ng) distances with the exact op order of
-    the declarative folds."""
-    import numpy as np
-
-    from ..functions.distance import batch_kernel
-
-    batch_fn = batch_kernel(kind) if kind in _CONFORMAL_ELASTIC_KINDS else None
-
-    def _dist_block(Tc: "np.ndarray", G: "np.ndarray", Gt: "np.ndarray") -> "np.ndarray":
-        """Point metrics accumulate with a j-loop (index order = the SQL
-        left fold's IEEE sequence — reassociating BLAS forms are NOT
-        bit-equal) over a contiguous TRANSPOSED proper matrix, tiled so
-        the accumulator stays cache-resident across the L passes (an
-        untiled j-loop re-streams the whole (nc, ng) accumulator from
-        DRAM L times)."""
-        nc, ng = Tc.shape[0], G.shape[0]
-        if batch_fn is not None:
-            A = np.repeat(Tc, ng, axis=0)
-            B = np.tile(G, (nc, 1))
-            return batch_fn(A, B).reshape(nc, ng)
-        L = Tc.shape[1]
-        out = np.empty((nc, ng))
-        tile = max(256, 131_072 // max(1, nc))  # ~1 MB accumulator
-        for t0 in range(0, ng, tile):
-            t1 = min(ng, t0 + tile)
-            acc = np.zeros((nc, t1 - t0))
-            for j in range(L):
-                d = Tc[:, j][:, None] - Gt[j, t0:t1][None, :]
-                if kind == "manhattan":
-                    np.abs(d, out=d)
-                    acc += d
-                else:
-                    acc += d * d
-            out[:, t0:t1] = np.sqrt(acc) if kind == "euclidean" else acc
-        return out
-
-    return batch_fn, _dist_block
-
-
-def _conformal_proper_groups(rows):
-    """proper (features, label) rows -> per-length (L, matrix,
-    [(label, col_idx)]) groups — label->column indices precomputed once so
-    each scoring chunk only slices."""
-    import numpy as np
-
-    from ..functions.distance import _stack_series
-
-    by_len: dict = {}
-    for r in rows:
-        by_len.setdefault(len(r[0]), []).append(r)
-    groups = []
-    for L in sorted(by_len):
-        g = by_len[L]
-        mat = _stack_series([r[0] for r in g])
-        labs = [r[1] for r in g]
-        idx: dict = {}
-        for i, lab in enumerate(labs):
-            idx.setdefault(lab, []).append(i)
-        groups.append(
-            (L, mat, [(lab, np.asarray(ix, dtype=np.int64)) for lab, ix in idx.items()])
-        )
-    return groups
-
-
-def _conformal_score_rows(
-    feats, kvals: dict, keys: list, grps, batch_fn, dist_block,
-) -> dict:
-    """Score one block of side rows against the proper groups: min
-    distance per (side row, proper label) under the declarative ``_mins``
-    semantics (d != 0 exclusion keeps NaN; MIN is NaN-greatest; no row
-    when no pair survives; point-metric length mismatches drop). Shared
-    verbatim by the broadcast kernel and the over-budget grid cells, so
-    their bit-identity contract is enforced by construction."""
-    import numpy as np
-
-    from ..functions.distance import _stack_series
-
-    max_g = max(g[1].shape[0] for g in grps)
-    gts = [
-        np.ascontiguousarray(G.T) if batch_fn is None else None
-        for (_L, G, _li) in grps
-    ]
-    # batch-kernel pair target mirrors _score_block_rows (~1024-pair DP
-    # calls); the point folds chunk rows so the tiled accumulator plus row
-    # block stay cache-resident
-    rows_per = max(1, 1024 // max_g) if batch_fn is not None else 128
-    out: dict = {k: [] for k in keys}
-    out["_plab"] = []
-    out["_dmin"] = []
-    row_by_len: dict = {}
-    for i, f in enumerate(feats):
-        row_by_len.setdefault(len(f), []).append(i)
-    for Lr, idxs in row_by_len.items():
-        T = _stack_series([feats[i] for i in idxs])
-        for c0 in range(0, len(idxs), rows_per):
-            chunk = idxs[c0 : c0 + rows_per]
-            Tc = T[c0 : c0 + rows_per]
-            # per label accumulators across proper groups:
-            # (min over non-NaN, any pair survived, any non-NaN)
-            acc: dict = {}
-            for gi, (Lg, G, labidx) in enumerate(grps):
-                if batch_fn is None and Lg != Lr:
-                    continue  # declarative null-fold drop
-                D = dist_block(Tc, G, gts[gi])
-                mask = D != 0  # NaN != 0 is True — kept, like SQL
-                for lab, cols in labidx:
-                    sub = D[:, cols]
-                    msub = mask[:, cols]
-                    nn = msub & ~np.isnan(sub)
-                    mn = np.where(nn, sub, np.inf).min(axis=1)
-                    prev = acc.get(lab)
-                    if prev is None:
-                        acc[lab] = [mn, msub.any(axis=1), nn.any(axis=1)]
-                    else:
-                        prev[0] = np.minimum(prev[0], mn)
-                        prev[1] |= msub.any(axis=1)
-                        prev[2] |= nn.any(axis=1)
-            for lab, (mn, anyv, nnv) in acc.items():
-                for r in np.nonzero(anyv)[0]:
-                    for k in keys:
-                        out[k].append(kvals[k][chunk[r]])
-                    out["_plab"].append(lab)
-                    out["_dmin"].append(
-                        float(mn[r]) if nnv[r] else float("nan")
-                    )
-    return out
 
 
 def _conformal_min_kernel(
@@ -613,15 +481,18 @@ def _conformal_min_kernel(
     the coalesce restores NaN; a (row, label) with no surviving pair in
     any cell emits no row); unsplit, each cell's min is final.
 
-    Both routes score through ``_conformal_score_rows``, so the output is
+    Both routes score through the package's one numpy scoring core,
+    ``knn._score_block_rows`` with ``by_label`` (``first_k`` with k = 1
+    over a (row, label) key, every pair scored), so the output is
     bit-identical to the declarative ``_mins`` by construction:
 
     - point folds accumulate dim-by-dim ascending (IEEE sequence of the
       left fold); elastic metrics ride the bitwise-pinned batch kernels;
     - the ``d != 0`` pair exclusion keeps NaN distances (NaN != 0 is true
       in both engines) and MIN is NaN-greatest (Spark aggregate NaN
-      semantics): non-NaN min when one exists, NaN when only NaN pairs
-      survive, NO row when no pair survives;
+      semantics, ``first_k``'s NaN-last order): non-NaN min when one
+      exists, NaN when only NaN pairs survive, NO row when no pair
+      survives; null labels form one group, as in the ``groupBy``;
     - point-metric side rows whose length differs from the proper length
       emit nothing — exactly the declarative null-fold -> null-filter drop
       (zip_with pads the short side with nulls, the fold goes null, and
@@ -631,9 +502,11 @@ def _conformal_min_kernel(
       population, and the conformal pipeline scans the bounded
       (rows x labels) table.
     """
-    import pandas as pd
+    import numpy as np
 
     from ..caching import register_cache
+    from ..functions.distance import batch_kernel
+    from .knn import _group_by_length, _score_block_rows
     from .pairscan import (
         broadcast_scan, choose_route, grid_scan, scoring_cpu_s, share, side_stats,
     )
@@ -654,14 +527,12 @@ def _conformal_min_kernel(
     if route == "kernel" and n_rows * n_rows // max(1, cal_mod - 1) < min_kernel_pairs:
         return None
     label_sql_type = proper.schema["_plab"].dataType.simpleString()
-    batch_fn, dist_block = _conformal_dist_fns(kind)
+    elastic = batch_kernel(kind) if kind in _CONFORMAL_ELASTIC_KINDS else None
     if route == "kernel":
-        # per proper length: (matrix, [(label, col_idx array)]) — label->
-        # column indices precomputed once so each batch only slices
-        shared = share(
-            proper.sparkSession,
-            _conformal_proper_groups(proper.select("_pf", "_plab").collect()),
-        )
+        rows = proper.select("_pf", "_plab").collect()
+        shared = share(proper.sparkSession, _group_by_length(
+            range(len(rows)), [r[0] for r in rows], [r[1] for r in rows]
+        ))
 
     def mins(side: DataFrame, fcol: str, keys: list) -> DataFrame:
         key_types = dict(side.dtypes)
@@ -670,11 +541,14 @@ def _conformal_min_kernel(
             + [f"_plab {label_sql_type}", "_dmin double"]
         )
 
-        def score(grps, pdf):
-            return pd.DataFrame(_conformal_score_rows(
-                pdf[fcol].to_numpy(), {k: pdf[k].to_numpy() for k in keys},
-                keys, grps, batch_fn, dist_block,
-            ))
+        def score(groups, pdf):
+            out = _score_block_rows(
+                np.arange(len(pdf)), pdf[fcol].to_numpy(), groups, kind=kind,
+                elastic=elastic, k=1, excl=True, by_label=True,
+            )
+            # test_id holds each emitted row's position in the batch
+            found = pdf[keys].iloc[out["test_id"]].reset_index(drop=True)
+            return found.assign(_plab=out["train_label"], _dmin=out["distance"])
 
         if route == "kernel":
             scored = broadcast_scan(side.select(*keys, fcol), shared, score, schema)
@@ -692,8 +566,9 @@ def _conformal_min_kernel(
                 q_bytes=n_s * len_s * 8,
                 c_bytes=n_rows * max_len * 8,
                 cpu_s=scoring_cpu_s(kind, n_s * n_rows, max_len, exhaustive=True),
-                cell=lambda sp, pp: score(_conformal_proper_groups(
-                    list(zip(pp[fcol].tolist(), pp["_plab"].tolist()))
+                # np.asarray(list) not .to_numpy(), as in knn._knn_scan
+                cell=lambda sp, pp: score(_group_by_length(
+                    range(len(pp)), pp[fcol].to_numpy(), np.asarray(list(pp["_plab"]))
                 ), sp),
                 reduce=lambda cells: cells.groupBy(*keys, "_plab").agg(
                     F.min("_dmin").alias("_dmin")

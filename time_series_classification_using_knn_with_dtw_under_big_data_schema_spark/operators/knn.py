@@ -298,7 +298,9 @@ def _knn_scan(
     exclusion matches the declarative path. Ragged train
     rides every route for the ELASTIC metrics (per-length rectangular
     kernel calls, one emit over all groups); point metrics need fixed
-    length.
+    length, and a test row of another length gets no neighbours under
+    ``exclude_zero`` (the declarative plan's NULL distances are dropped
+    there) and fails the call otherwise (it would rank them first).
     """
     import numpy as np
     import pandas as pd
@@ -383,8 +385,8 @@ def _knn_scan(
         def batch(groups, pdf):
             return topk(pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups)
 
-        return broadcast_scan(test.select(*t_cols), share(spark, groups), batch, schema)
-    if route == "reverse":
+        scored = broadcast_scan(test.select(*t_cols), share(spark, groups), batch, schema)
+    elif route == "reverse":
         check_fits(test_stats()[3], max_broadcast_bytes, "test")
         rows = test.select(*t_cols).collect()
 
@@ -395,83 +397,109 @@ def _knn_scan(
             out = local_topk(t_ids, t_feats, pdf)
             return out if len(out) else None
 
-        return global_topk(broadcast_scan(
+        scored = global_topk(broadcast_scan(
             train.select(*r_cols),
             share(spark, ([r[0] for r in rows], [r[1] for r in rows])),
             batch,
             schema,
         ))
-    n_t, len_t, ch_t, t_bytes = test_stats()
-    if nested and n_t and ch_t != ch_r:
-        raise ValueError(
-            f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
+    else:
+        n_t, len_t, ch_t, t_bytes = test_stats()
+        if nested and n_t and ch_t != ch_r:
+            raise ValueError(
+                f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
+            )
+        scored = grid_scan(
+            test,
+            train,
+            q_key=id_col,
+            c_key=id_col,
+            q_cols=t_cols,
+            c_cols=r_cols,
+            q_rows=n_t,
+            c_rows=n_r,
+            q_bytes=t_bytes,
+            c_bytes=n_r * len_r * ch_r * 8,
+            cpu_s=scoring_cpu_s(
+                kind, n_t * n_r, len_r, channels=ch_r, band=band,
+                radius=fastdtw_radius,
+            ),
+            cell=lambda tp, rp: local_topk(
+                tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
+            ),
+            reduce=global_topk,
+            schema=schema,
         )
-    return grid_scan(
-        test,
-        train,
-        q_key=id_col,
-        c_key=id_col,
-        q_cols=t_cols,
-        c_cols=r_cols,
-        q_rows=n_t,
-        c_rows=n_r,
-        q_bytes=t_bytes,
-        c_bytes=n_r * len_r * ch_r * 8,
-        cpu_s=scoring_cpu_s(
-            kind, n_t * n_r, len_r, channels=ch_r, band=band,
-            radius=fastdtw_radius,
-        ),
-        cell=lambda tp, rp: local_topk(
-            tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
-        ),
-        reduce=global_topk,
-        schema=schema,
-    )
+    # Arrow's from_pandas turns the core's NaN distances into NULL; the
+    # core never emits a legitimate NULL (unequal point-metric lengths are
+    # dropped or rejected), so coalesce restores the declarative NaN
+    # (after the rerank, which ranks the NULLs last)
+    return scored.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
 
 
-# pairs per scoring chunk: ~1,024 for the batch DPs and the exhaustive
-# point folds, ~64K for sbd's block FFT and the Gram filter
+# pairs per scoring chunk: ~1,024 for the batch DPs, ~64K for the point
+# folds, sbd's block FFT and the Gram filter
 _DP_PAIRS = 1024
 _BLOCK_PAIRS = 65536
 
 
-def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl):
-    """THE kernel scoring core — one block of test rows against the train
-    side's per-length ``groups`` of (ids, stacked matrix, labels), shared
-    verbatim by every pair-scan route, so their bit-identity contract is
-    enforced by construction instead of by hand-synced copies.
-    ``elastic`` is the kind's batch DP from ``batch_kernel`` (None for
-    the point metrics and sbd).
+def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl, by_label=False):
+    """THE numpy pair-scoring core — one block of test rows against the
+    train side's per-length ``groups`` of (ids, stacked matrix, labels),
+    shared verbatim by every KNN pair-scan route and by conformal KNN's
+    kernel and grid, so their bit-identity contract is enforced by
+    construction instead of by hand-synced copies. ``elastic`` is the
+    kind's batch DP from ``batch_kernel`` (None for the point metrics and
+    sbd).
 
     Test rows are stacked per length and chunked so one kernel call covers
-    ~1,024 pairs for the batch DPs and the exhaustive point folds, and
-    ~64K pairs for sbd (ONE block FFT serves many test rows) and for the
-    Gram filter below. The ~1,024 DP target balances ufunc-dispatch
-    amortization against cache footprint: the kernel's (pairs, window)
-    work arrays must share L2/L3 with 31 sibling workers, and measured
-    aggregate throughput on 561-pt wide-warp pairs peaks near 1k
-    pairs/call (4k-pair calls were ~20% slower under full contention). In
-    the broadcast-kernel regime (train >= 1024 rows) a DP chunk is one
-    test row scored with ZERO-copy views (broadcast_to + the train
-    matrix); in the chunked regime's narrow corpus blocks it collapses
-    rows x blocks tiny kernel calls into ~1024-pair ones.
+    ~1,024 pairs for the batch DPs, and ~64K pairs for the point folds,
+    for sbd (ONE block FFT serves many test rows) and for the Gram filter
+    below. The ~1,024 DP target balances ufunc-dispatch amortization
+    against cache footprint: the kernel's (pairs, window) work arrays must
+    share L2/L3 with 31 sibling workers, and measured aggregate throughput
+    on 561-pt wide-warp pairs peaks near 1k pairs/call (4k-pair calls were
+    ~20% slower under full contention). In the broadcast-kernel regime
+    (train >= 1024 rows) a DP chunk is one test row scored with ZERO-copy
+    views (broadcast_to + the train matrix); in the chunked regime's
+    narrow corpus blocks it collapses rows x blocks tiny kernel calls into
+    ~1024-pair ones.
+
+    The point metrics fold left in index order (``_point_fold``), the IEEE
+    operation sequence of the SQL folds in functions/distance.py, so every
+    route returns the declarative plan's distance bits. A point-metric
+    pair of unequal lengths is dropped under ``excl``, as the SQL fold
+    goes NULL there and ``d != 0`` drops it (chebyshev's ``array_max``
+    skips the padding nulls instead, so it folds over the overlap);
+    without ``excl`` the SQL plan would rank that NULL first, and the core
+    raises a ValueError naming both lengths.
 
     euclidean / sq_euclidean against one flat float64 train matrix take
     the Gram filter (``_gram_candidates``): one BLAS product per chunk
     bounds every pair's squared distance, and only the pairs that can
-    reach their row's top-k are scored exactly — with the same
-    ``((t - b) ** 2).sum(axis=1)`` arithmetic as the exhaustive fold, so
-    rows, ranks and distance bits are the fold's. A chunk whose squared
-    norms could overflow (any |x| past ~1e153), or that holds a NaN or
-    inf element, takes the exhaustive fold instead.
+    reach their row's top-k are scored exactly — by the same left fold
+    (``np.cumsum`` is a sequential accumulate), so rows, ranks and
+    distance bits are the exhaustive fold's. A chunk whose squared norms
+    could overflow (any |x| past ~1e153), or that holds a NaN or inf
+    element, takes the exhaustive fold instead.
 
     Each chunk scores every length group (a ragged train side is one
     rectangular kernel call per distinct length) and emits ONCE over the
-    concatenated candidates through ``pairscan.first_k``: (distance,
-    label, id) ascending, NaN last, dist != 0 dropped under ``excl``.
+    concatenated pairs through ``pairscan.first_k``: (distance, label, id)
+    ascending, NaN last, dist != 0 dropped under ``excl``. ``by_label``
+    emits instead each row's least distance per train label, conformal's
+    MIN over the d != 0 pairs: ``first_k`` with k = 1 over a (row, label)
+    key, the labels factorized so that nulls form one group, as a SQL
+    ``groupBy`` does. It scores every pair (no Gram filter), and each
+    group's train rows are sorted by label so that ``first_k`` gets one
+    candidate per (row, label) and group, the run's least non-NaN
+    surviving distance or else NaN (sending every pair through
+    ``first_k``'s sort made conformal's scoring ~1.8x slower); its
+    ``train_id`` names the run, not the nearest row.
     Returns dict of numpy arrays: test_id, train_id, distance, rank
     [, train_label]."""
     import numpy as np
+    import pandas as pd
 
     from ..functions.distance import _stack_series, sbd_block
     from .pairscan import first_k
@@ -481,76 +509,115 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl):
 
     n_train = sum(len(g[0]) for g in groups)
     has_label = groups[0][2] is not None
+    point = elastic is None and kind != "sbd"
+    glabels = [g[2] for g in groups]
+    if by_label:
+        codes, uniques = pd.factorize(cat(glabels), use_na_sentinel=False)
+        glabels = np.split(codes, np.cumsum([len(g[0]) for g in groups])[:-1])
+        # each group's rows sorted by label, so that a (row, label) key
+        # is one run of columns
+        orders = [np.argsort(c, kind="stable") for c in glabels]
+        groups = [tuple(x[o] for x in g) for g, o in zip(groups, orders)]
+        glabels = [c[o] for c, o in zip(glabels, orders)]
+        runs = [np.flatnonzero(np.r_[True, c[1:] != c[:-1]]) for c in glabels]
     M = groups[0][1]
     gram = (
-        kind in ("euclidean", "sq_euclidean") and len(groups) == 1
+        not by_label and kind in ("euclidean", "sq_euclidean") and len(groups) == 1
         and M.dtype == np.float64 and M.ndim == 2
     )
     mn = (M * M).sum(axis=1) if gram else None
+    # the point folds stream the transposed train matrices one column at a
+    # time; each is built on first use (a Gram-filtered call needs none)
+    gts: dict = {}
+    rows_per = max(1, (_BLOCK_PAIRS if elastic is None else _DP_PAIRS) // max(1, n_train))
     parts = []
     # test rows may be ragged; each chunk stacks rectangular
     by_len: dict = {}
     for i, f in enumerate(fvals):
         by_len.setdefault(len(f), []).append(i)
-    for idxs in by_len.values():
+    for length, idxs in by_len.items():
         T = _stack_series([fvals[i] for i in idxs])
         tn = None
         if gram and T.dtype == np.float64 and T.shape[1:] == M.shape[1:]:
             tn = (T * T).sum(axis=1)
-            # finite here keeps every pair's squared distance, exact and
-            # approximate, away from overflow (and rules out NaN / inf)
-            if not np.isfinite(4.0 * (tn.max() + mn.max())):
-                tn = None
-        target = _BLOCK_PAIRS if kind == "sbd" or tn is not None else _DP_PAIRS
-        rows_per = max(1, target // max(1, n_train))
         for c0 in range(0, len(idxs), rows_per):
             chunk = idxs[c0 : c0 + rows_per]
             Tc = T[c0 : c0 + rows_per]
             nc = len(chunk)
+            tc = None if tn is None else tn[c0 : c0 + rows_per]
+            # finite here keeps every pair's squared distance, exact and
+            # approximate, away from overflow (and rules out NaN / inf)
+            if tc is not None and not np.isfinite(4.0 * (tc.max() + mn.max())):
+                tc = None
             Ds, rows, ids, labels = [], [], [], []
-            for b_ids, b_feats, b_labels in groups:
+            for g, (b_ids, b_feats, _) in enumerate(groups):
                 n_g = len(b_ids)
-                if tn is not None:
-                    r, j = _gram_candidates(Tc, tn[c0 : c0 + rows_per], b_feats, mn, k, excl)
+                if point and kind != "chebyshev" and b_feats.shape[1] != length:
+                    if not excl:
+                        raise ValueError(
+                            f"metric {kind!r} needs equal lengths: a test series of "
+                            f"length {length} against train series of length "
+                            f"{b_feats.shape[1]} (exclude_zero=True drops such pairs)"
+                        )
+                    continue
+                if tc is not None:
+                    r, j = _gram_candidates(Tc, tc, b_feats, mn, k, excl)
                     D = np.concatenate([
-                        ((Tc[r[s : s + _DP_PAIRS]] - b_feats[j[s : s + _DP_PAIRS]]) ** 2).sum(axis=1)
+                        np.cumsum(
+                            (Tc[r[s : s + _DP_PAIRS]] - b_feats[j[s : s + _DP_PAIRS]]) ** 2,
+                            axis=1,
+                        )[:, -1]
                         for s in range(0, len(r), _DP_PAIRS)
                     ])
                     if kind == "euclidean":
                         D = np.sqrt(D)
-                elif kind == "sbd":
-                    # block form: both sides FFT'd once per chunk, no pair
-                    # materialization at all
-                    D = sbd_block(Tc, b_feats)
-                else:
-                    if nc == 1:
-                        A = np.broadcast_to(Tc[0], (n_g,) + Tc[0].shape)
-                        B = b_feats
-                    else:
-                        A = np.repeat(Tc, n_g, axis=0)
-                        B = np.tile(b_feats, (nc,) + (1,) * (b_feats.ndim - 1))
-                    if elastic is not None:
-                        D = elastic(A, B)
-                    elif kind == "euclidean":
-                        D = np.sqrt(((A - B) ** 2).sum(axis=1))
-                    elif kind == "sq_euclidean":
-                        D = ((A - B) ** 2).sum(axis=1)
-                    elif kind == "manhattan":
-                        D = np.abs(A - B).sum(axis=1)
-                    else:  # chebyshev
-                        D = np.abs(A - B).max(axis=1)
-                if tn is None:  # every pair, row-major
+                else:  # every pair, row-major
                     r, j = np.repeat(np.arange(nc), n_g), np.tile(np.arange(n_g), nc)
+                    if point:
+                        if g not in gts:
+                            gts[g] = np.ascontiguousarray(b_feats.T)
+                        D = _point_fold(kind, Tc, gts[g])
+                    elif kind == "sbd":
+                        # block form: both sides FFT'd once per chunk, no
+                        # pair materialization at all
+                        D = sbd_block(Tc, b_feats)
+                    elif nc == 1:
+                        D = elastic(np.broadcast_to(Tc[0], (n_g,) + Tc[0].shape), b_feats)
+                    else:
+                        D = elastic(
+                            np.repeat(Tc, n_g, axis=0),
+                            np.tile(b_feats, (nc,) + (1,) * (b_feats.ndim - 1)),
+                        )
+                    if by_label:
+                        # each run's candidate for first_k, which then
+                        # merges the length groups: the least surviving
+                        # non-NaN distance, else NaN if a NaN survives
+                        kept = D.reshape(nc, n_g) != 0
+                        hit = np.logical_or.reduceat(kept, runs[g], axis=1)
+                        D = np.fmin.reduceat(
+                            np.where(kept, D.reshape(nc, n_g), np.nan), runs[g], axis=1
+                        )
+                        r, s = np.nonzero(hit)
+                        D, j = D[r, s], runs[g][s]
                 Ds.append(D.reshape(-1))
                 rows.append(r)
                 ids.append(b_ids[j])
                 if has_label:
-                    labels.append(b_labels[j])
+                    labels.append(glabels[g][j])
+            if not Ds:  # every pair dropped for unequal lengths
+                continue
             Df = cat(Ds)
-            r, i, d, lab, rank = first_k(
-                Df, cat(rows), cat(ids), cat(labels) if has_label else None, k,
-                Df != 0 if excl else None,
-            )
+            keep = Df != 0 if excl else None
+            if by_label:
+                key, i, d, _, rank = first_k(
+                    Df, cat(rows) * len(uniques) + cat(labels), cat(ids), None, 1, keep
+                )
+                r, code = np.divmod(key, len(uniques))
+                lab = uniques[code]
+            else:
+                r, i, d, lab, rank = first_k(
+                    Df, cat(rows), cat(ids), cat(labels) if has_label else None, k, keep,
+                )
             part = {
                 "test_id": np.asarray([tids[j] for j in chunk], dtype=np.int64)[r],
                 "train_id": i,
@@ -560,7 +627,7 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl):
             if has_label:
                 part["train_label"] = lab
             parts.append(part)
-    if not parts:  # no test rows
+    if not parts:  # no test rows, or no pair of equal lengths
         part = {
             "test_id": np.empty(0, dtype=np.int64),
             "train_id": np.empty(0, dtype=np.int64),
@@ -568,9 +635,39 @@ def _score_block_rows(tids, fvals, groups, *, kind, elastic, k, excl):
             "rank": np.empty(0, dtype=np.int64),
         }
         if has_label:
-            part["train_label"] = np.concatenate([g[2][:0] for g in groups])
+            part["train_label"] = cat([g[2][:0] for g in groups])
         return part
     return {c: cat([p[c] for p in parts]) for c in parts[0]}
+
+
+def _point_fold(kind, Tc, Gt):
+    """(rows, n_g) point-metric distances of test rows ``Tc`` against a
+    TRANSPOSED train matrix ``Gt`` (length, n_g). Each pair accumulates
+    in index order, the SQL left fold's IEEE sequence (numpy's pairwise
+    ``.sum`` and reassociating BLAS forms are not bit-equal to it);
+    chebyshev's running max is order-free. Tiled over the train columns
+    so the accumulator stays cache-resident across the passes over the
+    length (an untiled loop re-streams the whole accumulator from DRAM on
+    every pass). chebyshev folds over the first min(lengths) points."""
+    import numpy as np
+
+    nc, ng = Tc.shape[0], Gt.shape[1]
+    tile = max(256, _BLOCK_PAIRS // nc)
+    tiles = []
+    for t0 in range(0, ng, tile):
+        acc = np.zeros((nc, min(ng - t0, tile)))
+        for j in range(min(Tc.shape[1], Gt.shape[0])):
+            d = Tc[:, j, None] - Gt[j, t0 : t0 + tile]
+            if kind in ("euclidean", "sq_euclidean"):
+                np.multiply(d, d, out=d)
+            else:
+                np.abs(d, out=d)
+            if kind == "chebyshev":
+                np.maximum(acc, d, out=acc)
+            else:
+                acc += d
+        tiles.append(np.sqrt(acc) if kind == "euclidean" else acc)
+    return tiles[0] if len(tiles) == 1 else np.concatenate(tiles, axis=1)
 
 
 def _gram_candidates(Tc, tn, B, bn, k: int, excl: bool):

@@ -82,9 +82,14 @@ _PY_TASK_CPU_S = 0.33
 # edit DPs span 2.1e-9 for lcss to 6.2e-9 for msm; chebyshev costs ~2x
 # manhattan), which the cell count tolerates: it only has to tell a
 # fraction of one more cell's cost from many of them.
+# "point" was re-measured when its fold became the index-ordered left
+# fold: on a second 4-core x86 VM, where the tool prices every family at
+# about half the values below (gram 2.4-2.6e-10), it read 2.4-2.5e-9
+# against 2.6-2.8e-9 for the pairwise-sum fold before it, so the entry is
+# the earlier 5.3e-9 times that ratio (0.9).
 _CPU_S_PER_UNIT = {
     "gram": 5.0e-10,
-    "point": 5.3e-9,
+    "point": 4.8e-9,
     "sbd": 6.0e-8,
     "dtw": 5.0e-9,
     "fastdtw": 3.5e-8,
@@ -146,7 +151,7 @@ def scoring_cpu_s(
     ``length`` points (x ``channels``) with scoring kind ``kind``: a KNN
     core kind, or 'ann_brute' / 'ann_quantized'. ``band`` / ``radius`` are
     the DTW window; ``exhaustive`` marks a euclidean fold over every pair
-    (conformal's core) rather than the Gram filter."""
+    (conformal's per-label minimum) rather than the Gram filter."""
     family = _family(kind, band, exhaustive)
     return pairs * _work_units(family, length, channels, band, radius) * _CPU_S_PER_UNIT[family]
 

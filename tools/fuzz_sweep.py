@@ -15,7 +15,7 @@ against an independent reference implementation:
 - components: operators.dedup.dedup_components (driver union-find AND
   distributed Pregel paths) vs a Python union-find on random graphs.
 - point: the KNN scoring core (operators/knn.py::_score_block_rows,
-  Gram-filtered for the euclidean kinds) vs an all-pairs fold + first_k,
+  Gram-filtered for the euclidean kinds) vs an all-pairs left fold + first_k,
   bit-for-bit, across random shapes, scales and tie regimes.
 - grid: knn_join(strategy='chunked') with the block grid forced to every
   (bq, bc) in {1, 2, 3}^2, for euclidean, manhattan, banded dtw and lcss,
@@ -1177,8 +1177,8 @@ def sweep_conformal(trials: int, seed: int) -> int:
 
 def sweep_point(trials: int, seed: int) -> int:
     """_score_block_rows for the point metrics vs an all-pairs reference
-    (every pair through the fold's arithmetic one test row at a time, then
-    pairscan.first_k): rows, ranks, distance bits and dtypes must match
+    (every pair through the SQL fold's left-to-right sum, ``np.cumsum``,
+    one test row at a time, then pairscan.first_k): rows, ranks, distance bits and dtypes must match
     exactly. Regimes: integer grids (heavy ties), Gaussian at scales
     1e-162..1e160 (subnormal to overflowing squares), a large common
     offset (the Gram bound swamps the spread), exact train/test
@@ -1191,9 +1191,9 @@ def sweep_point(trials: int, seed: int) -> int:
     from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import first_k
 
     folds = {
-        "euclidean": lambda t, B: np.sqrt(((t - B) ** 2).sum(axis=1)),
-        "sq_euclidean": lambda t, B: ((t - B) ** 2).sum(axis=1),
-        "manhattan": lambda t, B: np.abs(t - B).sum(axis=1),
+        "euclidean": lambda t, B: np.sqrt(np.cumsum((t - B) ** 2, axis=1)[:, -1]),
+        "sq_euclidean": lambda t, B: np.cumsum((t - B) ** 2, axis=1)[:, -1],
+        "manhattan": lambda t, B: np.cumsum(np.abs(t - B), axis=1)[:, -1],
         "chebyshev": lambda t, B: np.abs(t - B).max(axis=1),
     }
     rng = np.random.default_rng(seed)
@@ -1273,8 +1273,8 @@ def sweep_grid(trials: int, seed: int) -> int:
     from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn_join, pairscan
 
     folds = {
-        "euclidean": lambda A, B: np.sqrt(((A - B) ** 2).sum(axis=1)),
-        "manhattan": lambda A, B: np.abs(A - B).sum(axis=1),
+        "euclidean": lambda A, B: np.sqrt(np.cumsum((A - B) ** 2, axis=1)[:, -1]),
+        "manhattan": lambda A, B: np.cumsum(np.abs(A - B), axis=1)[:, -1],
         "dtw": batch_kernel("dtw", band=2),
         "lcss": batch_kernel("lcss"),
     }
