@@ -22,7 +22,9 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
 
 
 def _collect(df):
-    return sorted(map(tuple, df.collect()))
+    """Sorted rows, a NaN read as the string 'NaN' so that rows holding
+    NaN compare equal (NaN != NaN)."""
+    return sorted(tuple("NaN" if v != v else v for v in r) for r in df.collect())
 
 
 # exclude_self=True runs in the fast lane (tests/test_pairscan.py)
@@ -42,10 +44,11 @@ def test_chunked_brute_matches_kernel(spark, emb, exclude_self):
 
 
 def test_chunked_brute_matches_declarative(spark):
-    """Zero-free fixture: the SQL fold keeps 0/0 as NaN while Arrow paths
-    surface it as null, so the declarative comparison pins the (vastly
-    dominant) finite-distance contract; null handling vs the KERNEL is
-    pinned above with the zero-vector fixture."""
+    """Zero-free fixture: a zero vector's 0/0 is a division-by-zero error
+    in the SQL fold under ANSI mode, where the kernel routes read NaN, so
+    the declarative comparison pins the (vastly dominant) finite-distance
+    contract; zero vectors vs the KERNEL are pinned above, and NaN
+    elements vs the declarative plan in tests/test_pairscan.py."""
     rng = np.random.default_rng(11)
     rows = [(int(i), [float(x) for x in rng.normal(0, 1, 16)]) for i in range(150)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")

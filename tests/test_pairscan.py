@@ -1,6 +1,8 @@
 """Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
-executions each KNN route (and each pruned-family call) fires while its
-plan is built, the cheap grid-agreement checks (block grid vs broadcast
+executions each KNN, ANN and conformal route (and each pruned-family
+call) fires while its plan is built, an empty candidate side and NaN
+ANN distances on every route against the declarative plan, n_coeffs
+bounds checked before any job, the cheap grid-agreement checks (block grid vs broadcast
 kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
 train length groups on every route, the budget guard, the Gram
 filter's bit-identity with the exhaustive euclidean fold, the point
@@ -18,6 +20,7 @@ import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import (
     boss_classify,
@@ -27,6 +30,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     knn_join_lb,
     knn_join_lb_metric,
     knn_join_pruned,
+    sfa_words,
 )
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import knn as knn_mod
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.functions.distance import batch_kernel
@@ -43,7 +47,9 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
 
 
 def _collect(df):
-    return sorted(map(tuple, df.collect()))
+    """Sorted rows, a NaN read as the string 'NaN' so that rows holding
+    NaN compare equal (NaN != NaN)."""
+    return sorted(tuple("NaN" if v != v else v for v in r) for r in df.collect())
 
 
 def _eager_executions(spark, build) -> int:
@@ -79,6 +85,92 @@ def test_knn_route_eager_executions(spark, har_dfs, strategy, budget, want):
         ),
     )
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "call, want",
+    [
+        # corpus stats + corpus collect
+        (lambda q, c, te, tr: ann_brute_topk(q, c, k=5, strategy="kernel"), 2),
+        # query stats (the fit check) + query collect
+        (lambda q, c, te, tr: ann_brute_topk(q, c, k=5, strategy="reverse"), 2),
+        # over budget -> grid: corpus stats, gate and grid query stats
+        (lambda q, c, te, tr: ann_brute_topk(
+            q, c, k=5, strategy="kernel", max_broadcast_bytes=64), 3),
+        # proper stats + proper collect, then one cache landing per side
+        (lambda q, c, te, tr: conformal_knn(te, tr, min_kernel_pairs=0), 4),
+        # over budget -> grid: proper stats, then per side its stats and
+        # its cache landing
+        (lambda q, c, te, tr: conformal_knn(te, tr, max_broadcast_bytes=64), 5),
+    ],
+    ids=["ann-kernel", "ann-reverse", "ann-grid", "conformal-kernel", "conformal-grid"],
+)
+def test_ann_and_conformal_route_eager_executions(spark, har_dfs, emb, call, want):
+    train_df, test_df = har_dfs
+    got = _eager_executions(spark, lambda: call(emb.limit(23), emb, test_df, train_df))
+    assert got == want
+
+
+def test_knn_empty_train_side_matches_declarative(spark, har_dfs):
+    """An empty train side gives no rows, in the declarative plan's
+    columns, on every strategy; the kernel and chunked routes run only
+    the stats job that finds it empty."""
+    train, test = har_dfs
+    empty = train.filter(F.lit(False))
+    want = knn_join(test, empty, k=3, strategy="broadcast")
+    assert want.collect() == []
+    for strategy in ("shuffle", "kernel", "chunked", "reverse"):
+        got = knn_join(test, empty, k=3, strategy=strategy)
+        assert got.dtypes == want.dtypes and got.collect() == [], strategy
+    for strategy in ("kernel", "chunked"):
+        jobs = _eager_executions(spark, lambda: knn_join(test, empty, k=3, strategy=strategy))
+        assert jobs == 1, strategy
+
+
+def test_ann_empty_corpus_matches_declarative(spark, emb):
+    """ann_brute_topk against an empty corpus: no rows, in the declarative
+    plan's columns, on every strategy."""
+    empty = emb.filter(F.lit(False))
+    want = ann_brute_topk(emb.limit(5), empty, k=3, strategy="declarative")
+    assert want.collect() == []
+    for strategy in ("kernel", "chunked", "reverse"):
+        got = ann_brute_topk(emb.limit(5), empty, k=3, strategy=strategy)
+        assert got.dtypes == want.dtypes and got.collect() == [], strategy
+
+
+@pytest.fixture(scope="module")
+def emb_nan(spark, emb):
+    """The emb fixture (two zero vectors, 13 and 77) plus row 500 with a
+    NaN element."""
+    return emb.unionByName(
+        spark.createDataFrame([(500, [float("nan")] + [1.0] * 15)], emb.schema)
+    )
+
+
+@pytest.mark.parametrize("strategy", ["kernel", "reverse", "chunked"])
+def test_ann_nan_distances_match_declarative(spark, emb_nan, strategy):
+    """A NaN cosine distance reads NaN, ranked last, on every brute route,
+    as in the declarative plan (Arrow maps NaN to NULL on the way out of
+    the scorers). The SQL fold raises on a zero vector's 0/0 under ANSI
+    mode, so the declarative comparison leaves the zero vectors out;
+    with them, each route equals the kernel and their pairs read NaN.
+    block_bytes splits the chunked route's corpus, so its rerank runs."""
+    zero = F.col("vec_id").isin(13, 77)
+    corpus = emb_nan.filter(~zero)
+    queries = corpus.filter(F.col("vec_id").isin(0, 1, 500))
+    got = ann_brute_topk(queries, corpus, k=250, strategy=strategy, block_bytes=2048)
+    assert any(r.cos_dist != r.cos_dist for r in got.collect())
+    want = ann_brute_topk(queries, corpus, k=250, strategy="declarative")
+    assert _collect(got) == _collect(want)
+
+    queries = emb_nan.filter(F.col("vec_id").isin(0, 13, 500))
+    got = ann_brute_topk(queries, emb_nan, k=250, strategy=strategy, block_bytes=2048)
+    rows = got.collect()
+    assert all(
+        r.cos_dist != r.cos_dist for r in rows if {13, 77} & {r.query_id, r.neighbor_id}
+    )
+    want = ann_brute_topk(queries, emb_nan, k=250, strategy="kernel")
+    assert _collect(got) == _collect(want)
 
 
 @pytest.fixture(scope="module")
@@ -151,6 +243,25 @@ def test_boss_eager_executions(spark, walks, strategy, want):
         spark, lambda: boss_classify(test, train, m=8, n_coeffs=2, strategy=strategy)
     )
     assert got == want
+
+
+@pytest.mark.parametrize("past", [0, -1, 1], ids=["zero", "negative", "past-half"])
+def test_n_coeffs_out_of_range_rejected_before_any_job(spark, walks, past):
+    """n_coeffs outside [1, length // 2] is a ValueError from the twiddle
+    tables (features.periodogram_twiddles), which sfa_words and
+    boss_classify build before any job."""
+    train, test = walks
+
+    def bad(length):
+        return length // 2 + 1 if past == 1 else past
+
+    def build():
+        with pytest.raises(ValueError, match="n_freqs must be in"):
+            sfa_words(train, length=12, n_coeffs=bad(12))
+        with pytest.raises(ValueError, match="n_freqs must be in"):
+            boss_classify(test, train, m=8, n_coeffs=bad(8))
+
+    assert _eager_executions(spark, build) == 0
 
 
 @pytest.mark.parametrize("exclude_self", [True])
@@ -730,7 +841,7 @@ def _nan_dist_and_null_label(rows):
          lambda rows: any(r.train_label is None for r in rows)),
         (lambda te, tr, q, c: ann_brute_topk(q, c, k=5, strategy="chunked", exclude_self=False),
          lambda te, tr, q, c: ann_brute_topk(q, c, k=5, strategy="kernel", exclude_self=False),
-         lambda rows: any(r.cos_dist is None for r in rows)),
+         lambda rows: any(r.cos_dist != r.cos_dist for r in rows)),
         (lambda te, tr, q, c: conformal_knn(te, tr, cal_mod=2, max_broadcast_bytes=64),
          lambda te, tr, q, c: conformal_knn(te, tr, cal_mod=2, min_kernel_pairs=0),
          lambda rows: {r.label for r in rows} == {0.0, 1.0}),
@@ -742,8 +853,8 @@ def test_query_split_grid_matches_kernel_without_reduction(
 ):
     """With the candidate side unsplit (bq = 2, bc = 1) each cell's result
     is final and no cross-cell reduction (rerank, MIN) runs; rows, ranks,
-    NaN distances (NaN on KNN output, null on ANN's), null labels and
-    distance bits equal the broadcast kernel's."""
+    NaN distances, null labels and distance bits equal the broadcast
+    kernel's."""
     import struct
 
     train, test, corpus, queries = tall

@@ -143,9 +143,13 @@ def test_known_collect_sites_are_bounded(spark):
         ),
         max_bytes=64 << 10,
     )
-    # the audit actually saw the known driver materializations
+    # the audit actually saw the known driver materializations: the
+    # pair-scan router's collect of each family's 40-row candidate side
+    # (KNN, ANN brute, ANN quantized)
     sites = {r.site.split(":")[0] for r in audit.records}
-    assert {"knn.py", "similarity.py", "dedup.py", "sketch.py"} <= sites, sites
+    assert {"pairscan.py", "dedup.py", "sketch.py"} <= sites, sites
+    candidates = [r for r in audit.records if r.site.startswith("pairscan.py") and r.rows == 40]
+    assert len(candidates) == 3, audit.records
 
 
 def test_collect_audit_catches_unbounded(spark):

@@ -461,27 +461,27 @@ def _conformal_min_kernel(
     cal_mod: int,
 ):
     """Kernel twin of conformal_knn's ``_mins`` (r9 optimization round):
-    min distance per (side row, proper label) computed through the
-    pair-scan layer (operators/pairscan.py) — ONE mapInPandas pass over
-    the side against the broadcast proper split — instead of a crossJoin
-    whose per-pair distance is an interpreted higher-order-function fold
-    (Spark never codegens HOFs — measured 55.6 s for the ~3e9-pair 10x
-    conformal soak, the largest entry in the whole bench).
+    min distance per (side row, proper label) through the pair-scan
+    router (operators/pairscan.py) — a broadcast scan of the side against
+    the proper split, or the block grid when the proper split is over
+    budget — instead of a crossJoin whose per-pair distance is an
+    interpreted higher-order-function fold (Spark never codegens HOFs —
+    measured 55.6 s for the ~3e9-pair 10x conformal soak, the largest
+    entry in the whole bench).
 
     Returns a ``mins(side, fcol, keys) -> DataFrame`` closure, or None when
     no kernel path applies (empty proper side, a ragged proper side under
     a point metric, or a calibration pair volume below
-    ``min_kernel_pairs``). An OVER-BUDGET proper side rides the block grid
-    instead (r10, VERDICT r9 #6): min-per-label is a per-cell aggregate
-    exactly like top-k, so each (side-block x proper-block) cell emits its
-    own per-(row, label) min. When the grid splits the proper side, a
+    ``min_kernel_pairs``). Both sides scan on one route, so the proper
+    split is collected and broadcast once. Min-per-label is a per-cell
+    aggregate exactly like top-k: when the grid splits the proper side, a
     global groupBy(keys, label).MIN reduces the cells exactly (MIN is
     associative; a cell whose surviving pairs are all NaN emits NaN ->
     Arrow NULL, which the global MIN ignores unless every cell did — then
-    the coalesce restores NaN; a (row, label) with no surviving pair in
-    any cell emits no row); unsplit, each cell's min is final.
+    the router restores NaN; a (row, label) with no surviving pair in
+    any cell emits no row).
 
-    Both routes score through the package's one numpy scoring core,
+    Every route scores through the package's one numpy scoring core,
     ``knn._score_block_rows`` with ``by_label`` (``first_k`` with k = 1
     over a (row, label) key, every pair scored), so the output is
     bit-identical to the declarative ``_mins`` by construction:
@@ -506,17 +506,12 @@ def _conformal_min_kernel(
 
     from ..caching import register_cache
     from ..functions.distance import batch_kernel
+    from . import pairscan
     from .knn import _group_by_length, _score_block_rows
-    from .pairscan import (
-        broadcast_scan, choose_route, grid_scan, scoring_cpu_s, share, side_stats,
-    )
 
-    n_rows, max_len, ragged, _ = side_stats(proper, "_pf")
-    if not n_rows:
+    r = pairscan.route("kernel", (proper, proper.columns), budget=max_broadcast_bytes)
+    if r.name == "empty" or (kind in _CONFORMAL_POINT_KINDS and r.c_ragged):
         return None
-    if kind in _CONFORMAL_POINT_KINDS and ragged:
-        return None
-    route = choose_route(n_rows * max_len * 8, max_broadcast_bytes, None)
     # pair-volume gate (routing only — both branches are exact): the kernel
     # path pays a handful of fixed driver jobs (proper collect, two cache
     # populations), which at toy pair volumes costs more than the
@@ -524,24 +519,15 @@ def _conformal_min_kernel(
     # a ~2-4 s kernel floor -> breakeven ~2M calibration pairs). The
     # calibration count is ESTIMATED from the proper count and the split
     # ratio (n_cal ~ n_proper / (cal_mod - 1)) so routing adds no job.
-    if route == "kernel" and n_rows * n_rows // max(1, cal_mod - 1) < min_kernel_pairs:
+    if r.name == "kernel" and r.c_rows * r.c_rows // max(1, cal_mod - 1) < min_kernel_pairs:
         return None
     label_sql_type = proper.schema["_plab"].dataType.simpleString()
     elastic = batch_kernel(kind) if kind in _CONFORMAL_ELASTIC_KINDS else None
-    if route == "kernel":
-        rows = proper.select("_pf", "_plab").collect()
-        shared = share(proper.sparkSession, _group_by_length(
-            range(len(rows)), [r[0] for r in rows], [r[1] for r in rows]
-        ))
 
     def mins(side: DataFrame, fcol: str, keys: list) -> DataFrame:
         key_types = dict(side.dtypes)
-        schema = ", ".join(
-            [f"{k} {key_types[k]}" for k in keys]
-            + [f"_plab {label_sql_type}", "_dmin double"]
-        )
 
-        def score(groups, pdf):
+        def score(pdf, groups):
             out = _score_block_rows(
                 np.arange(len(pdf)), pdf[fcol].to_numpy(), groups, kind=kind,
                 elastic=elastic, k=1, excl=True, by_label=True,
@@ -550,38 +536,19 @@ def _conformal_min_kernel(
             found = pdf[keys].iloc[out["test_id"]].reset_index(drop=True)
             return found.assign(_plab=out["train_label"], _dmin=out["distance"])
 
-        if route == "kernel":
-            scored = broadcast_scan(side.select(*keys, fcol), shared, score, schema)
-        else:
-            n_s, len_s, _, _ = side_stats(side, fcol)
-            scored = grid_scan(
-                side,
-                proper,
-                q_key=keys[0],
-                c_key="_pid",
-                q_cols=[*keys, fcol],
-                c_cols=[F.col("_pf").alias(fcol), "_plab"],
-                q_rows=n_s,
-                c_rows=n_rows,
-                q_bytes=n_s * len_s * 8,
-                c_bytes=n_rows * max_len * 8,
-                cpu_s=scoring_cpu_s(kind, n_s * n_rows, max_len, exhaustive=True),
-                # np.asarray(list) not .to_numpy(), as in knn._knn_scan
-                cell=lambda sp, pp: score(_group_by_length(
-                    range(len(pp)), pp[fcol].to_numpy(), np.asarray(list(pp["_plab"]))
-                ), sp),
-                reduce=lambda cells: cells.groupBy(*keys, "_plab").agg(
-                    F.min("_dmin").alias("_dmin")
-                ),
-                schema=schema,
-            )
-        # Arrow's from_pandas turns a float NaN into NULL; the kernel never
-        # emits a legitimate NULL _dmin (pairless rows are skipped), so
-        # coalesce restores the NaN the declarative MIN would have produced
-        # (the motif.py profile_d sentinel pattern)
-        out = register_cache(scored.select(
-            *keys, "_plab", F.coalesce("_dmin", F.lit(float("nan"))).alias("_dmin")
-        ).cache())
+        scored = pairscan.scan(
+            r, (side, [*keys, fcol]), (proper, proper.columns),
+            kind=kind, cost=dict(exhaustive=True), pack=_group_by_length, score=score,
+            reduce=lambda cells: cells.groupBy(*keys, "_plab").agg(
+                F.min("_dmin").alias("_dmin")
+            ),
+            schema=", ".join(
+                [f"{k} {key_types[k]}" for k in keys]
+                + [f"_plab {label_sql_type}", "_dmin double"]
+            ),
+            dist="_dmin", budget=max_broadcast_bytes,
+        )
+        out = register_cache(scored.cache())
         # land the bounded (rows x labels) table before the main job: lazy
         # caches re-run the kernel per consuming branch (the knn_join_lb
         # phase-table lesson)

@@ -264,177 +264,70 @@ def _knn_scan(
     fastdtw_radius: int,
     max_broadcast_bytes: int,
 ) -> DataFrame:
-    """strategy='kernel' / 'reverse' / 'chunked' over the pair-scan layer
-    (operators/pairscan.py). Every route scores through the shared core
-    ``_score_block_rows`` (test rows are always the A operand) with the
-    batch DP built here by ``batch_kernel``, so cross-strategy
-    bit-identity holds by construction.
+    """strategy='kernel' / 'reverse' / 'chunked' through the pair-scan
+    router (operators/pairscan.py). Every route scores through the shared
+    core ``_score_block_rows`` (test rows are always the A operand) with
+    the batch DP built here by ``batch_kernel``, so cross-strategy
+    bit-identity holds by construction; per-batch and per-cell survivors
+    merge through ``pairscan.rerank``. The reference's unguarded Model-2
+    collect (Team11-Project.py:528) is what the router's byte gate
+    avoids.
 
-    - 'kernel': Model-2 broadcast semantics with pair-free Arrow transfer.
-      The declarative broadcast plan ships BOTH feature arrays through
-      Arrow for every pair; here the train matrix is a broadcast variable
-      and each Arrow batch carries only test rows, emitting only its top-k
-      (no window, no pair shuffle — transfer drops by ~N_train/k). The
-      driver collect is GUARDED: one stats aggregate estimates the train
-      matrix, and anything over ``max_broadcast_bytes`` goes through the
-      pair-scan gate instead (the reference's unguarded Model-2 collect at
-      Team11-Project.py:528 is the anti-pattern this avoids) — to
-      'reverse' when the test side fits budget // 8, else to 'chunked', or
-      for ragged POINT-metric corpora to the declarative shuffle plan.
-    - 'reverse' (r9, the serve regime): the test rows broadcast and ONE
-      mapInPandas pass streams the train table in place — zero exchange of
-      either side's arrays, train rows Arrow-decoded exactly once. A
-      bounded query workload against an arbitrarily large corpus moves
-      zero corpus bytes and shuffles only n_batches * k survivors per test.
-    - 'chunked' (r5, both sides over budget): the block grid; each cell
-      runs the same kernels, per-series wire copies drop from N_other to
-      n_blocks_other. When even that traffic is too much the answer is
-      knn_join_pruned / knn_join_lb, not a bigger brute force.
-
-    Reverse emits a per-batch top-k and re-ranks it globally; chunked
-    re-ranks its per-cell top-k only when the grid splits the train side
-    (``pairscan.grid_scan``). Tie order is (distance, label, id) ascending
-    with NaN distances last and null labels first, and the dist != 0
-    exclusion matches the declarative path. Ragged train
-    rides every route for the ELASTIC metrics (per-length rectangular
-    kernel calls, one emit over all groups); point metrics need fixed
-    length, and a test row of another length gets no neighbours under
-    ``exclude_zero`` (the declarative plan's NULL distances are dropped
-    there) and fails the call otherwise (it would rank them first).
+    Ragged train rides every route for the ELASTIC metrics (per-length
+    rectangular kernel calls, one emit over all groups). Point metrics
+    need fixed-length train: over budget, a ragged point-metric corpus
+    keeps the declarative shuffle plan, and an explicit 'kernel' or
+    'chunked' call on one is rejected. A test row of another length gets
+    no neighbours under ``exclude_zero`` (the declarative plan's NULL
+    distances are dropped there) and fails the call otherwise (it would
+    rank them first).
     """
-    import numpy as np
     import pandas as pd
 
-    from .pairscan import (
-        broadcast_scan, check_fits, choose_route, grid_scan, rerank,
-        scoring_cpu_s, share, side_stats,
-    )
+    from . import pairscan
 
     has_label = label_col is not None
-    label_type = dict(train.dtypes)[label_col] if has_label else None
     cols = ["test_id", "train_id"] + (["train_label"] if has_label else []) + ["distance", "rank"]
     schema = "test_id long, train_id long"
     if has_label:
-        schema += f", train_label {label_type}"
+        schema += f", train_label {dict(train.dtypes)[label_col]}"
     schema += ", distance double, rank int"
-    t_cols = [F.col(id_col).alias("_id"), F.col(features_col).alias("_f")]
-    r_cols = t_cols + ([F.col(label_col).alias("_lbl")] if has_label else [])
+    q = (test, [id_col, features_col])
+    c = (train, [id_col, features_col] + ([label_col] if has_label else []))
+    r = pairscan.route(strategy, c, budget=max_broadcast_bytes, q=q, nested=nested)
+    if r.name in ("kernel", "chunked") and r.c_ragged and kind not in ELASTIC_KINDS:
+        if strategy == "kernel" and r.name == "chunked":
+            # point metrics have no cross-length kernel: an over-budget
+            # ragged corpus keeps the declarative shuffle plan
+            return knn_join(
+                test, train, metric=kind, k=k, strategy="shuffle",
+                id_col=id_col, features_col=features_col,
+                label_col=label_col, exclude_zero=exclude_zero,
+                band=band, fastdtw_radius=fastdtw_radius,
+            )
+        raise ValueError(
+            f"strategy={strategy!r} needs fixed-length train series for "
+            f"metric {kind!r}"
+        )
     elastic = (
         batch_kernel(kind, band=band, radius=fastdtw_radius)
         if kind in ELASTIC_KINDS else None
     )
-    score = dict(kind=kind, elastic=elastic, k=k, excl=exclude_zero)
 
-    def test_stats():
-        n, length, _, ch = side_stats(test, features_col, nested=nested)
-        return n, length, ch, n * length * ch * 8
-
-    def topk(t_ids, t_feats, groups) -> pd.DataFrame:
-        out = _score_block_rows(t_ids, t_feats, groups, **score)
-        return pd.DataFrame({c: out[c] for c in cols})
-
-    def local_topk(t_ids, t_feats, rp: pd.DataFrame) -> pd.DataFrame:
-        # test rows against one train piece (a streamed batch or a grid
-        # cell). np.asarray(list) not .to_numpy(): pandas hands string
-        # labels as object dtype, which np.lexsort rejects
-        return topk(t_ids, t_feats, _group_by_length(
-            rp["_id"].to_numpy(dtype=np.int64),
-            rp["_f"].to_numpy(),
-            np.asarray(list(rp["_lbl"])) if has_label else None,
-        ))
-
-    def global_topk(scored: DataFrame) -> DataFrame:
-        ties = (["train_label"] if has_label else []) + ["train_id"]
-        return rerank(scored, "test_id", "distance", ties, k)
-
-    route = strategy
-    if strategy != "reverse":
-        # ONE stats pass over the (possibly huge) train side: size
-        # estimate, length spread and channels together
-        n_r, len_r, ragged, ch_r = side_stats(train, features_col, nested=nested)
-        if not n_r:
-            raise ValueError("empty train side")
-        if strategy == "kernel":
-            route = choose_route(
-                n_r * len_r * ch_r * 8, max_broadcast_bytes, lambda: test_stats()[3]
-            )
-        if route != "reverse" and ragged and kind not in ELASTIC_KINDS:
-            if strategy == "kernel" and route == "chunked":
-                # point metrics have no cross-length kernel: an over-budget
-                # ragged corpus keeps the declarative shuffle plan
-                return knn_join(
-                    test, train, metric=kind, k=k, strategy="shuffle",
-                    id_col=id_col, features_col=features_col,
-                    label_col=label_col, exclude_zero=exclude_zero,
-                    band=band, fastdtw_radius=fastdtw_radius,
-                )
-            raise ValueError(
-                f"strategy={strategy!r} needs fixed-length train series for "
-                f"metric {kind!r}"
-            )
-
-    spark = test.sparkSession
-    if route == "kernel":
-        rows = train.select(*r_cols).collect()
-        groups = _group_by_length(
-            [r[0] for r in rows],
-            [r[1] for r in rows],
-            [r[2] for r in rows] if has_label else None,
+    def score(pdf, groups):
+        out = _score_block_rows(
+            pdf[id_col].to_numpy(), pdf[features_col].to_numpy(), groups,
+            kind=kind, elastic=elastic, k=k, excl=exclude_zero,
         )
+        return pd.DataFrame({n: out[n] for n in cols})
 
-        def batch(groups, pdf):
-            return topk(pdf["_id"].to_numpy(), pdf["_f"].to_numpy(), groups)
-
-        scored = broadcast_scan(test.select(*t_cols), share(spark, groups), batch, schema)
-    elif route == "reverse":
-        check_fits(test_stats()[3], max_broadcast_bytes, "test")
-        rows = test.select(*t_cols).collect()
-
-        def batch(t, pdf):
-            t_ids, t_feats = t
-            if not len(pdf) or not t_ids:
-                return None
-            out = local_topk(t_ids, t_feats, pdf)
-            return out if len(out) else None
-
-        scored = global_topk(broadcast_scan(
-            train.select(*r_cols),
-            share(spark, ([r[0] for r in rows], [r[1] for r in rows])),
-            batch,
-            schema,
-        ))
-    else:
-        n_t, len_t, ch_t, t_bytes = test_stats()
-        if nested and n_t and ch_t != ch_r:
-            raise ValueError(
-                f"channel mismatch: test has {ch_t} channels, train has {ch_r}"
-            )
-        scored = grid_scan(
-            test,
-            train,
-            q_key=id_col,
-            c_key=id_col,
-            q_cols=t_cols,
-            c_cols=r_cols,
-            q_rows=n_t,
-            c_rows=n_r,
-            q_bytes=t_bytes,
-            c_bytes=n_r * len_r * ch_r * 8,
-            cpu_s=scoring_cpu_s(
-                kind, n_t * n_r, len_r, channels=ch_r, band=band,
-                radius=fastdtw_radius,
-            ),
-            cell=lambda tp, rp: local_topk(
-                tp["_id"].to_numpy(dtype=np.int64), tp["_f"].to_numpy(), rp
-            ),
-            reduce=global_topk,
-            schema=schema,
-        )
-    # Arrow's from_pandas turns the core's NaN distances into NULL; the
-    # core never emits a legitimate NULL (unequal point-metric lengths are
-    # dropped or rejected), so coalesce restores the declarative NaN
-    # (after the rerank, which ranks the NULLs last)
-    return scored.withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
+    ties = (["train_label"] if has_label else []) + ["train_id"]
+    return pairscan.scan(
+        r, q, c, kind=kind, cost=dict(band=band, radius=fastdtw_radius),
+        pack=_group_by_length, score=score,
+        reduce=lambda scored: pairscan.rerank(scored, "test_id", "distance", ties, k),
+        schema=schema, dist="distance", budget=max_broadcast_bytes, nested=nested,
+    )
 
 
 # pairs per scoring chunk: ~1,024 for the batch DPs, ~64K for the point

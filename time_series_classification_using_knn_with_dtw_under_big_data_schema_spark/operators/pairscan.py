@@ -4,16 +4,46 @@ past each other.
 
 The reference engine is one similarity join with two physical join
 strategies (a partitioned cross product and a broadcast nested loop), each
-feeding a per-key top-k. This module expresses that shape once, in three
-strategies, and the families supply only a batch or cell function around
-their scoring cores:
+feeding a per-key top-k. This module expresses that shape once, as a
+router over three strategies. A family hands ``route`` and ``scan`` its
+projected sides and its scoring, and nothing else:
 
-- **broadcast scan** — broadcast one side as a numpy payload and run one
-  ``mapInPandas`` pass over the other. With the candidate side broadcast
-  this is strategy='kernel'; with the query side broadcast and the
-  candidate table streamed in place it is strategy='reverse' (the serve
-  regime: zero exchange of either side's arrays).
-- **block grid** — strategy='chunked', for when neither side fits: each
+- the sides, each a (frame, columns) pair: the query side's columns are
+  its key first and its features last, with any payload between; the
+  candidate side's are (key, features[, label]). The router projects a
+  frame only where it streams or collects it;
+- a ``pack`` that turns candidate (ids, features, labels) into what its
+  scorer reads (``knn._group_by_length``'s per-length groups, ANN's
+  (ids, matrix));
+- a ``score(query rows, packed candidates)`` that returns a pandas frame
+  in the family's output schema, and the cross-cell ``reduce`` (the top-k
+  ``rerank``, conformal's MIN);
+- its cost kind (``scoring_cpu_s``), its broadcast wire itemsize, and a
+  query side to ``route`` when it has a reverse route.
+
+``route`` gathers the candidate side's stats in one aggregate job and
+picks the strategy:
+
+- an empty candidate side routes to 'empty': ``scan`` returns an empty
+  frame in the family's schema, as the declarative plans return no rows;
+- strategy='kernel' goes through ``choose_route``, the byte gate: the
+  candidate side broadcasts while it fits ``max_broadcast_bytes``;
+  otherwise the query side broadcasts while it fits ``budget // 8``;
+  otherwise the grid runs;
+- an explicit strategy='reverse' gathers no stats.
+
+A family's own gates (KNN's ragged point-metric fallback, conformal's
+pair-volume gate) read the returned ``Route``'s stats before ``scan``.
+``scan`` runs the route:
+
+- **broadcast scan** — broadcast one side and run one ``mapInPandas``
+  pass over the other. With the candidate side collected, packed and
+  broadcast this is 'kernel' (the broadcast is kept on the ``Route``, so
+  a second scan on it reuses it); with the query side broadcast and the
+  candidate table streamed in place it is 'reverse' (the serve regime:
+  zero exchange of either side's arrays), whose per-batch results
+  ``reduce`` merges.
+- **block grid** — 'chunked', for when neither side fits: each
   side is hash-assigned to blocks and replicated across the other side's
   block count, and one ``applyInPandas`` call scores each (query-block x
   candidate-block) cell. Traffic is ``~2|q||c|/block_bytes``, the
@@ -26,16 +56,17 @@ their scoring cores:
   one-cell grid meets in one task with no exchange, and when the
   candidate side is not split each cell's local result is final, so the
   caller's cross-cell reduction (a top-k rerank, a MIN) does not run.
-- **top-k** — one tie-order contract, (distance, label, id) ascending
-  with NaN distances last and null labels first, in two halves:
-  ``first_k`` is the numpy half every scoring core runs per batch or per
-  cell, and ``rerank`` the SQL half that reduces the reverse route's
-  per-batch and a split grid's per-cell survivors to the exact global
-  top-k.
 
-``choose_route`` is the byte gate between them: the candidate side
-broadcasts while it fits ``max_broadcast_bytes``; otherwise the query side
-broadcasts while it fits ``budget // 8``; otherwise the grid runs.
+Arrow turns the scorers' NaN distances into NULL; ``scan`` restores NaN
+on the family's distance column as its last step, after any reduction
+(which ranks NULLs last), so every route returns the declarative plans'
+NaN. No scorer emits a legitimate NULL distance.
+
+**top-k** is one tie-order contract, (distance, label, id) ascending with
+NaN distances last and null labels first, in two halves: ``first_k`` is
+the numpy half every scoring core runs per batch or per cell, and
+``rerank`` the SQL half that reduces the reverse route's per-batch and a
+split grid's per-cell survivors to the exact global top-k.
 
 Every broadcast goes through ``share``, which registers it with the
 innermost ``caching.cache_scope`` so a long-lived session can release it.
@@ -44,6 +75,7 @@ innermost ``caching.cache_scope`` so a long-lived session can release it.
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 from typing import Callable, Optional
 
 import numpy as np
@@ -364,6 +396,155 @@ def grid_scan(
     )
     return reduce(scored) if bc > 1 else scored
 
+
+@dataclass
+class Route:
+    """The strategy ``route`` chose — 'kernel', 'reverse', 'chunked' or
+    'empty' — and the candidate side's stats behind it (zeros on an
+    explicit 'reverse', which gathers none). ``shared`` holds the kernel
+    route's broadcast once ``scan`` has collected it."""
+
+    name: str
+    c_rows: int = 0
+    c_len: int = 0
+    c_ragged: bool = False
+    c_channels: int = 1
+    shared: object = None
+
+
+def _project(side) -> DataFrame:
+    """A side's (frame, columns) as a frame of just those columns. A frame
+    that already is that projection is used as it is: every new
+    DataFrame costs the driver an analysis pass."""
+    df, cols = side
+    return df if cols == df.columns else df.select(*cols)
+
+
+def _side_bytes(side, nested: bool, itemsize: int) -> int:
+    """Estimated bytes of a query side's features (its last column) at
+    ``itemsize`` per element: one aggregate job."""
+    n, length, _, ch = side_stats(side[0], side[1][-1], nested=nested)
+    return n * length * ch * itemsize
+
+
+def route(
+    strategy: str,
+    c,
+    *,
+    budget: int,
+    q=None,
+    nested: bool = False,
+    itemsize: int = 8,
+) -> Route:
+    """Pick the route of a pair scan over candidate side ``c``, a (frame,
+    [key, features(, label)]) pair. Every strategy but 'reverse' runs one
+    stats job on ``c``; an empty ``c`` routes to 'empty'.
+    strategy='kernel' goes through the byte gate at ``itemsize`` bytes
+    per element (the kernel's broadcast wire), with the query side ``q``
+    as the reverse option when the family has that route (a second stats
+    job, run only past the first check)."""
+    if strategy == "reverse":
+        return Route("reverse")
+    n, length, ragged, ch = side_stats(c[0], c[1][1], nested=nested)
+    if not n:
+        return Route("empty")
+    if strategy == "kernel":
+        strategy = choose_route(
+            n * length * ch * itemsize, budget,
+            None if q is None else lambda: _side_bytes(q, nested, itemsize),
+        )
+    return Route(strategy, n, length, ragged, ch)
+
+
+def _candidates(pdf: pd.DataFrame, names: list):
+    """(ids, features, labels or None) of candidate rows in a pandas batch
+    or cell. np.asarray(list) not .to_numpy() for the labels: pandas hands
+    string labels as object dtype, which np.lexsort rejects."""
+    return (
+        pdf[names[0]].to_numpy(dtype=np.int64),
+        pdf[names[1]].to_numpy(),
+        np.asarray(list(pdf[names[2]])) if len(names) > 2 else None,
+    )
+
+
+def scan(
+    r: Route,
+    q,
+    c,
+    *,
+    kind: str,
+    pack: Callable,
+    score: Callable[[pd.DataFrame, object], pd.DataFrame],
+    reduce: Callable[[DataFrame], DataFrame],
+    schema: str,
+    dist: str,
+    budget: int,
+    cost: Optional[dict] = None,
+    nested: bool = False,
+    block_bytes: int = 64 << 20,
+) -> DataFrame:
+    """Run route ``r`` of query side ``q``, a (frame, [key, ...,
+    features]) pair, against candidate side ``c``, a (frame, [key,
+    features(, label)]) pair. ``pack(ids, features, labels)`` turns
+    candidate rows into what ``score(query rows, packed)`` reads;
+    ``score`` gets a pandas frame of the query side's columns and returns
+    one in ``schema``. ``reduce`` merges per-batch (reverse) and per-cell
+    (split grid) results. ``kind`` and ``cost`` (``band``, ``radius``,
+    ``exhaustive``) price the scoring for the grid (``scoring_cpu_s``).
+    The last step restores NaN on the ``dist`` column."""
+    spark = q[0].sparkSession
+    q_cols, c_cols = q[1], c[1]
+    if r.name == "empty":
+        return spark.createDataFrame([], schema)
+    if r.name == "kernel":
+        if r.shared is None:
+            rows = _project(c).collect()
+            cols = [[row[i] for row in rows] for i in range(len(c_cols))]
+            r.shared = share(spark, pack(*cols[:2], cols[2] if len(cols) > 2 else None))
+        scored = broadcast_scan(
+            _project(q), r.shared, lambda packed, pdf: score(pdf, packed), schema
+        )
+    elif r.name == "reverse":
+        check_fits(_side_bytes(q, nested, 8), budget, "query")
+        queries = pd.DataFrame.from_records(_project(q).collect(), columns=q_cols)
+
+        def batch(qdf, pdf):
+            if not len(pdf) or not len(qdf):
+                return None
+            out = score(qdf, pack(*_candidates(pdf, c_cols)))
+            return out if len(out) else None
+
+        scored = reduce(broadcast_scan(_project(c), share(spark, queries), batch, schema))
+    else:
+        n_q, len_q, _, ch_q = side_stats(q[0], q_cols[-1], nested=nested)
+        if nested and n_q and ch_q != r.c_channels:
+            raise ValueError(
+                f"channel mismatch: query side has {ch_q} channels, "
+                f"candidate side has {r.c_channels}"
+            )
+        # the candidate key and features ride the query side's column
+        # names, so the two sides share the union's payload columns
+        names = [q_cols[0], q_cols[-1], *c_cols[2:]]
+        scored = grid_scan(
+            q[0],
+            c[0],
+            q_key=q_cols[0],
+            c_key=c_cols[0],
+            q_cols=q_cols,
+            c_cols=[F.col(a).alias(b) for a, b in zip(c_cols, names)],
+            q_rows=n_q,
+            c_rows=r.c_rows,
+            q_bytes=n_q * len_q * ch_q * 8,
+            c_bytes=r.c_rows * r.c_len * r.c_channels * 8,
+            cpu_s=scoring_cpu_s(
+                kind, n_q * r.c_rows, r.c_len, channels=r.c_channels, **(cost or {})
+            ),
+            cell=lambda qp, cp: score(qp, pack(*_candidates(cp, names))),
+            reduce=reduce,
+            schema=schema,
+            block_bytes=block_bytes,
+        )
+    return scored.withColumn(dist, F.coalesce(dist, F.lit(float("nan"))))
 
 def first_k(dist, rows, ids, labels, k: int, keep=None):
     """The numpy half of the top-k contract: the first ``k`` candidates

@@ -62,114 +62,51 @@ def _ann_scan(
     max_broadcast_bytes: int,
     block_bytes: int,
 ) -> DataFrame:
-    """strategy='kernel' / 'reverse' / 'chunked' over the pair-scan layer
-    (operators/pairscan.py). Inputs: q = (query_id, _qv), c = (neighbor_id,
-    _cv) vector columns; output (query_id, neighbor_id, rank, _d).
+    """strategy='kernel' / 'reverse' / 'chunked' through the pair-scan
+    router (operators/pairscan.py). Inputs: q = (query_id, _qv), c =
+    (neighbor_id, _cv) vector columns; output (query_id, neighbor_id,
+    rank, _d).
 
     ``scorer(qids, Q, cids, C, k, exclude_self) -> pandas.DataFrame
-    (query_id, neighbor_id, rank, _d)`` is the family's
-    scoring core, shared verbatim by every route (queries are always the A
-    operand), so results are bit-identical across strategies by
-    construction. 'kernel' broadcasts the corpus matrix as ``wire``-dtype
-    numpy (its gate sizes it at that itemsize per element) and its collect
-    is guarded by ``max_broadcast_bytes``: an over-budget corpus never
-    touches the driver, routing to 'reverse' (broadcast the QUERY matrix,
-    stream the corpus in place — the embedding serve regime) when the
-    query side fits budget // 8, else to 'chunked' (the block grid: one
-    corpus shuffle, no broadcast variable). If even the grid's traffic is
-    too much, the answer is an index (IVF/PQ/LSH in this module), not a
-    bigger brute force.
+    (query_id, neighbor_id, rank, _d)`` is the family's scoring core,
+    shared verbatim by every route (queries are always the A operand),
+    so results are bit-identical across strategies by construction. The
+    corpus matrix is packed as ``wire``-dtype numpy, and the byte gate
+    sizes the kernel's broadcast at that itemsize. If even the grid's
+    traffic is too much, the answer is an index (IVF/PQ/LSH in this
+    module), not a bigger brute force.
     """
-    from .pairscan import (
-        broadcast_scan, check_fits, choose_route, grid_scan, rerank,
-        scoring_cpu_s, share, side_stats,
+    from . import pairscan
+
+    def pack(ids, feats, _):
+        return (
+            np.asarray(ids, dtype=np.int64),
+            np.stack([np.asarray(f, dtype=wire) for f in feats]),
+        )
+
+    def score(pdf, corpus):
+        return scorer(
+            pdf["query_id"].to_numpy(dtype=np.int64),
+            [np.asarray(f, dtype=np.float64) for f in pdf["_qv"]],
+            *corpus, k, exclude_self,
+        )
+
+    q_cols, c_cols = ["query_id", "_qv"], ["neighbor_id", "_cv"]
+    r = pairscan.route(
+        strategy, (c, c_cols), budget=max_broadcast_bytes, q=(q, q_cols),
+        itemsize=np.dtype(wire).itemsize,
     )
-
-    spark = q.sparkSession
-    schema = "query_id long, neighbor_id long, rank int, _d double"
-    if strategy != "reverse":
-        nc, dc, _, _ = side_stats(c, "_cv")
-        if not nc:
-            raise ValueError("empty corpus side")
-    if strategy == "kernel":
-        wire_bytes = np.dtype(wire).itemsize
-
-        def q_bytes():
-            nq, dq, _, _ = side_stats(q, "_qv")
-            return nq * dq * wire_bytes
-
-        strategy = choose_route(nc * dc * wire_bytes, max_broadcast_bytes, q_bytes)
-    if strategy == "kernel":
-        rows = c.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        M = np.stack([np.asarray(r[1], dtype=wire) for r in rows])
-
-        def batch(corpus, pdf):
-            b_ids, B = corpus
-            return scorer(
-                pdf["query_id"].to_numpy(dtype=np.int64),
-                [np.asarray(f, dtype=np.float64) for f in pdf["_qv"]],
-                b_ids, B, k, exclude_self,
-            )
-
-        return broadcast_scan(q, share(spark, (ids, M)), batch, schema)
-    if np.dtype(wire) != np.float64:
+    if r.name != "kernel" and np.dtype(wire) != np.float64:
         # the reverse and grid routes ship double vectors
         q = q.select("query_id", _as_double(F.col("_qv")).alias("_qv"))
         c = c.select("neighbor_id", _as_double(F.col("_cv")).alias("_cv"))
-
-    def ids_matrix(pdf):
-        return (
-            pdf["_id"].to_numpy(dtype=np.int64),
-            np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]]),
-        )
-
-    def global_topk(scored: DataFrame) -> DataFrame:
-        return rerank(scored, "query_id", "_d", ["neighbor_id"], k)
-
-    if strategy == "reverse":
-        nq, dq, _, _ = side_stats(q, "_qv")
-        check_fits(nq * dq * 8, max_broadcast_bytes, "query")
-        rows = q.collect()
-        qids = np.array([r[0] for r in rows], dtype=np.int64)
-        Q = (
-            np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-            if rows else np.empty((0, 0))
-        )
-
-        def batch(queries, pdf):
-            b_qids, b_Q = queries
-            if not len(pdf) or not len(b_qids):
-                return None
-            return scorer(b_qids, b_Q, *ids_matrix(pdf), k, exclude_self)
-
-        return global_topk(broadcast_scan(
-            c.select(F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")),
-            share(spark, (qids, Q)), batch, schema,
-        ))
-    nq, dq, _, _ = side_stats(q, "_qv")
-    # elem bytes 8: block sizing bounds the SCORER's working set, and
-    # quantized codes are widened to int64 inside the block
-    return grid_scan(
-        q,
-        c,
-        q_key="query_id",
-        c_key="neighbor_id",
-        q_cols=[F.col("query_id").alias("_id"), F.col("_qv").alias("_v")],
-        c_cols=[F.col("neighbor_id").alias("_id"), F.col("_cv").alias("_v")],
-        q_rows=nq,
-        c_rows=nc,
-        q_bytes=nq * dq * 8,
-        c_bytes=nc * dc * 8,
-        cpu_s=scoring_cpu_s(
-            "ann_quantized" if scorer is _quantized_cos_block_scorer
-            else "ann_brute",
-            nq * nc, dc,
-        ),
-        cell=lambda qp, cp: scorer(*ids_matrix(qp), *ids_matrix(cp), k, exclude_self),
-        reduce=global_topk,
-        schema=schema,
-        block_bytes=block_bytes,
+    return pairscan.scan(
+        r, (q, q_cols), (c, c_cols),
+        kind="ann_quantized" if scorer is _quantized_cos_block_scorer else "ann_brute",
+        pack=pack, score=score,
+        reduce=lambda scored: pairscan.rerank(scored, "query_id", "_d", ["neighbor_id"], k),
+        schema="query_id long, neighbor_id long, rank int, _d double",
+        dist="_d", budget=max_broadcast_bytes, block_bytes=block_bytes,
     )
 
 

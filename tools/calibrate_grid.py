@@ -16,9 +16,10 @@
   daemon and the workers it forked), so it counts neither the JVM nor
   this driver.
 - ``_CPU_S_PER_UNIT``: each scoring family's CPU seconds per work unit
-  (``pairscan._work_units``), timed in-process with ``time.process_time``
-  on seeded random walks: the KNN scoring core ``_score_block_rows`` for
-  the time-series families, the ANN scorers for the embedding ones.
+  (``pairscan._work_units``), timed with ``time.process_time`` on seeded
+  random walks, each family in a fresh spawned process: the KNN scoring
+  core ``_score_block_rows`` for the time-series families, the ANN
+  scorers for the embedding ones.
 
 Usage: python3 tools/calibrate_grid.py [--scale S] [--reps N]
 
@@ -43,6 +44,8 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# this directory too, so a spawned child can import this tool by name
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 if __name__ == "__main__":
     # a Python worker runs single-threaded BLAS (Spark sets OMP_NUM_THREADS
@@ -203,27 +206,49 @@ def _scorer(family: str, kind: str, nq: int, nc: int, length: int, opts: dict):
     )
 
 
-def cpu_s_per_unit(scale: float, reps: int) -> dict:
-    """{family: CPU seconds per work unit}, the median of ``reps`` timed
-    calls after one warm-up call (which also compiles the C kernels)."""
+def _family_cpu_s_per_unit(
+    family: str, kind: str, nq: int, nc: int, length: int, opts: dict, reps: int
+) -> float:
+    """CPU seconds per work unit of one family: the median of ``reps``
+    timed calls after one warm-up call (which also compiles the C
+    kernels)."""
     from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import (
         _work_units,
     )
 
+    call = _scorer(family, kind, nq, nc, length, opts)
+    call()
+    times = []
+    for _ in range(reps):
+        t0 = time.process_time()
+        call()
+        times.append(time.process_time() - t0)
+    units = nq * nc * _work_units(
+        family, length, band=opts.get("band"), radius=opts.get("radius", 1)
+    )
+    return statistics.median(times) / units
+
+
+def cpu_s_per_unit(scale: float, reps: int) -> dict:
+    """{family: CPU seconds per work unit}, each family timed in a fresh
+    spawned process. In one process a reading can depend on what ran
+    before it (one host read the point family at about half its solo
+    cost after the gram family), so no family inherits another's heap,
+    allocator state or caches."""
+    import importlib
+    import multiprocessing
+
+    # the tool by its module name, whose functions a spawned child can
+    # unpickle (this module may have been loaded from its path)
+    tool = importlib.import_module("calibrate_grid")
+    ctx = multiprocessing.get_context("spawn")
     out = {}
     for family, kind, nq, nc, length, opts in FAMILIES:
         nq, nc = max(2, round(nq * scale)), max(2, round(nc * scale))
-        call = _scorer(family, kind, nq, nc, length, opts)
-        call()
-        times = []
-        for _ in range(reps):
-            t0 = time.process_time()
-            call()
-            times.append(time.process_time() - t0)
-        units = nq * nc * _work_units(
-            family, length, band=opts.get("band"), radius=opts.get("radius", 1)
-        )
-        out[family] = statistics.median(times) / units
+        with ctx.Pool(1) as pool:
+            out[family] = pool.apply(
+                tool._family_cpu_s_per_unit, (family, kind, nq, nc, length, opts, reps)
+            )
     return out
 
 
