@@ -1,6 +1,7 @@
 """Pair-scan layer (operators/pairscan.py), fast lane: the eager SQL
 executions each KNN, ANN and conformal route (and each pruned-family
-call) fires while its plan is built, an empty candidate side and NaN
+call) fires while its plan is built, and that each is one Spark job with
+no exchange, side_stats against numpy, an empty candidate side and NaN
 ANN distances on every route against the declarative plan, n_coeffs
 bounds checked before any job, the cheap grid-agreement checks (block grid vs broadcast
 kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
@@ -39,6 +40,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     _score_block_rows,
 )
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import pairscan
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators import sax as sax_mod
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.pairscan import first_k
 from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.operators.similarity import (
     ann_brute_topk,
@@ -65,6 +67,50 @@ def _eager_executions(spark, build) -> int:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     return sum(execs.apply(i).description() == label for i in range(execs.size()))
+
+
+def _eager_shapes(spark, build) -> list:
+    """(Spark jobs, physical plan) of each SQL execution fired while
+    ``build()`` runs, read as ``_eager_executions`` reads them."""
+    sc = spark.sparkContext
+    label = f"pairscan-shape:{uuid.uuid4().hex}"
+    sc.setJobDescription(label)
+    try:
+        build()
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    found = [execs.apply(i) for i in range(execs.size())]
+    return [
+        (e.jobs().size(), e.physicalPlanDescription())
+        for e in found if e.description() == label
+    ]
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda q, c, te, tr: knn_join(te, tr, k=3, strategy="kernel"),
+        lambda q, c, te, tr: knn_join(te, tr, k=3, strategy="kernel", max_broadcast_bytes=64),
+        lambda q, c, te, tr: ann_brute_topk(q, c, k=5, strategy="kernel"),
+        lambda q, c, te, tr: ann_brute_topk(q, c, k=5, strategy="kernel", max_broadcast_bytes=64),
+        lambda q, c, te, tr: conformal_knn(te, tr, min_kernel_pairs=0),
+        lambda q, c, te, tr: sax_mod._boss_hostile_input(tr, te, "features"),
+    ],
+    ids=["knn-kernel", "knn-grid", "ann-kernel", "ann-grid", "conformal-kernel", "boss-gate"],
+)
+def test_eager_executions_are_one_job_without_exchange(spark, har_dfs, emb, call):
+    """Every eager routing execution (stats reads, candidate collects,
+    cache landings) runs as one Spark job with no exchange in its plan.
+    The query side is a filter, not a ``limit``, whose own plan would
+    hold an exchange."""
+    train_df, test_df = har_dfs
+    q = emb.filter(F.col("vec_id") < 23)
+    shapes = _eager_shapes(spark, lambda: call(q, emb, test_df, train_df))
+    assert shapes
+    for jobs, plan in shapes:
+        assert jobs == 1 and "Exchange" not in plan, plan
 
 
 @pytest.mark.parametrize(
@@ -903,3 +949,29 @@ def test_fuzz_sweep_grid():
     """tools/fuzz_sweep.py grid: every forced (bq, bc) in {1, 2, 3}^2 x
     metric x exclude_zero equals the all-pairs numpy reference."""
     assert _tool("fuzz_sweep").sweep_grid(72, 99) == 0
+
+
+@pytest.mark.parametrize("case", ["flat", "ragged", "empty", "nulls", "nested"])
+def test_side_stats_matches_numpy(spark, case):
+    """side_stats' (rows, max length, ragged, channels) against numpy on
+    a multi-partition side; NULL series count as rows, not lengths."""
+    rng = np.random.default_rng(3)
+    nested = case == "nested"
+    lengths = {"flat": [6] * 9, "ragged": [3, 7, 5] * 3, "empty": [], "nulls": [4] * 6 + [None] * 3,
+               "nested": [5] * 9}[case]
+    rows = [
+        (i, None if n is None else (
+            [[float(x), 1.0] for x in rng.normal(size=n)] if nested else [float(x) for x in rng.normal(size=n)]
+        ))
+        for i, n in enumerate(lengths)
+    ]
+    schema = f"id long, f {'array<array<double>>' if nested else 'array<double>'}"
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    known = [n for n in lengths if n is not None]
+    want = (
+        len(lengths),
+        max(known, default=0),
+        not known or min(known) != max(known),
+        2 if nested else 1,
+    )
+    assert pairscan.side_stats(df, "f", nested=nested) == want

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import char_hash, tokens
+from ..plans.eager import agg_row
 from .skew import fan_out
 
 __all__ = ["train_bpe", "bpe_encode", "apply_merge"]
@@ -423,9 +424,7 @@ def train_bpe(
     # the vocab size estimate serves BOTH the driver-path guard and the
     # distributed loop's parallelism sizing, so it is always computed (it
     # reads the cached word count — no extra corpus pass)
-    est = words.agg(
-        (F.sum(F.length("_w")) * 8 + F.count(F.lit(1)) * 64).alias("_est")
-    ).first()["_est"]
+    est = agg_row(words, est=F.sum(F.length("_w")) * 8 + F.count(F.lit(1)) * 64)["est"]
     if est is None:
         words.unpersist()
         return []
@@ -556,13 +555,14 @@ def train_bpe(
                 if not fits:
                     # the guard job runs only when the whole-vocab estimate
                     # doesn't already prove the subset fits
-                    est_sub = aff.agg(
-                        F.sum(
+                    est_sub = agg_row(
+                        aff,
+                        e=F.sum(
                             F.length(F.concat_ws("", "_syms"))
                             + F.size("_syms") * 16
                             + F.lit(64)
-                        ).alias("_e")
-                    ).first()["_e"]
+                        ),
+                    )["e"]
                     fits = est_sub is not None and est_sub <= max_driver_vocab_bytes
                 if fits:
                     sub = [(r["_syms"], r["_freq"]) for r in aff.collect()]

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from .skew import fan_out
 from ..caching import register_cache
+from ..plans.eager import agg_row, count_rows
 from ..functions.text import (
     HASH_BASE,
     HASH_P,
@@ -378,7 +379,7 @@ def dedup_components(
     ).distinct().cache()
     register_cache(sym)
     id_type = pairs.schema["id_a"].dataType
-    n_edges = sym.count() // 2
+    n_edges = count_rows(sym) // 2
     if n_edges <= local_threshold:
         # collect the (cached) symmetric set — both directions is 2x the
         # bytes but zero recompute; union-find is direction-insensitive
@@ -425,8 +426,9 @@ def dedup_components(
     )
     # convergence probe: labels only ever DECREASE (min-propagation), so the
     # exact integer sum of components strictly decreases until fixpoint —
-    # one agg job per round instead of a labels-vs-labels join+count
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
+    # one single-stage scan per round (agg_row) instead of a
+    # labels-vs-labels join+count
+    prev_sum = agg_row(labels, s=F.sum("component"))["s"]
     reliable_dir = docs.sparkSession.sparkContext.getCheckpointDir()
     for rnd in range(1, max_iterations + 1):
         msgs = (
@@ -444,7 +446,7 @@ def dedup_components(
             labels = labels.checkpoint()
         else:
             labels = labels.localCheckpoint()
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+        cur_sum = agg_row(labels, s=F.sum("component"))["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -47,6 +47,7 @@ from ..functions.distance import (
     DISTANCES, ELASTIC_KINDS, _grouped_pairs_udf, batch_kernel, sq_euclidean,
     with_distance,
 )
+from ..plans.eager import count_rows
 from .topk import check_k, topk_per_key
 from .vote import majority_vote
 
@@ -1033,7 +1034,7 @@ def _filter_verify(
     # branches of ONE DAG and re-runs the expensive kernel per consumer
     # (measured 5x the end-to-end cost at 44k pairs). One tiny action
     # materializes all three transitively.
-    thresh.count()
+    count_rows(thresh)
 
     # phase 3: any unscored pair the bound cannot rule out. LEFT join:
     # thresh only has rows for tests with >=1 scored phase-1 survivor —

@@ -21,8 +21,9 @@ projected sides and its scoring, and nothing else:
 - its cost kind (``scoring_cpu_s``), its broadcast wire itemsize, and a
   query side to ``route`` when it has a reverse route.
 
-``route`` gathers the candidate side's stats in one aggregate job and
-picks the strategy:
+``route`` gathers the candidate side's stats (``side_stats``: one
+observed scan through ``plans.eager.agg_row``, one Spark job in one
+stage with no exchange) and picks the strategy:
 
 - an empty candidate side routes to 'empty': ``scan`` returns an empty
   frame in the family's schema, as the declarative plans return no rows;
@@ -86,6 +87,7 @@ from pyspark.sql.types import DataType
 
 from ..caching import register_broadcast
 from ..functions.distance import ELASTIC_KINDS
+from ..plans.eager import agg_row
 from .topk import topk_per_key
 
 # CPU one more grid cell costs: the step from a one-cell grid to a
@@ -233,17 +235,16 @@ def _grid_split(
 def side_stats(
     df: DataFrame, fcol: str, *, nested: bool = False
 ) -> "tuple[int, int, bool, int]":
-    """(rows, max length, ragged, channels) of one side in ONE
-    single-stage aggregate job. ``ragged`` is True unless every series
-    has the same non-null length (min == max; an empty side is ragged);
-    channels is 1 for flat series."""
+    """(rows, max length, ragged, channels) of one side, read by
+    ``plans.eager.agg_row``: one Spark job in one stage, which scans only
+    ``fcol``. ``ragged`` is True unless every series has the same
+    non-null length (min == max; an empty side is ragged); channels is 1
+    for flat series. NULL series count as rows, not as lengths."""
     size = F.size(fcol)
-    row = df.agg(
-        F.count(F.lit(1)), F.max(size), F.min(size),
-        F.max(F.size(F.element_at(fcol, 1))) if nested else F.lit(1),
-    ).first()
-    ragged = row[2] is None or row[1] != row[2]
-    return int(row[0] or 0), int(row[1] or 0), ragged, int(row[3] or 1)
+    chans = {"ch": F.max(F.size(F.element_at(fcol, 1)))} if nested else {}
+    row = agg_row(df, n=F.count(F.lit(1)), hi=F.max(size), lo=F.min(size), **chans)
+    ragged = row["lo"] is None or row["hi"] != row["lo"]
+    return int(row["n"]), int(row["hi"] or 0), ragged, int(row.get("ch") or 1)
 
 
 def choose_route(
@@ -422,7 +423,7 @@ def _project(side) -> DataFrame:
 
 def _side_bytes(side, nested: bool, itemsize: int) -> int:
     """Estimated bytes of a query side's features (its last column) at
-    ``itemsize`` per element: one aggregate job."""
+    ``itemsize`` per element: one ``side_stats`` scan."""
     n, length, _, ch = side_stats(side[0], side[1][-1], nested=nested)
     return n * length * ch * itemsize
 

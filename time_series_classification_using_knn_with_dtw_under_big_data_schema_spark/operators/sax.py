@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import paa, znorm
+from ..plans.eager import agg_row, count_rows
 from .topk import topk_per_key
 from .vote import majority_vote
 
@@ -333,8 +334,8 @@ def _boss_window_coefs(X, m: int, tabs):
 
 def _boss_hostile_input(train, test, features_col: str) -> bool:
     """True when any row of either side carries a null / NaN /
-    large-magnitude element (both sides in one aggregate, one SQL
-    execution) —
+    large-magnitude element (both sides in one observed scan,
+    ``plans.eager.agg_row``: one SQL execution, one job) —
     inputs whose semantics the Arrow kernels cannot replicate: Arrow folds
     SQL NULL elements into NaN (the declarative folds propagate NULL,
     which the MCB binning sends to digit '3' via null comparisons), and
@@ -354,7 +355,7 @@ def _boss_hostile_input(train, test, features_col: str) -> bool:
             ).alias("_h")
         )
 
-    return bool(hostile(train).unionByName(hostile(test)).agg(F.max("_h")).first()[0])
+    return bool(agg_row(hostile(train).unionByName(hostile(test)), h=F.max("_h"))["h"])
 
 
 def _boss_hists_kernel(
@@ -676,8 +677,8 @@ def boss_classify(
     # land the bounded histograms before the distance job (the knn_join_lb
     # phase-table lesson: lazy caches re-run the subtree per consuming
     # branch within one job)
-    th.count()
-    rh.count()
+    count_rows(th)
+    count_rows(rh)
     tn2 = th.groupBy("_id").agg(
         F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("_n2")
     ).select(F.col("_id").alias("test_id"), "_n2")
