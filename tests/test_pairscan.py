@@ -8,12 +8,15 @@ kernel, bit-for-bit), the scoring core's empty-result dtype, ties across
 train length groups on every route, the budget guard, the Gram
 filter's bit-identity with the exhaustive euclidean fold, the point
 metrics' distance bits on random floats and their handling of test rows
-of another length on every KNN route, null labels
+of another length on every KNN route, NULL series on every KNN route
+(dropped under exclude_zero, an error naming the side otherwise),
+``plans.eager.agg_row`` against ``agg().first()``, null labels
 ranked first on every KNN route, knn_join_lb's bound evaluated once per
 pair, the block grid's CPU-based sizing (with a forced multi-cell grid
 checked against the kernel route, and the calibration tool run at tiny
-sizes), and the phases the grid skips: no exchange for one cell, no
-cross-cell reduction when the candidate side is not split."""
+sizes), the CPU-split tool at smoke size, and the phases the grid skips:
+no exchange for one cell, no cross-cell reduction when the candidate
+side is not split."""
 
 from __future__ import annotations
 
@@ -46,6 +49,7 @@ from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.o
     ann_brute_topk,
     ann_quantized_topk,
 )
+from time_series_classification_using_knn_with_dtw_under_big_data_schema_spark.plans.eager import agg_row
 
 
 def _collect(df):
@@ -660,6 +664,58 @@ def test_point_metric_test_rows_of_another_length(spark, kind):
                 loose.collect()
 
 
+
+@pytest.mark.parametrize("exclude_zero", [True, False])
+@pytest.mark.parametrize("metric", ["euclidean", "dtw"])
+def test_null_series_on_every_route(spark, metric, exclude_zero):
+    """One NULL train series (id 6) and one NULL test series (id 101).
+    The declarative plan's distance to a NULL series is NULL: under
+    exclude_zero ``d != 0`` drops those pairs, so on every route the
+    NULL test series gets no neighbours and the NULL train series is no
+    one's neighbour. Without it the declarative plan ranks the NULLs
+    first, and the pair-scan routes fail naming the side instead."""
+    schema = "series_id long, features array<double>, label string"
+    train_rows = [(i, [float(i), 1.0, float(i % 3)], "ab"[i % 2]) for i in range(6)]
+    test_rows = [(100, [0.5, 1.0, 2.0], "t"), (102, [1.0, 0.0, 3.0], "t")]
+    train = spark.createDataFrame(train_rows + [(6, None, "a")], schema)
+    test = spark.createDataFrame(test_rows + [(101, None, "t")], schema)
+    want = _collect(knn_join(test, train, metric=metric, k=2, exclude_zero=exclude_zero))
+    routes = ("kernel", "reverse", "chunked")
+    if exclude_zero:
+        assert len(want) == 4 and {r[0] for r in want} == {100, 102}
+        assert 6 not in {r[1] for r in want}
+        for strategy in routes:
+            got = knn_join(test, train, metric=metric, k=2, strategy=strategy)
+            assert _collect(got) == want, strategy
+        return
+    assert {(r[0], r[1]) for r in want if r[3] is None and r[4] == 1} >= {(100, 6), (101, 0)}
+    only_train = spark.createDataFrame(test_rows, schema)
+    only_test = spark.createDataFrame(train_rows, schema)
+    for strategy in routes:
+        for te, tr, side in ((only_train, train, "train"), (test, only_test, "test")):
+            with pytest.raises(Exception, match=f"the {side} side holds a NULL series"):
+                knn_join(
+                    te, tr, metric=metric, k=2, strategy=strategy, exclude_zero=False
+                ).collect()
+
+
+@pytest.mark.parametrize("case", ["multi-partition", "empty"])
+def test_agg_row_matches_agg_first(spark, case):
+    """``agg_row`` reads the row ``agg().first()`` reads (an empty frame:
+    count 0, NULL sum and max), in one Spark job with no exchange."""
+    df = spark.range(0, 40 if case == "multi-partition" else 0, numPartitions=4).select(
+        (F.col("id") % 7).alias("v"),
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") * 0.5).alias("x"),
+    )
+    aggs = dict(n=F.count(F.lit(1)), s=F.sum("v"), hi=F.max("x"), nx=F.count("x"))
+    want = df.agg(*[c.alias(n) for n, c in aggs.items()]).first().asDict()
+    got = {}
+    shapes = _eager_shapes(spark, lambda: got.update(agg_row(df, **aggs)))
+    assert got == want
+    assert [jobs for jobs, _ in shapes] == [1]
+    assert "Exchange" not in shapes[0][1], shapes[0][1]
+
+
 # --- block-grid sizing: the CPU rule, the memory floors, the cap --------
 
 _GRID_EUCLID = dict(nq=1000, nc=3000, L=128)  # perfbench grid_euclid
@@ -943,6 +999,18 @@ def test_calibrate_grid_tool_runs(spark):
     assert set(out["cpu_s_per_unit"]) == set(pairscan._CPU_S_PER_UNIT)
     assert all(v > 0 for v in out["cpu_s_per_unit"].values()), out
 
+
+def test_cpu_split_tool_runs(spark):
+    """tools/cpu_split.py on the smoke-size grid_euclid workload, on the
+    shared session: every process and JVM thread class is reported, and
+    the calls used JVM CPU."""
+    out = _tool("cpu_split").measure(spark, "grid_euclid", calls=2, size="smoke")
+    assert set(out["process"]) == {"driver", "jvm", "workers"}
+    assert set(out["jvm_threads"]) == {
+        "jit", "gc", "executor", "planning", "scheduler", "other", "exited"
+    }
+    assert all(v >= 0 for v in [*out["process"].values(), *out["jvm_threads"].values()]), out
+    assert out["process"]["jvm"] > 0, out
 
 @pytest.mark.slow
 def test_fuzz_sweep_grid():

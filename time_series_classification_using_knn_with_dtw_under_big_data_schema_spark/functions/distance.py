@@ -293,13 +293,15 @@ def _grouped_pairs_udf(batch_fn) -> Callable[[Column, Column], Column]:
         n = len(a)
         if n == 0:
             return pd.Series(np.empty(0, dtype=np.float64))
-        la = a.map(len).to_numpy()
-        lb = b.map(len).to_numpy()
-        out = np.empty(n, dtype=np.float64)
+        # a NULL series (length -1) leaves its pairs NaN, which Arrow
+        # returns as NULL, as the SQL metrics do
+        la = np.array([-1 if x is None else len(x) for x in a])
+        lb = np.array([-1 if x is None else len(x) for x in b])
+        out = np.full(n, np.nan)
         import collections
 
         groups = collections.defaultdict(list)
-        for i in range(n):
+        for i in np.flatnonzero((la >= 0) & (lb >= 0)):
             groups[(la[i], lb[i])].append(i)
         for (_, _), idx in groups.items():
             idx = np.asarray(idx)

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, tokens
-from ..plans.eager import count_rows
+from ..plans.eager import agg_row
 
 __all__ = [
     "doc_quality_features",
@@ -235,7 +235,7 @@ def perceptron_epoch_sweep(
     df = df.select(
         _guarded_label(y, x, dim).alias(label_col), x.alias(features_col)
     )
-    n_total = count_rows(df)
+    n_total = df.count()
     w = [0] * dim
     acc = [0] * dim
     rows = []
@@ -253,9 +253,9 @@ def perceptron_epoch_sweep(
         w = [w[j] + g.get(j, 0) for j in range(dim)]
         acc = [acc[j] + w[j] for j in range(dim)]
         score = _margin(x, acc)
-        n_correct = count_rows(
-            df.filter(((y > 0) & (score > 0)) | ((y < 0) & (score <= 0)))
-        )
+        n_correct = df.filter(
+            ((y > 0) & (score > 0)) | ((y < 0) & (score <= 0))
+        ).count()
         rows.append((t, int(n_correct), int(n_total)))
     spark = df.sparkSession
     out = spark.createDataFrame(
@@ -552,8 +552,9 @@ def _conformal_min_kernel(
         out = register_cache(scored.cache())
         # land the bounded (rows x labels) table before the main job: lazy
         # caches re-run the kernel per consuming branch (the knn_join_lb
-        # phase-table lesson)
-        count_rows(out)
+        # phase-table lesson); an observed scan, so the landing is one
+        # job with no exchange, as the route's other eager executions
+        agg_row(out, n=F.count(F.lit(1)))
         return out
 
     return mins

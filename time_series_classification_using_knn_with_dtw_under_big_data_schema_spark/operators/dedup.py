@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from .skew import fan_out
 from ..caching import register_cache
-from ..plans.eager import agg_row, count_rows
+from ..plans.eager import agg_row
 from ..functions.text import (
     HASH_BASE,
     HASH_P,
@@ -379,7 +379,7 @@ def dedup_components(
     ).distinct().cache()
     register_cache(sym)
     id_type = pairs.schema["id_a"].dataType
-    n_edges = count_rows(sym) // 2
+    n_edges = sym.count() // 2
     if n_edges <= local_threshold:
         # collect the (cached) symmetric set — both directions is 2x the
         # bytes but zero recompute; union-find is direction-insensitive

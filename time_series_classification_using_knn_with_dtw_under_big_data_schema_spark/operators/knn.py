@@ -47,7 +47,6 @@ from ..functions.distance import (
     DISTANCES, ELASTIC_KINDS, _grouped_pairs_udf, batch_kernel, sq_euclidean,
     with_distance,
 )
-from ..plans.eager import count_rows
 from .topk import check_k, topk_per_key
 from .vote import majority_vote
 
@@ -281,7 +280,9 @@ def _knn_scan(
     'chunked' call on one is rejected. A test row of another length gets
     no neighbours under ``exclude_zero`` (the declarative plan's NULL
     distances are dropped there) and fails the call otherwise (it would
-    rank them first).
+    rank them first). A NULL series is handled the same way
+    (``_drop_null_series``): under ``exclude_zero`` it gets no neighbours
+    and is no one's neighbour; otherwise the call fails naming its side.
     """
     import pandas as pd
 
@@ -315,17 +316,24 @@ def _knn_scan(
         if kind in ELASTIC_KINDS else None
     )
 
+    def pack(ids, fvals, labels):
+        return _group_by_length(*_drop_null_series(ids, fvals, labels, "train", exclude_zero))
+
     def score(pdf, groups):
+        tids, fvals, _ = _drop_null_series(
+            pdf[id_col].to_numpy(), pdf[features_col].to_numpy(), None, "test", exclude_zero
+        )
+        if not groups:  # every train series of the batch or cell is NULL
+            return pd.DataFrame({n: [] for n in cols})
         out = _score_block_rows(
-            pdf[id_col].to_numpy(), pdf[features_col].to_numpy(), groups,
-            kind=kind, elastic=elastic, k=k, excl=exclude_zero,
+            tids, fvals, groups, kind=kind, elastic=elastic, k=k, excl=exclude_zero,
         )
         return pd.DataFrame({n: out[n] for n in cols})
 
     ties = (["train_label"] if has_label else []) + ["train_id"]
     return pairscan.scan(
         r, q, c, kind=kind, cost=dict(band=band, radius=fastdtw_radius),
-        pack=_group_by_length, score=score,
+        pack=pack, score=score,
         reduce=lambda scored: pairscan.rerank(scored, "test_id", "distance", ties, k),
         schema=schema, dist="distance", budget=max_broadcast_bytes, nested=nested,
     )
@@ -594,6 +602,21 @@ def _gram_candidates(Tc, tn, B, bn, k: int, excl: bool):
             hi[lo <= 0] = np.inf
         kth = np.partition(hi, k - 1, axis=1)[:, k - 1 : k]
     return np.nonzero(lo <= kth)
+
+
+def _drop_null_series(ids, fvals, labels, side: str, excl: bool):
+    """(ids, features, labels) of one side's rows whose series is not
+    NULL. A NULL series has a NULL distance to every series in the
+    declarative plans: ``d != 0`` drops those pairs under ``excl``, and
+    without it they would rank first, so the call fails naming ``side``."""
+    keep = [i for i, f in enumerate(fvals) if f is not None]
+    if len(keep) == len(fvals):
+        return ids, fvals, labels
+    if not excl:
+        raise ValueError(
+            f"the {side} side holds a NULL series (exclude_zero=True drops it)"
+        )
+    return tuple(None if xs is None else [xs[i] for i in keep] for xs in (ids, fvals, labels))
 
 
 def _group_by_length(ids, fvals, labels):
@@ -1034,7 +1057,7 @@ def _filter_verify(
     # branches of ONE DAG and re-runs the expensive kernel per consumer
     # (measured 5x the end-to-end cost at 44k pairs). One tiny action
     # materializes all three transitively.
-    count_rows(thresh)
+    thresh.count()
 
     # phase 3: any unscored pair the bound cannot rule out. LEFT join:
     # thresh only has rows for tests with >=1 scored phase-1 survivor —

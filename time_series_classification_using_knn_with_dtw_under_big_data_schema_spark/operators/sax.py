@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import paa, znorm
-from ..plans.eager import agg_row, count_rows
+from ..plans.eager import agg_row
 from .topk import topk_per_key
 from .vote import majority_vote
 
@@ -677,8 +677,8 @@ def boss_classify(
     # land the bounded histograms before the distance job (the knn_join_lb
     # phase-table lesson: lazy caches re-run the subtree per consuming
     # branch within one job)
-    count_rows(th)
-    count_rows(rh)
+    th.count()
+    rh.count()
     tn2 = th.groupBy("_id").agg(
         F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("_n2")
     ).select(F.col("_id").alias("test_id"), "_n2")

@@ -13,7 +13,6 @@ own: an empty frame reads count 0 and NULL max/min/sum, as ``agg`` does.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def agg_row(df: DataFrame, **aggs: Column) -> dict:
@@ -25,9 +24,3 @@ def agg_row(df: DataFrame, **aggs: Column) -> dict:
     observed = df.observe(obs, *[c.alias(n) for n, c in aggs.items()])
     observed.select().write.format("noop").mode("overwrite").save()
     return obs.get
-
-
-def count_rows(df: DataFrame) -> int:
-    """``df.count()`` as one observed scan; on a cached ``df`` it also
-    lands the cache."""
-    return agg_row(df, n=F.count(F.lit(1)))["n"]
